@@ -113,11 +113,13 @@ def pq_m_curve(spark, sf_dir: str) -> list[dict]:
     (bytes/vector = m)."""
     from pyspark.sql import functions as F
 
+    from the_build_project_image_retrieval_with_vector_databases_spark.functions.vector import (
+        array_lit,
+    )
     from the_build_project_image_retrieval_with_vector_databases_spark.operators.knn import (
         knn_join,
     )
     from the_build_project_image_retrieval_with_vector_databases_spark.operators.pq import (
-        _centers_lit,
         pq_encode,
         slice_codebooks,
     )
@@ -161,7 +163,8 @@ def pq_m_curve(spark, sf_dir: str) -> list[dict]:
         recon = F.concat(
             *[
                 F.element_at(
-                    _centers_lit(codebooks[j]), F.col(f"code_{j}") + 1
+                    array_lit(codebooks[j], "array<array<double>>"),
+                    F.col(f"code_{j}") + 1,
                 )
                 for j in range(m)
             ]

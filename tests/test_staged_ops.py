@@ -473,7 +473,7 @@ def test_assign_cids_arrow_dist2_matches_expression_fold(spark):
 
 
 def test_kmeans_driver_and_distributed_training_agree(spark):
-    """r18: below KMEANS_DRIVER_TRAIN_MAX_ROWS the Lloyd rounds run
+    """Below KMEANS_DRIVER_TRAIN_MAX_BYTES the Lloyd rounds run
     driver-side in numpy; forcing the gate to 0 re-runs the identical
     training through the distributed per-round jobs. Centroids AND
     round counts must be bit-identical — the driver path is the same
@@ -484,7 +484,7 @@ def test_kmeans_driver_and_distributed_training_agree(spark):
 
     emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
     drv = kmeans_train_exact(emb, k=5, max_iter=7)
-    dist = kmeans_train_exact(emb, k=5, max_iter=7, driver_train_max_rows=0)
+    dist = kmeans_train_exact(emb, k=5, max_iter=7, driver_train_max_bytes=0)
     assert drv == dist
 
 

@@ -12,12 +12,38 @@ explicit elementwise cast (float32 → float64 is exact), accumulation is a
 **left fold** (``F.aggregate``), which bit-matches DuckDB's
 ``list_reduce`` left fold — this is what makes the DuckDB oracle hashes
 reproducible.
+
+Literal contract: every driver-side constant an expression scores
+against (a query vector, an IVF centroid matrix, a PQ codebook, LSH
+planes, quantization bounds) enters the plan through :func:`array_lit`
+— ONE ``from_json`` node over ONE string literal, whatever the k·D size.
+Catalyst's ConstantFolding folds it into a single ``Literal`` before
+execution (no JSON is parsed per row; pinned by a plan test), and the
+values are bit-exact: Python's float ``repr`` round-trips and the JVM's
+JSON number parser rounds correctly, so ±0.0, subnormals, ±inf and NaN
+arrive unchanged. The per-element ``F.array(F.lit(x), …)`` form it
+replaces costs one py4j round trip per element (1.7-2.5 s for a 32×128
+centroid matrix) and an O(k·D)-node tree to analyze.
 """
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+
+def array_lit(values, dtype: str = "array<double>") -> Column:
+    """A driver-side vector, matrix, int64 array or struct array as ONE
+    literal column of Spark type ``dtype`` (a DDL string such as
+    ``array<array<double>>``, ``array<bigint>`` or
+    ``array<struct<lo:double,rng:double>>``; structs are given as
+    dicts). Numpy arrays and scalars are accepted. ``FAILFAST`` makes a
+    value the type cannot hold (a fraction or out-of-range int for
+    ``bigint``, a wrong nesting depth) raise instead of becoming null."""
+    text = json.dumps(values, default=lambda o: o.tolist())
+    return F.from_json(F.lit(text), dtype, {"mode": "FAILFAST"})
 
 
 def to_double_array(v: Column | str) -> Column:

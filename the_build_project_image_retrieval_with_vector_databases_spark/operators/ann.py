@@ -29,7 +29,7 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.vector import l2_dist
+from ..functions.vector import array_lit, l2_dist
 
 try:  # MLlib is in the base image; guard anyway for minimal installs
     from pyspark.ml.clustering import KMeans
@@ -61,21 +61,12 @@ def train_centroids(
     return [c.tolist() for c in model.clusterCenters()]
 
 
-def _centroid_array_lit(centroids: list[list[float]]):
-    return F.array(
-        *[
-            F.array(*[F.lit(float(x)) for x in c]).cast("array<double>")
-            for c in centroids
-        ]
-    )
-
-
 def assign_centroids(
     df: DataFrame, centroids: list[list[float]], vec_col: str = "embedding"
 ) -> DataFrame:
     """Nearest-centroid id per row, as a pure Catalyst expression:
     argmin over the (broadcast-literal) centroid array. No UDF, no shuffle."""
-    cents = _centroid_array_lit(centroids)
+    cents = array_lit(centroids, "array<array<double>>")
     dists = F.transform(cents, lambda c: l2_dist(F.col(vec_col), c))
     # argmin = position of the minimum (first occurrence wins, 0-based)
     assigned = F.array_position(dists, F.array_min(dists)) - 1
@@ -260,9 +251,7 @@ def kmeans_lloyd_step(
         init = [r.qv for r in q.orderBy(id_col).limit(k).collect()]
     if not init:
         raise ValueError("kmeans_lloyd_step on an empty table")
-    cents = F.array(
-        *[F.array(*[F.lit(int(v)) for v in c]) for c in init]
-    )
+    cents = array_lit(init, "array<array<bigint>>")
     dists = F.transform(
         cents,
         lambda c: F.aggregate(
@@ -390,17 +379,19 @@ def _lloyd_round_partials(
 # small/medium layouts.
 FOLD_MAX_PARTITIONS = 256
 
-# Driver-training bound for kmeans_train_exact (r18): at or below this
-# many rows the quantized table is collected ONCE and every Lloyd round
-# runs on the driver in numpy — the same int64 argmin/sum kernel and
-# the same Python mean→requantize math the distributed rounds use, so
-# the trained centroids are bit-identical (parity-pinned). 65536 rows ×
-# D=64 int64 ≈ 32 MB of driver state — the MLlib-driver class. The win
-# is structural, not a local tune: each distributed round costs one
-# job submit + Arrow boundary + collect (~0.25 s at ANY tiny size,
-# measured sf0.1), i.e. max_iter × fixed job latency for data that
-# fits in one task; above the gate the distributed loop is unchanged.
-KMEANS_DRIVER_TRAIN_MAX_ROWS = 65536
+# Driver-training bound for kmeans_train_exact, in bytes of collected
+# int64 state (rows × D × 8): at or below it the quantized table is
+# collected ONCE and every Lloyd round runs on the driver in numpy — the
+# same int64 argmin/sum kernel and the same Python mean→requantize math
+# the distributed rounds use, so the trained centroids are bit-identical
+# (parity-pinned). 32 MiB is 65,536 rows at D=64 but only 4,096 rows at
+# D=1024 — the MLlib-driver class either way; a row count alone would
+# let the collect grow with D. The win is structural, not a local tune:
+# each distributed round costs one job submit + Arrow boundary + collect
+# (~0.25 s at ANY tiny size, measured sf0.1), i.e. max_iter × fixed job
+# latency for data that fits in one task; above the gate the distributed
+# loop is unchanged.
+KMEANS_DRIVER_TRAIN_MAX_BYTES = 32 << 20
 
 
 def _kmeans_train_driver(
@@ -412,18 +403,18 @@ def _kmeans_train_driver(
     scale: int,
 ) -> tuple[list[list[float]], int]:
     """Driver-side Lloyd loop for tables at/below
-    ``KMEANS_DRIVER_TRAIN_MAX_ROWS`` — ONE Spark job (the quantize +
+    ``KMEANS_DRIVER_TRAIN_MAX_BYTES`` — ONE Spark job (the quantize +
     collect; quantization stays the pinned Spark expression), then
     every round is pure numpy with the exact integers the distributed
     loop computes: assignment is the identical
     ``argmin(|c|² − 2·x@cᵀ)`` int64 kernel of
     :func:`_lloyd_round_partials` (the per-row |q|² shift argument),
-    per-cluster sums are int64-exact (n ≤ 2¹⁷ rows × |qv| < 2³⁰ keeps
-    Σ < 2⁴⁷), and the mean → re-quantize math is byte-for-byte the
-    same Python code the distributed loop runs on its folded sums. No
-    per-round job submit / Arrow boundary / collect — the measured
-    ~0.25 s × max_iter fixed cost of looping tiny data through the
-    cluster."""
+    per-cluster sums are int64-exact (the byte gate admits n ≤ 2²² rows;
+    with |qv| < 2³⁰ that keeps Σ < 2⁵²), and the mean → re-quantize math
+    is byte-for-byte the same Python code the distributed loop runs on
+    its folded sums. No per-round job submit / Arrow boundary / collect
+    — the measured ~0.25 s × max_iter fixed cost of looping tiny data
+    through the cluster."""
     import math
 
     rows = (
@@ -479,7 +470,7 @@ def kmeans_train_exact(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     scale: int = KMEANS_SCALE,
-    driver_train_max_rows: int | None = None,
+    driver_train_max_bytes: int | None = None,
 ) -> tuple[list[list[float]], int]:
     """Full Lloyd training by iterating :func:`kmeans_lloyd_step` —
     quantized k-means, bit-reproducible on any cluster size or data
@@ -498,11 +489,11 @@ def kmeans_train_exact(
     this is the auditable/reproducible one (one oracle-checkable step =
     ``kmeans_lloyd_step``, the registry's ``kmeans_step``).
 
-    r18: at or below ``KMEANS_DRIVER_TRAIN_MAX_ROWS`` (override via
-    ``driver_train_max_rows``; the test seam) the quantized table is
-    collected once and all rounds run driver-side in numpy — identical
-    integers end to end (same argmin kernel, same int64 sums, same
-    Python mean→requantize), pinned by
+    When rows × D × 8 is at or below ``KMEANS_DRIVER_TRAIN_MAX_BYTES``
+    (override via ``driver_train_max_bytes``; the test seam) the
+    quantized table is collected once and all rounds run driver-side in
+    numpy — identical integers end to end (same argmin kernel, same
+    int64 sums, same Python mean→requantize), pinned by
     test_kmeans_driver_and_distributed_training_agree. Every
     invocation still scans the parquet input; nothing persists across
     calls."""
@@ -518,13 +509,15 @@ def kmeans_train_exact(
     # widths n/512 exceeds the cluster parallelism and the cap keeps
     # every core busy. Exactness is partition-independent (integer
     # argmin + integer sums), so the layout is purely a cost knob.
-    n_rows = df.count()
+    # The sizing job reads D alongside the row count, so the byte gate
+    # costs no extra job.
+    n_rows, dim = df.agg(F.count(F.lit(1)), F.max(F.size(vec_col))).first()
     limit = (
-        KMEANS_DRIVER_TRAIN_MAX_ROWS
-        if driver_train_max_rows is None
-        else driver_train_max_rows
+        KMEANS_DRIVER_TRAIN_MAX_BYTES
+        if driver_train_max_bytes is None
+        else driver_train_max_bytes
     )
-    if n_rows <= limit:
+    if n_rows * max(dim or 0, 0) * 8 <= limit:
         return _kmeans_train_driver(
             df, k, max_iter, vec_col, id_col, scale
         )
@@ -538,7 +531,7 @@ def kmeans_train_exact(
     # the init collect (k lowest-id quantized vectors — the same init
     # kmeans_lloyd_step derives when centroids_q is omitted) doubles as
     # the cache-materializing action: one job warms the blocks AND
-    # returns the k·D init state (r17: was a separate scan job)
+    # returns the k·D init state, so no separate warm-up scan runs
     init_rows = q.orderBy(id_col).limit(k).collect()
     if not init_rows:
         q.unpersist()
@@ -548,15 +541,15 @@ def kmeans_train_exact(
     dim = len(cents_q[0])
     try:
         for rounds in range(1, max_iter + 1):
-            # fast round (r17 optimization): Arrow partial sums instead
-            # of the posexplode form — value-identical; see
+            # fast round: Arrow partial sums instead of the
+            # posexplode form — value-identical; see
             # _lloyd_round_partials. The mean → re-quantize math below
             # replays kmeans_lloyd_step's SQL double ops in the SAME
             # IEEE order ((s→double / n→double) / scale, then
             # floor(mean·scale + 0.5)): Python floats ARE IEEE doubles
             # and int→float conversion rounds to nearest exactly like
             # the JVM long→double cast, so the trained centroids are
-            # bit-identical to the pre-r17 loop (pinned by
+            # bit-identical to iterating kmeans_lloyd_step (pinned by
             # test_kmeans_train_exact_matches_python_loop).
             sums = _lloyd_round_partials(q, cents_q, n_parts=target)
             new_q = []
@@ -655,7 +648,7 @@ def ivf_search(
         df = spark_or_df
         if "centroid" not in df.columns:
             df = assign_centroids(df, centroids, vec_col)
-    qlit = F.array(*[F.lit(float(x)) for x in q]).cast("array<double>")
+    qlit = array_lit(q)
     return (
         df.filter(F.col("centroid").isin(probe))
         .withColumn("dist", l2_dist(F.col(vec_col), qlit))
@@ -779,8 +772,9 @@ def lsh_bucket(
 
     key = None
     for i, h in enumerate(planes):
-        hlit = F.array(*[F.lit(float(x)) for x in h]).cast("array<double>")
-        bit = F.when(dot(F.col(vec_col), hlit) > 0, F.lit(1 << i)).otherwise(F.lit(0))
+        bit = F.when(
+            dot(F.col(vec_col), array_lit(h)) > 0, F.lit(1 << i)
+        ).otherwise(F.lit(0))
         key = bit if key is None else key + bit
     return df.withColumn(out_col, key.cast("long"))
 

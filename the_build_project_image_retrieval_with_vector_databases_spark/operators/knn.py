@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from .dedup import _pin
 
-from ..functions.vector import cosine_sim, dot, l2_dist
+from ..functions.vector import array_lit, cosine_sim, dot, l2_dist
 
 _METRICS = {
     "l2": (l2_dist, True),  # (distance fn, ascending?)
@@ -866,10 +866,9 @@ def _band_bucket_exprs(
     for b in range(n_bands):
         key = None
         for i, h in enumerate(planes[b * width : (b + 1) * width]):
-            hlit = F.array(*[F.lit(float(x)) for x in h]).cast("array<double>")
-            bit = F.when(dot(F.col(vec_col), hlit) > 0, F.lit(1 << i)).otherwise(
-                F.lit(0)
-            )
+            bit = F.when(
+                dot(F.col(vec_col), array_lit(h)) > 0, F.lit(1 << i)
+            ).otherwise(F.lit(0))
             key = bit if key is None else key + bit
         exprs.append(key.cast("long"))
     return exprs

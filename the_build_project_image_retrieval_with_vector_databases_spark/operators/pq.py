@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.vector import l2_dist_sq
+from ..functions.vector import array_lit, l2_dist_sq
 
 
 def slice_codebooks(
@@ -76,15 +76,6 @@ def train_pq_codebooks_kmeans(
     return books
 
 
-def _centers_lit(centers: list[list[float]]) -> Column:
-    return F.array(
-        *[
-            F.array(*[F.lit(float(x)) for x in c]).cast("array<double>")
-            for c in centers
-        ]
-    )
-
-
 def pq_encode(
     df: DataFrame,
     codebooks: list[list[list[float]]],
@@ -100,7 +91,8 @@ def pq_encode(
         sub = F.slice(F.col(vec_col), j * dsub + 1, dsub)
         # single-arg lambda: a 2-arg lambda would make PySpark bind the
         # second param to the array INDEX (the (element, index) form)
-        dists = F.transform(_centers_lit(codebooks[j]), lambda c: l2_dist_sq(sub, c))
+        centers = array_lit(codebooks[j], "array<array<double>>")
+        dists = F.transform(centers, lambda c: l2_dist_sq(sub, c))
         code = F.array_position(dists, F.array_min(dists)) - 1
         out = out.withColumn(f"code_{j}", code.cast("int"))
     return out
@@ -132,8 +124,7 @@ def pq_adc_dist(lut: list[list[float]]) -> Column:
     """Σ_j lut[j][code_j] as a left-assoc sum of ``element_at`` lookups."""
     total = None
     for j, row in enumerate(lut):
-        arr = F.array(*[F.lit(float(x)) for x in row])
-        term = F.element_at(arr, F.col(f"code_{j}") + 1)
+        term = F.element_at(array_lit(row), F.col(f"code_{j}") + 1)
         total = term if total is None else total + term
     return total
 
@@ -183,11 +174,9 @@ def sq_encode(
     identically in every engine, round-half rules are not. One
     ``zip_with`` over a literal struct array; codegen'd, no UDF; 4×
     smaller than float32 storage."""
-    structs = F.array(
-        *[
-            F.struct(F.lit(lo).alias("lo"), F.lit(rng).alias("rng"))
-            for lo, rng in bounds
-        ]
+    structs = array_lit(
+        [{"lo": lo, "rng": rng} for lo, rng in bounds],
+        "array<struct<lo:double,rng:double>>",
     )
     codes = F.zip_with(
         F.col(vec_col),
@@ -216,15 +205,12 @@ def sq_dist_sq(
     diff, the fold squares its bound variable), so the dequant arithmetic
     evaluates once per dimension regardless of subexpression elimination;
     left-fold accumulation matches the oracle's ``list_reduce``."""
-    structs = F.array(
-        *[
-            F.struct(
-                F.lit(lo).alias("lo"),
-                F.lit(rng).alias("rng"),
-                F.lit(float(q)).alias("q"),
-            )
+    structs = array_lit(
+        [
+            {"lo": lo, "rng": rng, "q": q}
             for (lo, rng), q in zip(bounds, query_vec)
-        ]
+        ],
+        "array<struct<lo:double,rng:double,q:double>>",
     )
     diffs = F.zip_with(
         F.col(codes_col),
@@ -255,7 +241,7 @@ def pq_adc_rerank_topk(
     semi-join against the raw table; with an id-sorted/bucketed raw
     layout that join prunes to point reads at scale."""
     shortlist = pq_adc_topk(encoded, codebooks, query_vec, k * overfetch, id_col)
-    qlit = F.array(*[F.lit(float(x)) for x in query_vec]).cast("array<double>")
+    qlit = array_lit(query_vec)
     return (
         raw.join(F.broadcast(shortlist.select(id_col)), id_col)
         .withColumn("dist", F.sqrt(l2_dist_sq(F.col(vec_col), qlit)))
@@ -374,12 +360,12 @@ def bq_encode_cols(
             x.cast("double") * F.lit(float(scale)) + F.lit(0.5)
         ).cast("long"),
     )
-    thr = F.array(*[F.lit(int(t)).cast("long") for t in thresholds])
+    thr = array_lit(thresholds, "array<bigint>")
     bits = F.zip_with(
         qv, thr,
         lambda x, t: (x * F.lit(n_train).cast("long") > t).cast("long"),
     )
-    pows = F.array(*[F.lit(1 << j).cast("long") for j in range(32)])
+    pows = array_lit([1 << j for j in range(32)], "array<bigint>")
 
     def pack(offset: int):
         return F.aggregate(

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.vector import array_lit
 from .sample import HASH_MOD, HASH_MULT
 
 
@@ -82,6 +83,6 @@ def replicated_skew_join(
         )
     f = fact.withColumn("__salt", salt_col(fact_id_col, n_salts))
     d = dim.withColumn(
-        "__salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
+        "__salt", F.explode(array_lit(list(range(n_salts)), "array<int>"))
     )
     return f.join(d, [key, "__salt"], how).drop("__salt")

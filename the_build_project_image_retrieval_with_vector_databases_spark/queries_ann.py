@@ -30,7 +30,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .functions.vector import l2_dist, truncate_renormalize
+from .functions.vector import array_lit, l2_dist, truncate_renormalize
 from .operators.ann import hyperplanes, ivf_search, lsh_bucket, write_ivf_index
 from .operators.knn import knn_join_two_phase, radius_join
 from .sources.tables import load_table
@@ -1117,13 +1117,13 @@ def q_kmeans_train_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     # power-of-two scale, so v·scale is the integer again
     cq = [[int(math.floor(v * scale + 0.5)) for v in c] for c in cents]
     q = emb.select("vec_id", quantize_vec("embedding", scale).alias("qv"))
-    # r17 optimization: the final assignment runs through the exact
-    # Arrow int64-matmul argmin (assign_cids_arrow_int — value-identical
-    # to the k·D expression-literal form, which executes INTERPRETED at
-    # ~1 µs/element: n·k·D ≈ 1M element-ops at sf0.1, ~0.5 s/run)
+    # the final assignment runs through the exact Arrow int64-matmul
+    # argmin (assign_cids_arrow_int): value-identical to the k·D
+    # expression-literal form, which executes INTERPRETED at
+    # ~1 µs/element — n·k·D ≈ 1M element-ops at sf0.1, ~0.5 s/run
     assigned = assign_cids_arrow_int(q, cq, id_col="vec_id")
     norms = [sum(v * v for v in c) for c in cq]
-    norm_lit = F.array(*[F.lit(int(n)) for n in norms])
+    norm_lit = array_lit(norms, "array<bigint>")
     return (
         assigned.groupBy("cid")
         .agg(

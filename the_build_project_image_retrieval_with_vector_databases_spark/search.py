@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .functions.vector import array_lit
 from .operators.ann import ivf_search
 from .operators.knn import knn_single
 from .operators.pq import (
@@ -121,11 +122,9 @@ def search(
         out = out.filter(F.col(id_col) != F.lit(exclude_id))
 
     if index == "flat":
-        qlit = F.array(*[F.lit(float(x)) for x in query_vec]).cast(
-            "array<double>"
-        )
         return knn_single(
-            out, qlit, k=k, metric=metric, vec_col=vec_col, id_col=id_col
+            out, array_lit(query_vec), k=k, metric=metric,
+            vec_col=vec_col, id_col=id_col,
         )
 
     if train_vectors is None:
@@ -179,17 +178,15 @@ def search(
                 encoded = encoded.withColumn(name, col)
         qh = bq_encode_query(q, thr, n_tr)
         if rerank > 0:
-            # production BQ shape (r14, the pq-tier rerank applied to
-            # the binary tier): Hamming shortlist of k·rerank → exact
+            # production BQ shape (the pq-tier rerank applied to the
+            # binary tier): Hamming shortlist of k·rerank → exact
             # float re-rank of the shortlist only. Both cuts are
             # zero-shuffle TakeOrderedAndProject; recall is the
             # bq_overfetch curve (RECALL_CURVE.json — ov=16 buys raw
             # Hamming's 0.17 back to ≈0.70 on the fixture corpus).
             from .functions.vector import l2_dist
 
-            qlit = F.array(*[F.lit(float(x)) for x in q]).cast(
-                "array<double>"
-            )
+            qlit = array_lit(q)
             short = (
                 encoded.withColumn("__h", bq_hamming(qh, names))
                 .orderBy(F.col("__h").asc(), F.col(id_col).asc())

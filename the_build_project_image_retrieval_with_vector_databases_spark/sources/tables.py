@@ -100,16 +100,19 @@ def table_row_count(sf_dir: str, name: str) -> int | None:
         return None
 
 
-# r18: partition-count cache for spread(), keyed by the ANALYZED
-# plan's semanticHash. The old ``df.rdd.getNumPartitions()`` paid full
-# physical planning + the javaToPython RDD conversion on EVERY call —
-# measured ~60-130 ms of driver work per spread(), ~42 call sites, paid
-# twice per bench row. The count is pure layout metadata: it decides
-# only whether a round-robin repartition is inserted, never what any
-# query computes, so a stale entry (same plan hash after an in-place
-# fixture rewrite — test fixtures use fresh tmp paths, so the hash
-# normally changes) can at worst pick a suboptimal layout.
+# Partition-count cache for spread(), keyed by the ANALYZED plan's
+# semanticHash. Without it ``getNumPartitions()`` pays full physical
+# planning + RDD construction on EVERY call — measured ~60-130 ms of
+# driver work per spread(), ~42 call sites. The count is pure layout
+# metadata: it decides only whether a round-robin repartition is
+# inserted, never what any query computes, so a stale entry (same plan
+# hash after an in-place fixture rewrite — test fixtures use fresh tmp
+# paths, so the hash normally changes) can at worst pick a suboptimal
+# layout. A long-lived session (the serve loop) sees a new plan per
+# query literal, so the cache evicts its oldest entry at
+# ``_NPARTS_CACHE_MAX`` — 4,096 int pairs, well under 1 MB.
 _NPARTS_CACHE: dict[int, int] = {}
+_NPARTS_CACHE_MAX = 4096
 
 
 def spread(df: DataFrame, factor: int = 1) -> DataFrame:
@@ -134,6 +137,8 @@ def spread(df: DataFrame, factor: int = 1) -> DataFrame:
         except Exception:
             n = df.rdd.getNumPartitions()
         if key is not None:
+            if len(_NPARTS_CACHE) >= _NPARTS_CACHE_MAX:
+                _NPARTS_CACHE.pop(next(iter(_NPARTS_CACHE)))
             _NPARTS_CACHE[key] = n
     if n < target:
         return df.repartition(target)
