@@ -47,22 +47,13 @@ from tests.oracle_harness import compare  # noqa: E402
 
 
 def _staged_pairs():
-    """(name, query_fn, oracle_sql) per panel: the r11 trio registered
-    r12 whose generated-corpus constraints differ from the generic
-    panel ranges — kept covered here with the shared corpus — PLUS
-    every currently-staged registration candidate (the three r17
-    candidates, the three r18 candidates, the three r19 candidates,
-    and the three r20 candidates; the r13-staged trio registered r14
-    and its entries stay here for the shared-corpus coverage), so the
-    many-seed soak exercises them before their window flip, not just
-    the 3-example derandomized hypothesis rows. The oracle slot may be
-    a callable(dir) -> sql for corpus-sized oracles (leakage_safe_split
-    re-derives its LSH plane count from the generated corpus's footer
-    row count, like lsh_near_dup). (The r12 trio registered r13 —
-    bq_hamming_topk, passage_chunking, temperature_mix — and the
-    r13-staged trio registered r15 — winnowing_fingerprint,
-    bloom_decontaminate, bpe_merge_step — ride the panel lists
-    directly.)"""
+    """(name, query_fn, oracle_sql) per panel for the registered queries
+    whose generated-corpus constraints differ from the generic panel
+    ranges, so the many-seed soak covers them with the shared corpus
+    too. The oracle slot may be a callable(dir) -> sql for
+    corpus-sized oracles (leakage_safe_split re-derives its LSH plane
+    count from the generated corpus's footer row count, like
+    lsh_near_dup)."""
     from tests.test_oracle_parity import _sized_oracles
     from the_build_project_image_retrieval_with_vector_databases_spark.queries_ann import (
         ORACLE_SEMANTIC_DECONTAMINATE,
@@ -71,42 +62,20 @@ def _staged_pairs():
     from the_build_project_image_retrieval_with_vector_databases_spark.queries_text import (
         ORACLE_DSIR_IMPORTANCE,
         ORACLE_PERPLEXITY_BUCKETS,
-        _oracle_bpe_train_encode,
-        _oracle_dedup_cluster_stats,
-        _oracle_domain_quota_sample,
         _oracle_exact_substring_dedup,
-        _oracle_fineweb_filter_chain,
-        _oracle_gopher_length_screen,
-        _oracle_language_confidence_filter,
         _oracle_leakage_safe_split,
         _oracle_length_bucket_batches,
-        _oracle_line_dedup,
         _oracle_ngram_novelty_score,
         _oracle_source_overlap_matrix,
-        _oracle_token_entropy,
         _oracle_unimax_mix,
-        _oracle_winnow_overlap_pairs,
-        q_bpe_train_encode,
-        q_dedup_cluster_stats,
-        q_domain_quota_sample,
         q_dsir_importance,
         q_exact_substring_dedup,
-        q_fineweb_filter_chain,
-        q_gopher_length_screen,
-        q_language_confidence_filter,
         q_leakage_safe_split,
         q_length_bucket_batches,
-        q_line_dedup,
         q_ngram_novelty_score,
         q_perplexity_buckets,
         q_source_overlap_matrix,
-        q_token_entropy,
         q_unimax_mix,
-        q_winnow_overlap_pairs,
-    )
-    from the_build_project_image_retrieval_with_vector_databases_spark.queries_ann import (
-        _oracle_ivf_balance_stats,
-        q_ivf_balance_stats,
     )
 
     return {
@@ -119,38 +88,12 @@ def _staged_pairs():
             ("leakage_safe_split", q_leakage_safe_split,
              lambda d: _sized_oracles(d).get(
                  "leakage_safe_split", _oracle_leakage_safe_split())),
-            # (winnowing_fingerprint / bloom_decontaminate /
-            # bpe_merge_step registered r15; url_host_dedup /
-            # contamination_eval_split / repetition_quality registered
-            # r16 — all now in DOC_QUERIES)
-            # r14-staged r17 candidates:
             ("source_overlap_matrix", q_source_overlap_matrix,
              _oracle_source_overlap_matrix()),
             ("ngram_novelty_score", q_ngram_novelty_score,
              _oracle_ngram_novelty_score()),
-            # r15-staged third r17 candidate:
             ("exact_substring_dedup", q_exact_substring_dedup,
              _oracle_exact_substring_dedup()),
-            # r15-staged r18 candidates:
-            ("language_confidence_filter", q_language_confidence_filter,
-             _oracle_language_confidence_filter()),
-            ("token_entropy", q_token_entropy, _oracle_token_entropy()),
-            ("bpe_train_encode", q_bpe_train_encode,
-             _oracle_bpe_train_encode()),
-            # r16-staged r19 candidates:
-            ("gopher_length_screen", q_gopher_length_screen,
-             _oracle_gopher_length_screen()),
-            ("fineweb_filter_chain", q_fineweb_filter_chain,
-             _oracle_fineweb_filter_chain()),
-            ("domain_quota_sample", q_domain_quota_sample,
-             _oracle_domain_quota_sample()),
-            # r16-staged r20 candidates (document-table pair) + the
-            # r20 ALTERNATE (duplication report):
-            ("line_dedup", q_line_dedup, _oracle_line_dedup()),
-            ("winnow_overlap_pairs", q_winnow_overlap_pairs,
-             _oracle_winnow_overlap_pairs()),
-            ("dedup_cluster_stats", q_dedup_cluster_stats,
-             _oracle_dedup_cluster_stats()),
         ],
         "emb": [
             ("semantic_decontaminate", q_semantic_decontaminate,
@@ -158,12 +101,7 @@ def _staged_pairs():
         ],
         "rel": [],
         "serve": [],
-        "idx": [
-            # r16-staged r20 candidate (reads the per-corpus layout the
-            # idx panel builds; panel's try/finally owns the cleanup):
-            ("ivf_balance_stats", q_ivf_balance_stats,
-             _oracle_ivf_balance_stats()),
-        ],
+        "idx": [],
     }
 
 

@@ -10,9 +10,6 @@ from pyspark.sql import functions as F
 
 from the_build_project_image_retrieval_with_vector_databases_spark.operators.ann import (
     assign_centroids,
-    brp_approx_topk,
-    brp_lsh_fit,
-    brp_similarity_join,
     hyperplanes,
     ivf_search,
     lsh_bucket,
@@ -139,47 +136,6 @@ def test_lsh_candidates_are_cobucketed_pairs(emb, emb_np):
         for r in lsh_candidates(emb, planes).collect()
     }
     assert got == want
-
-
-def test_brp_lsh_topk_recall(spark, emb, emb_np):
-    """SURVEY §7.3's MLlib ``BucketedRandomProjectionLSH`` path: recall@10
-    of ``approxNearestNeighbors`` vs the exact operator must be ≥ 0.9
-    (seeded model, deterministic)."""
-    ids, mat = emb_np
-    q = list(map(float, mat[0]))
-    corpus = emb.filter(F.col("vec_id") != 0)
-    qlit = F.array(*[F.lit(x) for x in q]).cast("array<double>")
-    exact = {r.vec_id for r in knn_single(corpus, qlit, k=10).collect()}
-    model, feat = brp_lsh_fit(corpus, bucket_length=0.5, num_hash_tables=4, seed=42)
-    got = {r.vec_id for r in brp_approx_topk(model, feat, q, k=10).collect()}
-    assert len(got & exact) / 10 >= 0.9
-
-
-def test_brp_similarity_join_pairs(spark, emb, emb_np):
-    """``approxSimilarityJoin`` returns only true pairs (dist ≤ τ exact on
-    NumPy) and finds ≥ 90% of the brute-force radius pairs."""
-    ids, mat = emb_np
-    sub = emb.filter(F.col("vec_id") < 60)
-    model, feat = brp_lsh_fit(sub, bucket_length=2.0, num_hash_tables=8, seed=42)
-    tau = 1.25
-    out = brp_similarity_join(model, feat, feat, tau)
-    got = {
-        (min(a, b), max(a, b))
-        for a, b in (
-            (r.datasetA.vec_id, r.datasetB.vec_id) for r in out.collect()
-        )
-        if a != b
-    }
-    m = mat[:60]
-    d = np.sqrt(((m[:, None, :] - m[None, :, :]) ** 2).sum(axis=2))
-    want = {
-        (int(i), int(j))
-        for i in range(60)
-        for j in range(i + 1, 60)
-        if d[i, j] <= tau
-    }
-    assert got <= want
-    assert want and len(got & want) / len(want) >= 0.9
 
 
 def test_knn_join_matches_numpy_reference(spark, emb, emb_np):

@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from the_build_project_image_retrieval_with_vector_databases_spark.plans.bucketing import (
-    write_bucketed,
+    ensure_bucketed_table,
 )
 from .conftest import SF_SMOKE
 
@@ -27,8 +27,12 @@ def no_broadcast(spark):
 def test_bucketed_join_no_exchange(spark, tmp_path, no_broadcast):
     li = spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet")
     orders = spark.read.parquet(f"{SF_SMOKE}/orders.parquet")
-    write_bucketed(li, "b_lineitem", "l_orderkey", 8, str(tmp_path / "li"))
-    write_bucketed(orders, "b_orders", "o_orderkey", 8, str(tmp_path / "ord"))
+    ensure_bucketed_table(
+        spark, li, "b_lineitem", str(tmp_path / "li"), "l_orderkey", n_buckets=8
+    )
+    ensure_bucketed_table(
+        spark, orders, "b_orders", str(tmp_path / "ord"), "o_orderkey", n_buckets=8
+    )
     try:
         joined = (
             spark.table("b_lineitem")

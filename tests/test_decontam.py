@@ -1,11 +1,6 @@
-"""Unit tests for the decontamination operator and the label-centroid
-query (round-4 additions to the LLM-pipeline family)."""
+"""Unit tests for the n-gram decontamination operator."""
 
 from __future__ import annotations
-
-import collections
-
-import numpy as np
 
 import __spark_entry__ as entrymod
 from the_build_project_image_retrieval_with_vector_databases_spark.operators.decontam import (
@@ -20,7 +15,6 @@ import pytest
 @pytest.fixture(scope="session")
 def spark_global(spark):
     return spark
-
 
 
 def _docs(spark, rows):
@@ -66,39 +60,6 @@ def test_shuffle_mode_matches_broadcast_mode(spark):
         map(tuple, ngram_overlap(corpus, bench, n=4, broadcast_bench=False).collect())
     )
     assert a == b and a
-
-
-def test_label_centroids_numpy_parity(spark):
-    """The quantized-sum centroid must match a NumPy reimplementation and
-    come out unit-norm after the renormalize step."""
-    from the_build_project_image_retrieval_with_vector_databases_spark.queries_ann import (
-        q_label_centroids,
-    )
-
-    # registry row retired r7 (sibling: kmeans_train_assign); numeric
-    # contract stays pinned here
-    rows = q_label_centroids(spark, SF_SMOKE).collect()
-    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet").collect()
-    by_label = collections.defaultdict(list)
-    for r in emb:
-        by_label[r.label].append(np.array(r.embedding, dtype=np.float64))
-    # exploded (label, n_vectors, dim, centroid_val) rows — reassemble
-    got_by_label: dict = collections.defaultdict(dict)
-    n_by_label: dict = {}
-    for r in rows:
-        got_by_label[r.label][r.dim] = r.centroid_val
-        n_by_label[r.label] = r.n_vectors
-    assert set(got_by_label) == set(by_label)
-    for label, dims in got_by_label.items():
-        X = np.stack(by_label[label])
-        q = np.round(X * 1e6)  # banker's vs half-up ties absorbed by atol
-        m = q.sum(axis=0) / (len(X) * 1e6)
-        u = m / np.sqrt((m * m).sum())
-        assert sorted(dims) == list(range(X.shape[1])), "dims must be dense"
-        got = np.array([dims[d] for d in range(X.shape[1])], dtype=np.float64)
-        assert n_by_label[label] == len(X)
-        assert np.allclose(got, u, atol=1e-6)
-        assert abs(np.linalg.norm(got) - 1.0) < 1e-6
 
 
 from datetime import datetime, timezone

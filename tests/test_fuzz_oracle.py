@@ -30,43 +30,27 @@ from .oracle_harness import compare
 from .test_oracle_parity import _sized_oracles
 
 DOC_QUERIES = [
-    "token_stats",
-    "top_terms",
-    "quality_score",
     "gopher_quality",
     "language_id",
-    "doc_fingerprint",
-    "exact_dedup",
     "bpe_token_counts",
     "pii_scrub",
     "top_docs_per_lang",
     "salted_term_counts",
-    "passage_dedup",
     "clean_corpus",
     "bm25",
     "vocab_filter",
     "seq_packing",
     "weighted_sample",
-    "mixture_sample",
-    # r13 registrations (staged panels below keep their dedicated
-    # generators; these rows run them against the shared corpus too):
+    # these also have dedicated panels below with their own generators;
+    # the rows here run them against the shared corpus too:
     "temperature_mix",
     "passage_chunking",
-    # r15 registrations (dedicated staged panel kept below as well);
-    # their retirees top_terms/doc_fingerprint/mixture_sample above
-    # stay in the panel via the _retired_surfaces fallback:
     "winnowing_fingerprint",
     "bloom_decontaminate",
     "bpe_merge_step",
-    # r16 registrations (dedicated staged panel kept below as well);
-    # their retirees exact_dedup/quality_score/decontaminate in this
-    # list stay via the _retired_surfaces fallback:
     "url_host_dedup",
     "contamination_eval_split",
     "repetition_quality",
-    # r17 registrations (dedicated staged panel kept below as well);
-    # their retirees token_stats/incremental_dedup/passage_dedup in
-    # this list stay via the _retired_surfaces fallback:
     "source_overlap_matrix",
     "ngram_novelty_score",
     "exact_substring_dedup",
@@ -78,8 +62,6 @@ DOC_QUERIES = [
     "dedup_components",
     "dedup_keep_best",
     "dedup_recall_eval",
-    "incremental_dedup",    # doc_id<450 split: batch side empty here —
-    "decontaminate",        # the empty-microbatch agreement is the point
 ]
 EMB_QUERIES = [
     "vector_norms",
@@ -89,7 +71,6 @@ EMB_QUERIES = [
     "grouped_ids",
     "bq_hamming_topk",      # r13 registration — integer BQ pipeline,
                             # re-derived end-to-end by its oracle
-    "kmeans_step",
     "semantic_dedup",
     "label_category_join",
     "path_normalize",
@@ -110,10 +91,6 @@ EMB_QUERIES = [
     "kmeans_train_assign",  # 10 unrolled Lloyd rounds, quantized ints —
                             # the duplicate + zero vectors hit the
                             # empty-cluster/tie re-quantization rules
-    "semantic_dedup_incremental",  # batch side (vec_id >= 400) empty on
-                                   # generated sizes — the empty-ingest
-                                   # agreement is the point (see
-                                   # incremental_dedup above)
 ]
 
 # Serving-batch rows need vec_id spans the small panel can't provide
@@ -175,7 +152,6 @@ REL_QUERIES = [
 # forces equal-timestamp events through sessionize/gap_fill/asof), and
 # sketch oracles that rebuild the identical md5 grids.
 EVENT_FUZZ_QUERIES = [
-    "tumbling_window",
     "sliding_window",
     "sessionize",
     "streaming_dedup_batch",
@@ -212,9 +188,8 @@ def _gen_documents(rng: np.random.Generator, n_docs: int) -> pa.Table:
         if ln == 0:
             text = str(rng.choice(["", " ", "\t", "  \n "]))
         elif rng.integers(0, 3) == 0:
-            # multi-line doc (r16 widening for the line-based ops:
-            # gopher_length_screen bullet/ellipsis caps, the fineweb
-            # chain's terminal-punct rule, CCNet line_dedup): bullet
+            # multi-line doc (for line-based rules such as bullet /
+            # ellipsis caps and terminal punctuation): bullet
             # prefixes, ellipsis/period endings, occasional \r\n line
             # endings — the [ \t\r] trim class must strip the \r on
             # both engines
@@ -242,7 +217,7 @@ def _gen_documents(rng: np.random.Generator, n_docs: int) -> pa.Table:
                 text = "  " + text + "\t"  # leading/trailing whitespace
         rows.append((i, text))
     if n_docs >= 6:
-        # exact duplicates (exercise exact_dedup/doc_fingerprint) and a
+        # exact duplicates (exercise the exact/near-dup family) and a
         # case-only variant (must NOT collapse under md5 of raw text)
         rows[n_docs - 1] = (n_docs - 1, rows[0][1])
         rows[n_docs - 2] = (n_docs - 2, rows[1][1])
@@ -511,76 +486,6 @@ def _gen_relational(
     }
 
 
-def _retired_surfaces() -> tuple[dict, dict]:
-    """Registry entries retired by window rotation (r14: kmeans_step,
-    tumbling_window, semantic_dedup_incremental; r15: top_terms,
-    doc_fingerprint, mixture_sample; r16: exact_dedup, decontaminate,
-    quality_score; r17: token_stats, incremental_dedup, passage_dedup)
-    keep their fuzz rows: the q_/oracle surfaces stay in the codebase,
-    and the generated-corpus panels keep exercising them against
-    DuckDB even though the driver window no longer carries them.
-    semantic_dedup_incremental's oracle arrives corpus-sized via
-    ``_sized_oracles`` like before."""
-    from the_build_project_image_retrieval_with_vector_databases_spark.queries_ann import (
-        _oracle_kmeans_step,
-        q_kmeans_step,
-        q_semantic_dedup_incremental,
-    )
-    from the_build_project_image_retrieval_with_vector_databases_spark.queries_events import (
-        ORACLE_TUMBLING,
-        q_tumbling_window,
-    )
-    from the_build_project_image_retrieval_with_vector_databases_spark.queries_text import (
-        ORACLE_EXACT_DEDUP,
-        ORACLE_FINGERPRINT,
-        ORACLE_MIXTURE_SAMPLE,
-        ORACLE_PASSAGE_DEDUP,
-        ORACLE_TOKEN_STATS,
-        ORACLE_TOP_TERMS,
-        _oracle_decontaminate,
-        _oracle_incremental_dedup,
-        _oracle_quality,
-        q_decontaminate,
-        q_exact_dedup,
-        q_fingerprint,
-        q_incremental_dedup,
-        q_mixture_sample,
-        q_passage_dedup,
-        q_quality_score,
-        q_token_stats,
-        q_top_terms,
-    )
-
-    retired_q = {
-        "kmeans_step": q_kmeans_step,
-        "tumbling_window": q_tumbling_window,
-        "semantic_dedup_incremental": q_semantic_dedup_incremental,
-        "top_terms": q_top_terms,
-        "doc_fingerprint": q_fingerprint,
-        "mixture_sample": q_mixture_sample,
-        "exact_dedup": q_exact_dedup,
-        "decontaminate": q_decontaminate,
-        "quality_score": q_quality_score,
-        "token_stats": q_token_stats,
-        "incremental_dedup": q_incremental_dedup,
-        "passage_dedup": q_passage_dedup,
-    }
-    retired_o = {
-        "kmeans_step": _oracle_kmeans_step(),
-        "tumbling_window": ORACLE_TUMBLING,
-        "top_terms": ORACLE_TOP_TERMS,
-        "doc_fingerprint": ORACLE_FINGERPRINT,
-        "mixture_sample": ORACLE_MIXTURE_SAMPLE,
-        "exact_dedup": ORACLE_EXACT_DEDUP,
-        "decontaminate": _oracle_decontaminate(4, 0.2),
-        "quality_score": _oracle_quality(),
-        "token_stats": ORACLE_TOKEN_STATS,
-        "incremental_dedup": _oracle_incremental_dedup(0.5),
-        "passage_dedup": ORACLE_PASSAGE_DEDUP,
-    }
-    return retired_q, retired_o
-
-
 def _run_panel(spark, tmpdir: str, names: list[str]) -> None:
     from the_build_project_image_retrieval_with_vector_databases_spark.queries import (
         ORACLES,
@@ -592,11 +497,9 @@ def _run_panel(spark, tmpdir: str, names: list[str]) -> None:
     # the comparison must re-derive them — the same structural override
     # the SF-sweep parity tests use (tests/test_oracle_parity.py).
     sized = _sized_oracles(tmpdir)
-    retired_q, retired_o = _retired_surfaces()
     for name in names:
-        qfn = QUERIES.get(name) or retired_q[name]
-        oracle = sized.get(name) or ORACLES.get(name) or retired_o[name]
-        ok, msg = compare(qfn(spark, tmpdir), oracle, tmpdir, name)
+        oracle = sized.get(name) or ORACLES[name]
+        ok, msg = compare(QUERIES[name](spark, tmpdir), oracle, tmpdir, name)
         assert ok, f"fuzz corpus diverged: {msg}"
 
 
@@ -1397,161 +1300,6 @@ def test_fuzz_staged_r17_text_ops(spark, tmp_path_factory, seed, n_docs):
         assert ok, f"fuzz corpus diverged: {msg}"
 
 
-@settings(max_examples=3, deadline=None, derandomize=True)
-@given(
-    seed=st.integers(min_value=0, max_value=10_000),
-    n_docs=st.integers(min_value=3, max_value=60),
-)
-def test_fuzz_staged_r18_text_ops(spark, tmp_path_factory, seed, n_docs):
-    """The r18-staged candidates on generated corpora: token-less docs
-    (entropy emits no row; confidence stays a row with und/margin-0),
-    single-token and all-duplicate docs (entropy exactly 0, templated;
-    BPE merge rounds exhaust early -> identity rounds on both engines),
-    random texts with no stopwords (und, never confident), and
-    duplicate/case-variant docs (identical scores on both engines)."""
-    from the_build_project_image_retrieval_with_vector_databases_spark.queries_text import (
-        _oracle_bpe_train_encode,
-        _oracle_language_confidence_filter,
-        _oracle_token_entropy,
-        q_bpe_train_encode,
-        q_language_confidence_filter,
-        q_token_entropy,
-    )
-
-    rng = np.random.default_rng(seed)
-    tmpdir = str(tmp_path_factory.mktemp(f"fuzz_r18t_{seed}_{n_docs}"))
-    pq.write_table(
-        _gen_documents(rng, n_docs), os.path.join(tmpdir, "documents.parquet")
-    )
-    for name, q, o in [
-        ("language_confidence_filter", q_language_confidence_filter,
-         _oracle_language_confidence_filter()),
-        ("token_entropy", q_token_entropy, _oracle_token_entropy()),
-        ("bpe_train_encode", q_bpe_train_encode,
-         _oracle_bpe_train_encode()),
-    ]:
-        ok, msg = compare(q(spark, tmpdir), o, tmpdir, name)
-        assert ok, f"fuzz corpus diverged: {msg}"
-
-
-@settings(max_examples=3, deadline=None, derandomize=True)
-@given(
-    seed=st.integers(min_value=0, max_value=10_000),
-    n_docs=st.integers(min_value=3, max_value=60),
-)
-def test_fuzz_staged_r19_text_ops(spark, tmp_path_factory, seed, n_docs):
-    """The r19-staged candidates on generated corpora: token-less and
-    single-token docs (all ratios hit their greatest(.,1) guards;
-    first_failed attribution still deterministic), single-line AND
-    multi-line docs (the r16 generator widening: bullet prefixes,
-    ellipsis/period endings, \\r\\n line endings), random texts with
-    no stopwords (lang rule fails first), and duplicate/case-variant
-    docs (identical rule vectors on both engines).
-    domain_quota_sample synthesizes its URL from doc_id/source, so
-    every generated corpus exercises the normalization branches and
-    the per-host rank ties."""
-    from the_build_project_image_retrieval_with_vector_databases_spark.queries_text import (
-        _oracle_domain_quota_sample,
-        _oracle_fineweb_filter_chain,
-        _oracle_gopher_length_screen,
-        q_domain_quota_sample,
-        q_fineweb_filter_chain,
-        q_gopher_length_screen,
-    )
-
-    rng = np.random.default_rng(seed)
-    tmpdir = str(tmp_path_factory.mktemp(f"fuzz_r19t_{seed}_{n_docs}"))
-    pq.write_table(
-        _gen_documents(rng, n_docs), os.path.join(tmpdir, "documents.parquet")
-    )
-    for name, q, o in [
-        ("gopher_length_screen", q_gopher_length_screen,
-         _oracle_gopher_length_screen()),
-        ("fineweb_filter_chain", q_fineweb_filter_chain,
-         _oracle_fineweb_filter_chain()),
-        ("domain_quota_sample", q_domain_quota_sample,
-         _oracle_domain_quota_sample()),
-    ]:
-        ok, msg = compare(q(spark, tmpdir), o, tmpdir, name)
-        assert ok, f"fuzz corpus diverged: {msg}"
-
-
-@settings(max_examples=3, deadline=None, derandomize=True)
-@given(
-    seed=st.integers(min_value=0, max_value=10_000),
-    n_docs=st.integers(min_value=3, max_value=60),
-)
-def test_fuzz_staged_r20_text_ops(spark, tmp_path_factory, seed, n_docs):
-    """The two document-table r20-staged candidates on generated
-    corpora: single-line and multi-line docs (bullets, ellipsis/period
-    endings, \\r\\n endings per the r16 generator widening), duplicate
-    docs (every line a cross-doc dup; winnow pairs at fp_jaccard 1.0
-    unless df-capped), token-less docs (zero-line rows; no
-    fingerprints), and 1-2-token docs below the gram size (no winnow
-    selections)."""
-    from the_build_project_image_retrieval_with_vector_databases_spark.queries_text import (
-        _oracle_line_dedup,
-        _oracle_winnow_overlap_pairs,
-        q_line_dedup,
-        q_winnow_overlap_pairs,
-    )
-
-    rng = np.random.default_rng(seed)
-    tmpdir = str(tmp_path_factory.mktemp(f"fuzz_r20t_{seed}_{n_docs}"))
-    pq.write_table(
-        _gen_documents(rng, n_docs), os.path.join(tmpdir, "documents.parquet")
-    )
-    from the_build_project_image_retrieval_with_vector_databases_spark.queries_text import (
-        _oracle_dedup_cluster_stats,
-        q_dedup_cluster_stats,
-    )
-
-    for name, q, o in [
-        ("line_dedup", q_line_dedup, _oracle_line_dedup()),
-        ("winnow_overlap_pairs", q_winnow_overlap_pairs,
-         _oracle_winnow_overlap_pairs()),
-        # r20 ALTERNATE candidate — the duplication report must agree
-        # on every generated pair topology (chains, cliques, none):
-        ("dedup_cluster_stats", q_dedup_cluster_stats,
-         _oracle_dedup_cluster_stats()),
-    ]:
-        ok, msg = compare(q(spark, tmpdir), o, tmpdir, name)
-        assert ok, f"fuzz corpus diverged: {msg}"
-
-
-@settings(max_examples=3, deadline=None, derandomize=True)
-@given(
-    seed=st.integers(min_value=0, max_value=10_000),
-    n_vecs=st.integers(min_value=66, max_value=96),
-)
-def test_fuzz_staged_r20_ivf_stats(spark, tmp_path_factory, seed, n_vecs):
-    """The embeddings-table r20-staged candidate: ivf_balance_stats on
-    a per-seed materialized layout — list counts/fractions/imbalance
-    re-derived by the oracle's argmin assignment on every generated
-    corpus (same layout build + cleanup discipline as the index-tier
-    panel)."""
-    from the_build_project_image_retrieval_with_vector_databases_spark.queries_ann import (
-        _oracle_ivf_balance_stats,
-        q_ivf_balance_stats,
-    )
-
-    rng = np.random.default_rng(seed)
-    tmpdir = str(tmp_path_factory.mktemp(f"fuzz_r20i_{seed}_{n_vecs}"))
-    pq.write_table(
-        _gen_embeddings(rng, n_vecs), os.path.join(tmpdir, "embeddings.parquet")
-    )
-    try:
-        ok, msg = compare(
-            q_ivf_balance_stats(spark, tmpdir),
-            _oracle_ivf_balance_stats(),
-            tmpdir,
-            "ivf_balance_stats",
-        )
-        assert ok, f"fuzz corpus diverged: {msg}"
-    finally:
-        _cleanup_layouts(tmpdir)
-
-
 @settings(max_examples=2, deadline=None, derandomize=True)
 @given(
     seed=st.integers(min_value=0, max_value=10_000),
@@ -1601,17 +1349,14 @@ def test_fuzz_bucketed_revenue_panel(spark, tmp_path_factory, seed, n_cust, n_or
 
 
 def test_fuzz_panel_names_resolve():
-    """Sync guard for the retired-surface fallback (r14): every name in
-    every fuzz panel list must resolve to EITHER a live registry entry
-    or the _retired_surfaces map — a future window rotation that
-    retires a panel entry without updating the fallback fails here
+    """Every name in every fuzz panel list is a registered query with an
+    oracle, so a registry change that drops a panel entry fails here
     instead of KeyError-ing mid-soak."""
     from the_build_project_image_retrieval_with_vector_databases_spark.queries import (
         ORACLES,
         QUERIES,
     )
 
-    retired_q, retired_o = _retired_surfaces()
     for panel in (
         DOC_QUERIES,
         EMB_QUERIES,
@@ -1621,16 +1366,5 @@ def test_fuzz_panel_names_resolve():
         EVENT_FUZZ_QUERIES,
     ):
         for name in panel:
-            assert name in QUERIES or name in retired_q, (
-                f"fuzz panel entry {name!r} is neither registered nor in "
-                "the retired-surface fallback"
-            )
-            # oracle resolution mirrors _run_panel (sized overrides are
-            # corpus-dependent and checked at run time)
-            assert (
-                name in ORACLES
-                or name in retired_o
-                or name in ("semantic_dedup_incremental",)  # sized-only
-            ), f"no oracle path for fuzz panel entry {name!r}"
-    # ...and the fallback map itself must never shadow a live entry
-    assert not set(retired_q) & set(QUERIES)
+            assert name in QUERIES, f"fuzz panel entry {name!r} is not registered"
+            assert name in ORACLES, f"no oracle for fuzz panel entry {name!r}"

@@ -2,13 +2,12 @@
 local mirror of the driver's correctness gate (run at sf0.001 by default,
 any SF via SPARK_GRAFT_TEST_SF_DIR).
 
-Corpus-sized entries: three queries derive a blocking/clustering
+Corpus-sized entries: two queries derive a blocking/clustering
 parameter from the table's parquet footer count (`lsh_near_dup` plane
-count, `semantic_dedup`/`semantic_dedup_incremental` cluster count), and
-their REGISTERED oracle strings embed the derivation for the driver's
-sf0.01 fixture. At any other SF this module compares them against the
-SAME oracle factory re-derived for that SF (the r7 sweep practice,
-now structural); `test_sized_oracles_match_registered_at_driver_scale`
+count, `semantic_dedup` cluster count), and their REGISTERED oracle
+strings embed the derivation for the sf0.01 verification fixture. At
+any other SF this module compares them against the SAME oracle factory
+re-derived for that SF; `test_sized_oracles_match_registered_at_driver_scale`
 pins that the re-derivation reproduces the registered strings exactly
 at the driver scale, so the override can never mask registry drift."""
 
@@ -29,11 +28,10 @@ _DRIVER_SF = "/root/testdata/sf0.01"
 
 @functools.lru_cache(maxsize=None)
 def _sized_oracles(sf_dir: str) -> dict[str, str]:
-    """The three corpus-sized oracles re-derived for ``sf_dir``."""
+    """The corpus-sized oracles re-derived for ``sf_dir``."""
     from the_build_project_image_retrieval_with_vector_databases_spark.queries_ann import (
         _oracle_lsh_near_dup,
         _oracle_semantic_dedup,
-        _oracle_semantic_dedup_incremental,
         sized_k_for,
         sized_planes_for,
     )
@@ -43,26 +41,16 @@ def _sized_oracles(sf_dir: str) -> dict[str, str]:
             0.2, planes=sized_planes_for(sf_dir)
         ),
         "semantic_dedup": _oracle_semantic_dedup(k=sized_k_for(sf_dir)),
-        "semantic_dedup_incremental": _oracle_semantic_dedup_incremental(
-            k=sized_k_for(sf_dir)
-        ),
     }
 
 
 def test_sized_oracles_match_registered_at_driver_scale():
     """The re-derivation at the driver's sf0.01 scale IS the registered
-    SQL, byte for byte — the sweep override cannot hide drift.
-    semantic_dedup_incremental retired from the registry r14; its sized
-    oracle stays here for the fuzz panels' retired-surface rows, so only
-    still-registered names carry the byte-for-byte pin."""
+    SQL, byte for byte — the sweep override cannot hide drift."""
     sized = _sized_oracles(_DRIVER_SF)
-    assert {n for n in sized if n in _ORACLES} == {
-        "lsh_near_dup",
-        "semantic_dedup",
-    }
+    assert set(sized) == {"lsh_near_dup", "semantic_dedup"}
     for name, sql in sized.items():
-        if name in _ORACLES:
-            assert sql == _ORACLES[name], name
+        assert sql == _ORACLES[name], name
 
 
 @pytest.mark.parametrize("name", sorted(_QUERIES))

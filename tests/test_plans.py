@@ -16,7 +16,14 @@ import pytest
 import __spark_entry__ as entrymod
 from pyspark.sql import functions as F
 
+from the_build_project_image_retrieval_with_vector_databases_spark.operators.ann import (
+    hyperplanes,
+)
+
 from .conftest import SF_SMOKE
+
+# 8 seeded 64-D hyperplanes (2 bands of 4 sign bits) for the LSH plan pins
+LSH_PLANES = hyperplanes(64, 8, seed=42)
 
 
 @pytest.fixture(autouse=True)
@@ -76,13 +83,16 @@ def test_pricing_summary_partial_aggregation(spark):
 
 
 def test_knn_join_broadcasts_queries_not_corpus(spark):
-    # knn_join_topk's registry row retired in r7 (sibling: knn_two_phase);
-    # the operator and its plan contract stay pinned here
-    from the_build_project_image_retrieval_with_vector_databases_spark.queries import (
-        q_knn_join_topk,
+    """knn_join broadcasts the query batch and scans the corpus once."""
+    from the_build_project_image_retrieval_with_vector_databases_spark.operators.knn import (
+        knn_join,
     )
 
-    df = q_knn_join_topk(spark, SF_SMOKE)
+    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+    queries = emb.filter(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    df = knn_join(emb, queries, k=3, metric="l2")
     plan = _explain(df)
     body = plan[plan.index("== Physical Plan =="):]
     assert "BroadcastNestedLoopJoin" in body or "BroadcastExchange" in body
@@ -135,11 +145,16 @@ def test_pq_topk_scans_codes_only(spark):
     """The ADC search must scan ONLY the code columns of the encoded
     layout (8 ints/row, not the 64-float embedding), with zero shuffles
     and a TakeOrderedAndProject top-k."""
+    from the_build_project_image_retrieval_with_vector_databases_spark.operators.pq import (
+        pq_adc_topk,
+    )
     from the_build_project_image_retrieval_with_vector_databases_spark.queries_ann import (
-        q_pq_topk,
+        _pq_layout,
     )
 
-    df = q_pq_topk(spark, SF_SMOKE)  # registry row retired r7; plan contract stays
+    path, codebooks, qvec = _pq_layout(spark, SF_SMOKE)
+    codes = spark.read.parquet(path).filter(F.col("vec_id") != 0)
+    df = pq_adc_topk(codes, codebooks, qvec, k=10)
     plan = _physical(df)
     m = re.search(r"ReadSchema: ([^\n]*)", plan)
     assert m and "embedding" not in m.group(1) and "code_0" in m.group(1)
@@ -192,34 +207,26 @@ def test_no_array_columns_in_oracle_checked_outputs(spark):
 
 
 def test_cosine_dedup_is_bucket_keyed_not_nested_loop(spark):
-    """Round-3 contract: cosine_dedup routes through the LSH-banded
-    radius_join — the candidate step is a hash equi-join on the band
-    bucket, so NO nested-loop/cartesian join may appear anywhere in the
-    plan (the brute-force form planned a BroadcastNestedLoopJoin)."""
-    from the_build_project_image_retrieval_with_vector_databases_spark.queries_ann import (
-        q_cosine_dedup,
+    """The LSH-banded cosine radius_join: the candidate step is a hash
+    equi-join on the band bucket, so NO nested-loop/cartesian join may
+    appear anywhere in the plan (the brute-force form planned a
+    BroadcastNestedLoopJoin)."""
+    from the_build_project_image_retrieval_with_vector_databases_spark.operators.knn import (
+        radius_join,
     )
 
-    df = q_cosine_dedup(spark, SF_SMOKE)  # registry row retired r7; plan contract stays
+    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet").filter(
+        F.col("vec_id") < 300
+    )
+    df = radius_join(
+        emb, emb, radius=0.28, metric="cosine",
+        blocking="lsh", planes=LSH_PLANES, n_bands=2,
+    )
     plan = _physical(df)
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
     # the candidate join keys on the exploded (band, bucket) pair
     assert "__band" in plan and "__key" in plan
-
-
-def test_exact_dedup_single_shuffle(spark):
-    # registry row retired r16 (url_host_dedup registered); the
-    # md5-keyed single-shuffle plan contract stays pinned here
-    from the_build_project_image_retrieval_with_vector_databases_spark.queries_text import (
-        q_exact_dedup,
-    )
-
-    df = q_exact_dedup(spark, SF_SMOKE)
-    plan = _explain(df)
-    body = plan[plan.index("== Physical Plan =="):]
-    assert body.count("Exchange hashpartitioning") == 1
-    assert "partial_count" in body or "partial_min" in body
 
 
 def test_dedup_queries_release_cached_blocks(spark):
@@ -235,55 +242,21 @@ def test_dedup_queries_release_cached_blocks(spark):
         assert jsc.getPersistentRDDs().size() == before, f"{name} leaked cache"
 
 
-def test_spill_localckpt_mode_matches_parquet(spark, monkeypatch):
-    """r18 (VERDICT r17 #7): SPARK_GRAFT_SPILL=localckpt swaps the
-    parquet spill round-trip for an eager localCheckpoint — the rows
-    must be identical; only the materialization mechanics (and the
-    block-release determinism documented in spill.py) change."""
-    import gc
-    import time as _time
-
-    name = "perplexity_buckets"
-    jsc = spark.sparkContext._jsc.sc()
-    before = jsc.getPersistentRDDs().size()
-    monkeypatch.delenv("SPARK_GRAFT_SPILL", raising=False)
-    base = sorted(
-        map(tuple, entrymod.queries()[name](spark, SF_SMOKE).collect())
-    )
-    monkeypatch.setenv("SPARK_GRAFT_SPILL", "localckpt")
-    alt = sorted(
-        map(tuple, entrymod.queries()[name](spark, SF_SMOKE).collect())
-    )
-    assert base == alt
-    # the checkpoint block is reclaimed by the ContextCleaner once the
-    # frame is dropped (the documented bounded-leak behavior); wait for
-    # it here so later deterministic-release pins see a stable count
-    # (the cleaner is weak-reference based, so reclamation needs a JVM
-    # GC — which by default only runs on memory pressure or the 30-min
-    # periodic GC; that latency is exactly why parquet stays the
-    # default mode)
-    deadline = _time.time() + 30
-    while jsc.getPersistentRDDs().size() > before and _time.time() < deadline:
-        gc.collect()
-        spark.sparkContext._jvm.System.gc()
-        _time.sleep(0.5)
-    assert jsc.getPersistentRDDs().size() <= before, (
-        "localckpt checkpoint blocks not reclaimed after frame drop"
-    )
-
-
 def test_ivf_topk_batch_shares_one_pruned_scan(spark):
     """The batched IVF join must amortize ONE partition-pruned scan
     across the whole query batch: centroid INSET filter at the scan,
     two-phase WindowGroupLimit for per-query top-k, and exactly one
-    hash exchange (the rank window) — no per-query scan jobs. (The
-    registry row retired r13; the plan shape stays pinned here via the
-    kept query function.)"""
+    hash exchange (the rank window) — no per-query scan jobs."""
+    from the_build_project_image_retrieval_with_vector_databases_spark.operators.ann import (
+        ivf_search_batch,
+    )
     from the_build_project_image_retrieval_with_vector_databases_spark.queries_ann import (
-        q_ivf_topk_batch,
+        _ivf_layout,
     )
 
-    df = q_ivf_topk_batch(spark, SF_SMOKE)
+    path, centroids = _ivf_layout(spark, SF_SMOKE)
+    queries = [(i, centroids[i]) for i in range(8)]
+    df = ivf_search_batch(spark.read.parquet(path), centroids, queries, k=3, nprobe=4)
     plan = _physical(df)
     assert re.search(r"PartitionFilters: \[.*centroid.* INSET ", plan)
     assert "WindowGroupLimit" in plan
@@ -344,14 +317,18 @@ def test_interval_join_is_equi_not_nested_loop(spark):
 def test_decontaminate_broadcasts_benchmark_grams(spark):
     """The benchmark n-gram set is tiny by construction (eval sets are
     MBs); it must broadcast so the 100 TB corpus side never shuffles for
-    the join — the only hash exchange is the per-doc hit aggregate.
-    (Registry row retired r16 — contamination_eval_split registered;
-    the corpus-side plan contract stays pinned here.)"""
-    from the_build_project_image_retrieval_with_vector_databases_spark.queries_text import (
-        q_decontaminate,
+    the join — the only hash exchange is the per-doc hit aggregate."""
+    from the_build_project_image_retrieval_with_vector_databases_spark.operators.decontam import (
+        ngram_overlap,
+    )
+    from the_build_project_image_retrieval_with_vector_databases_spark.sources.tables import (
+        spread,
     )
 
-    df = q_decontaminate(spark, SF_SMOKE)
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+    corpus = spread(docs).filter(F.col("doc_id") >= 20)
+    bench = docs.filter(F.col("doc_id") < 20)
+    df = ngram_overlap(corpus, bench, n=4, min_hits=1, severe_frac=0.2)
     plan = _physical(df)
     assert "BroadcastHashJoin" in plan  # bench grams always broadcast
     assert "CartesianProduct" not in plan
@@ -402,7 +379,6 @@ def test_banded_candidate_joins_pin_shuffle_hash(spark):
     from the_build_project_image_retrieval_with_vector_databases_spark.operators import dedup as D
     from the_build_project_image_retrieval_with_vector_databases_spark.operators.ann import lsh_candidates
     from the_build_project_image_retrieval_with_vector_databases_spark.operators.knn import radius_join
-    from the_build_project_image_retrieval_with_vector_databases_spark.queries_ann import LSH_PLANES
 
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")

@@ -1,5 +1,5 @@
-"""Salted aggregation / replicated skew join: result-equivalence with the
-direct forms on a deliberately skewed dataset (one key owns ~60% of rows)."""
+"""Salted aggregation: result-equivalence with the direct form on a
+deliberately skewed dataset (one key owns ~60% of rows)."""
 
 from __future__ import annotations
 
@@ -7,7 +7,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from the_build_project_image_retrieval_with_vector_databases_spark.operators.skew import (
-    replicated_skew_join,
     salted_agg_counts,
 )
 
@@ -37,15 +36,3 @@ def test_salted_counts_equal_direct(spark, skewed):
     assert salted == direct
 
 
-def test_replicated_join_equals_plain(spark, skewed):
-    dim = spark.range(0, 97).select(
-        F.col("id").cast("int").alias("key"),
-        F.concat(F.lit("name_"), F.col("id")).alias("key_name"),
-    )
-    plain = skewed.join(dim, "key").select("row_id", "key", "key_name")
-    salted = replicated_skew_join(skewed, dim, "key", "row_id", n_salts=8).select(
-        "row_id", "key", "key_name"
-    )
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-    # inner-join row count sanity: every fact row with key in dim survives once
-    assert salted.count() == skewed.filter(F.col("key") < 97).count()

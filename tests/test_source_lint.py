@@ -6,10 +6,17 @@ A driver-side vector, matrix or bound table must enter a plan through
 calls), never through a per-element ``F.array(*[F.lit(x) ...])`` list:
 that form costs one py4j round trip per element (1.7-2.5 s for a
 32×128 centroid matrix) and an O(k·D)-node tree to analyze.
+
+Every query wrapper (``q_*``) and oracle constant (``ORACLE_*``) defined
+at the top level of a ``queries*.py`` module must be a registry value
+(``QUERIES`` / ``ORACLES``): an unregistered wrapper is code no registry
+entry reaches.
 """
 
 from __future__ import annotations
 
+import ast
+import importlib
 import pathlib
 import re
 
@@ -51,3 +58,75 @@ def test_lint_pattern_catches_wrapped_and_nested_forms():
         "d = array_lit(q)\n"
     )
     assert _hit_lines(planted) == [1, 2, 5]
+
+
+def _unregistered(
+    source: str, namespace: dict, queries: dict, oracles: dict
+) -> list[str]:
+    """Top-level ``q_*`` functions / ``ORACLE_*`` constants in ``source``
+    whose objects (looked up in ``namespace``) are not registry values."""
+    q_vals = list(queries.values())
+    o_vals = list(oracles.values())
+    out = []
+    for node in ast.parse(source).body:
+        if isinstance(node, ast.FunctionDef) and node.name.startswith("q_"):
+            names, registered = [node.name], q_vals
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            if isinstance(node, ast.Assign):
+                targets = node.targets
+            else:
+                targets = [node.target]
+            names = [
+                t.id for t in targets
+                if isinstance(t, ast.Name) and t.id.startswith("ORACLE_")
+            ]
+            registered = o_vals
+        else:
+            continue
+        for name in names:
+            if not any(namespace[name] is v for v in registered):
+                out.append(name)
+    return out
+
+
+def test_every_query_wrapper_and_oracle_is_registered():
+    from the_build_project_image_retrieval_with_vector_databases_spark.queries import (
+        ORACLES,
+        QUERIES,
+    )
+
+    paths = sorted(_PKG.glob("queries*.py"))
+    assert len(paths) >= 2, "query modules not found"
+    hits = []
+    for path in paths:
+        mod = importlib.import_module(f"{_PKG.name}.{path.stem}")
+        hits += [
+            f"{path.name}:{name}"
+            for name in _unregistered(
+                path.read_text(encoding="utf-8"), vars(mod), QUERIES, ORACLES
+            )
+        ]
+    assert not hits, "defined but not in QUERIES/ORACLES: " + ", ".join(hits)
+
+
+def test_registry_lint_catches_unregistered_wrapper_and_oracle():
+    """Negative control: a planted wrapper and oracle that no registry
+    entry holds are reported; registered ones and other names are not."""
+    planted = (
+        "def q_kept(spark, sf_dir):\n    return None\n"
+        "def q_orphan(spark, sf_dir):\n    return None\n"
+        "ORACLE_KEPT = 'SELECT 1'\n"
+        "ORACLE_ORPHAN: str = 'SELECT 2'\n"
+        "def helper():\n    return None\n"
+    )
+    ns: dict = {}
+    exec(compile(planted, "<planted>", "exec"), ns)
+    queries = {"kept": ns["q_kept"]}
+    oracles = {"kept": ns["ORACLE_KEPT"]}
+    assert _unregistered(planted, ns, queries, oracles) == [
+        "q_orphan",
+        "ORACLE_ORPHAN",
+    ]
+    queries["orphan"] = ns["q_orphan"]
+    oracles["orphan"] = ns["ORACLE_ORPHAN"]
+    assert _unregistered(planted, ns, queries, oracles) == []

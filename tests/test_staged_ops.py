@@ -269,22 +269,6 @@ def test_kmeans_step_matches_numpy_reference(spark):
     assert len({cid for cid, _ in got}) >= 2, "degenerate clustering"
 
 
-def test_kmeans_step_oracle_parity_staged(spark, sf_dir):
-    """The staged kmeans_step DuckDB oracle already passes the
-    driver-faithful comparison (integer-exact end-to-end), so r7
-    registration is a 2-line diff."""
-    from the_build_project_image_retrieval_with_vector_databases_spark.queries_ann import (
-        _oracle_kmeans_step,
-        q_kmeans_step,
-    )
-    from .oracle_harness import compare
-
-    ok, msg = compare(
-        q_kmeans_step(spark, sf_dir), _oracle_kmeans_step(), sf_dir, "kmeans_step"
-    )
-    assert ok, msg
-
-
 def test_kmeans_train_exact_matches_python_loop(spark):
     """The full quantized-Lloyd training loop reproduces a pure-Python
     reference bit-for-bit (same init, same integer assignment, same
@@ -852,25 +836,50 @@ def test_semantic_dedup_incremental_matches_sequential(spark):
     )
 
 
-def test_semantic_dedup_incremental_oracle_parity_staged(spark, sf_dir):
-    """The staged semantic_dedup_incremental DuckDB oracle already
-    passes the driver-faithful comparison. Oracle built with the
-    corpus-sized k (== the registered default at the driver scales) so
-    the test holds at any SPARK_GRAFT_TEST_SF_DIR."""
+def _semantic_dedup_incremental_parity(spark, sf_dir: str, name: str):
+    """Run semantic_dedup_incremental at its oracle's pin (batch vec_id
+    >= 400 against corpus vec_id < 400, tau = 3/10, corpus-sized
+    lowest-vec_id centroid init over the FULL table) and compare it with
+    the recursive-CTE DuckDB reference through ``oracle_harness.compare``."""
+    from the_build_project_image_retrieval_with_vector_databases_spark.operators.dedup import (
+        pins_for,
+        semantic_dedup_incremental,
+    )
     from the_build_project_image_retrieval_with_vector_databases_spark.queries_ann import (
         _oracle_semantic_dedup_incremental,
-        q_semantic_dedup_incremental,
+        _semantic_init,
         sized_k_for,
     )
+    from the_build_project_image_retrieval_with_vector_databases_spark.sources.tables import load_table
     from .oracle_harness import compare
 
-    ok, msg = compare(
-        q_semantic_dedup_incremental(spark, sf_dir),
-        _oracle_semantic_dedup_incremental(k=sized_k_for(sf_dir)),
-        sf_dir,
-        "semantic_dedup_incremental",
-    )
+    emb = load_table(spark, sf_dir, "embeddings")
+    init = _semantic_init(emb, sized_k_for(sf_dir))
+    handles: list = []
+    try:
+        out = semantic_dedup_incremental(
+            emb.filter(F.col("vec_id") < 400),
+            emb.filter(F.col("vec_id") >= 400),
+            init, threshold_num=3, threshold_den=10,
+            cache_handles=handles, pinned=pins_for(sf_dir, "embeddings"),
+        )
+        ok, msg = compare(
+            out,
+            _oracle_semantic_dedup_incremental(k=sized_k_for(sf_dir)),
+            sf_dir,
+            name,
+        )
+    finally:
+        for h in handles:
+            h.unpersist()
     assert ok, msg
+
+
+def test_semantic_dedup_incremental_oracle_parity_staged(spark, sf_dir):
+    """semantic_dedup_incremental (the streaming ingest loop's operator)
+    matches its DuckDB reference with the corpus-sized k, so the test
+    holds at any SPARK_GRAFT_TEST_SF_DIR."""
+    _semantic_dedup_incremental_parity(spark, sf_dir, "semantic_dedup_incremental")
 
 
 def test_sized_k_derivation():
@@ -937,21 +946,10 @@ def test_semantic_dedup_incremental_sized_k_parity_sf01(spark):
     """Sequential-ingest incremental SemDeDup under the sf0.1 sized
     clustering (k=32): recursive-CTE oracle parity holds for a k the
     registered sf0.01 pin never exercises."""
-    from the_build_project_image_retrieval_with_vector_databases_spark.queries_ann import (
-        _oracle_semantic_dedup_incremental,
-        q_semantic_dedup_incremental,
-        sized_k_for,
-    )
-    from .oracle_harness import compare
-
     sfd = "/root/testdata/sf0.1"
-    ok, msg = compare(
-        q_semantic_dedup_incremental(spark, sfd),
-        _oracle_semantic_dedup_incremental(k=sized_k_for(sfd)),
-        sfd,
-        "semantic_dedup_incremental_sf01_sized",
+    _semantic_dedup_incremental_parity(
+        spark, sfd, "semantic_dedup_incremental_sf01_sized"
     )
-    assert ok, msg
 
 
 def test_ann_recall_eval_matches_numpy_reference(spark):
@@ -1118,15 +1116,16 @@ def test_dedup_keep_best_matches_reference(spark):
     """Staged r8: per-cluster best-quality representative — cluster
     membership must match dedup_components' rosters and the pick must
     be the max-quality member (ties → lowest id), recomputed from the
-    quality_score output (registry row retired r16; the surface stays
-    via the kept q_ function)."""
+    quality_score operator's output."""
     import collections
 
     import __spark_entry__ as entrymod
 
+    from the_build_project_image_retrieval_with_vector_databases_spark.operators.textops import (
+        quality_score,
+    )
     from the_build_project_image_retrieval_with_vector_databases_spark.queries_text import (
         q_dedup_keep_best,
-        q_quality_score,
     )
 
     got = {
@@ -1137,7 +1136,9 @@ def test_dedup_keep_best_matches_reference(spark):
     comp_rows = entrymod.queries()["dedup_components"](spark, SF_SMOKE).collect()
     qual = {
         r.doc_id: r.quality
-        for r in q_quality_score(spark, SF_SMOKE).collect()
+        for r in quality_score(
+            spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+        ).collect()
     }
     # reconstruct rosters from the pair table (components query only
     # emits checksums): rebuild via union-find over the same pairs
@@ -3477,75 +3478,6 @@ def test_exact_substring_dedup_oracle_parity_staged(spark, sf_dir):
     assert ok, msg
 
 
-def test_language_confidence_matches_python_reference(spark):
-    """pred/best/second/margin/gate equal the single-threaded mirror on
-    the fixture corpus at a NON-registry margin, including und docs
-    (no stopword hits => margin 0, never confident) and argmax ties
-    (first language ascending, matching language_id)."""
-    from the_build_project_image_retrieval_with_vector_databases_spark.operators.textops import (
-        LANG_STOPWORDS,
-        language_confidence,
-    )
-
-    m = 0.1  # NOT the registry constant
-    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    got = {
-        r.doc_id: (r.pred_lang, r.lang_score, r.second_score, r.margin, r.is_confident)
-        for r in language_confidence(docs, min_margin=m).collect()
-    }
-    langs = sorted(LANG_STOPWORDS)
-    n_confident = 0
-    for r in docs.collect():
-        toks = [t for t in r.text.lower().split() if t]
-        n = max(len(toks), 1)
-        sc = [sum(1 for t in toks if t in LANG_STOPWORDS[g]) / n for g in langs]
-        best = max(sc)
-        second = sorted(sc)[-2]
-        pred = "und" if best <= 0 else langs[sc.index(best)]
-        conf = best > 0 and best - second >= m
-        n_confident += conf
-        assert got[r.doc_id] == (pred, best, second, best - second, conf), r.doc_id
-    assert 0 < n_confident < len(got)  # the gate splits the fixture
-
-
-def test_language_confidence_und_and_tie_shapes(spark):
-    """Hand-built shapes: a no-stopword doc is und/unconfident with
-    margin 0; a doc hitting two languages EQUALLY ties pred to the
-    first language ascending and has margin 0; a clean English doc
-    clears the gate."""
-    from the_build_project_image_retrieval_with_vector_databases_spark.operators.textops import (
-        language_confidence,
-    )
-
-    rows = [
-        (1, "zzz qqq xxx www"),                     # und
-        (2, "the der the der"),                     # en/de tie -> de
-        (3, "the cat and the dog is in the house"),  # clean en
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        r.doc_id: (r.pred_lang, r.margin, r.is_confident)
-        for r in language_confidence(df, min_margin=0.05).collect()
-    }
-    assert got[1] == ("und", 0.0, False)
-    assert got[2][0] == "de" and got[2][1] == 0.0 and not got[2][2]
-    assert got[3][0] == "en" and got[3][2]
-
-
-def test_language_confidence_plan_zero_shuffle(spark):
-    """Plan contract: per-row projection chain — ZERO exchanges, no
-    Python, no join (the language_id class)."""
-    from the_build_project_image_retrieval_with_vector_databases_spark.queries_text import (
-        q_language_confidence_filter,
-    )
-
-    df = q_language_confidence_filter(spark, SF_SMOKE)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange hashpartitioning" not in plan
-    assert "BatchEvalPython" not in plan
-    assert "Join" not in plan
-
-
 def _entropy_py(rows, thr):
     """Single-threaded mirror of operators.textops.token_entropy under
     the integer micro-nat quantization contract."""
@@ -3616,11 +3548,13 @@ def test_token_entropy_pathological_docs(spark):
 def test_token_entropy_plan_shape(spark):
     """Plan contract: two keyed exchanges ((doc, token) count then the
     doc aggregate), both map-side partial; no join, no Python."""
-    from the_build_project_image_retrieval_with_vector_databases_spark.queries_text import (
-        q_token_entropy,
+    from the_build_project_image_retrieval_with_vector_databases_spark.operators.textops import (
+        token_entropy,
     )
+    from the_build_project_image_retrieval_with_vector_databases_spark.sources.tables import spread
 
-    df = q_token_entropy(spark, SF_SMOKE)
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+    df = token_entropy(spread(docs), templated_below=2_500_000)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange hashpartitioning") == 2
     assert "BatchEvalPython" not in plan
@@ -3780,84 +3714,28 @@ def test_bpe_train_encode_self_managed_cache_release(spark):
 
 
 def test_bpe_oracle_regex_single_spelling():
-    """r15 ADVICE: every DuckDB mirror of the BPE word regex must embed
-    the ONE shared textops.BPE_PATTERN constant — three hand-spelled
-    copies had drifted into two escape styles (one with raw control
-    characters mid-SQL)."""
+    """Every DuckDB mirror of the BPE word regex must embed the ONE
+    shared textops.BPE_PATTERN constant, so hand-spelled copies cannot
+    drift into different escape styles (or raw control characters
+    mid-SQL)."""
     from the_build_project_image_retrieval_with_vector_databases_spark.operators.textops import (
         BPE_PATTERN,
     )
     from the_build_project_image_retrieval_with_vector_databases_spark.queries_text import (
         ORACLE_BPE_TOKEN_COUNTS,
         _oracle_bpe_merge_step,
-        _oracle_bpe_train_encode,
     )
 
     want = f"'{BPE_PATTERN}'"
     for name, sql in (
         ("bpe_token_counts", ORACLE_BPE_TOKEN_COUNTS),
         ("bpe_merge_step", _oracle_bpe_merge_step()),
-        ("bpe_train_encode", _oracle_bpe_train_encode()),
     ):
         assert want in sql, f"{name} drifted from BPE_PATTERN"
         for ctrl in "\t\n\f\r":
             assert ctrl not in want  # literal escapes, not control chars
 
 
-def test_language_confidence_oracle_indices_track_language_set():
-    """r15 ADVICE: the oracle's best/runner-up cells must be derived
-    from len(LANG_STOPWORDS), not hard-coded — the Spark side reads
-    element_at(arr, -1)/(-2) and stays correct if the language set
-    ever changes."""
-    from the_build_project_image_retrieval_with_vector_databases_spark.operators.textops import (
-        LANG_STOPWORDS,
-    )
-    from the_build_project_image_retrieval_with_vector_databases_spark.queries_text import (
-        _oracle_language_confidence_filter,
-    )
-
-    n = len(LANG_STOPWORDS)
-    sql = _oracle_language_confidence_filter()
-    assert f"arr[{n}] AS best" in sql
-    assert f"arr[{n - 1}] AS second" in sql
-
-
-def test_bpe_train_encode_oracle_parity_staged(spark, sf_dir):
-    """The staged unrolled-CTE DuckDB oracle passes the driver-faithful
-    comparison (verified by hand at sf0.001/sf0.01/sf0.1 in r15)."""
-    from the_build_project_image_retrieval_with_vector_databases_spark.queries_text import (
-        _oracle_bpe_train_encode,
-        q_bpe_train_encode,
-    )
-    from .oracle_harness import compare
-
-    ok, msg = compare(
-        q_bpe_train_encode(spark, sf_dir),
-        _oracle_bpe_train_encode(),
-        sf_dir,
-        "bpe_train_encode",
-    )
-    assert ok, msg
-
-
-def test_staged_r18_oracle_parity(spark, sf_dir):
-    """Both r18-staged DuckDB oracles pass the driver-faithful
-    comparison (verified by hand at sf0.001/sf0.01/sf0.1 in r15)."""
-    from the_build_project_image_retrieval_with_vector_databases_spark.queries_text import (
-        _oracle_language_confidence_filter,
-        _oracle_token_entropy,
-        q_language_confidence_filter,
-        q_token_entropy,
-    )
-    from .oracle_harness import compare
-
-    for name, q, o in [
-        ("language_confidence_filter", q_language_confidence_filter,
-         _oracle_language_confidence_filter()),
-        ("token_entropy", q_token_entropy, _oracle_token_entropy()),
-    ]:
-        ok, msg = compare(q(spark, sf_dir), o, sf_dir, name)
-        assert ok, msg
     # bpe_train_encode has its own parity test above (heavier: 6
     # driver-collected rounds) -- kept separate so -k filters compose
 
@@ -3916,10 +3794,7 @@ def test_staged_r17_plan_shapes(spark):
 
 # ---------------------------------------------------------------------------
 # gopher_length_screen / fineweb_filter_chain / domain_quota_sample —
-# STAGED r16, r19 registration candidates (provisional write-ahead
-# pairings in queries.py below the ROUND-18 plan: gopher_length_screen ↔
-# gopher_quality, fineweb_filter_chain ↔ clean_corpus,
-# domain_quota_sample ↔ stratified_sample).
+# unregistered operators, checked against Python references.
 # ---------------------------------------------------------------------------
 
 
@@ -4088,40 +3963,6 @@ def test_domain_quota_sample_matches_python_reference(spark):
     assert sum(k for _, _, _, k in got.values()) == 3  # 2 alpha + 1 beta
 
 
-def test_staged_r19_oracle_parity(spark, sf_dir):
-    """All three r19-staged DuckDB oracles pass the driver-faithful
-    comparison (verified by hand at sf0.001/sf0.01/sf0.1 in r16)."""
-    from the_build_project_image_retrieval_with_vector_databases_spark.queries_text import (
-        _oracle_domain_quota_sample,
-        _oracle_fineweb_filter_chain,
-        _oracle_gopher_length_screen,
-        q_domain_quota_sample,
-        q_fineweb_filter_chain,
-        q_gopher_length_screen,
-    )
-    from .oracle_harness import compare
-
-    for name, q, o in [
-        (
-            "gopher_length_screen",
-            q_gopher_length_screen,
-            _oracle_gopher_length_screen(),
-        ),
-        (
-            "fineweb_filter_chain",
-            q_fineweb_filter_chain,
-            _oracle_fineweb_filter_chain(),
-        ),
-        (
-            "domain_quota_sample",
-            q_domain_quota_sample,
-            _oracle_domain_quota_sample(),
-        ),
-    ]:
-        ok, msg = compare(q(spark, sf_dir), o, sf_dir, name)
-        assert ok, msg
-
-
 def test_staged_r19_plan_shapes(spark):
     """Plan contracts: gopher_length_screen and fineweb_filter_chain —
     ZERO hash exchanges (pure per-row expression chains over one scan,
@@ -4130,19 +3971,31 @@ def test_staged_r19_plan_shapes(spark):
     domain_quota_sample — exactly ONE hash exchange (the host key),
     shared by the count window and the rank window. All: no cartesian,
     no BNLJ, no row-Python."""
-    from the_build_project_image_retrieval_with_vector_databases_spark.queries_text import (
-        q_domain_quota_sample,
-        q_fineweb_filter_chain,
-        q_gopher_length_screen,
+    from the_build_project_image_retrieval_with_vector_databases_spark.operators.sample import (
+        domain_quota_sample,
     )
+    from the_build_project_image_retrieval_with_vector_databases_spark.operators.textops import (
+        fineweb_filter_chain,
+        gopher_length_screen,
+    )
+    from the_build_project_image_retrieval_with_vector_databases_spark.sources.tables import spread
 
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+    d = F.col("doc_id")
+    urls = docs.select(
+        "doc_id",
+        F.concat(
+            F.lit("https://s"), (d % 37).cast("string"), F.lit("."),
+            F.col("source"), F.lit(".example.com/d/"), d.cast("string"),
+        ).alias("url"),
+    )
     plans = {}
-    for name, q in [
-        ("len", q_gopher_length_screen),
-        ("chain", q_fineweb_filter_chain),
-        ("quota", q_domain_quota_sample),
+    for name, df in [
+        ("len", gopher_length_screen(spread(docs))),
+        ("chain", fineweb_filter_chain(spread(docs))),
+        ("quota", domain_quota_sample(urls, "url", max_per_host=2)),
     ]:
-        plan = q(spark, SF_SMOKE)._jdf.queryExecution().executedPlan().toString()
+        plan = df._jdf.queryExecution().executedPlan().toString()
         assert "CartesianProduct" not in plan, name
         assert "BroadcastNestedLoopJoin" not in plan, name
         assert "BatchEvalPython" not in plan, name
@@ -4155,53 +4008,9 @@ def test_staged_r19_plan_shapes(spark):
 
 
 # ---------------------------------------------------------------------------
-# line_dedup / winnow_overlap_pairs / ivf_balance_stats — STAGED r16,
-# r20 registration candidates (two rounds ahead; final pairings belong
-# to the r18/r19 write-ahead plans in queries.py).
+# winnow_overlap_pairs — unregistered operator, checked against a Python
+# reference.
 # ---------------------------------------------------------------------------
-
-
-def test_ccnet_line_dedup_matches_python_reference(spark):
-    """Corpus-wide first-occurrence line dedup equals the
-    single-threaded mirror: cross-doc boilerplate collapses to the
-    (doc_id, pos)-first copy, within-doc repeats count as dups, blank
-    and whitespace-only lines never participate, empty docs keep a
-    zero row, and kept text reconstructs in position order."""
-    from the_build_project_image_retrieval_with_vector_databases_spark.operators.textops import (
-        ccnet_line_dedup,
-    )
-
-    rows = [
-        (0, "subscribe now\nreal content alpha\nsubscribe now"),
-        (1, "subscribe now\nreal content beta"),
-        (2, "real content beta\nunique gamma\n  \n\nunique gamma"),
-        (3, ""),
-        (4, "   only whitespace lines   \nactual delta"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        r.doc_id: (r.n_lines, r.n_dup_lines, r.dup_line_frac, r.kept_text)
-        for r in ccnet_line_dedup(df).collect()
-    }
-    seen: set = set()
-    expect: dict = {}
-    per_doc = {
-        i: [ln.strip(" \t\r") for ln in text.split("\n") if ln.strip(" \t\r")]
-        for i, text in rows
-    }
-    for i in sorted(per_doc):  # (doc_id, pos) order IS iteration order
-        kept, dups = [], 0
-        for ln in per_doc[i]:
-            if ln in seen:
-                dups += 1
-            else:
-                seen.add(ln)
-                kept.append(ln)
-        n = len(per_doc[i])
-        expect[i] = (n, dups, dups / max(n, 1), "\n".join(kept))
-    assert got == expect
-    assert got[0] == (3, 1, 1 / 3, "subscribe now\nreal content alpha")
-    assert got[3] == (0, 0, 0.0, "")
 
 
 def test_winnow_overlap_pairs_matches_python_reference(spark):
@@ -4261,173 +4070,21 @@ def test_winnow_overlap_pairs_matches_python_reference(spark):
     assert (2, 3) in uncapped and (2, 3) not in got
 
 
-def test_ivf_balance_stats_matches_python_reference(spark):
-    """Per-list counts, fractions, and the imbalance factor equal the
-    numpy argmin assignment (ties -> lowest centroid id) over the same
-    vec_id < 16 centroids the layout builder used; fractions sum to 1
-    and imbalance means to 1 exactly."""
-    import numpy as np
-
-    from the_build_project_image_retrieval_with_vector_databases_spark.queries_ann import (
-        q_ivf_balance_stats,
-    )
-
-    rows = q_ivf_balance_stats(spark, SF_SMOKE).collect()
-    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet").collect()
-    vecs = {r.vec_id: np.array(r.embedding, dtype=np.float64) for r in emb}
-    cents = [vecs[i] for i in range(16)]
-    counts: dict = {}
-    for vid, v in vecs.items():
-        d = [float(np.sqrt(((v - c) ** 2).sum())) for c in cents]
-        cid = min(range(16), key=lambda i: (d[i], i))
-        counts[cid] = counts.get(cid, 0) + 1
-    n, kk = len(vecs), len(counts)
-    got = {r.centroid: (r.n_vectors, r.frac, r.imbalance) for r in rows}
-    assert set(got) == set(counts)
-    for cid, c in counts.items():
-        assert got[cid] == (c, c / n, c * kk / n), cid
-    assert abs(sum(f for _, f, _ in got.values()) - 1.0) < 1e-12
-    assert abs(sum(i for _, _, i in got.values()) / kk - 1.0) < 1e-12
-
-
-def test_staged_r20_oracle_parity(spark, sf_dir):
-    """All three r20-staged DuckDB oracles pass the driver-faithful
-    comparison (verified by hand at sf0.001/sf0.01/sf0.1 in r16)."""
-    from the_build_project_image_retrieval_with_vector_databases_spark.queries_ann import (
-        _oracle_ivf_balance_stats,
-        q_ivf_balance_stats,
-    )
-    from the_build_project_image_retrieval_with_vector_databases_spark.queries_text import (
-        _oracle_line_dedup,
-        _oracle_winnow_overlap_pairs,
-        q_line_dedup,
-        q_winnow_overlap_pairs,
-    )
-    from .oracle_harness import compare
-
-    for name, q, o in [
-        ("line_dedup", q_line_dedup, _oracle_line_dedup()),
-        (
-            "winnow_overlap_pairs",
-            q_winnow_overlap_pairs,
-            _oracle_winnow_overlap_pairs(),
-        ),
-        (
-            "ivf_balance_stats",
-            q_ivf_balance_stats,
-            _oracle_ivf_balance_stats(),
-        ),
-    ]:
-        ok, msg = compare(q(spark, sf_dir), o, sf_dir, name)
-        assert ok, msg
-
-
 def test_staged_r20_plan_shapes(spark):
-    """Plan contracts: line_dedup — exactly TWO hash exchanges (the
-    line-hash window, the per-doc re-aggregation); winnow_overlap_pairs
-    — every join a hash/sort-merge EQUI join on the fingerprint hash or
-    doc id, never a nested loop; ivf_balance_stats — the k-row totals
-    BROADCAST back (BroadcastNestedLoopJoin of a 1-row side is the
-    broadcast-scalar shape, same as important_stock), and the scan
-    reads only the partition column (column pruning — no vector bytes).
-    All: no cartesian, no row-Python."""
-    from the_build_project_image_retrieval_with_vector_databases_spark.queries_ann import (
-        q_ivf_balance_stats,
+    """Plan contract: every winnow_overlap_pairs join is a hash/sort-merge
+    EQUI join on the fingerprint hash or doc id, never a nested loop;
+    no cartesian, no row-Python."""
+    from the_build_project_image_retrieval_with_vector_databases_spark.operators.textops import (
+        winnow_overlap_pairs,
     )
-    from the_build_project_image_retrieval_with_vector_databases_spark.queries_text import (
-        q_line_dedup,
-        q_winnow_overlap_pairs,
-    )
+    from the_build_project_image_retrieval_with_vector_databases_spark.queries_text import WN_K, WN_W
+    from the_build_project_image_retrieval_with_vector_databases_spark.sources.tables import spread
 
-    plans = {}
-    for name, q in [
-        ("line", q_line_dedup),
-        ("wop", q_winnow_overlap_pairs),
-        ("ivf", q_ivf_balance_stats),
-    ]:
-        plan = q(spark, SF_SMOKE)._jdf.queryExecution().executedPlan().toString()
-        assert "CartesianProduct" not in plan, name
-        assert "BatchEvalPython" not in plan, name
-        plans[name] = plan
-    assert plans["line"].count("Exchange hashpartitioning") == 2
-    assert "BroadcastNestedLoopJoin" not in plans["line"]
-    assert "BroadcastNestedLoopJoin" not in plans["wop"]
-    assert "ReadSchema: struct<vec_id" not in plans["ivf"]  # pruned scan
-
-
-def test_dedup_cluster_stats_matches_python_reference(spark):
-    """The cluster-size histogram equals a union-find over the same
-    MinHash-LSH pairs: per size, cluster counts / doc coverage /
-    removable counts / corpus fractions, with singletons derived as
-    corpus_total − docs_in_clusters."""
-    from collections import Counter
-
-    from the_build_project_image_retrieval_with_vector_databases_spark.operators import (
-        dedup as D,
-    )
-    from the_build_project_image_retrieval_with_vector_databases_spark.queries_text import (
-        q_dedup_cluster_stats,
-    )
-
-    got = {
-        r.cluster_size: (
-            r.n_clusters, r.n_docs, r.n_removable, r.removable_frac,
-        )
-        for r in q_dedup_cluster_stats(spark, SF_SMOKE).collect()
-    }
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    total = docs.count()
-    pairs = [
-        (r.left_id, r.right_id)
-        for r in D.minhash_lsh_pairs(
-            docs, threshold=0.5, pinned=D.pins_for(SF_SMOKE)
-        ).collect()
-    ]
-    parent: dict = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in pairs:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[ra] = rb
-    sizes = Counter(Counter(find(x) for x in parent).values())
-    in_clusters = sum(s * c for s, c in sizes.items())
-    if total - in_clusters > 0:
-        sizes[1] = sizes.get(1, 0) + (total - in_clusters)
-    expect = {
-        s: (c, s * c, (s - 1) * c, (s - 1) * c / total)
-        for s, c in sizes.items()
-    }
-    assert got == expect
-    assert sum(n for _, n, _, _ in got.values()) == total  # partition
-    assert pairs, "fixture lost its near-dup pairs"
-
-
-def test_dedup_cluster_stats_plan_shape(spark):
-    """Plan contract: the histogram runs on the cluster table (already
-    collapsed from the corpus) and the two 1-row totals broadcast back
-    — BNLJ of 1-row sides only (the broadcast-scalar shape), no
-    cartesian, no row-Python; corpus text is never re-read by the
-    stats stage. The operator legitimately scans documents exactly
-    TWICE — once in the pair generator and once for the corpus-total
-    count the singleton backfill needs — so the pin is == 2: an
-    accidental extra scan in the stats stage fails it (r16 ADVICE #3:
-    the old <= 2 pin with a one-scan docstring would have passed
-    one)."""
-    from the_build_project_image_retrieval_with_vector_databases_spark.queries_text import (
-        q_dedup_cluster_stats,
-    )
-
-    plan = (
-        q_dedup_cluster_stats(spark, SF_SMOKE)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    df = winnow_overlap_pairs(spread(docs), k=WN_K, w=WN_W, min_shared=2, max_df=10)
+    plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan
-    assert plan.count("documents.parquet") == 2  # pair scan + count agg
+    assert "BroadcastNestedLoopJoin" not in plan
+
+

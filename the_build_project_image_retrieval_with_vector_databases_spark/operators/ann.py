@@ -779,54 +779,6 @@ def lsh_bucket(
     return df.withColumn(out_col, key.cast("long"))
 
 
-def brp_lsh_fit(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    bucket_length: float = 2.0,
-    num_hash_tables: int = 8,
-    seed: int = 42,
-):
-    """MLlib ``BucketedRandomProjectionLSH`` over the embedding column —
-    the built-in Euclidean-LSH path SURVEY §7.3 names alongside the
-    custom hyperplane LSH (which stays the oracle-checkable default).
-
-    Returns ``(model, featured_df)`` where ``featured_df`` carries the
-    ``__features`` vector column the model hashes. At scale the model's
-    ``approxSimilarityJoin`` shuffles on (hash-table, bucket) keys —
-    the same bucketed-join shape as :func:`lsh_candidates`."""
-    if not _HAVE_MLLIB:
-        raise RuntimeError("pyspark.ml unavailable")
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-
-    featured = df.withColumn("__features", array_to_vector(F.col(vec_col)))
-    brp = BucketedRandomProjectionLSH(
-        inputCol="__features",
-        outputCol="__hashes",
-        bucketLength=bucket_length,
-        numHashTables=num_hash_tables,
-        seed=seed,
-    )
-    return brp.fit(featured), featured
-
-
-def brp_approx_topk(model, featured: DataFrame, query_vec: list[float], k: int = 10):
-    """``approxNearestNeighbors``: candidates = rows sharing ≥1 hash
-    bucket with the key, exact L2 on candidates only."""
-    from pyspark.ml.linalg import Vectors
-
-    return model.approxNearestNeighbors(
-        featured, Vectors.dense([float(x) for x in query_vec]), k, distCol="dist"
-    )
-
-
-def brp_similarity_join(
-    model, a: DataFrame, b: DataFrame, threshold: float
-) -> DataFrame:
-    """``approxSimilarityJoin`` at an L2 distance threshold — the MLlib
-    counterpart of :func:`lsh_candidates` + radius verify."""
-    return model.approxSimilarityJoin(a, b, threshold, distCol="dist")
-
-
 def lsh_candidates(
     df: DataFrame,
     planes: list[list[float]],
@@ -836,15 +788,14 @@ def lsh_candidates(
     carry: list[str] | None = None,
 ) -> DataFrame:
     """Candidate near-neighbor pairs = same LSH bucket — ONE shuffle on
-    the bucket key (r18, guide §2.3/§2.4: the per-bucket combination
-    expansion of minhash_lsh_pairs/simhash). The previous self-join
-    shuffled the bucketed relation twice AND evaluated the sign-plane
-    projection (P literal-array dot products per vector) twice — one
-    groupBy collects each bucket's id-sorted rows and posexplode +
-    suffix slice emits exactly the i<j pairs, so the projection runs
-    once and the broadcast-mis-estimate hazard the shuffle_hash pin
-    guarded is gone (no join remains; ``pinned`` stays accepted for
-    API compatibility).
+    the bucket key (guide §2.3/§2.4: the per-bucket combination
+    expansion of minhash_lsh_pairs/simhash). A self-join would shuffle
+    the bucketed relation twice AND evaluate the sign-plane projection
+    (P literal-array dot products per vector) twice — one groupBy
+    collects each bucket's id-sorted rows and posexplode + suffix slice
+    emits exactly the i<j pairs, so the projection runs once and there
+    is no join to carry a broadcast-mis-estimate hazard (``pinned``
+    stays accepted for API compatibility).
 
     ``carry`` names payload columns to ride the bucket shuffle and come
     back as ``<col>_l`` / ``<col>_r`` on each pair — the caller's
@@ -882,39 +833,3 @@ def lsh_candidates(
     )
 
 
-def ivf_balance_stats(layout: DataFrame) -> DataFrame:
-    """Per-inverted-list size diagnostics for a materialized IVF layout
-    (the ``write_ivf_index`` partitionBy(centroid) parquet) — staged
-    r16, r20 registration candidate. The list-size imbalance factor is
-    THE first number an IVF operator checks before tuning nprobe: probe
-    latency is bounded by the largest probed list, so a skewed coarse
-    quantizer (imbalance ≫ 1) wastes the nprobe budget on one hot list
-    (the λ imbalance factor of the FAISS index-statistics docs;
-    Jégou et al. 2011 §IVFADC sizing).
-
-    Per centroid: ``n_vectors``, ``frac`` of the corpus, and
-    ``imbalance`` = n_vectors / mean list size (= n·k/N, an int-ratio
-    double — exact cross-engine). Scale shape: the count per centroid
-    is a columnar scan of the partition column only (column pruning:
-    no vector bytes read) with one map-side-partial aggregate to k
-    rows; the k-row totals then BROADCAST back — no second corpus
-    pass, no window over a global partition."""
-    counts = layout.groupBy("centroid").agg(
-        F.count(F.lit(1)).alias("n_vectors")
-    )
-    totals = counts.agg(
-        F.sum("n_vectors").alias("__n"), F.count(F.lit(1)).alias("__k")
-    )
-    return (
-        counts.crossJoin(F.broadcast(totals))
-        .select(
-            F.col("centroid").cast("int").alias("centroid"),
-            F.col("n_vectors"),
-            (F.col("n_vectors").cast("double") / F.col("__n").cast("double"))
-            .alias("frac"),
-            (
-                (F.col("n_vectors") * F.col("__k")).cast("double")
-                / F.col("__n").cast("double")
-            ).alias("imbalance"),
-        )
-    )

@@ -48,12 +48,12 @@ MINHASH_COEFFS: list[tuple[int, int]] = [
 ]
 
 
-# Size-aware join-pin contract (VERDICT r6 #3). The merge/shuffle_hash
+# Size-aware join-pin contract. The merge/shuffle_hash
 # pins on corpus-scaled joins exist because Catalyst's STATIC size
 # estimate (compressed-parquet bytes, pre-explosion) under-estimated the
 # real banded/shingle relations by orders of magnitude at 100× data and
 # planned fatal broadcast builds. But the pin is insurance the toy scale
-# shouldn't pay (measured r5→r6: dedup_components 2.6→5.3 s at sf0.1).
+# shouldn't pay (measured: dedup_components 2.6→5.3 s at sf0.1 pinned).
 # Resolution: gate the pins on a MEASURED corpus size — the parquet
 # footer row count (sources.tables.table_row_count), not an estimate.
 # Below the threshold even a worst-case broadcast is tens of MB (≤100k
@@ -63,7 +63,7 @@ MINHASH_COEFFS: list[tuple[int, int]] = [
 # with unknown sizes); the query layer passes pins_for(sf_dir).
 CORPUS_PIN_ROWS = 100_000
 
-# semantic_dedup per-cluster verify (r18): the Gram product is computed
+# semantic_dedup per-cluster verify: the Gram product is computed
 # in column blocks of ≤ SEMANTIC_GRAM_BLOCK_ELEMS elements (m×B float64
 # working set ≈ 32 MB at the default) so a degenerate giant cluster
 # costs O(m·(D+B)) memory, never O(m²); the integer threshold predicate
@@ -103,20 +103,6 @@ def _opt_persist(df: DataFrame, cache_handles: list | None) -> DataFrame:
     return out
 
 
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Exact duplicate groups by content hash: representative (min id),
-    group size. Hash-partitioned single shuffle; at 100 TB the md5 key
-    spreads uniformly so no skew mitigation is needed."""
-    return (
-        df.select(F.col(id_col), F.md5(F.col(text_col)).alias("text_md5"))
-        .groupBy("text_md5")
-        .agg(
-            F.min(id_col).alias("keep_id"),
-            F.count("*").alias("n_copies"),
-        )
-    )
-
-
 def exact_dedup_keep_first(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """The dedup *transformation*: keep the min-id row per distinct text."""
     w = Window.partitionBy(F.md5(F.col(text_col))).orderBy(F.col(id_col).asc())
@@ -145,20 +131,6 @@ def doc_shingles(
     toked = spread(df).select(F.col(id_col), tokens(text_col).alias("__toks"))
     return toked.select(
         F.col(id_col), token_shingles(F.col("__toks"), n).alias("sh")
-    )
-
-
-def shingle_table(
-    df: DataFrame, n: int = 3, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """(doc_id, shingle) inverted index over distinct token n-gram shingles.
-
-    explode_outer + null-filter (not plain explode) everywhere a heavy
-    array expression feeds a generate — see ngram_jaccard_pairs."""
-    return (
-        doc_shingles(df, n, text_col, id_col)
-        .select(F.col(id_col), F.explode_outer("sh").alias("shingle"))
-        .filter(F.col("shingle").isNotNull())
     )
 
 
@@ -199,9 +171,8 @@ def ngram_jaccard_pairs(
     the pipeline's work (PLAN_LINT records the executed ``final_*``
     counts alongside the static ones for this query).
 
-    This shape was re-litigated in r12 (VERDICT r11 #4) and KEPT on
-    measurement. Two rewrites lost the A/B at 100× derived data
-    (500k docs, local[32], min-of-2 noop-sink runs):
+    This shape is kept on measurement. Two rewrites lost the A/B at
+    100× derived data (500k docs, local[32], min-of-2 noop-sink runs):
     (a) join directly on the df-cap window's shingle partitioning with
     per-doc sizes as a post-aggregate join — fewer STATIC exchanges but
     47.9 s vs 30.8 s here (the extra sizes consumers defeated AQE's
@@ -318,7 +289,7 @@ def minhash_signatures(
     ]
     sig0 = xs.groupBy(id_col).agg(*aggs)
     if not sentinel:
-        # r17: LSH-pair callers skip the sentinel back-join entirely —
+        # LSH-pair callers skip the sentinel back-join entirely —
         # a sentinel signature is MINHASH_PRIME in every slot while a
         # real signature is < MINHASH_PRIME in every slot, so sentinel
         # docs can only band-collide with EACH OTHER, and every such
@@ -381,9 +352,8 @@ def minhash_lsh_pairs(
     # scan+tokenize cost; the persisted set is corpus-sized and
     # MEMORY_AND_DISK spills safely).
     shs = _opt_persist(doc_shingles(df, n, text_col, id_col), cache_handles)
-    # r18: the signature table has exactly ONE consumer now (the bucket
-    # aggregate below — the banded self-join that read it twice is
-    # gone), so the r17 persist was dropped: persisting a single-
+    # the signature table has exactly ONE consumer (the bucket
+    # aggregate below), so it is not persisted: persisting a single-
     # consumer frame only adds the cache materialization cost.
     # sentinel=False: zero-shingle docs never reach the banding (their
     # sentinel-induced candidates are provably dropped by the verify —
@@ -411,19 +381,18 @@ def minhash_lsh_pairs(
     )
     key_cols = ["band"] + [f"k{r}" for r in range(rows_per_band)]
     banded = sigs.select(F.col(id_col), F.inline_outer(band_structs))
-    # r18 (guide §2.3/§2.4, VERDICT r17 #6): candidate generation is a
-    # per-bucket combination expansion, not a self-join. The banded
-    # relation used to be shuffled TWICE (once per join side, each
-    # corpus×bands rows of band keys + id) into a shuffle_hash join
-    # whose build side was itself a broadcast-mis-estimate hazard (the
-    # pinned form). One groupBy on the band key shuffles the same rows
-    # ONCE, sorts each bucket's ids, and emits exactly the i<j pairs
-    # the join+filter produced: posexplode picks the left id, the
-    # suffix slice supplies every greater id, so pairs stream O(m) per
-    # row instead of materializing an m²-element array — a degenerate
-    # all-identical bucket behaves like the join form (same single-key
-    # skew, half the shuffled bytes, no hash build). Pair SET is
-    # identical by construction (one row per (doc, band) means no
+    # candidate generation is a per-bucket combination expansion, not a
+    # self-join (guide §2.3/§2.4). A self-join would shuffle the banded
+    # relation TWICE (once per join side, each corpus×bands rows of band
+    # keys + id) into a shuffle_hash join whose build side is itself a
+    # broadcast-mis-estimate hazard. One groupBy on the band key
+    # shuffles the same rows ONCE, sorts each bucket's ids, and emits
+    # exactly the i<j pairs the join+filter would: posexplode picks the
+    # left id, the suffix slice supplies every greater id, so pairs
+    # stream O(m) per row instead of materializing an m²-element array —
+    # a degenerate all-identical bucket behaves like the join form (same
+    # single-key skew, half the shuffled bytes, no hash build). Pair SET
+    # is identical by construction (one row per (doc, band) means no
     # duplicate ids inside a bucket; cross-band duplicates collapse in
     # the same distinct both forms end with).
     buckets = (
@@ -545,18 +514,6 @@ def simhash(
     )
 
 
-def simhash_dup_groups(
-    df: DataFrame, bits: int = 32, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Documents sharing an identical SimHash fingerprint (strict variant)."""
-    s = simhash(df, bits, text_col, id_col)
-    return (
-        s.groupBy("simhash")
-        .agg(F.count("*").alias("n_docs"), F.min(id_col).alias("keep_id"))
-        .filter(F.col("n_docs") > 1)
-    )
-
-
 def simhash_near_dup_pairs(
     df: DataFrame,
     bits: int = 32,
@@ -581,9 +538,9 @@ def simhash_near_dup_pairs(
     verified with ``bit_count(fp_l XOR fp_r) ≤ d`` — integer-portable, so
     the DuckDB oracle runs the identical arithmetic.
 
-    Scale shape (r18): one fingerprint aggregate with a SINGLE consumer
-    (the per-bucket pair expansion — the banded self-join that read it
-    twice is gone, so the persist went with it), bands×N banded rows,
+    Scale shape: one fingerprint aggregate with a SINGLE consumer
+    (the per-bucket pair expansion, so nothing is persisted), bands×N
+    banded rows,
     ONE shuffle keyed by (band, band_key). No all-pairs comparison
     anywhere: work is proportional to bucket collisions, and the verify
     is O(1) per candidate. ``cache_handles`` stays accepted for API
@@ -610,10 +567,10 @@ def simhash_near_dup_pairs(
         ]
     )
     banded = s.select(F.col(id_col), F.col("simhash"), F.inline(band_structs))
-    # r18 (guide §2.3/§2.4 — same rewrite as minhash_lsh_pairs):
-    # per-bucket combination expansion instead of the banded self-join
-    # that shuffled the banded relation twice and (unpersisted)
-    # evaluated the fingerprint pipeline twice. One groupBy on
+    # per-bucket combination expansion (guide §2.3/§2.4, as in
+    # minhash_lsh_pairs) instead of a banded self-join, which would
+    # shuffle the banded relation twice and (unpersisted) evaluate the
+    # fingerprint pipeline twice. One groupBy on
     # (band, bkey) collects each bucket's (id, fp) structs sorted by id
     # (ids unique per bucket — one banded row per (doc, band)), then
     # posexplode + suffix slice emits exactly the i<j pairs the
@@ -966,7 +923,7 @@ def semantic_dedup(
     and HUGEINT in DuckDB. No sqrt, no division, no ulp hazard at the
     threshold boundary.
 
-    Scale shape (r17): assignment is map-only (centroids broadcast as
+    Scale shape: assignment is map-only (centroids broadcast as
     a k·D literal; beyond ``LITERAL_K_MAX`` the value-identical Arrow
     int64-matmul twin, still map-only); the pair stage is ONE shuffle
     keyed on cid feeding a per-cluster Arrow group map with O(m²)
@@ -974,14 +931,13 @@ def semantic_dedup(
     and scales with the corpus exactly like
     :func:`~.ann.planes_for_corpus` sizes LSH buckets (SemDeDup itself
     uses k ≈ N/occupancy), so every group is an occupancy-bounded
-    pandas frame. No join anywhere anymore: the pre-r17 machinery (cid
-    self-join + interpreted per-pair dot + decimal(38,0) threshold +
-    distinct drop set + corpus back-join — 3 corpus-scaled exchanges
-    behind shuffle_hash/merge pins against mis-estimated broadcasts)
-    collapsed into the group map — fewer shuffled bytes and no
-    broadcast hazard left to pin.
+    pandas frame. No join anywhere: a join form (cid self-join +
+    interpreted per-pair dot + decimal(38,0) threshold + distinct drop
+    set + corpus back-join) needs 3 corpus-scaled exchanges behind
+    shuffle_hash/merge pins against mis-estimated broadcasts; the group
+    map shuffles fewer bytes and leaves no broadcast hazard to pin.
 
-    Oversized-cluster caveat (r18): ``k_for_corpus`` bounds the AVERAGE
+    Oversized-cluster caveat: ``k_for_corpus`` bounds the AVERAGE
     occupancy, not the max — a duplicate-heavy or degenerate corpus can
     collapse into one giant cluster. The group-map verify therefore
     never materializes the m×m Gram matrix: it runs in column blocks of
@@ -992,8 +948,7 @@ def semantic_dedup(
     numpy speed. The remaining skew exposure is the one pandas group
     itself (Spark materializes m·D int64 per group ≈ 0.5 GB at m=1M,
     D=64) and the O(m²) verify TIME in one task; if a corpus is known
-    to degenerate past that, re-size k or fall back to the pre-r17
-    join form (git history, r16).
+    to degenerate past that, re-size k or use a cid self-join form.
 
     ``centroids_q`` are quantized int centroids — from the k lowest-id
     vectors (deterministic init) or :func:`~.ann.kmeans_train_exact`
@@ -1013,12 +968,10 @@ def semantic_dedup(
     if not (0 < threshold_num < threshold_den):
         raise ValueError("threshold must be a fraction in (0, 1)")
 
-    # r17 optimization (guide §2.4/§4.2): the pair stage is ONE shuffle
-    # keyed on cid feeding a per-cluster Arrow group map, replacing the
-    # previous 4-piece machinery (cid self-join + interpreted zip_with
-    # dot per pair + decimal(38,0) threshold + distinct drop set +
-    # corpus back-join — 3 consumers of a persisted assignment, ~3
-    # corpus-scaled exchanges). Every cluster is occupancy-bounded by
+    # the pair stage is ONE shuffle keyed on cid feeding a per-cluster
+    # Arrow group map (guide §2.4/§4.2) — no cid self-join, per-pair
+    # interpreted dot, distinct drop set or corpus back-join. Every
+    # cluster is occupancy-bounded by
     # construction (k ≈ N/occupancy sizes the clusters exactly so the
     # O(m²) verify is affordable — the SemDeDup blocking argument), so
     # one group is one bounded pandas frame. Inside the group the dot
@@ -1058,10 +1011,10 @@ def semantic_dedup(
     # ``gram_block_elems`` is the test seam for the multi-block path
     block_elems = int(gram_block_elems or SEMANTIC_GRAM_BLOCK_ELEMS)
 
-    # r18 (ADVICE r17): the threshold matrix is computed in COLUMN
-    # BLOCKS of the Gram product (memory O(m·(D+B)) per cluster instead
-    # of the full m×m int64 Gram — a degenerate corpus that collapses
-    # into one giant cluster no longer allocates m² ints), and the
+    # the threshold matrix is computed in COLUMN BLOCKS of the Gram
+    # product (memory O(m·(D+B)) per cluster instead of the full m×m
+    # int64 Gram — a degenerate corpus that collapses into one giant
+    # cluster never allocates m² ints), and the
     # compare itself is vectorized float64 with a certified margin: the
     # exact integer predicate den²·d² > num²·|l|²·|r|² is decided in
     # float wherever the two sides differ by more than the accumulated
@@ -1275,12 +1228,12 @@ def semantic_dedup_incremental(
 
 
 # ---------------------------------------------------------------------------
-# URL/host-level dedup (staged r14, r16 registration candidate)
+# URL/host-level dedup
 # ---------------------------------------------------------------------------
 
 # Default strip list: only UNAMBIGUOUS tracking params (ad/click IDs
 # and mail-campaign tags). Bare ``ref``/``ref_src`` are deliberately
-# NOT here (r14 ADVICE): on many sites ``ref`` is semantic (e.g.
+# NOT here: on many sites ``ref`` is semantic (e.g.
 # ``?ref=<branch>`` on code hosts), and stripping it would silently
 # collapse distinct documents into one canonical key. Callers whose
 # crawl knows its referrer convention pass their own regex.

@@ -9,7 +9,7 @@ this engine that is not a single declarative plan.
 Spark-first shape: min-label propagation with **pointer jumping**
 (label-doubling, the shortcutting step of Shiloach–Vishkin / the
 star-contraction family), FUSED into one keyed join + one aggregate
-per round (r17 optimization): the round's edge multiset is the graph
+per round: the round's edge multiset is the graph
 edges ∪ per-node self-loops ∪ the current label table read as pointer
 edges ``v → comp(v)``, so ``min(comp(b)) GROUP BY a`` computes, in a
 single shuffle pair, ``comp'(v) = min(comp(v), min_{u∈N(v)} comp(u),
@@ -63,7 +63,7 @@ from pyspark.sql import functions as F
 from .spill import spill_dir as _spill_dir
 
 
-# Driver union-find bound (r18): at or below this many symmetric edge
+# Driver union-find bound: at or below this many symmetric edge
 # rows the component labels are computed by a driver-side union-find
 # over the ALREADY-MATERIALIZED pair cache — the same (node, min
 # reachable id) fixpoint, with zero per-round Spark jobs. 2^18 edge
@@ -90,7 +90,7 @@ def connected_components(
     DataFrame (process-temp spill, removed at exit); no cached blocks
     remain after the call.
 
-    r18: at or below ``CC_DRIVER_MAX_EDGES`` symmetric edge rows
+    At or below ``CC_DRIVER_MAX_EDGES`` symmetric edge rows
     (override via ``driver_max_edges``; the test seam) the labels come
     from a driver-side union-find over the persisted edge cache — the
     identical min-id-per-component fixpoint (parity-pinned against the
@@ -340,52 +340,3 @@ def leakage_safe_split(
     )
 
 
-def dedup_cluster_stats(
-    components: DataFrame, corpus: DataFrame
-) -> DataFrame:
-    """Corpus duplication report — staged r16 (r20 ALTERNATE
-    registration candidate): the cluster-SIZE histogram of a dedup
-    run, the "how duplicated is my corpus" summary every pipeline
-    owner reads before committing to a dedup pass (CCNet/RefinedWeb
-    publish exactly these removal-rate tables). Per cluster size:
-    ``n_clusters``, ``n_docs`` they cover, ``n_removable`` (size − 1
-    per cluster — the docs a keep-one policy drops), and
-    ``removable_frac`` of the whole corpus. Documents in no near-dup
-    pair appear as the ``cluster_size = 1`` row, derived as
-    corpus_total − docs_in_clusters — the pair graph never needs to
-    materialize singletons.
-
-    Scale shape: runs on the OUTPUT of :func:`dedup_components`
-    (≤ one row per cluster — already collapsed from the corpus), so
-    the histogram aggregate is cluster-count-sized; the corpus total
-    and in-cluster total are two 1-row aggregates BROADCAST back.
-    Nothing here re-touches corpus text."""
-    total = corpus.agg(F.count(F.lit(1)).alias("__total"))
-    in_clusters = components.agg(
-        F.coalesce(F.sum("n_docs"), F.lit(0)).alias("__in")
-    )
-    hist = components.groupBy(
-        F.col("n_docs").cast("bigint").alias("cluster_size")
-    ).agg(F.count(F.lit(1)).alias("n_clusters"))
-    singles = in_clusters.crossJoin(total).select(
-        F.lit(1).cast("bigint").alias("cluster_size"),
-        (F.col("__total") - F.col("__in")).alias("n_clusters"),
-    )
-    return (
-        hist.unionByName(singles)
-        .filter(F.col("n_clusters") > 0)
-        .crossJoin(F.broadcast(total))
-        .select(
-            "cluster_size",
-            "n_clusters",
-            (F.col("cluster_size") * F.col("n_clusters")).alias("n_docs"),
-            ((F.col("cluster_size") - F.lit(1)) * F.col("n_clusters")).alias(
-                "n_removable"
-            ),
-            (
-                ((F.col("cluster_size") - F.lit(1)) * F.col("n_clusters"))
-                .cast("double")
-                / F.col("__total").cast("double")
-            ).alias("removable_frac"),
-        )
-    )

@@ -58,20 +58,6 @@ def random_split(
     return df.randomSplit(weights, seed)
 
 
-def deterministic_split(
-    df: DataFrame, frac: float, id_col: str, seed: int = 42
-) -> tuple[DataFrame, DataFrame]:
-    """Oracle-checkable split: hash(id) mod 100 < frac*100 → left.
-
-    ``randomSplit`` is per-partition RNG (not reproducible in DuckDB);
-    this variant is the deterministic contract the correctness gate uses.
-    """
-    key = shuffle_key(id_col, seed) % F.lit(100)
-    left = df.filter(key < F.lit(int(frac * 100)))
-    right = df.filter(key >= F.lit(int(frac * 100)))
-    return left, right
-
-
 def weighted_multinomial_sample(
     df: DataFrame,
     *,
@@ -144,49 +130,6 @@ def weighted_multinomial_sample(
     )
 
 
-def mixture_sample(
-    df: DataFrame,
-    mix: dict[str, float],
-    budget: int,
-    *,
-    source_col: str = "source",
-    id_col: str = "doc_id",
-    seed: int = 42,
-) -> DataFrame:
-    """Training-mix assembly: draw a deterministic sample with per-source
-    quotas ``k_s = round(budget × share_s)`` — the 'data mixing' step of
-    corpus construction (e.g. 50% web / 30% books / 20% code), here with
-    the same engine-portable surrogate order as SA1 (multiplicative hash
-    of the row id; no RNG, identical rank on any engine/partitioning).
-
-    Scale shape: one shuffle on the source key for the per-source rank
-    window; sources with share 0 are filtered at the scan (pushed
-    predicate), so unmixed data is never read. Exact-k per source, like
-    the reference's per-class sampler (SURVEY SA1), not
-    expected-fraction."""
-    quotas = {s: int(round(budget * share)) for s, share in mix.items()}
-    quota_col = F.coalesce(
-        *[
-            F.when(F.col(source_col) == s, F.lit(k))
-            for s, k in sorted(quotas.items())
-        ],
-        F.lit(0),
-    )
-    w = Window.partitionBy(source_col).orderBy(
-        shuffle_key(id_col, seed).asc(), F.col(id_col).asc()
-    )
-    return (
-        df.filter(F.col(source_col).isin(list(quotas)))
-        .withColumn("__rank", F.row_number().over(w))
-        .filter(F.col("__rank") <= quota_col)
-        .select(
-            F.col(source_col),
-            F.col(id_col),
-            F.col("__rank").alias("mix_rank"),
-        )
-    )
-
-
 def domain_quota_sample(
     df: DataFrame,
     url_col: str = "url",
@@ -197,8 +140,7 @@ def domain_quota_sample(
     """Per-registered-domain document cap — the crawl-balance rule of
     RefinedWeb (Penedo et al. 2023) / Dolma: no single host may
     contribute more than ``max_per_host`` documents, so hot domains
-    (forums, link farms) cannot dominate the training mix. Staged r16
-    (r19 registration candidate).
+    (forums, link farms) cannot dominate the training mix.
 
     Per input row: the normalized ``host`` (the same pure-Catalyst
     normalization as :func:`..dedup.normalize_url` — URL-level dedup

@@ -19,7 +19,7 @@ min-union, same as production KMV).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import md5_long
@@ -152,7 +152,7 @@ def source_overlap_matrix(
     k: int = 64,
 ) -> DataFrame:
     """Pairwise cross-source n-gram overlap matrix via per-source KMV
-    sketches (staged r14, r17 registration candidate) — the
+    sketches — the
     mix-design question "how much do my sources repeat each other?"
     answered without an all-pairs doc comparison: per source, the k
     smallest distinct 60-bit gram hashes (a KMV sketch, Beyer et al.
@@ -190,7 +190,7 @@ def source_overlap_matrix(
         .filter(F.col("__rn") <= k)
         .select("source", "h")
     )
-    # r18 (guide §1.1 — don't compute it three times): ``slots`` is
+    # guide §1.1, don't compute it three times: ``slots`` is
     # consumed by THREE downstream subtrees (srcs twice via the pair
     # cross-join, plus the merged broadcast), and without a
     # materialization each reference re-derives the ENTIRE corpus

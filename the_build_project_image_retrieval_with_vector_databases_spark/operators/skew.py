@@ -26,7 +26,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.vector import array_lit
 from .sample import HASH_MOD, HASH_MULT
 
 
@@ -59,30 +58,3 @@ def salted_agg_counts(
     return partial.groupBy(key).agg(*merged)
 
 
-def replicated_skew_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    key: str,
-    fact_id_col: str,
-    n_salts: int = 8,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-safe fact ⋈ dim equi-join on ``key``: fact rows get a
-    deterministic salt, dim rows replicate across all salts, the join runs
-    on (key, salt). Same rows out as the plain join (property-tested).
-
-    Only fact-preserving join types are allowed: with ``right``/``full``
-    (or ``left`` from the dim's perspective) an unmatched dim row would
-    surface once per salt — ``n_salts`` spurious duplicates."""
-    allowed = {"inner", "left", "left_outer", "leftouter", "left_semi", "leftsemi", "left_anti", "leftanti"}
-    if how not in allowed:
-        raise ValueError(
-            f"replicated_skew_join: how={how!r} not supported — dim rows are "
-            f"replicated {n_salts}x, so only fact-preserving joins "
-            f"({sorted(allowed)}) are correct"
-        )
-    f = fact.withColumn("__salt", salt_col(fact_id_col, n_salts))
-    d = dim.withColumn(
-        "__salt", F.explode(array_lit(list(range(n_salts)), "array<int>"))
-    )
-    return f.join(d, [key, "__salt"], how).drop("__salt")

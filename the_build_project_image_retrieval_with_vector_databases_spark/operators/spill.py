@@ -3,12 +3,11 @@
 Operators that reuse an expensive intermediate across several joins must
 ``persist()`` it, but a *query wrapper* returning a lazy DataFrame has no
 post-materialization hook to unpersist — every call would leak cached
-blocks into the executor storage pool for the session lifetime (round-2
-ADVICE). The fix used across the engine: materialize the (small) final
-result to a process-temp parquet spill, release every persisted
-intermediate immediately, and hand back a plain file-scan DataFrame —
-zero cached blocks outlive the call, and the spill dirs are removed at
-process exit.
+blocks into the executor storage pool for the session lifetime. The fix
+used across the engine: materialize the (small) final result to a
+process-temp parquet spill, release every persisted intermediate
+immediately, and hand back a plain file-scan DataFrame — zero cached
+blocks outlive the call, and the spill dirs are removed at process exit.
 
 At 100 TB this is also the honest shape: the reusable intermediates are
 corpus-sized (persist → memory/disk, bounded by the storage pool), while
@@ -19,7 +18,6 @@ small end products a pipeline would write to a table anyway.
 from __future__ import annotations
 
 import atexit
-import os
 import shutil
 import tempfile
 
@@ -42,37 +40,13 @@ def materialize_and_release(
 ) -> DataFrame:
     """Run ``df`` to a parquet spill, unpersist every handle, return the
     file-scan re-read. The write is the materializing action, so the
-    persisted intermediates are live exactly while they are useful.
-
-    ``SPARK_GRAFT_SPILL=localckpt`` (r18, VERDICT r17 #7 A/B) swaps the
-    parquet round-trip for an eager ``localCheckpoint``: measured
-    ~0.05-0.7 s faster per spill consumer at sf0.1 (dedup_recall_eval
-    2.59→1.88, perplexity_buckets 1.43→1.10, minhash_lsh_dedup
-    1.38→1.32, dsir_importance 1.19→1.16; min-of-2, like-for-like
-    session), because the committer write + file-scan read-back
-    disappear. It is NOT the default because it trades away two
-    contracts the parquet form guarantees: (a) deterministic zero
-    leaked blocks — the checkpoint blocks are freed by the
-    weak-reference ContextCleaner only after the caller drops the
-    returned frame AND a JVM GC runs (default periodic GC: 30 min), so
-    blocks routinely linger for the session lifetime (measured: a
-    dropped frame's block survives driver gc.collect() until an
-    explicit System.gc() — the round-2 ADVICE pin tests check the
-    deterministic form); (b) executor-loss recomputability of the
-    materialized result (the graph.py localCheckpoint caveat). Flip it
-    on for throughput-oriented batch sessions that tolerate both."""
-    if os.environ.get("SPARK_GRAFT_SPILL", "parquet") == "localckpt":
-        out = df.localCheckpoint(eager=True)
-        for h in cache_handles:
-            h.unpersist()
-        cache_handles.clear()
-        return out
+    persisted intermediates are live exactly while they are useful."""
     path = spill_dir(prefix)
     df.write.mode("overwrite").parquet(path)
     for h in cache_handles:
         h.unpersist()
     cache_handles.clear()
-    # r17: read back with the writer's own schema — the schema is known
+    # read back with the writer's own schema — the schema is known
     # statically, so the footer-sniffing pass (a measured ~0.1-0.2 s
     # fixed job per spill consumer) is pure waste.
     return df.sparkSession.read.schema(df.schema).parquet(path)

@@ -27,87 +27,6 @@ LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
 }
 
 
-def with_tokens(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return df.withColumn("toks", tokens(text_col))
-
-
-def token_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Per-document token count / distinct count / mean token length."""
-    toks = tokens(text_col)
-    n = F.size(toks)
-    total_len = F.aggregate(
-        toks, F.lit(0), lambda acc, t: acc + F.length(t)
-    )
-    return spread(df).select(
-        F.col(id_col),
-        n.alias("n_tokens"),
-        F.size(F.array_distinct(toks)).alias("n_distinct_tokens"),
-        # raw double: a single IEEE division of two exact integers is
-        # bit-identical cross-engine, while round(ratio, 6) diverges on
-        # exact .5 ties (Spark HALF_UP vs DuckDB's multiply/rint path —
-        # the min_cost_order divergence class, CHANGES_r05)
-        (total_len.cast("double") / F.greatest(n, F.lit(1)).cast("double")).alias(
-            "mean_token_len"
-        ),
-    )
-
-
-def top_terms(
-    df: DataFrame, k: int = 20, text_col: str = "text"
-) -> DataFrame:
-    """Corpus-wide term frequencies, top-k (tiebreak lexicographic).
-
-    explode → hash agg; partial aggregation keeps the shuffle tiny at
-    scale (term cardinality, not token count)."""
-    # explode_outer + null-filter: a bare explode lets Catalyst push a
-    # size(tokens)>0 filter into the scan, re-evaluating the tokenize per
-    # row (see operators.dedup.ngram_jaccard_pairs)
-    exploded = (
-        spread(df)
-        .select(F.explode_outer(tokens(text_col)).alias("term"))
-        .filter(F.col("term").isNotNull())
-    )
-    counts = exploded.groupBy("term").agg(F.count("*").alias("tf"))
-    return counts.orderBy(F.col("tf").desc(), F.col("term").asc()).limit(k)
-
-
-def tf_idf(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_df: int = 2,
-) -> DataFrame:
-    """Classic smoothed TF-IDF: tf(t,d) · ln((N+1)/(df+1)).
-
-    Two hash aggregations; doc count enters as a broadcast scalar
-    (cross-join of a 1-row aggregate — Catalyst broadcasts it)."""
-    toks = (
-        spread(df)
-        .select(F.col(id_col), F.explode_outer(tokens(text_col)).alias("term"))
-        .filter(F.col("term").isNotNull())
-    )
-    tf = toks.groupBy(id_col, "term").agg(F.count("*").alias("tf"))
-    dfreq = tf.groupBy("term").agg(F.count("*").alias("df")).filter(
-        F.col("df") >= min_df
-    )
-    n_docs = df.select(F.count("*").alias("n_docs"))
-    return (
-        tf.join(dfreq, "term")
-        .crossJoin(F.broadcast(n_docs))
-        .select(
-            F.col(id_col),
-            "term",
-            "tf",
-            "df",
-            F.round(
-                F.col("tf").cast("double")
-                * F.log((F.col("n_docs") + 1).cast("double") / (F.col("df") + 1).cast("double")),
-                6,
-            ).alias("tfidf"),
-        )
-    )
-
-
 def lang_pred_expr(toks):
     """(pred_lang, best_score) expressions over a token-array column —
     the reusable core of :func:`language_id`, composable into fused
@@ -206,7 +125,7 @@ def repetition_exprs(txt, toks):
     top_word_frac = top_count.cast("double") / n_tok
     # length clamped to >= 0: slice() RAISES on negative length, and an
     # empty/1-token doc makes size-1 negative/zero (fixture docs never
-    # do — found by the r11 fuzz layer, tests/test_fuzz_oracle.py)
+    # do — found by the fuzz layer, tests/test_fuzz_oracle.py)
     n_m1 = F.greatest(F.size(toks) - 1, F.lit(0))
     grams = F.zip_with(
         F.slice(toks, 1, n_m1),
@@ -300,19 +219,6 @@ def bpe_token_counts(
     )
 
 
-def fingerprint(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Deterministic document fingerprint: min md5-derived token hash
-    (1-permutation MinHash) + full-text md5 — the cheap building block for
-    containment checks and shard-local dedup."""
-    toks = tokens(text_col)
-    tok_hashes = F.transform(toks, lambda t: md5_long(t))
-    return spread(df).select(
-        F.col(id_col),
-        F.array_min(tok_hashes).alias("min_token_hash"),
-        F.md5(F.col(text_col)).alias("text_md5"),
-    )
-
-
 # PII patterns (public, standard shapes). Java regex and RE2 disagree on
 # some escapes — these stick to portable character-class syntax so the
 # DuckDB oracle (regexp_replace ... 'g') reproduces the rewrites exactly.
@@ -341,9 +247,7 @@ def pii_scrub(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
     shuffles, whole-stage codegen; at 100 TB this runs at IO speed as a
     map-only rewrite. Hit counts come from length deltas of a per-class
     single-pattern scrub (exact, expression-only — no second tokenize
-    pass, no UDF). Staged round 6 (pytest-verified, oracle-portable
-    patterns); registry entry + DuckDB oracle planned for the r7
-    rotation window.
+    pass, no UDF). Oracle-portable patterns.
     """
     txt = F.col(text_col)
     scrubbed = txt
@@ -568,10 +472,9 @@ def winnowing_fingerprints(
     at sf0.1 (25.1 s inlined → 0.67 s materialized, same scale_proof
     protocol).
 
-    Per-window cost (the r13 verdict's 43×@100× item): the original
-    form re-sliced the hash array per window
-    (slice/array_min/reverse/array_position = O(g·w) element ops per
-    doc). This form is the "precomputed min positions" plan: each
+    Per-window cost: a per-window form re-slices the hash array per
+    window (slice/array_min/reverse/array_position = O(g·w) element ops
+    per doc). This form is the "precomputed min positions" plan: each
     positional hash is encoded as ``hash·2²⁰ + (g − pos)`` — a single
     BIGINT whose MINIMUM over any window IS the rightmost-minimal
     selection (smaller hash dominates the 2²⁰ scale; among equal
@@ -736,8 +639,7 @@ def bpe_merge_step(
 
 
 # ---------------------------------------------------------------------------
-# Gopher char-fraction repetition suite (staged r14, r16 registration
-# candidate)
+# Gopher char-fraction repetition suite
 # ---------------------------------------------------------------------------
 
 # (n, kind, threshold) — Rae et al. 2021 Table A1: a document is
@@ -799,7 +701,7 @@ def repetition_ngram_fractions(
     # ONE scan, ONE tokenize, TWO explodes: first explode the 6-row
     # rule literal against each doc (the token array rides along), then
     # build that row's n-grams with a DYNAMIC-n slice and explode them.
-    # Three plans were A/B-measured at staging (SCALE_100X r14 note):
+    # Three plans were A/B-measured (SCALE_100X):
     # a 6-way UNION of per-n branches re-scans and re-tokenizes the
     # corpus six times (9.3 s @10×); concatenating six struct-tagged
     # shingle arrays into one giant per-row array before the explode
@@ -874,12 +776,11 @@ def ngram_novelty_score(
     stale_below: float = 0.5,
     cache_handles: list | None = None,
 ) -> DataFrame:
-    """First-occurrence n-gram novelty (staged r14, r17 registration
-    candidate): for each document, the fraction of its DISTINCT
-    n-grams whose globally FIRST occurrence (minimum ``id_col``) is
-    this document — "how much new content does this doc add to the
-    corpus in ingestion order?", the per-document form of the
-    duplicate-text value argument in Lee et al. 2022. A doc whose
+    """First-occurrence n-gram novelty: for each document, the fraction
+    of its DISTINCT n-grams whose globally FIRST occurrence (minimum
+    ``id_col``) is this document — "how much new content does this doc
+    add to the corpus in ingestion order?", the per-document form of
+    the duplicate-text value argument in Lee et al. 2022. A doc whose
     novelty falls below ``stale_below`` is flagged ``is_stale`` (most
     of its content already exists earlier in the corpus — the
     candidates exact/near dedup would keep only one of).
@@ -905,7 +806,7 @@ def ngram_novelty_score(
         "_id",
         F.coalesce(md5_long(F.col("_g"), digits=15), F.lit(-1)).alias("h"),
     )
-    # r17: the distinct (doc, gram-hash) table is consumed by BOTH the
+    # the distinct (doc, gram-hash) table is consumed by BOTH the
     # first-occurrence aggregate and the join side — persist under the
     # dedup-family cache contract so the scan→tokenize→md5→distinct
     # pipeline runs once, not twice (caller unpersists via handles).
@@ -1000,7 +901,7 @@ def exact_substring_spans(
         F.col("n_tokens") >= 1
     )
     hashed = toked.select(F.col(id_col), hs.alias("__hs"))
-    # r17: the positional gram-hash stream feeds BOTH the dup-count
+    # the positional gram-hash stream feeds BOTH the dup-count
     # aggregate and the marking join — persist under the dedup-family
     # cache contract so the scan→tokenize→L-gram-md5 pipeline (the
     # operator's dominant CPU) runs once, not twice.
@@ -1044,71 +945,6 @@ def exact_substring_spans(
         ),
         F.coalesce(frac, F.lit(0.0)).alias("dup_frac"),
         (F.coalesce(frac, F.lit(0.0)) > F.lit(flag_above)).alias("flagged"),
-    )
-
-
-def language_confidence(
-    df: DataFrame,
-    min_margin: float = 0.02,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Document-level language-CONFIDENCE gate (the CCNet rule — Wenzek
-    et al. 2020 §3.1 keep docs whose LID score clears a threshold;
-    fastText-style confidence re-expressed over this engine's stopword
-    LID): alongside :func:`language_id`'s argmax, report the RUNNER-UP
-    language score and the margin between them, and gate on
-    ``best > 0 AND margin >= min_margin`` — a doc whose top two
-    language scores are close is code-switched, boilerplate, or noise,
-    and every crawl pipeline drops or routes those before training.
-
-    All per-row Catalyst expressions (exact int/int ratio doubles,
-    one subtraction — bit-identical cross-engine, the language_id
-    class): tokenize in its own projection, the four per-language
-    scores named in a second projection (each referenced twice —
-    argmax chain + sort — so inlining would double the stopword
-    filters), argmax + sorted-pair margin in the third. ZERO shuffles;
-    at 100 TB this fuses into the scan like language_id.
-
-    Output: ``pred_lang``, ``lang_score`` (best), ``second_score``,
-    ``margin``, ``is_confident``.
-    Reference: /root/reference/app.py (no counterpart — north-star
-    extension, SURVEY §2.11; language_id sibling)."""
-    from ..functions.text import tokens
-
-    toked = df.select(F.col(id_col), tokens(text_col).alias("__toks"))
-    n = F.greatest(F.size("__toks"), F.lit(1)).cast("double")
-    langs = sorted(LANG_STOPWORDS)
-    sc = toked.select(
-        F.col(id_col),
-        *[
-            (
-                F.size(
-                    F.filter(
-                        F.col("__toks"), lambda t: t.isin(*LANG_STOPWORDS[lang])
-                    )
-                ).cast("double")
-                / n
-            ).alias(f"__s_{lang}")
-            for lang in langs
-        ],
-    )
-    arr = F.array_sort(F.array(*[F.col(f"__s_{lang}") for lang in langs]))
-    best = F.element_at(arr, -1)
-    second = F.element_at(arr, -2)
-    pred = F.lit("und")
-    for lang in reversed(langs):
-        pred = F.when(
-            (best > 0) & (F.col(f"__s_{lang}") == best), F.lit(lang)
-        ).otherwise(pred)
-    margin = best - second
-    return sc.select(
-        F.col(id_col),
-        pred.alias("pred_lang"),
-        best.alias("lang_score"),
-        second.alias("second_score"),
-        margin.alias("margin"),
-        ((best > 0) & (margin >= F.lit(min_margin))).alias("is_confident"),
     )
 
 
@@ -1222,7 +1058,7 @@ def bpe_train_encode(
     strings of driver state) + one codegen'd per-row fuse fold. The
     merge literals embed in the plan, so the returned DataFrame's
     lineage is deterministic and persist-free after
-    ``materialize_and_release``. Cache ownership (r15 ADVICE): with
+    ``materialize_and_release``. Cache ownership: with
     ``cache_handles`` the caller owns release (the registry path hands
     every round's persist to ``materialize_and_release``); WITHOUT it,
     each round unpersists the segmentation it superseded as soon as
@@ -1306,10 +1142,8 @@ def bpe_train_encode(
 
 
 # ---------------------------------------------------------------------------
-# r19 registration candidates — staged r16 under the full discipline
-# (Python reference + 3-SF oracle parity + plan pin in
-# tests/test_staged_ops.py, generated-corpus fuzz rows in
-# tests/test_fuzz_oracle.py::test_fuzz_staged_r19_text_ops).
+# Unregistered corpus filters: Python-reference and plan tests in
+# tests/test_staged_ops.py
 # ---------------------------------------------------------------------------
 
 # Rae et al. 2021 (Gopher) Table A1 document/word-length screens — the
@@ -1512,69 +1346,9 @@ def fineweb_filter_chain(
 
 
 # ---------------------------------------------------------------------------
-# r20 registration candidates — staged r16 under the full discipline
-# (Python reference + 3-SF oracle parity + plan pin in
-# tests/test_staged_ops.py, generated-corpus fuzz rows in
-# tests/test_fuzz_oracle.py::test_fuzz_staged_r20_text_ops).
+# Winnowing overlap report (unregistered): Python-reference and plan
+# tests in tests/test_staged_ops.py
 # ---------------------------------------------------------------------------
-
-
-def ccnet_line_dedup(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """CCNet paragraph-level exact dedup (Wenzek et al. 2020 §3.2): hash
-    every non-empty trimmed line CORPUS-WIDE and keep only the first
-    occurrence of each hash (order: (doc_id, position) — deterministic,
-    crawl-order-free); per document, the line counts, the duplicated-
-    line fraction, and the reconstructed kept text. The line-boundary
-    complement of ``passage_chunks``-based dedup (fixed token windows)
-    and ``exact_substring_spans`` (sliding token windows): boilerplate
-    headers/footers/navigation repeat as LINES, and CCNet removes ~70%
-    of raw Common Crawl text exactly this way.
-
-    Scale shape at 100 TB: two keyed exchanges — the line-hash window
-    (key cardinality ≈ distinct lines, uniform md5 keys) and the
-    per-doc re-aggregation. The kept-text rebuild is a per-doc
-    array_sort over collected (pos, line) structs — sorted AFTER
-    collect, so shuffle order never leaks into results. Token-less
-    docs keep a row (n_lines = 0) via posexplode_outer.
-
-    Reference: /root/reference/app.py (no counterpart — north-star
-    extension, SURVEY §2.11 dedup family)."""
-    lines = spread(df).select(
-        F.col(id_col),
-        F.posexplode_outer(line_exprs(F.col(text_col))).alias(
-            "__pos", "__line"
-        ),
-    )
-    hashed = lines.withColumn("__h", md5_long(F.col("__line")))
-    w = Window.partitionBy("__h").orderBy(
-        F.col(id_col).asc(), F.col("__pos").asc()
-    )
-    flagged = hashed.withColumn("__rn", F.row_number().over(w))
-    kept_struct = F.when(
-        F.col("__line").isNotNull() & (F.col("__rn") == 1),
-        F.struct(F.col("__pos"), F.col("__line")),
-    )
-    n_dup = F.sum(
-        F.when(F.col("__line").isNotNull() & (F.col("__rn") > 1), 1)
-        .otherwise(0)
-    )
-    return flagged.groupBy(id_col).agg(
-        F.count("__line").cast("int").alias("n_lines"),
-        n_dup.cast("int").alias("n_dup_lines"),
-        (
-            n_dup.cast("double")
-            / F.greatest(F.count("__line"), F.lit(1)).cast("double")
-        ).alias("dup_line_frac"),
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(kept_struct)),
-                lambda s: s["__line"],
-            ),
-            "\n",
-        ).alias("kept_text"),
-    )
 
 
 def winnow_overlap_pairs(

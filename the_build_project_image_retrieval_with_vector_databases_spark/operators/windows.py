@@ -13,34 +13,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _epoch_bucket(ts_col: str, width_s: int):
-    return (F.floor(F.unix_timestamp(F.col(ts_col)) / width_s) * width_s).cast("long")
-
-
-def tumbling_counts(
-    df: DataFrame, width_s: int = 600, ts_col: str = "ts"
-) -> DataFrame:
-    """Tumbling event-time windows: per (window, event_type) count and
-    decimal-exact value sum. Uses Spark's native ``window()`` operator;
-    the output key is the window start as epoch seconds."""
-    val = F.col("value").cast("decimal(18,6)")
-    return (
-        df.groupBy(
-            F.window(F.col(ts_col), f"{width_s} seconds").alias("w"), "event_type"
-        )
-        .agg(
-            F.count("*").alias("n"),
-            F.round(F.sum(val), 2).cast("double").alias("sum_value"),
-        )
-        .select(
-            F.unix_timestamp(F.col("w.start")).cast("long").alias("window_start"),
-            "event_type",
-            "n",
-            "sum_value",
-        )
-    )
-
-
 def sliding_counts(
     df: DataFrame, width_s: int = 600, slide_s: int = 300, ts_col: str = "ts"
 ) -> DataFrame:

@@ -76,22 +76,3 @@ def ensure_bucketed_table(
     return name
 
 
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_col: str,
-    n_buckets: int,
-    path: str,
-    sort: bool = True,
-) -> None:
-    """Materialize ``df`` as a bucketed external table (parquet at
-    ``path``, registered as ``table_name``). Readers via
-    ``spark.table(table_name)`` inherit the bucket layout."""
-    w = (
-        df.write.format("parquet")
-        .mode("overwrite")
-        .bucketBy(n_buckets, bucket_col)
-    )
-    if sort:
-        w = w.sortBy(bucket_col)
-    w.option("path", path).saveAsTable(table_name)

@@ -4,15 +4,14 @@ Covers the scale path of the reference's flagship operator (SURVEY §4.3.3):
 IVF partition-probing (the ``IndexIVFFlat`` analogue of the shipped
 ``IndexFlatL2``, reference ``utils/faiss_utils.py:4-9``), random-hyperplane
 LSH bucketing, embedding-cosine near-dup (north-star), the two-phase top-k
-physical pattern, grouped-id assembly (A1) and the deterministic 80/20
-split (SA2, reference ``train_model.py:42-45``).
+physical pattern and grouped-id assembly (A1).
 
 Oracle-parity tricks specific to this module:
 
 - IVF centroids are *rows of the table itself* (vec_id < 16) so both
   engines derive identical centroid vectors with no RNG; the Spark side
   collects them into literal arrays (16 × 64 floats — trivially broadcast).
-- LSH hyperplanes are seeded NumPy Gaussians generated at import and
+- LSH hyperplanes are seeded NumPy Gaussians (:func:`sized_planes_for`)
   inlined as double literals into BOTH the Spark expression and the oracle
   SQL (``repr(float)`` round-trips exactly in the two parsers).
 - Assignment ties (argmin over centroid distances) break toward the lowest
@@ -31,13 +30,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions.vector import array_lit, l2_dist, truncate_renormalize
-from .operators.ann import hyperplanes, ivf_search, lsh_bucket, write_ivf_index
-from .operators.knn import knn_join_two_phase, radius_join
+from .operators.ann import ivf_search, write_ivf_index
+from .operators.knn import knn_join_two_phase
 from .sources.tables import load_table
 
 EMB_DIM = 64  # driver fixture embeddings are 64-D unit float vectors
-N_PLANES = 8
-LSH_PLANES: list[list[float]] = hyperplanes(EMB_DIM, N_PLANES, seed=42)
 
 
 # ---------------------------------------------------------------------------
@@ -168,8 +165,7 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Centroids are rows vec_id < 16 of the table itself (oracle-portable,
     no RNG); the layout is built once per process by :func:`_ivf_layout` —
-    no per-call ``collect()``, no full-table re-assignment (VERDICT r1
-    item 4)."""
+    no per-call ``collect()``, no full-table re-assignment."""
     path, centroids = _ivf_layout(spark, sf_dir)
     qvec = centroids[0]  # embedding of vec_id = 0 (flagship query)
     # self-exclusion BEFORE the top-k (the query vector is a corpus row);
@@ -234,71 +230,6 @@ SELECT vec_id, label, round(d, 6) AS dist FROM (
   FROM t c, q WHERE c.vec_id <> 0
 ) ORDER BY d ASC, vec_id ASC LIMIT 10
 """.format(d_expr=_dk_l2("c.t", "q.qt"))
-
-
-def q_ivf_topk_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batched IVF kNN join over the materialized layout: 8 query
-    vectors (rows vec_id < 8) share ONE partition-pruned scan (union of
-    their per-query nprobe=4 probe sets), each keeping its own probes
-    via broadcast + ``array_contains``; per-query top-3 through the
-    two-phase ``WindowGroupLimit``. The serving-at-scale shape — scan
-    bytes amortize across the whole batch. Oracle re-derives per-query
-    probes, assignment, and ranks in SQL."""
-    from .operators.ann import ivf_search_batch
-
-    path, centroids = _ivf_layout(spark, sf_dir)
-    queries = [(i, centroids[i]) for i in range(8)]  # vec_id<8 ⊂ training rows
-    layout = spark.read.parquet(path)
-    out = ivf_search_batch(layout, centroids, queries, k=3, nprobe=4)
-    return out.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        "label",
-        F.col("centroid").cast("int").alias("centroid"),
-        F.round("dist", 6).alias("dist"),
-        "rank",
-    )
-
-
-ORACLE_IVF_TOPK_BATCH = f"""
-WITH cents AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings WHERE vec_id < 16),
-qs AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 8),
-probes AS (
-  SELECT query_id, cid FROM (
-    SELECT q.query_id, c.cid,
-           row_number() OVER (PARTITION BY q.query_id
-                              ORDER BY {_dk_l2('c.ce', 'q.qe')} ASC, c.cid ASC) AS pr
-    FROM qs q CROSS JOIN cents c
-  ) WHERE pr <= 4
-),
-scored AS (
-  SELECT e.vec_id, e.label, e.embedding, c.cid,
-         {_dk_l2('e.embedding', 'c.ce')} AS cdist
-  FROM embeddings e CROSS JOIN cents c
-),
-assigned AS (
-  SELECT vec_id, label, embedding, cid AS centroid FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id
-                                 ORDER BY cdist ASC, cid ASC) AS rn
-    FROM scored
-  ) WHERE rn = 1
-),
-ranked AS (
-  SELECT q.query_id, a.vec_id AS neighbor_id, a.label,
-         CAST(a.centroid AS INT) AS centroid,
-         {_dk_l2('a.embedding', 'q.qe')} AS d,
-         row_number() OVER (PARTITION BY q.query_id
-                            ORDER BY {_dk_l2('a.embedding', 'q.qe')} ASC,
-                                     a.vec_id ASC) AS rank
-  FROM assigned a
-  JOIN probes p ON a.centroid = p.cid
-  JOIN qs q ON q.query_id = p.query_id
-  WHERE a.vec_id <> q.query_id
-)
-SELECT query_id, neighbor_id, label, centroid, round(d, 6) AS dist,
-       CAST(rank AS INT) AS rank
-FROM ranked WHERE rank <= 3
-"""
 
 
 ORACLE_IVF_TOPK = f"""
@@ -403,21 +334,6 @@ def _pq_layout(spark: SparkSession, sf_dir: str):
         return path, codebooks, train[0]
 
     return _layout(spark, sf_dir, "pq", build)
-
-
-def q_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PQ-ADC top-10 for the flagship query vector over the materialized
-    code table (``operators.pq``): per-row cost is 8 array lookups into
-    the query's distance LUT + 7 adds, the scan reads 8 ints per row
-    instead of 64 floats, and the plan is the same zero-shuffle
-    TakeOrderedAndProject as the flat search. The oracle re-derives
-    codes AND ADC distances from the raw table in SQL."""
-    from .operators.pq import pq_adc_topk
-
-    path, codebooks, qvec = _pq_layout(spark, sf_dir)
-    codes = spark.read.parquet(path).filter(F.col("vec_id") != 0)
-    out = pq_adc_topk(codes, codebooks, qvec, k=10)
-    return out.select("vec_id", "label", F.round("adc_dist", 6).alias("adc_dist"))
 
 
 # IVF + PQ composed (the IndexIVFPQ analogue): centroid partition pruning
@@ -532,37 +448,6 @@ def _dk_l2sq_slice(a: str, b: str, j: int, dsub: int) -> str:
     )
 
 
-def _oracle_pq_topk(m: int = PQ_M, dim: int = EMB_DIM, k: int = 10) -> str:
-    dsub = dim // m
-    code_exprs = ",\n         ".join(
-        f"min({{'d': {_dk_l2sq_slice('e.embedding', 't.embedding', j, dsub)}, "
-        f"'c': t.vec_id}}).c AS code_{j}"
-        for j in range(m)
-    )
-    lut_joins = "\n".join(
-        f"JOIN train t{j} ON t{j}.vec_id = c.code_{j}" for j in range(m)
-    )
-    adc = " + ".join(
-        f"({_dk_l2sq_slice('q.qe', f't{j}.embedding', j, dsub)})" for j in range(m)
-    )
-    return f"""
-WITH train AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 16),
-q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-codes AS (
-  SELECT e.vec_id AS vid, e.label,
-         {code_exprs}
-  FROM embeddings e CROSS JOIN train t
-  WHERE e.vec_id <> 0
-  GROUP BY e.vec_id, e.label
-)
-SELECT c.vid AS vec_id, c.label, round({adc}, 6) AS adc_dist
-FROM codes c CROSS JOIN q
-{lut_joins}
-ORDER BY ({adc}) ASC, c.vid ASC
-LIMIT {k}
-"""
-
-
 def q_pq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The production PQ shape as a registry query: ADC shortlist of
     k·overfetch = 30 candidates from the 8-byte codes, exact full-float
@@ -621,43 +506,6 @@ LIMIT {k}
 
 
 # ---------------------------------------------------------------------------
-# Scalar quantization (int8) — the 4th FAISS-family tier (Flat/IVF/PQ/SQ)
-# ---------------------------------------------------------------------------
-# sq_topk retired r12 (one-for-one with the semantic_decontaminate
-# registration — write-ahead candidate #1 in queries.py): the registry
-# query was a literal-folded top-10 over the SQ codes, a surface the
-# quantized-tier siblings ivfpq_topk / pq_rerank_topk keep covered; the
-# SQ operators themselves (sq_train_bounds / sq_encode / sq_dist_sq)
-# remain implemented and recall-tested in tests/test_pq.py.
-
-
-def q_lsh_bucket_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bucket histogram of the 8-plane sign-bit LSH over the embeddings —
-    pins the bucketing expression the candidate join keys on."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    b = lsh_bucket(emb, LSH_PLANES)
-    return b.groupBy("bucket").agg(
-        F.count("*").alias("n"), F.min("vec_id").alias("min_vec_id")
-    )
-
-
-def _oracle_lsh_buckets() -> str:
-    bits = []
-    for i, h in enumerate(LSH_PLANES):
-        lit = "[" + ", ".join(repr(float(x)) for x in h) + "]::DOUBLE[]"
-        bits.append(
-            f"(CASE WHEN ({_dk_dot('embedding', lit)}) > 0 "
-            f"THEN {1 << i} ELSE 0 END)"
-        )
-    expr = " + ".join(bits)
-    return f"""
-WITH b AS (SELECT vec_id, CAST({expr} AS BIGINT) AS bucket FROM embeddings)
-SELECT bucket, count(*) AS n, min(vec_id) AS min_vec_id
-FROM b GROUP BY bucket
-"""
-
-
-# ---------------------------------------------------------------------------
 # Embedding-cosine near-dup (north-star dedup family)
 # ---------------------------------------------------------------------------
 
@@ -693,11 +541,10 @@ def q_lsh_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .functions.vector import cosine_sim
 
     emb = load_table(spark, sf_dir, "embeddings")
-    # r18 (guide §8 — move the heavy bytes once): the embeddings RIDE
-    # the one bucket shuffle via lsh_candidates(carry=...) and each
-    # pair verifies in place, replacing the two corpus-scale merge
-    # joins that re-attached them by id (and with them the last join
-    # of this plan). Same rows: candidates and cosine are unchanged.
+    # move the heavy bytes once: the embeddings RIDE the one bucket
+    # shuffle via lsh_candidates(carry=...) and each pair verifies in
+    # place, so no corpus-scale join re-attaches them by id (this plan
+    # has no join at all).
     cands = lsh_candidates(
         emb, sized_planes_for(sf_dir), carry=["embedding"]
     )
@@ -737,60 +584,6 @@ pairs AS (
 )
 SELECT left_id, right_id, round(sim, 6) AS cos_sim
 FROM pairs WHERE sim > {threshold}
-"""
-
-
-def q_cosine_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-duplicate pairs by embedding cosine > 0.28 within the
-    vec_id < 300 block, through the BLOCKED radius join: the 8 LSH planes
-    split into 2 bands of 4 sign bits, candidates = pairs agreeing on at
-    least one whole band (hash equi-join on the band key — no nested-loop
-    join anywhere in the plan, asserted in test_plans.py), exact cosine
-    verify on candidates only. Approximate-by-construction contract; the
-    oracle reproduces the banding bit-for-bit."""
-    emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 300)
-    from .operators.dedup import pins_for
-
-    out = radius_join(
-        emb,
-        emb,
-        radius=0.28,
-        metric="cosine",
-        blocking="lsh",
-        planes=LSH_PLANES,
-        n_bands=2,
-        pinned=pins_for(sf_dir, "embeddings"),
-    )
-    return out.select("left_id", "right_id", F.round("dist", 6).alias("cos_sim"))
-
-
-def _dk_band_bucket(planes: list[list[float]], n_bands: int, band: int) -> str:
-    """DuckDB mirror of operators.knn._band_bucket_exprs: contiguous plane
-    slice per band, bit value ``1 << i`` within the band."""
-    width = len(planes) // n_bands
-    bits = []
-    for i, h in enumerate(planes[band * width : (band + 1) * width]):
-        lit = "[" + ", ".join(repr(float(x)) for x in h) + "]::DOUBLE[]"
-        bits.append(
-            f"(CASE WHEN ({_dk_dot('embedding', lit)}) > 0 "
-            f"THEN {1 << i} ELSE 0 END)"
-        )
-    return "CAST(" + " + ".join(bits) + " AS BIGINT)"
-
-
-ORACLE_COSINE_DEDUP = f"""
-WITH blk AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 300),
-b AS (SELECT vec_id, embedding,
-             {_dk_band_bucket(LSH_PLANES, 2, 0)} AS b0,
-             {_dk_band_bucket(LSH_PLANES, 2, 1)} AS b1
-      FROM blk),
-pairs AS (
-  SELECT a.vec_id AS left_id, c.vec_id AS right_id,
-         {_dk_cosine('a.embedding', 'c.embedding')} AS sim
-  FROM b a JOIN b c ON a.vec_id < c.vec_id AND (a.b0 = c.b0 OR a.b1 = c.b1)
-)
-SELECT left_id, right_id, round(sim, 6) AS cos_sim
-FROM pairs WHERE sim > 0.28
 """
 
 
@@ -855,101 +648,6 @@ ORACLE_GROUPED_IDS = """
 SELECT label, count(*) AS n,
        array_to_string(list_sort(list(vec_id)), ',') AS ids
 FROM embeddings GROUP BY label
-"""
-
-
-# split_counts retired r12 (one-for-one with the dsir_importance
-# registration — write-ahead candidate #2 in queries.py): its
-# deterministic-hash splitter surface stays covered by the registered
-# stratified_sample (same multiplicative-hash partitioner plus the
-# per-class exact-k bound); deterministic_split itself remains
-# implemented and tested in tests/test_sample.py.
-
-
-def q_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-label mean embedding, L2-renormalized — the relational form of
-    IVF centroid *training* (the k-means 'update' step; the probe side is
-    ``ivf_topk``'s layout). Reference analogue: the per-class structure of
-    ``utils/precompute_features.py:147-159`` applied to the vector column.
-
-    100 TB plan: ``posexplode`` fans each row into D (dim, value) pairs,
-    but the ONLY shuffle is keyed (label, dim) with map-side partial sums
-    — what crosses the wire is one partial per (label × dim × map task),
-    not the data. The re-collect to arrays handles labels × D rows
-    (trivial), and the fold-based norm runs over a sorted array so both
-    engines accumulate in the same order.
-
-    Cross-engine exactness: per-component values are quantized to integer
-    micro-units BEFORE the cross-row sum (float addition is not
-    associative; bigint addition is), then the mean/norm/normalize chain
-    is pure double arithmetic over identical inputs."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    exploded = emb.select(
-        "label", F.posexplode("embedding").alias("dim", "val")
-    )
-    qval = F.round(F.col("val").cast("double") * 1e6).cast("long")
-    per_dim = exploded.groupBy("label", "dim").agg(
-        F.sum(qval).alias("sum_q"), F.count("*").alias("n")
-    )
-    mean = F.col("sum_q").cast("double") / (F.col("n").cast("double") * 1e6)
-    arr = (
-        per_dim.select("label", "dim", mean.alias("m"), "n")
-        .groupBy("label")
-        .agg(
-            F.array_sort(F.collect_list(F.struct("dim", "m"))).alias("dm"),
-            F.max("n").alias("n_vectors"),
-        )
-    )
-    cent = F.transform(F.col("dm"), lambda s: s["m"])
-    norm = F.sqrt(F.aggregate(cent, F.lit(0.0), lambda a, x: a + x * x))
-    unit = F.transform(cent, lambda x: F.round(x / norm, 9))
-    # Exploded relational output (label, n_vectors, dim, centroid_val):
-    # scalar columns only, so any downstream pandas canonicalization can
-    # sort/hash the result. Cardinality = labels x D — trivial.
-    return arr.select(
-        "label",
-        "n_vectors",
-        F.posexplode(unit).alias("dim", "centroid_val"),
-    )
-
-
-ORACLE_LABEL_CENTROIDS = """
-WITH ex0 AS (
-  SELECT label, unnest(range(1, len(embedding) + 1)) AS i, embedding
-  FROM embeddings
-),
-ex AS (
-  SELECT label, i - 1 AS dim,
-         CAST(round(CAST(embedding[i] AS DOUBLE) * 1000000) AS BIGINT) AS q
-  FROM ex0
-),
-per AS (
-  SELECT label, dim, sum(q) AS sum_q, count(*) AS n FROM ex GROUP BY 1, 2
-),
-dims AS (
-  SELECT label, dim,
-         CAST(sum_q AS DOUBLE) / (CAST(n AS DOUBLE) * 1000000.0) AS m, n
-  FROM per
-),
-arr AS (
-  SELECT label, list(m ORDER BY dim) AS cent, max(n) AS n_vectors
-  FROM dims GROUP BY label
-),
-normed AS (
-  SELECT label, n_vectors, cent,
-         sqrt(list_reduce(list_transform(cent, x -> x * x),
-                          (a, b) -> a + b)) AS nrm
-  FROM arr
-),
-fanned AS (
-  SELECT label, n_vectors, cent, nrm,
-         unnest(range(1, len(cent) + 1)) AS i
-  FROM normed
-)
-SELECT label, CAST(n_vectors AS BIGINT) AS n_vectors,
-       CAST(i - 1 AS INTEGER) AS dim,
-       round(cent[i] / nrm, 9) AS centroid_val
-FROM fanned
 """
 
 
@@ -1025,10 +723,6 @@ ANN_QUERIES = {
     "ivf_topk": q_ivf_topk,
     "ann_search": q_ann_search,
     "matryoshka_topk": q_matryoshka_topk,
-    # ivf_topk_batch retired r13 (registry entry only): the batched-IVF
-    # Arrow kernel stays under oracle via hard_negatives, the
-    # pruned-scan single-query plan via ivf_topk, and the expression
-    # batched plan keeps its ReusedExchange pin in tests/test_plans.py.
     "pq_rerank_topk": q_pq_rerank_topk,
     "ivfpq_topk": q_ivfpq_topk,
     "lsh_near_dup": q_lsh_near_dup,
@@ -1038,48 +732,6 @@ ANN_QUERIES = {
 }
 
 KMEANS_K = 8
-
-
-def q_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One value-exact distributed Lloyd iteration over the embeddings
-    table (operators.ann.kmeans_lloyd_step): k=8 centroids initialized
-    from the 8 lowest vec_ids, integer-exact assignment, k·D mean rows
-    out. Registered in r7; oracle parity-tested in
-    tests/test_staged_ops.py."""
-    from .operators.ann import kmeans_lloyd_step
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return kmeans_lloyd_step(emb, k=KMEANS_K)
-
-
-def _oracle_kmeans_step(k: int = KMEANS_K, dim: int = EMB_DIM) -> str:
-    """Mirror of kmeans_lloyd_step: same floor-quantization, same
-    lowest-vec_id init, the same exact-integer argmin (first-min
-    tie-break via list_position), the same (sum/n)/scale division
-    order. Everything before the final two divisions is int64."""
-    scale = 1 << 20
-    return f"""
-WITH q AS (SELECT vec_id,
-         list_transform(embedding,
-                        x -> CAST(floor(((x::DOUBLE) * {scale}.0) + 0.5) AS BIGINT)) AS qv
-       FROM embeddings),
-c AS (SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS cid, qv AS cv
-      FROM (SELECT * FROM q ORDER BY vec_id LIMIT {k})),
-d AS (SELECT q.vec_id, c.cid,
-         list_reduce(list_transform(range(1, {dim + 1}),
-                                    i -> (q.qv[i] - c.cv[i]) * (q.qv[i] - c.cv[i])),
-                     (a, b) -> a + b) AS dist
-      FROM q, c),
-dd AS (SELECT vec_id, list(dist ORDER BY cid) AS dists FROM d GROUP BY vec_id),
-a AS (SELECT vec_id,
-         CAST(list_position(dists, list_min(dists)) - 1 AS INT) AS cid
-      FROM dd),
-e AS (SELECT a.cid, CAST(r.i - 1 AS INT) AS dim, q.qv[r.i] AS qval
-      FROM a JOIN q USING (vec_id), range(1, {dim + 1}) r(i))
-SELECT cid, dim, count(*) AS n_members,
-       ((sum(qval)::DOUBLE) / ((count(*))::DOUBLE)) / {scale}.0 AS mean
-FROM e GROUP BY cid, dim
-"""
 
 
 KMEANS_TRAIN_ROUNDS = 10
@@ -1216,7 +868,6 @@ ANN_ORACLES = {
 }
 
 
-
 SEMANTIC_OCCUPANCY = 64
 
 
@@ -1225,7 +876,7 @@ def sized_k_for(sf_dir: str) -> int:
     k = ceil(N/64) from the embeddings parquet FOOTER row count — the
     cluster-count twin of :func:`sized_planes_for`. Holding k fixed
     makes per-cluster occupancy ∝ N and the cid self-join quadratic
-    (r6 measured fixed k=8 at 23× on 10× data; corpus-sized k at
+    (measured: fixed k=8 at 23× on 10× data; corpus-sized k at
     2.4×); sizing k holds occupancy — and verify work per vector —
     constant. Deterministic from N, so the oracle re-derives the same
     k; at the driver's sf0.01 fixture (N=500) k = 8, the original pin."""
@@ -1258,18 +909,15 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators.ann.kmeans_train_exact — is pytest-covered), τ = 3/10,
     integer-exact threshold (no float math at the boundary). Beyond
     LITERAL_K_MAX clusters the assignment switches to the value-exact
-    Arrow int64-matmul path automatically. Registered in r7; oracle
-    parity-tested in tests/test_staged_ops.py. r17: single declarative
-    plan (one cid-keyed shuffle + per-cluster Arrow group map) — no
-    persisted intermediates, so no spill round-trip either."""
+    Arrow int64-matmul path automatically. Single declarative plan (one
+    cid-keyed shuffle + per-cluster Arrow group map) — no persisted
+    intermediates, so no spill round-trip either."""
     from .operators.dedup import pins_for, semantic_dedup
 
     emb = load_table(spark, sf_dir, "embeddings")
     init = _semantic_init(emb, sized_k_for(sf_dir))
-    # r17: the group-map form consumes the assignment ONCE — nothing to
-    # persist, so the spill-and-release round trip is gone too (the
-    # query is a single declarative plan with zero cached blocks by
-    # construction)
+    # the group-map form consumes the assignment ONCE — nothing to
+    # persist, so zero cached blocks by construction
     return semantic_dedup(
         emb, init, threshold_num=3, threshold_den=10,
         pinned=pins_for(sf_dir, "embeddings"),
@@ -1320,36 +968,14 @@ FROM a LEFT JOIN dropped ON a.vec_id = dropped.rid
 """
 
 
-def q_semantic_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Daily-ingest SemDeDup with TRUE sequential-ingest semantics: the
-    'new batch' (vec_id ≥ 400) against the existing corpus
-    (vec_id < 400), the same corpus-sized lowest-vec_id centroid init
-    (:func:`sized_k_for` over the FULL table — assignment must use the
-    centroids the corpus index was built with) and τ = 3/10 as
-    `semantic_dedup` — corpus×corpus never re-runs, and rule (b) only
-    lets KEPT lower-id batch vectors drop later ones (per-cluster greedy
-    pass), so the keep set is independent of microbatch boundaries.
-    Spill-and-release per the dedup cache contract."""
-    from .operators.dedup import pins_for, semantic_dedup_incremental
-    from .operators.spill import materialize_and_release
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    init = _semantic_init(emb, sized_k_for(sf_dir))
-    corpus = emb.filter(F.col("vec_id") < 400)
-    batch = emb.filter(F.col("vec_id") >= 400)
-    handles: list = []
-    out = semantic_dedup_incremental(
-        corpus, batch, init, threshold_num=3, threshold_den=10,
-        cache_handles=handles, pinned=pins_for(sf_dir, "embeddings"),
-    )
-    return materialize_and_release(out, handles, "semantic-dedup-incr-")
-
-
 def _oracle_semantic_dedup_incremental(
     k: int | None = None, dim: int = EMB_DIM, num: int = 3, den: int = 10,
     split: int = 400,
 ) -> str:
-    """Mirror of semantic_dedup_incremental at the staged pin, with the
+    """DuckDB reference for the operator behind the streaming ingest loop,
+    :func:`~.operators.dedup.semantic_dedup_incremental` (parity-tested
+    in tests/test_staged_ops.py; not a registry oracle), at the test pin
+    batch vec_id >= ``split`` vs corpus vec_id < ``split``, with the
     SEQUENTIAL-INGEST semantics: rule (a) drops a batch vector on any
     same-cluster corpus neighbor above τ; rule (b) replays the
     per-cluster greedy over the corpus-clean batch rows in vec_id order
@@ -1429,13 +1055,11 @@ WHERE a.vec_id >= {split}
 """
 
 
-# ---------------------------------------------------------------------------
-# Round-7 registrations (previously staged; definitions follow the base
-# dicts, hence the late update)
-# ---------------------------------------------------------------------------
+# Queries below are defined after the base dicts, hence the late
+# ANN_QUERIES / ANN_ORACLES update at the end of the module.
 
 # ---------------------------------------------------------------------------
-# Staged for the r8 window: ANN recall evaluation
+# ANN recall evaluation
 # ---------------------------------------------------------------------------
 
 ANN_EVAL_Q_LO = 16
@@ -1455,8 +1079,7 @@ def q_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     one row per query — (query_id, n_hits, recall) with recall a raw
     int/int double (bit-exact cross-engine).
 
-    r11 rewrite (VERDICT r10 #7, the `quantized_recall_eval`
-    precedent): both tiers now fold into ONE Arrow scan of the
+    Both tiers fold into ONE Arrow scan of the
     materialized layout via
     :func:`~.operators.knn.knn_recall_eval_exact` — each batch
     computes the exact left-fold distance matrix once and emits
@@ -1559,7 +1182,7 @@ FROM qs q LEFT JOIN hits h USING (query_id)
 
 
 # ---------------------------------------------------------------------------
-# Staged for the r8 window: MMR diversity re-rank
+# MMR diversity re-rank
 # ---------------------------------------------------------------------------
 
 MMR_N_QUERIES = 4
@@ -1577,9 +1200,7 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairwise candidate cosines are rounded to 6 decimals (kept-rounded
     class) and the greedy's score arithmetic mirrors the oracle
     op-for-op on those rounded doubles, so selections and scores match
-    bit-for-bit. STAGED for the r8 verification window — oracle
-    parity-tested in tests/test_staged_ops.py so registration is a
-    2-line diff."""
+    bit-for-bit."""
     from .operators.knn import knn_join, mmr_rerank
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1679,7 +1300,7 @@ FROM picks{k} WHERE rank >= 1
 
 
 # ---------------------------------------------------------------------------
-# Registered r8: the Arrow/BLAS serving kernel under the oracle contract
+# The Arrow/BLAS serving kernel under the oracle contract
 # ---------------------------------------------------------------------------
 
 SB_Q_LO = 48
@@ -1730,10 +1351,9 @@ def _oracle_search_batch(
 ) -> str:
     """Exact batched kNN: per-query window rank over L2 distance at
     6-decimal granularity (round(dist, 6) ASC, vec_id ASC — the SAME
-    tie rule as the kernel's global window since r12: BLAS gives
-    1-ulp-different distances even to exact duplicate vectors, so raw
-    ranking diverges on duplicate-bearing corpora — the r12
-    serving-fuzz catch)."""
+    tie rule as the kernel's global window: BLAS gives 1-ulp-different
+    distances even to exact duplicate vectors, so raw ranking diverges
+    on duplicate-bearing corpora, as the serving fuzz panel showed)."""
     return f"""
 WITH qs AS MATERIALIZED (SELECT vec_id AS query_id, embedding AS qe
                          FROM embeddings
@@ -1754,7 +1374,7 @@ FROM (
 
 
 # ---------------------------------------------------------------------------
-# Staged for the r9 window: quantized-tier recall (PQ + SQ eval)
+# Quantized-tier recall (PQ + SQ eval)
 # ---------------------------------------------------------------------------
 
 
@@ -1773,23 +1393,20 @@ def q_quantized_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``operators.pq``). Same 32 held-out queries as `ann_recall_eval`
     (16 ≤ vec_id < 48, training rows excluded); output one row per
     (query, tier): (query_id, tier, n_hits, recall), int/int doubles —
-    bit-exact cross-engine. STAGED for the r9 window (registry at the
-    100 cap — registration pairs with a retirement from the candidates
-    in queries.py).
+    bit-exact cross-engine.
 
-    Physical path (r17): all three top-k sets come from ONE corpus
+    Physical path: all three top-k sets come from ONE corpus
     scan through :func:`~.operators.knn.knn_multi_recon_recall` — the
     Arrow kernel whose per-dimension float64 loop replays the
     expression/oracle left fold bit-for-bit per tier — with the PQ/SQ
     encode+reconstruct folded into its recon hooks
     (:func:`pq_recon_np` / :func:`sq_recon_np`, the exact numpy twins
-    of ``operators.pq``'s expressions). History: the interpreted-HOF
+    of ``operators.pq``'s expressions). At sf0.1 the interpreted-HOF
     form (pq_encode expression + three expression kNN joins, ~N×7000
-    interpreted element-ops) timed 4.95 s at sf0.1; the r9-r16
-    per-tier `knn_join_exact` form (4 corpus passes: exact twice + one
-    per tier, two join/window branches) timed 2.40 s; the one-scan
-    fold produces the identical frame (pinned in
-    tests/test_staged_ops.py against the unchanged oracle)."""
+    interpreted element-ops) timed 4.95 s and the per-tier
+    `knn_join_exact` form (4 corpus passes) 2.40 s; the one-scan fold
+    produces the identical frame (pinned in tests/test_staged_ops.py
+    against the oracle)."""
     from .operators.knn import knn_multi_recon_recall
     from .operators.pq import (
         pq_recon_np,
@@ -1799,8 +1416,8 @@ def q_quantized_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    # r17: ONE driver collect for the train slice AND the query slice
-    # (they are adjacent id ranges; was two scan jobs), split client-side
+    # ONE driver collect for the train slice AND the query slice (they
+    # are adjacent id ranges), split client-side
     head = (
         emb.filter(F.col("vec_id") < ANN_EVAL_Q_HI)
         .select("vec_id", "embedding")
@@ -1814,10 +1431,9 @@ def q_quantized_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     codebooks = slice_codebooks(train, PQ_M)
     bounds = sq_train_bounds(train)
-    # r17: exact + PQ + SQ top-k candidates from ONE corpus scan (the
-    # knn_recall_eval_exact fold generalized to recon tiers — was 4
-    # corpus passes: exact twice + one per tier), one query_id
-    # repartition feeding every downstream window/aggregate.
+    # exact + PQ + SQ top-k candidates from ONE corpus scan (the
+    # knn_recall_eval_exact fold generalized to recon tiers), one
+    # query_id repartition feeding every downstream window/aggregate.
     return knn_multi_recon_recall(
         emb,
         qids,
@@ -1927,7 +1543,7 @@ FROM qs q LEFT JOIN sh USING (query_id)
 
 
 # ---------------------------------------------------------------------------
-# Staged for the r9 window: hard-negative mining (contrastive training)
+# Hard-negative mining (contrastive training)
 # ---------------------------------------------------------------------------
 
 HN_K = 10
@@ -1947,20 +1563,14 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``dist`` is the RAW left-fold double — no rounding. The kernel is
     bit-exact with DuckDB's ``list_reduce`` left fold, so rounding here
     would only have been cosmetic; emitting the raw value keeps this
-    query out of the rounded-hash class entirely (VERDICT r9 #7 — the
-    exact-hash decision applied at registration time).
+    query out of the rounded-hash class entirely.
 
     Physical path: :func:`~.operators.knn.knn_join_exact` with the
     per-query label mask — the corpus scans ONCE (never shuffles),
     same-label rows drop inside the Arrow kernel before the k-cut, the
     bit-exact left-fold distance keeps the DuckDB oracle hash-matched,
     and only ≤ partitions·Q·k candidates reach the global rank window.
-    Registered r11, paired with the retirement of token_histogram —
-    candidate #3 of the r11 write-ahead plan in queries.py, drawn from
-    the r9-checked half so the registration lands inside the r11
-    window (token_stats remains the registered superset of the
-    retiree's tokenizer surface). Staged 3-SF oracle-parity + plan
-    tests live in tests/test_staged_ops.py."""
+    3-SF oracle-parity + plan tests live in tests/test_staged_ops.py."""
     from .operators.knn import knn_join_exact
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -2014,11 +1624,7 @@ FROM (
 
 
 def q_semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered r12, paired one-for-one with the sq_topk retirement
-    (the write-ahead plan staged both in r11; 3-SF oracle parity + fuzz
-    rows landed in tests/test_staged_ops.py / test_fuzz_oracle.py then).
-
-    Embedding-space decontamination screen
+    """Embedding-space decontamination screen
     (operators/decontam.py::semantic_screen): the 50 corpus vectors
     closest (unit-normalized L2 ≡ monotone cosine) to ANY of the 32
     held-out benchmark vectors — the semantic companion to the n-gram
@@ -2060,7 +1666,7 @@ ORDER BY dist ASC, vec_id ASC LIMIT 50
 
 
 # ---------------------------------------------------------------------------
-# Staged for the r9 window: embedding outlier screen (data quality)
+# Embedding outlier screen (data quality)
 # ---------------------------------------------------------------------------
 
 OUT_K = 8                  # screen granularity — see the docstring scale note
@@ -2076,7 +1682,7 @@ def q_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     a training pipeline runs before indexing (degenerate/garbage
     embeddings poison both ANN recall and semantic dedup): assign every
     vector to its nearest of k=8 lowest-id centroids with the exact
-    integer-L2² argmin (the `kmeans_step` machinery), then flag rows
+    integer-L2² argmin (the `kmeans_lloyd_step` machinery), then flag rows
     whose squared distance exceeds ``OUT_NUM/OUT_DEN ×`` their
     cluster's mean squared distance. The test is division-free
     cross-multiplied integer arithmetic
@@ -2092,9 +1698,7 @@ def q_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallel) and candidate volume never depends on it, so the fixed
     driver-pin k keeps the pure-Catalyst no-Python-worker plan
     (LITERAL_K_MAX contract); a corpus-sized k would route the same
-    semantics through the Arrow int64-matmul path unchanged. STAGED
-    for the r9 window (registry at the 100 cap — registration pairs
-    with a retirement from the candidates in queries.py)."""
+    semantics through the Arrow int64-matmul path unchanged."""
     from .operators.ann import KMEANS_SCALE, assign_cids_arrow_int, quantize_vec
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -2104,11 +1708,11 @@ def q_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("vec_id")
         .collect()
     )
-    # r17: the k·D expression-literal interpreted argmin (~n·k·D ≈ 1M
-    # element-lambda evals at sf0.1) is replaced by the exact Arrow
-    # int64-matmul kernel (guide §4.2) — same integers, same first-min
-    # tie-break, and dist2 is the identical int64 L2² (the |q|² term is
-    # added back inside the kernel)
+    # the exact Arrow int64-matmul kernel (guide §4.2) instead of a k·D
+    # expression-literal argmin (~n·k·D ≈ 1M interpreted element-lambda
+    # evals at sf0.1) — same integers, same first-min tie-break, and
+    # dist2 is the identical int64 L2² (the |q|² term is added back
+    # inside the kernel)
     assigned = assign_cids_arrow_int(
         q, [[int(v) for v in r.qv] for r in crows], with_dist2=True
     )
@@ -2162,7 +1766,7 @@ FROM a JOIN per USING (cid)
 
 
 # ---------------------------------------------------------------------------
-# Staged for the r9 window: canonical fixed-batch assignment (SA3 oracle)
+# Canonical fixed-batch assignment (SA3 oracle)
 # ---------------------------------------------------------------------------
 
 BA_BATCH = 16
@@ -2175,12 +1779,9 @@ def q_batch_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``fixed_batches``: batch ids derive from the GLOBAL
     deterministic-shuffle rank (a pure function of ids/seed/size, never
     of the physical partitioning), with the trailing partial batch
-    dropped globally exactly as ``drop_last=True`` does. Closes the one
-    SURVEY §2 component that had no oracle row (VERDICT r7 "What's
-    missing" #3). Two-phase bucketed rank — no single-task global sort;
-    see :func:`operators.batching.batch_assignments`. STAGED for the r9
-    window: the registry is at the 100 cap, so registration pairs with
-    one retirement from the r9 candidates listed in queries.py."""
+    dropped globally exactly as ``drop_last=True`` does. Two-phase
+    bucketed rank — no single-task global sort; see
+    :func:`operators.batching.batch_assignments`."""
     from .operators.batching import batch_assignments
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id")
@@ -2215,12 +1816,7 @@ BQ_K = 10
 
 
 def q_bq_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered r13 per the write-ahead plan (staged r12; paired
-    with the ``ivf_topk_batch`` retirement from the r11-checked half —
-    the pre-agreed quantized/batched-tier pairing). Closes the 5-tier
-    quantization family (Flat/IVF/PQ/SQ/BQ) as driver-verified.
-
-    Binary-quantization Hamming top-10 — the 5th quantization tier
+    """Binary-quantization Hamming top-10 — the 5th quantization tier
     (Flat/IVF/PQ/SQ/BQ; FAISS ``IndexBinaryFlat`` analogue, the 32×
     bandwidth cut modern rescoring tiers lean on): 1 bit per dimension
     (above/below the per-dim training mean of the 16 lowest-id rows),
@@ -2320,16 +1916,8 @@ LIMIT {k}
 
 ANN_QUERIES.update(
     {
-        # kmeans_step retired r14 (registry entry only, per the r13
-        # write-ahead plan): kmeans_train_assign runs the SAME quantized
-        # Lloyd step 10×, then assigns — a strict superset of one step;
-        # q_kmeans_step stays unit/parity-covered in tests.
         "kmeans_train_assign": q_kmeans_train_assign,
         "semantic_dedup": q_semantic_dedup,
-        # semantic_dedup_incremental retired r14 (registry entry only):
-        # the cluster-blocked metric (semantic_dedup) and the
-        # batch/corpus incremental split (incremental_dedup) are each
-        # registered standalone; the composition stays unit-tested.
         "ann_recall_eval": q_ann_recall_eval,
         "mmr_rerank": q_mmr_rerank,
         "search_batch": q_search_batch,
@@ -2356,45 +1944,3 @@ ANN_ORACLES.update(
         "bq_hamming_topk": _oracle_bq_hamming_topk(),
     }
 )
-
-
-# ---------------------------------------------------------------------------
-# r20 registration candidate — STAGED r16 (final pairing belongs to the
-# r18/r19 write-ahead plans; provisional sibling: an IVF-family row —
-# the diagnostics read the same materialized layout ivf_topk probes).
-# ---------------------------------------------------------------------------
-
-
-def q_ivf_balance_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STAGED (r16) — NOT registered. IVF inverted-list size
-    diagnostics (operators/ann.py::ivf_balance_stats; the FAISS
-    index-statistics λ imbalance factor, Jégou et al. 2011): per
-    centroid of the materialized partitionBy(centroid) layout, the
-    list size, corpus fraction, and imbalance vs the mean list —
-    probe latency is bounded by the largest probed list, so this is
-    the number that decides whether the coarse quantizer needs
-    retraining before any nprobe tuning."""
-    from .operators.ann import ivf_balance_stats
-
-    path, _ = _ivf_layout(spark, sf_dir)
-    return ivf_balance_stats(spark.read.parquet(path))
-
-
-def _oracle_ivf_balance_stats() -> str:
-    return f"""
-WITH cents AS (SELECT vec_id AS cid, embedding AS ce
-               FROM embeddings WHERE vec_id < 16),
-scored AS (SELECT e.vec_id, c.cid, {_dk_l2('e.embedding', 'c.ce')} AS cdist
-           FROM embeddings e CROSS JOIN cents c),
-assigned AS (SELECT vec_id, cid AS centroid FROM (
-               SELECT *, row_number() OVER (PARTITION BY vec_id
-                          ORDER BY cdist ASC, cid ASC) AS rn
-               FROM scored) WHERE rn = 1),
-counts AS (SELECT centroid, count(*) AS n_vectors FROM assigned GROUP BY 1),
-tot AS (SELECT sum(n_vectors) AS n, count(*) AS k FROM counts)
-SELECT CAST(c.centroid AS INT) AS centroid,
-       c.n_vectors,
-       c.n_vectors::DOUBLE / t.n::DOUBLE AS frac,
-       (c.n_vectors * t.k)::DOUBLE / t.n::DOUBLE AS imbalance
-FROM counts c CROSS JOIN tot t
-"""

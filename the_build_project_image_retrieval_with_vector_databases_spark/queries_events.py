@@ -14,33 +14,6 @@ from .operators import windows as W
 from .sources.tables import load_table
 
 
-def q_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    val = F.col("value").cast("decimal(14,2)")
-    return (
-        ev.groupBy(F.window("ts", "600 seconds").alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(val).cast("double").alias("sum_value"),
-        )
-        .select(
-            F.unix_timestamp(F.col("w.start")).cast("long").alias("window_start"),
-            "event_type",
-            "n",
-            "sum_value",
-        )
-    )
-
-
-ORACLE_TUMBLING = """
-SELECT CAST(floor(epoch(ts) / 600) * 600 AS BIGINT) AS window_start,
-       event_type, count(*) AS n,
-       CAST(sum(CAST(value AS DECIMAL(14,2))) AS DOUBLE) AS sum_value
-FROM events
-GROUP BY 1, 2
-"""
-
-
 def q_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     return W.sliding_counts(ev, width_s=600, slide_s=300)
@@ -119,7 +92,6 @@ FROM (
   FROM events
 ) WHERE rn = 1
 """
-
 
 
 def q_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -523,16 +495,11 @@ FROM grid g LEFT JOIN best b ON g.user_id = b.user_id AND g.slot = b.slot
 
 
 EVENT_QUERIES = {
-    # tumbling_window retired r14 (registry entry only, per the r13
-    # write-ahead plan): tumbling ≡ sliding with step = width, and
-    # sliding_window stays registered; the stateful machinery is shared
-    # and q_tumbling_window keeps its unit/streaming tests.
     "funnel_conversion": q_funnel_conversion,
     "sliding_window": q_sliding_window,
     "sessionize": q_sessionize,
     "streaming_dedup_batch": q_streaming_dedup_batch,
     "json_extract_agg": q_json_extract,
-    # "views_before_purchase": retired r9 (sibling: asof_join)
     "kmv_distinct_sketch": q_kmv_distinct,
     "value_quantiles": q_value_quantiles,
     "interval_join": q_interval_join,

@@ -12,13 +12,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .sources.images import decode_images, scan_image_folder
+from .sources.images import scan_image_folder
 from .sources.manifest import read_manifest
 from .sources.tables import load_table
 
 _FIXTURES = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures")
 MANIFEST_PATH = os.path.join(_FIXTURES, "train_val.json")
-IMAGES_ROOT = os.path.join(_FIXTURES, "images")
 VIDEOS_ROOT = os.path.join(_FIXTURES, "videos")
 CORPUS_JSONL = os.path.join(_FIXTURES, "corpus.jsonl")
 
@@ -69,49 +68,6 @@ FROM train t LEFT JOIN cats c ON t.label = c.label
 # ---------------------------------------------------------------------------
 # S1 + S3 — binaryFile folder scan → Arrow-batched decode
 # ---------------------------------------------------------------------------
-
-
-def q_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ImageFolder scan (category = parent dir) through the real
-    ``mapInPandas`` decode UDF; the stub decoder's dimensions are
-    md5-derived so the oracle reproduces them exactly — this oracle-checks
-    the *plumbing* (schema, batching, hashing), with the PIL body swapped
-    in unchanged at deploy time."""
-    scanned = scan_image_folder(spark, IMAGES_ROOT, glob="*.jpg")
-    decoded = decode_images(scanned)
-    return decoded.select(
-        F.element_at(F.split("path", "/"), -1).alias("basename"),
-        "category",
-        F.col("length").alias("n_bytes"),
-        "width",
-        "height",
-        "n_channels",
-        "decode_ok",
-    )
-
-
-def _hex2int(col: str, pos: int) -> str:
-    return (
-        f"(CAST(strpos('0123456789abcdef', substr({col}, {pos}, 1)) - 1 AS INT) * 16"
-        f" + CAST(strpos('0123456789abcdef', substr({col}, {pos + 1}, 1)) - 1 AS INT))"
-    )
-
-
-ORACLE_IMAGE_DECODE = f"""
-WITH b AS (
-  SELECT filename, content, md5(lower(hex(content))) AS h,
-         octet_length(content) AS n_bytes
-  FROM read_blob('{IMAGES_ROOT}/*/*.jpg')
-)
-SELECT list_extract(string_split(filename, '/'), -1) AS basename,
-       list_extract(string_split(filename, '/'), -2) AS category,
-       n_bytes,
-       CASE WHEN n_bytes >= 4 THEN 64 + {_hex2int('h', 1)} % 192 ELSE NULL END AS width,
-       CASE WHEN n_bytes >= 4 THEN 64 + {_hex2int('h', 3)} % 192 ELSE NULL END AS height,
-       CASE WHEN n_bytes >= 4 THEN 3 ELSE NULL END AS n_channels,
-       n_bytes >= 4 AS decode_ok
-FROM b
-"""
 
 
 PPM_ROOT = os.path.join(_FIXTURES, "images_ppm")
@@ -640,13 +596,9 @@ FROM sim GROUP BY epoch ORDER BY epoch
 # ---------------------------------------------------------------------------
 # P8 + T3 — formatted result display (score strings, 5-wide result grid)
 # ---------------------------------------------------------------------------
-# knn_display retired r12 (one-for-one with the perplexity_buckets
-# registration — write-ahead candidate #3 in queries.py): its top-k
-# ranking surface stays covered by the registered search_batch (the
-# batched kNN superset); the P8/T3 display projection itself (the
-# `%.4f` score string + 5-wide grid chunk, reference
-# utils/__init__.py:130-152) is a stateless column projection that
-# lives on as :func:`score_grid` below, pinned by
+# The P8/T3 display projection (the `%.4f` score string + 5-wide grid
+# chunk, reference utils/__init__.py:130-152) is a stateless column
+# projection, :func:`score_grid` below, pinned by
 # tests/test_pipeline_queries.py against the Python formatter.
 
 

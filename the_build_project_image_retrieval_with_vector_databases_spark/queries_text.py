@@ -67,60 +67,6 @@ def _dk_stop_filter(toks: str, words) -> str:
 # ---------------------------------------------------------------------------
 
 
-def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    out = T.token_stats(docs)
-    return out.select(
-        "doc_id",
-        F.col("n_tokens").cast("long").alias("n_tokens"),
-        F.col("n_distinct_tokens").cast("long").alias("n_distinct_tokens"),
-        "mean_token_len",
-    )
-
-
-ORACLE_TOKEN_STATS = f"""
-WITH t AS (SELECT doc_id, {_dk_toks()} AS toks FROM documents)
-SELECT doc_id,
-       len(toks) AS n_tokens,
-       len(list_distinct(toks)) AS n_distinct_tokens,
-       (CASE WHEN len(toks) = 0 THEN 0
-        ELSE list_reduce(list_transform(toks, t -> length(t)), (a,b) -> a+b)
-        END)::DOUBLE / greatest(len(toks), 1) AS mean_token_len
-FROM t
-"""
-
-
-def q_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    return T.top_terms(docs, k=20)
-
-
-ORACLE_TOP_TERMS = f"""
-WITH t AS (SELECT {_dk_toks()} AS toks FROM documents),
-e AS (SELECT unnest(toks) AS term FROM t)
-SELECT term, count(*) AS tf FROM e GROUP BY term
-ORDER BY tf DESC, term ASC LIMIT 20
-"""
-
-
-def q_tf_idf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    return T.tf_idf(docs, min_df=2)
-
-
-ORACLE_TF_IDF = f"""
-WITH t AS (SELECT doc_id, {_dk_toks()} AS toks FROM documents),
-e AS (SELECT doc_id, unnest(toks) AS term FROM t),
-tf AS (SELECT doc_id, term, count(*) AS tf FROM e GROUP BY 1, 2),
-dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1 HAVING count(*) >= 2),
-n AS (SELECT count(*) AS n_docs FROM documents)
-SELECT tf.doc_id, tf.term, tf.tf, dfreq.df,
-       round(tf.tf::DOUBLE * ln((n.n_docs + 1)::DOUBLE / (dfreq.df + 1)::DOUBLE), 6)
-         AS tfidf
-FROM tf JOIN dfreq USING (term), n
-"""
-
-
 def q_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return T.language_id(docs)
@@ -146,35 +92,6 @@ SELECT doc_id,
        CASE WHEN best <= 0 THEN 'und' {case} ELSE 'und' END AS pred_lang,
        best AS lang_score
 FROM b
-"""
-
-
-def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    return T.quality_score(docs)
-
-
-def _oracle_quality() -> str:
-    stop = _dk_stop_filter("toks", LANG_STOPWORDS["en"])
-    return f"""
-WITH t AS (SELECT doc_id, text, {_dk_toks()} AS toks FROM documents),
-m AS (
-  SELECT doc_id,
-    length(regexp_replace(text, '[^a-zA-Z]', '', 'g'))::DOUBLE /
-      greatest(length(text), 1) AS alpha_ratio,
-    (CASE WHEN len(toks) = 0 THEN 0
-     ELSE list_reduce(list_transform(toks, t -> length(t)), (a,b) -> a+b)
-     END)::DOUBLE / greatest(len(toks), 1) AS mean_tok_len,
-    {stop}::DOUBLE / greatest(len(toks), 1) AS stop_ratio
-  FROM t
-)
-SELECT doc_id, alpha_ratio, mean_tok_len, stop_ratio,
-       alpha_ratio * 0.4 +
-       (CASE WHEN mean_tok_len >= 3.0 AND mean_tok_len <= 10.0
-             THEN 1.0 ELSE 0.5 END) * 0.3 +
-       (CASE WHEN stop_ratio > 0.05 THEN 1.0 ELSE 0.6 END) * 0.3
-         AS quality
-FROM m
 """
 
 
@@ -211,34 +128,6 @@ SELECT doc_id,
        (top_word_frac > 0.2 OR dup_2gram_frac > 0.4 OR symbol_ratio > 0.3)
          AS flagged
 FROM m
-"""
-
-
-def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    return T.fingerprint(docs)
-
-
-ORACLE_FINGERPRINT = f"""
-WITH t AS (SELECT doc_id, text, {_dk_toks()} AS toks FROM documents),
-h AS (SELECT doc_id, text,
-        list_transform(toks, tk -> {_dk_hex2long("md5(tk)")}) AS hs
-      FROM t)
-SELECT doc_id,
-       CASE WHEN len(hs) = 0 THEN NULL ELSE list_min(hs) END AS min_token_hash,
-       md5(text) AS text_md5
-FROM h
-"""
-
-
-def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    return D.exact_dedup(docs)
-
-
-ORACLE_EXACT_DEDUP = """
-SELECT md5(text) AS text_md5, min(doc_id) AS keep_id, count(*) AS n_copies
-FROM documents GROUP BY 1
 """
 
 
@@ -348,35 +237,10 @@ WHERE j.jaccard >= {threshold}
 """
 
 
-def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    return D.minhash_signatures(
-        docs, n=3, num_hashes=8, pinned=D.pins_for(sf_dir)
-    )
-
-
-def _oracle_minhash_signatures(num_hashes: int = 8) -> str:
-    sig_cols = []
-    for i in range(num_hashes):
-        a, b = MINHASH_COEFFS[i]
-        sig_cols.append(f"coalesce(min((x * {a} + {b}) % {MINHASH_PRIME}), {MINHASH_PRIME}) AS mh{i}")
-    coal = ", ".join(
-        f"coalesce(s.mh{i}, {MINHASH_PRIME}) AS mh{i}" for i in range(num_hashes)
-    )
-    return f"""
-WITH t AS (SELECT doc_id, {_dk_toks()} AS toks FROM documents),
-sh AS (SELECT doc_id, unnest({_dk_shingles('toks')}) AS shingle FROM t),
-xs AS (SELECT doc_id, ({_dk_hex2long('md5(shingle)')}) % {MINHASH_PRIME} AS x FROM sh),
-sig0 AS (SELECT doc_id, {', '.join(sig_cols)} FROM xs GROUP BY doc_id)
-SELECT d.doc_id, {coal}
-FROM (SELECT doc_id FROM documents) d LEFT JOIN sig0 s USING (doc_id)
-"""
-
-
 def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Owns the operator's caching contract: the tokenize/signature
     intermediates persist only while the pair table materializes to a
-    temp spill, then every block is released (round-2 ADVICE)."""
+    temp spill, then every block is released."""
     from .operators.spill import materialize_and_release
 
     docs = load_table(spark, sf_dir, "documents")
@@ -386,13 +250,6 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         cache_handles=handles, pinned=D.pins_for(sf_dir),
     )
     return materialize_and_release(pairs, handles, "minhash-pairs-")
-
-
-# q_simhash / _oracle_simhash retired r13 (registry entry only —
-# D.simhash stays the fingerprint engine of simhash_near_dup, whose
-# oracle re-derives the identical vote/pack CTE and whose banding is a
-# strict superset of the bare-sketch projection; the operator stays
-# unit- and fuzz-covered through that row and tests/test_dedup.py).
 
 
 def q_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -530,11 +387,10 @@ GROUP BY term ORDER BY n DESC, term ASC LIMIT 30
 
 def q_simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs at Hamming ≤ 3 via 4×8-bit band rotation —
-    the distance-tolerant companion to ``simhash`` (VERDICT r1 item 5).
-    r18: the operator no longer persists anything (single-consumer
-    fingerprint table after the per-bucket pair expansion replaced the
-    banded self-join), so the spill round-trip that released the cache
-    handles was pure overhead — the plain plan is returned directly."""
+    the distance-tolerant companion to ``simhash``. The operator
+    persists nothing (its fingerprint table has a single consumer after
+    the per-bucket pair expansion), so no spill round-trip is needed —
+    the plain plan is returned directly."""
     docs = load_table(spark, sf_dir, "documents")
     return D.simhash_near_dup_pairs(
         docs, bits=32, bands=4, max_hamming=3,
@@ -588,9 +444,9 @@ def q_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return T.bpe_token_counts(docs)
 
 
-# The ONE SQL spelling of textops.BPE_PATTERN for every DuckDB mirror
-# (r15 ADVICE: three hand-spelled copies had drifted into two escape
-# styles). Standard SQL string literals keep backslashes literal, so
+# The ONE SQL spelling of textops.BPE_PATTERN for every DuckDB mirror,
+# so hand-spelled copies cannot drift into different escape styles.
+# Standard SQL string literals keep backslashes literal, so
 # the raw Python pattern interpolates verbatim — '\t' in the literal
 # reaches DuckDB's regex engine as the two-char escape, exactly what
 # Spark's regexp_extract_all sees from the same constant.
@@ -701,52 +557,6 @@ FROM ranked WHERE rank <= 3
 """
 
 
-def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination: corpus docs (doc_id ≥ 20) sharing word
-    4-grams with the 'benchmark' slice (doc_id < 20). The benchmark gram
-    set broadcasts; the corpus never shuffles — the only exchange is the
-    per-doc hit aggregate (operators/decontam.py for the 100 TB audit)."""
-    from .operators.decontam import ngram_overlap
-
-    docs = load_table(spark, sf_dir, "documents")
-    # spread: the fixture is one parquet split — without it the whole
-    # shingle+hash pass serializes onto one core (no-op on real inputs)
-    corpus = spread(docs).filter(F.col("doc_id") >= 20)
-    bench = docs.filter(F.col("doc_id") < 20)
-    return ngram_overlap(corpus, bench, n=4, min_hits=1, severe_frac=0.2)
-
-
-def _oracle_decontaminate(n: int = 4, severe_frac: float = 0.2) -> str:
-    """Mirror: shingles → 60-bit md5-prefix ints (same hash, same
-    collisions), benchmark grams distinct, per-corpus-doc hit stats."""
-    return f"""
-WITH t AS (SELECT doc_id, {_dk_toks()} AS toks FROM documents),
-sh AS (SELECT doc_id, unnest({_dk_shingles('toks', n)}) AS shingle FROM t),
-hx AS (SELECT doc_id, {_dk_hex15_to_long('md5(shingle)')} AS h FROM sh),
-bench AS (SELECT DISTINCT doc_id AS bench_id, h FROM hx WHERE doc_id < 20),
-corpus AS (SELECT doc_id, h FROM hx WHERE doc_id >= 20),
-sizes AS (SELECT doc_id, count(*) AS n_grams FROM corpus GROUP BY 1),
-hits AS (
-  SELECT c.doc_id,
-         count(DISTINCT c.h) AS n_shared,
-         count(DISTINCT b.bench_id) AS n_bench_docs
-  FROM corpus c JOIN bench b USING (h)
-  GROUP BY 1
-)
-SELECT h.doc_id, s.n_grams, h.n_shared, h.n_bench_docs,
-       h.n_shared::DOUBLE / s.n_grams::DOUBLE AS overlap_frac,
-       h.n_shared::DOUBLE / s.n_grams::DOUBLE >= {severe_frac}
-         AS severe
-FROM hits h JOIN sizes s USING (doc_id)
-"""
-
-
-# token_histogram retired r11 (one-for-one with the hard_negatives
-# registration — write-ahead candidate #3): its width-10 length
-# histogram was a strict projection of token_stats' per-doc token
-# surface, which remains registered.
-
-
 def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic weight-proportional (multinomial) document sampling
     — 8 probes drawn ∝ n_chars by integer inverse-CDF (operators/
@@ -773,122 +583,6 @@ probes AS (
 )
 SELECT p.probe, c.doc_id, c.wt AS weight
 FROM cum c JOIN probes p ON p.u >= c.hi - c.wt AND p.u < c.hi
-"""
-
-
-def q_passage_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Passage-level exact dedup (C4-style repeated-span removal):
-    documents chunk into non-overlapping 20-token passages, passages
-    repeated anywhere in the corpus are reported with occurrence counts
-    and the keeper doc. Catches boilerplate and partial copies that
-    whole-document hashing misses.
-
-    Scale shape: chunking is a per-row expression (sequence + slice —
-    no UDF); the single shuffle is keyed by the 60-bit passage hash
-    (uniform by construction, map-side partial agg), so the wire carries
-    (hash, partial-count) pairs, never passage text."""
-    from .functions.text import md5_long
-
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    toks = tokens(F.col("text"))
-    # Zero-token documents emit NO passages (fuzz-caught: the old
-    # greatest(size, 1) floor manufactured an empty-string passage that
-    # Spark hashed while DuckDB's list_slice-of-empty folded to NULL).
-    # The when() guard also keeps sequence() away from its descending
-    # start>stop trap.
-    starts = F.when(
-        F.size(toks) >= 1, F.sequence(F.lit(1), F.size(toks), F.lit(20))
-    ).otherwise(F.array().cast("array<int>"))
-    passage = F.explode(
-        F.transform(starts, lambda i: F.concat_ws(" ", F.slice(toks, i, 20)))
-    )
-    p = docs.select("doc_id", passage.alias("passage"))
-    return (
-        p.select("doc_id", md5_long(F.col("passage"), digits=15).alias("passage_h"))
-        .groupBy("passage_h")
-        .agg(
-            F.count("*").alias("n_occ"),
-            F.countDistinct("doc_id").alias("n_docs"),
-            F.min("doc_id").alias("keep_id"),
-        )
-        .filter(F.col("n_occ") > 1)
-    )
-
-
-ORACLE_PASSAGE_DEDUP = f"""
-WITH t AS (SELECT doc_id, {_dk_toks()} AS toks FROM documents),
-p AS (
-  SELECT doc_id,
-         array_to_string(list_slice(toks, i, i + 19), ' ') AS passage
-  FROM t, unnest(range(1, len(toks) + 1, 20)) AS u(i)
-),
-h AS (SELECT doc_id, {_dk_hex15_to_long('md5(passage)')} AS passage_h FROM p)
-SELECT passage_h, count(*) AS n_occ,
-       count(DISTINCT doc_id) AS n_docs,
-       min(doc_id) AS keep_id
-FROM h GROUP BY 1 HAVING count(*) > 1
-"""
-
-
-def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Daily-ingest near-dup check: the 'new batch' (doc_id ≥ 450)
-    against the existing corpus (doc_id < 450) via incremental
-    MinHash-LSH — batch × corpus band join only, never corpus × corpus
-    (operators/dedup.py::minhash_lsh_incremental). The index-maintenance
-    story for dedup, mirroring ``append_to_ivf_index`` on the ANN side.
-    Spill-and-release per the dedup cache contract."""
-    from .operators.spill import materialize_and_release
-
-    docs = load_table(spark, sf_dir, "documents")
-    corpus = docs.filter(F.col("doc_id") < 450)
-    batch = docs.filter(F.col("doc_id") >= 450)
-    handles: list = []
-    out = D.minhash_lsh_incremental(
-        corpus, batch, n=3, num_hashes=8, bands=4, threshold=0.5,
-        cache_handles=handles, pinned=D.pins_for(sf_dir),
-    )
-    return materialize_and_release(out, handles, "incr-dedup-")
-
-
-def _oracle_incremental_dedup(threshold: float = 0.5) -> str:
-    """The full-pairs LSH oracle restricted to cross-boundary pairs:
-    corpus ids all sort below batch ids, so (left < 450 ≤ right) selects
-    exactly the corpus × batch candidate set the incremental join sees."""
-    inner = _oracle_jaccard(threshold, lsh=True)
-    return f"""
-SELECT left_id AS corpus_id, right_id AS batch_id, jaccard
-FROM ({inner})
-WHERE left_id < 450 AND right_id >= 450
-"""
-
-
-def q_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Training-mix assembly: a 60-doc budget split 50/30/20 across three
-    sources, drawn in the engine's deterministic surrogate order
-    (operators/sample.py::mixture_sample). Share-0 sources are filtered
-    at the scan; one source-keyed window shuffle."""
-    from .operators.sample import mixture_sample
-
-    docs = load_table(spark, sf_dir, "documents")
-    return mixture_sample(
-        docs, {"src0": 0.5, "src1": 0.3, "src2": 0.2}, budget=60
-    )
-
-
-ORACLE_MIXTURE_SAMPLE = f"""
-WITH ranked AS (
-  SELECT source, doc_id,
-         row_number() OVER (
-           PARTITION BY source
-           ORDER BY ((doc_id + 42) * {HASH_MULT_TXT}) % {HASH_MOD_TXT} ASC,
-                    doc_id ASC) AS mix_rank,
-         CASE source WHEN 'src0' THEN 30 WHEN 'src1' THEN 18
-                     WHEN 'src2' THEN 12 ELSE 0 END AS quota
-  FROM documents
-  WHERE source IN ('src0', 'src1', 'src2')
-)
-SELECT source, doc_id, CAST(mix_rank AS INT) AS mix_rank
-FROM ranked WHERE mix_rank <= quota
 """
 
 
@@ -933,7 +627,7 @@ FROM c GROUP BY 1
 def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII redaction at the query surface (operators.textops.pii_scrub):
     typed placeholders + per-class audit counts + clean-text md5 over
-    the documents table. Registered in r7 (property + staged-oracle tests in
+    the documents table (property + oracle tests in
     tests/test_staged_ops.py).
     """
     from .operators.textops import pii_scrub
@@ -983,7 +677,7 @@ BM25_B = 0.75
 
 def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 top-k lexical retrieval (operators.textops.bm25) for a fixed
-    3-term query over documents. Registered in r7 (property + staged-oracle tests in
+    3-term query over documents (property + oracle tests in
     tests/test_staged_ops.py).
     """
     from .operators.textops import bm25
@@ -1138,9 +832,7 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine); the component labels are the min-label fixpoint of
     `operators.graph.connected_components` and the oracle re-derives
     them with a recursive-CTE transitive closure, then replays the same
-    window argmax. STAGED for the r8 verification window — oracle
-    parity-tested in tests/test_staged_ops.py so registration is a
-    2-line diff. Spill-and-release per the dedup cache contract."""
+    window argmax. Spill-and-release per the dedup cache contract."""
     from .operators.graph import connected_components
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1220,19 +912,16 @@ def q_dedup_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     shares a shingle); candidate set: the banded 8-hash/4-band
     MinHash-LSH pipeline (verified pairs). One summary row:
     (n_exact, n_lsh, n_hit, recall, precision) — counts are integers,
-    the ratios raw int/int doubles. STAGED for the r8 verification
-    window — oracle parity-tested in tests/test_staged_ops.py so
-    registration is a 2-line diff."""
+    the ratios raw int/int doubles."""
     from .operators.spill import materialize_and_release
 
     docs = load_table(spark, sf_dir, "documents")
     handles: list = []
-    # r17 note: sharing ONE persisted doc_shingles table across both
-    # pipelines (exact + LSH) was A/B-measured and REJECTED — 2.6-3.5 s
-    # → 3.3-4.8 s isolated. The exact side's self-join gets side b for
-    # free via AQE exchange reuse, so the shared persist only ADDED the
-    # cache materialization of the full shingle arrays without removing
-    # a real pass (the ngram_jaccard r12 lesson, re-measured here).
+    # no shared persisted doc_shingles table across the two pipelines
+    # (exact + LSH): measured 2.6-3.5 s without it, 3.3-4.8 s with it.
+    # The exact side's self-join gets side b for free via AQE exchange
+    # reuse, so a shared persist only adds the cache materialization of
+    # the full shingle arrays without removing a real pass.
     exact = D.ngram_jaccard_pairs(docs, n=3, threshold=0.5).select(
         "left_id", "right_id"
     )
@@ -1288,11 +977,7 @@ FROM m
 
 
 def q_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered r12, paired one-for-one with the split_counts
-    retirement (staged r11 with 3-SF oracle parity + fuzz coverage in
-    tests/test_staged_ops.py / test_fuzz_oracle.py).
-
-    DSIR importance selection (Xie et al. 2023): rank corpus documents by
+    """DSIR importance selection (Xie et al. 2023): rank corpus documents by
     hashed-n-gram log importance weight toward the English target
     distribution (``lang = 'en'`` rows are the in-corpus target sample),
     top 40 by (score DESC, doc_id).  The training-mix SELECTION pass —
@@ -1348,11 +1033,7 @@ ORDER BY score_q DESC, doc_id ASC LIMIT 40
 
 
 def q_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered r12, paired one-for-one with the knn_display
-    retirement (staged r11 with 3-SF oracle parity + fuzz coverage in
-    tests/test_staged_ops.py / test_fuzz_oracle.py).
-
-    CCNet-style perplexity filter (Wenzek et al. 2020): every document
+    """CCNet-style perplexity filter (Wenzek et al. 2020): every document
     scored by average per-token NLL under the corpus hashed-unigram LM,
     bucketed head/middle/tail at the within-language terciles — the
     quality-slice assignment CCNet feeds its keep-head+middle rule.
@@ -1405,10 +1086,7 @@ TM_BUDGET = 120
 
 
 def q_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered r13 per the write-ahead plan (staged r12; paired
-    with the ``simhash`` retirement from the r11-checked half).
-
-    Temperature-scaled mix assembly (operators/mixing.py::
+    """Temperature-scaled mix assembly (operators/mixing.py::
     temperature_mix, α = 1/2, budget 120): per-source quotas ∝ √n_s
     with integer largest-remainder allocation — the
     sampling-temperature rule multilingual corpora use instead of
@@ -1457,10 +1135,7 @@ PC_WINDOW, PC_STRIDE = 32, 24
 
 
 def q_passage_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered r13 per the write-ahead plan (staged r12; paired
-    with the ``label_counts`` retirement from the r11-checked half).
-
-    Overlapping token-window chunking (operators/textops.py::
+    """Overlapping token-window chunking (operators/textops.py::
     passage_chunks, window 32 / stride 24): the RAG-retrieval and
     long-context-pretraining splitter — every token lands in ≥ 1
     chunk, consecutive chunks share 8 tokens. Zero-shuffle codegen'd
@@ -1548,19 +1223,14 @@ TEXT_ORACLES = {
 
 
 # ---------------------------------------------------------------------------
-# Registered r14 (staged r13 under the full discipline). Executed exactly
-# per the r13 write-ahead plan above ``_CHECK_FIRST`` (queries.py):
-# unimax_mix ↔ kmeans_step retired, length_bucket_batches ↔
-# tumbling_window retired, leakage_safe_split ↔
-# semantic_dedup_incremental retired — all three retirees from the
-# r12-checked half, so each freed a real r14 window slot.
+# Mix assembly, DataLoader batching and the leakage-safe split
 # ---------------------------------------------------------------------------
 
 UM_BUDGET, UM_EPOCHS = 333, 2
 
 
 def q_unimax_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered r14 (staged r13). UniMax epoch-capped mix assembly
+    """UniMax epoch-capped mix assembly
     (operators/mixing.py::unimax_mix; Chung et al. 2023): per-source
     quotas from the ascending equal-share fold capped at 2 epochs per
     source, per-doc epoch counts (q div n copies each, first q mod n
@@ -1618,7 +1288,7 @@ LB_BUDGET, LB_GRANULE, LB_CAP = 512, 16, 128
 
 
 def q_length_bucket_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered r14 (staged r13). Length-bucketed DataLoader
+    """Length-bucketed DataLoader
     batching (operators/batching.py::length_bucket_batches): pad-width
     buckets (granule 16, cap 128), fixed 512-token batch budget →
     per-width capacity, two-phase bucketed rank (never a ≤8-partition
@@ -1660,7 +1330,7 @@ WHERE r.rk < tt.total - (tt.total % ({budget} // r.width))
 
 
 def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered r14 (staged r13). Near-dup-aware train/eval split
+    """Near-dup-aware train/eval split
     (operators/graph.py::leakage_safe_split): MinHash-LSH pairs →
     connected components → component-hash 80/20 split, singletons
     hash their own id — no near-dup pair (or transitive chain) ever
@@ -1727,25 +1397,18 @@ TEXT_ORACLES.update(
 
 
 # ---------------------------------------------------------------------------
-# Registered r15 (staged r13 under the full discipline). Executed exactly
-# per the r13→r14 write-ahead plan above ``_CHECK_FIRST`` (queries.py):
-# winnowing_fingerprint ↔ doc_fingerprint retired, bloom_decontaminate ↔
-# mixture_sample retired, bpe_merge_step ↔ top_terms retired — all three
-# retirees from the r13-checked half, so each freed a real r15 window
-# slot. winnowing's 43×@100× registration gate was RESOLVED r14 by the
-# O(g·log w) sparse-table sliding-min rewrite (18.11× quiet, SCALE_100X).
-# The retired q_/oracle surfaces stay (fuzz panels + unit tests).
+# Winnowing, Bloom decontamination and one BPE merge step
 # ---------------------------------------------------------------------------
 
 WN_K, WN_W = 3, 4
 
 
 def q_winnowing_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered r15 (staged r13). Winnowing fingerprints (operators/
+    """Winnowing fingerprints (operators/
     textops.py::winnowing_fingerprints; Schleimer et al. SIGMOD 2003):
     per-window rightmost-minimal k-gram hash selection — local
-    (substring-level) overlap detection, the robust superset of
-    doc_fingerprint's single corpus-wide min-hash. Zero-shuffle
+    (substring-level) overlap detection, the robust superset of a
+    single corpus-wide min-hash fingerprint. Zero-shuffle
     codegen'd projection chain."""
     docs = load_table(spark, sf_dir, "documents")
     return T.winnowing_fingerprints(spread(docs), k=WN_K, w=WN_W)
@@ -1783,7 +1446,7 @@ BLOOM_M_BITS = 65536
 
 
 def q_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered r15 (staged r13). Bloom-filter decontamination
+    """Bloom-filter decontamination
     prefilter (operators/decontam.py::bloom_decontaminate; Bloom 1970):
     the benchmark slice's (doc_id < 20) 4-grams set positions in a
     65536-position double-hash filter; corpus docs (doc_id ≥ 20) whose
@@ -1831,7 +1494,7 @@ BPE_TOP_N = 32
 
 
 def q_bpe_merge_step(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered r15 (staged r13). One distributed BPE merge
+    """One distributed BPE merge
     iteration (operators/textops.py::bpe_merge_step; Sennrich et al.
     2016): word frequencies → adjacent-char-pair counts weighted by
     frequency → top-32 merge candidates. The corpus collapses to its
@@ -1874,19 +1537,12 @@ TEXT_ORACLES.update(
 
 
 # ---------------------------------------------------------------------------
-# Registered r16 (staged r14 under the full discipline). Executed exactly
-# per the r14→r15 write-ahead plan above ``_CHECK_FIRST`` (queries.py):
-# url_host_dedup ↔ exact_dedup retired, contamination_eval_split ↔
-# decontaminate retired, repetition_quality ↔ quality_score retired —
-# all three retirees from the r14-checked half (the half that rotates
-# into the r16 window), so each freed a real r16 window slot. The exact
-# 47+3 composition was dry-run 50/50 green in r15 (CHANGES_r15 §10).
-# The retired q_/oracle surfaces stay (fuzz panels + unit tests).
+# URL dedup, the dirty/clean eval split and Gopher repetition fractions
 # ---------------------------------------------------------------------------
 
 # Mirrors operators/dedup.py::_TRACKING_PARAM_RE (default): bare
-# ref/ref_src deliberately excluded — semantic on many sites (r14
-# ADVICE); only the unambiguous ad/click/campaign IDs strip.
+# ref/ref_src deliberately excluded — semantic on many sites; only the
+# unambiguous ad/click/campaign IDs strip.
 _URL_TRACKING_RE_SQL = "^(utm_[a-z]+|gclid|fbclid|msclkid|mc_cid|mc_eid)="
 
 
@@ -1933,7 +1589,7 @@ _SYNTH_URL_SQL = """
 
 
 def q_url_host_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered r16 (staged r14). URL-level exact dedup
+    """URL-level exact dedup
     (operators/dedup.py::url_host_dedup): canonical-URL key
     normalization (scheme/www/port/fragment/tracking-param/param-order
     invariant, pure Catalyst regexp expressions) + one shuffle keyed by
@@ -1985,7 +1641,7 @@ FROM k
 
 
 def q_contamination_eval_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered r16 (staged r14). GPT-3 Appendix-C dirty/clean EVAL
+    """GPT-3 Appendix-C dirty/clean EVAL
     split (operators/decontam.py::contamination_eval_split): per eval
     document (doc_id < 20, the decontaminate benchmark slice), its
     4-gram overlap with the training corpus (doc_id >= 20) and the
@@ -2022,7 +1678,7 @@ FROM sizes s LEFT JOIN hits h USING (doc_id)
 
 
 def q_repetition_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered r16 (staged r14). Gopher char-fraction repetition
+    """Gopher char-fraction repetition
     suite (operators/textops.py::repetition_ngram_fractions; Rae et
     al. 2021 Table A1): per (doc, n, kind), the fraction of characters
     in the most frequent n-gram (n=2/3/4) or in duplicated n-grams
@@ -2093,23 +1749,14 @@ TEXT_ORACLES.update(
 
 
 # ---------------------------------------------------------------------------
-# Registered r17 (staged r14: source_overlap_matrix,
-# ngram_novelty_score; r15: exact_substring_dedup). Executed exactly
-# per the r15→r16 write-ahead plan above ``_CHECK_FIRST`` (queries.py):
-# source_overlap_matrix ↔ token_stats retired, ngram_novelty_score ↔
-# incremental_dedup retired, exact_substring_dedup ↔ passage_dedup
-# retired — all three retirees from the r15-checked half (the half
-# that rotates into the r17 window), so each freed a real r17 window
-# slot. The exact 47+3 composition was dry-run 50/50 green in r15
-# (commit 18792c0). The retired q_/oracle surfaces stay (fuzz panels +
-# unit tests).
+# Cross-source overlap, n-gram novelty and exact-substring duplication
 # ---------------------------------------------------------------------------
 
 SOM_N, SOM_K = 3, 64
 
 
 def q_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered r17 (staged r14). Pairwise cross-source n-gram
+    """Pairwise cross-source n-gram
     overlap via per-source KMV sketches
     (operators/sketch.py::source_overlap_matrix; Beyer et al. 2007
     KMV + the standard k-smallest-union Jaccard estimator): the
@@ -2159,7 +1806,7 @@ NOV_N, NOV_STALE = 3, 0.5
 
 
 def q_ngram_novelty_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered r17 (staged r14). First-occurrence n-gram novelty
+    """First-occurrence n-gram novelty
     (operators/textops.py::ngram_novelty_score): per doc, the fraction
     of its distinct 3-grams whose global min-doc_id first occurrence
     is this doc — the per-document form of Lee et al. 2022's
@@ -2167,14 +1814,12 @@ def q_ngram_novelty_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.textops import ngram_novelty_score
 
     docs = load_table(spark, sf_dir, "documents")
-    # r17 note: the persist+spill form (cache_handles +
-    # materialize_and_release) won a cold same-session A/B (2.12 s vs
-    # 2.28 s) but LOST in full-bench context at quiet calibration
-    # (2.11 s vs the 1.40 s baseline row — warm, the second pipeline
-    # evaluation is cheaper than the spill round-trip + array-cache
-    # materialization). Reverted to the plain form; the operator keeps
-    # the cache_handles seam for corpus-scale callers where the second
-    # full tokenize pass dominates.
+    # plain form, no persist+spill: the spill form won a cold A/B
+    # (2.12 s vs 2.28 s) but lost in the full bench (2.11 s vs 1.40 s —
+    # warm, the second pipeline evaluation is cheaper than the spill
+    # round-trip + array-cache materialization). The operator keeps the
+    # cache_handles seam for corpus-scale callers where the second full
+    # tokenize pass dominates.
     return ngram_novelty_score(spread(docs), n=NOV_N, stale_below=NOV_STALE)
 
 
@@ -2203,23 +1848,19 @@ ESS_L, ESS_TAU = 8, 0.2
 
 
 def q_exact_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered r17 (staged r15). ExactSubstr duplication profile
+    """ExactSubstr duplication profile
     (operators/textops.py::exact_substring_spans; Lee et al. ACL 2022
     §4.1, token-level): per doc, tokens covered by the union of
     L-token spans duplicated anywhere in the corpus — the suffix-array
     dedup re-expressed as two hash aggregates + a sorted-position
-    window fold. r17 pairing executed: passage_dedup retired (the
-    non-overlapping 20-token chunk dedup is the stride-L coarsening of
-    this sliding L-window span map; the chunking machinery itself
-    stays registered via passage_chunking)."""
+    window fold."""
     from .operators.textops import exact_substring_spans
 
     docs = load_table(spark, sf_dir, "documents")
-    # r17 note: the persist+spill form (minhash cache contract) was
-    # A/B-measured here and LOST (1.65 s vs 1.41 s plain at sf0.1) —
-    # the spill round-trip costs more than the second tokenize pass
-    # saves, the same verdict ngram_jaccard's r12 100× A/B recorded
-    # for persisting an exploded gram table. Plain form kept.
+    # plain form, no persist+spill: the spill form measured 1.65 s vs
+    # 1.41 s plain at sf0.1 — the spill round-trip costs more than the
+    # second tokenize pass saves (the same holds for persisting an
+    # exploded gram table in ngram_jaccard at 100×).
     return exact_substring_spans(spread(docs), L=ESS_L, flag_above=ESS_TAU)
 
 
@@ -2278,525 +1919,3 @@ TEXT_ORACLES.update(
         "exact_substring_dedup": _oracle_exact_substring_dedup(),
     }
 )
-
-
-# ---------------------------------------------------------------------------
-# r18 registration candidates — STAGED r15 (ahead of the pipeline, the
-# r14→r16/r17 precedent). The r18 window re-checks the r16-checked half,
-# so final pairings belong to the r16/r17 write-ahead plans. Provisional
-# sibling arguments: language_confidence_filter ↔ language_id (the
-# confidence gate is the margin-extended superset of the argmax LID),
-# token_entropy ↔ the quality/repetition ratio family (distribution-wide
-# where repetition_quality is top-gram), and bpe_train_encode ↔
-# bpe_merge_step (the full learn+apply loop vs its single round — the
-# single round stays unit/fuzz-covered either way). Staging discipline: Python
-# reference + 3-SF oracle parity + plan pin in tests/test_staged_ops.py,
-# generated-corpus fuzz rows in
-# tests/test_fuzz_oracle.py::test_fuzz_staged_r18_text_ops.
-# ---------------------------------------------------------------------------
-
-LC_MARGIN = 0.02
-
-
-def q_language_confidence_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STAGED (r15) — NOT registered. CCNet-style language-confidence
-    gate (operators/textops.py::language_confidence; Wenzek et al.
-    2020 §3.1): argmax LID plus runner-up score and margin;
-    ``is_confident`` gates on best > 0 AND margin ≥ 0.02. Zero-shuffle
-    per-row expressions — the language_id class."""
-    docs = load_table(spark, sf_dir, "documents")
-    return T.language_confidence(spread(docs), min_margin=LC_MARGIN)
-
-
-def _oracle_language_confidence_filter(m: float = LC_MARGIN) -> str:
-    score_exprs = ",\n       ".join(
-        f"{_dk_stop_filter('toks', LANG_STOPWORDS[lang])}::DOUBLE / "
-        f"greatest(len(toks), 1) AS s_{lang}"
-        for lang in sorted(LANG_STOPWORDS)
-    )
-    arr = "[" + ", ".join(f"s_{l}" for l in sorted(LANG_STOPWORDS)) + "]"
-    case = " ".join(
-        f"WHEN s_{l} = best THEN '{l}'" for l in sorted(LANG_STOPWORDS)
-    )
-    # best/runner-up indices derived from the live language set (r15
-    # ADVICE: hard-coded arr[4]/arr[3] would silently misread if
-    # LANG_STOPWORDS ever gains or loses a language). The Spark side
-    # uses element_at(arr, -1)/(-2); 1-based n/n-1 is the same cell.
-    n = len(LANG_STOPWORDS)
-    return f"""
-WITH t AS (SELECT doc_id, {_dk_toks()} AS toks FROM documents),
-s AS (SELECT doc_id,
-       {score_exprs}
-      FROM t),
-b AS (SELECT *, list_sort({arr}) AS arr FROM s),
-b2 AS (SELECT *, arr[{n}] AS best, arr[{n - 1}] AS second FROM b)
-SELECT doc_id,
-       CASE WHEN best <= 0 THEN 'und' {case} ELSE 'und' END AS pred_lang,
-       best AS lang_score,
-       second AS second_score,
-       best - second AS margin,
-       (best > 0 AND best - second >= {m}) AS is_confident
-FROM b2
-"""
-
-
-TE_TEMPLATED_BELOW = 2_500_000
-
-
-def q_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STAGED (r15) — NOT registered. Per-doc unigram Shannon entropy
-    in integer micro-nats (operators/textops.py::token_entropy) — the
-    distribution-wide templated-text screen, exact cross-engine via
-    the dsir/perplexity λ-quantization contract."""
-    docs = load_table(spark, sf_dir, "documents")
-    return T.token_entropy(spread(docs), templated_below=TE_TEMPLATED_BELOW)
-
-
-def _oracle_token_entropy(thr: int = TE_TEMPLATED_BELOW) -> str:
-    return f"""
-WITH t AS (SELECT doc_id, {_dk_toks()} AS toks FROM documents),
-e AS (SELECT doc_id, unnest(toks) AS tok FROM t),
-c AS (SELECT doc_id, tok, count(*) AS c FROM e GROUP BY 1, 2),
-d AS (SELECT doc_id,
-        CAST(sum(c) AS BIGINT) AS n_tokens,
-        CAST(count(*) AS BIGINT) AS n_distinct,
-        CAST(sum(c * CAST(round(ln(c::DOUBLE) * 1000000.0) AS BIGINT))
-          AS BIGINT) AS s_q
-      FROM c GROUP BY 1)
-SELECT doc_id, n_tokens, n_distinct,
-       CAST(round(ln(n_tokens::DOUBLE) * 1000000.0) AS BIGINT)
-         - s_q // n_tokens AS entropy_micro,
-       CAST(round(ln(n_tokens::DOUBLE) * 1000000.0) AS BIGINT)
-         - s_q // n_tokens < {thr} AS is_templated
-FROM d
-"""
-
-
-BTE_MERGES = 6
-
-
-def q_bpe_train_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STAGED (r15) — NOT registered. FULL BPE tokenizer training +
-    corpus encoding (operators/textops.py::bpe_train_encode; Sennrich
-    et al. 2016 learn_bpe + apply_bpe): 6 driver-collected merge rounds
-    over the collapsed vocabulary, then the encoded corpus's token
-    occurrence counts. bpe_merge_step (registered r15) is this loop's
-    single round."""
-    from .operators.spill import materialize_and_release
-    from .operators.textops import bpe_train_encode
-
-    docs = load_table(spark, sf_dir, "documents")
-    handles: list = []
-    out = bpe_train_encode(spread(docs), n_merges=BTE_MERGES,
-                           cache_handles=handles)
-    return materialize_and_release(out, handles, "bpe-")
-
-
-def _oracle_bpe_train_encode(n_merges: int = BTE_MERGES) -> str:
-    """Mirror: the same n_merges rounds UNROLLED as CTE pairs — per
-    round, a pair-count aggregate over the current segmentation, a
-    1-row argmax CTE (count desc, pair asc — the Spark collect's exact
-    order), and a re-segmentation whose list_reduce fuse replays
-    _bpe_fuse greedily left-to-right (single-element-list wrapping
-    gives the fold a list accumulator; the no-init fold over a
-    non-empty list equals the empty-init fold). An EMPTY argmax round
-    LEFT-JOINs NULL a/b into the fuse condition → identity, exactly
-    like the NULL merge literals on the Spark side."""
-    fuse = (
-        "list_reduce(list_transform(s.syms, x -> [x]), "
-        "(acc, x) -> CASE WHEN len(acc) > 0 AND acc[-1] = m.a "
-        "AND x[1] = m.b "
-        "THEN list_concat(acc[1:len(acc)-1], [m.a || m.b]) "
-        "ELSE list_concat(acc, x) END)"
-    )
-    ctes = [f"""w AS (SELECT unnest(regexp_extract_all(lower(text),
-             '{_BPE_PATTERN_SQL}')) AS word
-           FROM documents),
-seg0 AS (SELECT word, count(*) AS freq,
-                list_transform(range(1, length(word) + 1),
-                               i -> word[i]) AS syms
-         FROM w GROUP BY word)"""]
-    for r in range(n_merges):
-        ctes.append(f"""p{r} AS (
-  SELECT s.syms[j] AS a, s.syms[j+1] AS b, sum(s.freq) AS cnt
-  FROM seg{r} s, unnest(range(1, greatest(len(s.syms) - 1, 0) + 1)) AS u(j)
-  GROUP BY 1, 2
-),
-m{r} AS (SELECT a, b FROM p{r} ORDER BY cnt DESC, a ASC, b ASC LIMIT 1),
-seg{r + 1} AS (
-  SELECT s.word, s.freq,
-         CASE WHEN m.a IS NULL THEN s.syms ELSE {fuse} END AS syms
-  FROM seg{r} s LEFT JOIN m{r} m ON TRUE
-)""")
-    return f"""
-WITH {', '.join(ctes)}
-SELECT u.token, CAST(sum(s.freq) AS BIGINT) AS n_occurrences
-FROM seg{n_merges} s, unnest(s.syms) AS u(token)
-GROUP BY 1
-"""
-
-
-# ---------------------------------------------------------------------------
-# r19 registration candidates — STAGED r16 (ahead of the pipeline, the
-# r14→r16/r17 precedent). The r19 window re-checks the r17-checked half,
-# so each candidate pairs with a retiree from THAT half (provisional
-# write-ahead in queries.py below the ROUND-18 plan):
-#   gopher_length_screen ↔ gopher_quality (length screens + the r16-
-#       registered repetition_quality together supersede its signals)
-#   fineweb_filter_chain ↔ clean_corpus (the chain generalizes its
-#       quality-gate stage with per-rule attribution; the md5 dedup
-#       window and per-lang rollup stay registered via url_host_dedup/
-#       streaming_dedup_batch and top_docs_per_lang)
-#   domain_quota_sample  ↔ stratified_sample (the same exact-k-per-
-#       stratum window machinery over a derived host stratum, plus
-#       group-size/kept attribution — SA1 stays covered)
-# Staging discipline: Python reference + 3-SF oracle parity + plan pin
-# in tests/test_staged_ops.py, generated-corpus fuzz rows in
-# tests/test_fuzz_oracle.py::test_fuzz_staged_r19_text_ops.
-# ---------------------------------------------------------------------------
-
-# DuckDB mirror of textops.line_exprs — explicit [ \t\r] trim class
-# (never \s: Java includes \x0B, RE2 does not), 'g' flag because
-# DuckDB's regexp_replace is first-match-only by default while Spark's
-# replaces all.
-_DK_LINES = (
-    "list_filter(list_transform(string_split(text, chr(10)), "
-    "l -> regexp_replace(l, '^[ \\t\\r]+|[ \\t\\r]+$', '', 'g')), "
-    "l -> l <> '')"
-)
-
-
-def q_gopher_length_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STAGED (r16) — NOT registered. Gopher Table-A1 length screens
-    (operators/textops.py::gopher_length_screen; Rae et al. 2021):
-    word-count bounds, mean-word-length band, alphabetic-word
-    fraction, bullet/ellipsis line caps, published-threshold pass
-    flag. Zero-shuffle per-row expressions."""
-    docs = load_table(spark, sf_dir, "documents")
-    return T.gopher_length_screen(spread(docs))
-
-
-def _oracle_gopher_length_screen() -> str:
-    R = T.GOPHER_LENGTH_RULES
-    return f"""
-WITH t AS (SELECT doc_id, {_dk_toks()} AS toks, {_DK_LINES} AS lines
-           FROM documents),
-m AS (SELECT doc_id,
-        len(toks) AS n_words,
-        coalesce(list_sum(list_transform(toks, x -> length(x))), 0)
-          AS sum_len,
-        len(list_filter(toks, x -> regexp_matches(x, '[a-z]')))
-          AS n_alpha,
-        len(lines) AS n_lines,
-        len(list_filter(lines,
-            l -> starts_with(l, '- ') OR starts_with(l, '* ')))
-          AS n_bullet,
-        len(list_filter(lines, l -> ends_with(l, '...'))) AS n_ellipsis
-      FROM t),
-f AS (SELECT doc_id,
-        CAST(n_words AS INT) AS n_words,
-        sum_len::DOUBLE / greatest(n_words, 1)::DOUBLE AS mean_word_len,
-        n_alpha::DOUBLE / greatest(n_words, 1)::DOUBLE AS alpha_word_frac,
-        n_bullet::DOUBLE / greatest(n_lines, 1)::DOUBLE
-          AS bullet_line_frac,
-        n_ellipsis::DOUBLE / greatest(n_lines, 1)::DOUBLE
-          AS ellipsis_line_frac
-      FROM m)
-SELECT doc_id, n_words, mean_word_len, alpha_word_frac,
-       bullet_line_frac, ellipsis_line_frac,
-       (n_words >= {R["min_words"]} AND n_words <= {R["max_words"]}
-        AND mean_word_len >= {R["min_mean_word_len"]}
-        AND mean_word_len <= {R["max_mean_word_len"]}
-        AND alpha_word_frac > {R["min_alpha_word_frac"]}
-        AND bullet_line_frac <= {R["max_bullet_line_frac"]}
-        AND ellipsis_line_frac <= {R["max_ellipsis_line_frac"]})
-         AS passes
-FROM f
-"""
-
-
-def q_fineweb_filter_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STAGED (r16) — NOT registered. FineWeb/C4 composed corpus filter
-    (operators/textops.py::fineweb_filter_chain; Penedo et al. 2024,
-    Raffel et al. 2020): five ordered keep/drop rules fused into one
-    scan, with per-rule booleans and first-failed attribution."""
-    docs = load_table(spark, sf_dir, "documents")
-    return T.fineweb_filter_chain(spread(docs))
-
-
-def _oracle_fineweb_filter_chain(lang: str = "en") -> str:
-    R = T.GOPHER_LENGTH_RULES
-    score_exprs = ",\n       ".join(
-        f"{_dk_stop_filter('toks', LANG_STOPWORDS[lg])}::DOUBLE / "
-        f"greatest(len(toks), 1) AS s_{lg}"
-        for lg in sorted(LANG_STOPWORDS)
-    )
-    best = "greatest(" + ", ".join(
-        f"s_{lg}" for lg in sorted(LANG_STOPWORDS)
-    ) + ")"
-    case = " ".join(
-        f"WHEN s_{lg} = best THEN '{lg}'" for lg in sorted(LANG_STOPWORDS)
-    )
-    return f"""
-WITH t AS (SELECT doc_id, text, {_dk_toks()} AS toks, {_DK_LINES} AS lines
-           FROM documents),
-s AS (SELECT doc_id, text, toks, lines,
-       {score_exprs}
-      FROM t),
-b AS (SELECT *, {best} AS best FROM s),
-r AS (SELECT doc_id,
-        (CASE WHEN best <= 0 THEN 'und' {case} ELSE 'und' END)
-          = '{lang}' AS r_lang,
-        len(toks) AS n_words,
-        coalesce(list_sum(list_transform(toks, x -> length(x))), 0)::DOUBLE
-          / greatest(len(toks), 1)::DOUBLE AS mean_word_len,
-        coalesce(
-          list_max(list_transform(list_distinct(toks),
-                                  d -> len(list_filter(toks, x -> x = d))))::DOUBLE
-            / greatest(len(toks), 1), 0.0) AS top_word_frac,
-        (CASE WHEN len(toks) >= 2 THEN
-           1.0 - len(list_distinct(list_transform(
-                    list_zip(list_slice(toks, 1, len(toks) - 1),
-                             list_slice(toks, 2, len(toks))),
-                    s -> s[1] || ' ' || s[2])))::DOUBLE / (len(toks) - 1)
-         ELSE 0.0 END) AS dup_2gram_frac,
-        len(list_filter(lines,
-            l -> ends_with(l, '.') OR ends_with(l, '!')
-              OR ends_with(l, '?') OR ends_with(l, '"')))::DOUBLE
-          / greatest(len(lines), 1)::DOUBLE AS punct_frac
-      FROM b),
-g AS (SELECT doc_id, r_lang,
-        (n_words >= {R["min_words"]} AND n_words <= {R["max_words"]})
-          AS r_n_words,
-        (mean_word_len >= {R["min_mean_word_len"]}
-         AND mean_word_len <= {R["max_mean_word_len"]}) AS r_mean_word_len,
-        (top_word_frac <= 0.2 AND dup_2gram_frac <= 0.4) AS r_repetition,
-        punct_frac >= {T.FINEWEB_PUNCT_MIN_FRAC} AS r_punct
-      FROM r)
-SELECT doc_id, r_lang, r_n_words, r_mean_word_len, r_repetition, r_punct,
-       (r_lang AND r_n_words AND r_mean_word_len AND r_repetition
-        AND r_punct) AS keep,
-       (CASE WHEN NOT r_lang THEN 'lang'
-             WHEN NOT r_n_words THEN 'n_words'
-             WHEN NOT r_mean_word_len THEN 'mean_word_len'
-             WHEN NOT r_repetition THEN 'repetition'
-             WHEN NOT r_punct THEN 'punct' END) AS first_failed
-FROM g
-"""
-
-
-DQS_MAX_PER_HOST = 2
-
-
-def _synth_quota_url_expr():
-    """Deterministic URL with HOST variety (the fixture has no url
-    column; the OPERATOR is general): subdomain s{doc_id % 37} over
-    each source domain gives 37·|sources| hosts with a handful of docs
-    each, so a quota of 2 produces a real kept/dropped mix; scheme and
-    www-label variants exercise the normalization."""
-    d = F.col("doc_id")
-    scheme = (
-        F.when(d % 3 == 0, F.lit("http://"))
-        .when(d % 3 == 1, F.lit("HTTPS://"))
-        .otherwise(F.lit(""))
-    )
-    www = F.when(d % 2 == 0, F.lit("WWW.")).otherwise(F.lit(""))
-    return F.concat(
-        scheme, www, F.lit("s"), (d % 37).cast("string"), F.lit("."),
-        F.col("source"), F.lit(".Example.COM/d/"), d.cast("string"),
-    )
-
-
-_SYNTH_QUOTA_URL_SQL = """
-  (CASE WHEN doc_id % 3 = 0 THEN 'http://'
-        WHEN doc_id % 3 = 1 THEN 'HTTPS://' ELSE '' END)
-  || (CASE WHEN doc_id % 2 = 0 THEN 'WWW.' ELSE '' END)
-  || 's' || CAST(doc_id % 37 AS VARCHAR) || '.' || source
-  || '.Example.COM/d/' || CAST(doc_id AS VARCHAR)
-"""
-
-
-def q_domain_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STAGED (r16) — NOT registered. Per-domain document cap
-    (operators/sample.py::domain_quota_sample; RefinedWeb/Dolma crawl-
-    balance rule): normalized host, host doc count, deterministic
-    rank under the multiplicative-hash surrogate order, is_kept at
-    quota 2. One host-keyed exchange shared by count + rank."""
-    from .operators.sample import domain_quota_sample
-
-    docs = load_table(spark, sf_dir, "documents")
-    return domain_quota_sample(
-        docs.select("doc_id", _synth_quota_url_expr().alias("url")),
-        "url",
-        max_per_host=DQS_MAX_PER_HOST,
-    )
-
-
-def _oracle_domain_quota_sample(quota: int = DQS_MAX_PER_HOST) -> str:
-    # the multiplicative-hash surrogate order, spelled from the operator
-    # constants (importing queries.py's _dk_shuffle_key here would be a
-    # circular import once this registers)
-    from .operators.sample import HASH_MOD, HASH_MULT
-
-    def _dk_shuffle_key(id_col: str, seed: int = 42) -> str:
-        return f"(({id_col} + {seed}) * {HASH_MULT}) % {HASH_MOD}"
-
-    return f"""
-WITH raw AS (SELECT doc_id, {_SYNTH_QUOTA_URL_SQL} AS url FROM documents),
-u1 AS (SELECT doc_id,
-         regexp_replace(regexp_replace(lower(trim(url)),
-           '^[a-z][a-z0-9+.-]*://', ''), '#.*$', '') AS u
-       FROM raw),
-h AS (SELECT doc_id,
-        regexp_replace(regexp_replace(regexp_extract(u, '^([^/?]+)', 1),
-          '^www\\d*\\.', ''), ':(80|443)$', '') AS host
-      FROM u1)
-SELECT doc_id, host,
-       count(*) OVER (PARTITION BY host) AS n_host_docs,
-       CAST(row_number() OVER (PARTITION BY host
-              ORDER BY {_dk_shuffle_key('doc_id')} ASC, doc_id ASC) AS INT)
-         AS rank_in_host,
-       row_number() OVER (PARTITION BY host
-              ORDER BY {_dk_shuffle_key('doc_id')} ASC, doc_id ASC)
-         <= {quota} AS is_kept
-FROM h
-"""
-
-
-# ---------------------------------------------------------------------------
-# r20 registration candidates — STAGED r16 (two rounds ahead; r20 is the
-# final planned window, so its candidates must be staged by r19 — final
-# pairings belong to the r18/r19 write-ahead plans in queries.py).
-# Provisional sibling arguments: line_dedup ↔ the dedup family's chunk
-# sibling (passage-level machinery stays via passage_chunking;
-# exact_substring_dedup registers r17 as the token-span sibling);
-# winnow_overlap_pairs ↔ winnowing_fingerprint (the pair report is the
-# fingerprint table's MOSS consumption — same selection core, one more
-# keyed join); ivf_balance_stats ↔ an IVF-family sibling (the layout
-# diagnostics read the same materialized index ivf_topk probes).
-# Staging discipline: Python reference + 3-SF oracle parity + plan pin
-# in tests/test_staged_ops.py, generated-corpus fuzz rows in
-# tests/test_fuzz_oracle.py::test_fuzz_staged_r20_text_ops.
-# ---------------------------------------------------------------------------
-
-
-def q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STAGED (r16) — NOT registered. CCNet paragraph/line-level exact
-    dedup (operators/textops.py::ccnet_line_dedup; Wenzek et al. 2020
-    §3.2): corpus-wide line-hash first-occurrence keep rule; per doc,
-    line counts, duplicated-line fraction, reconstructed kept text."""
-    docs = load_table(spark, sf_dir, "documents")
-    return T.ccnet_line_dedup(spread(docs))
-
-
-def _oracle_line_dedup() -> str:
-    h = _dk_hex2long("md5(line)")
-    return f"""
-WITH t AS (SELECT doc_id, {_DK_LINES} AS lines FROM documents),
-l AS (SELECT doc_id, i - 1 AS pos, lines[i] AS line
-      FROM t, unnest(range(1, len(lines) + 1)) AS u(i)),
-h AS (SELECT doc_id, pos, line, {h} AS hsh FROM l),
-r AS (SELECT *, row_number() OVER (PARTITION BY hsh
-                                   ORDER BY doc_id ASC, pos ASC) AS rn
-      FROM h),
-agg AS (SELECT doc_id,
-          count(*) AS n_lines,
-          sum(CASE WHEN rn > 1 THEN 1 ELSE 0 END) AS n_dup,
-          array_to_string(
-            list_transform(
-              list_sort(list({{'pos': pos, 'line': line}})
-                          FILTER (WHERE rn = 1)),
-              s -> struct_extract(s, 'line')),
-            chr(10)) AS kept_text
-        FROM r GROUP BY doc_id)
-SELECT d.doc_id,
-       CAST(coalesce(a.n_lines, 0) AS INT) AS n_lines,
-       CAST(coalesce(a.n_dup, 0) AS INT) AS n_dup_lines,
-       coalesce(a.n_dup, 0)::DOUBLE
-         / greatest(coalesce(a.n_lines, 0), 1)::DOUBLE AS dup_line_frac,
-       coalesce(a.kept_text, '') AS kept_text
-FROM documents d LEFT JOIN agg a USING (doc_id)
-"""
-
-
-WOP_MIN_SHARED, WOP_MAX_DF = 2, 10
-
-
-def q_winnow_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STAGED (r16) — NOT registered. MOSS pairwise overlap report
-    (operators/textops.py::winnow_overlap_pairs; Schleimer et al. 2003
-    §5) over the registered winnowing selection (k=3, w=4): pairs
-    sharing ≥ 2 distinct fingerprints after the df ≤ 10 boilerplate
-    cap, with shared counts and fingerprint-set Jaccard."""
-    docs = load_table(spark, sf_dir, "documents")
-    return T.winnow_overlap_pairs(
-        spread(docs), k=WN_K, w=WN_W,
-        min_shared=WOP_MIN_SHARED, max_df=WOP_MAX_DF,
-    )
-
-
-def _oracle_winnow_overlap_pairs(
-    min_shared: int = WOP_MIN_SHARED, max_df: int = WOP_MAX_DF
-) -> str:
-    return f"""
-WITH fps AS ({_oracle_winnowing_fingerprint(WN_K, WN_W)}),
-f0 AS (SELECT DISTINCT doc_id, fp_hash FROM fps),
-f AS (SELECT doc_id, fp_hash FROM (
-        SELECT doc_id, fp_hash,
-               count(*) OVER (PARTITION BY fp_hash) AS df
-        FROM f0) WHERE df <= {max_df}),
-sizes AS (SELECT doc_id, count(*) AS n FROM f GROUP BY 1),
-p AS (SELECT a.doc_id AS left_id, b.doc_id AS right_id,
-             count(*) AS n_shared
-      FROM f a JOIN f b USING (fp_hash)
-      WHERE a.doc_id < b.doc_id
-      GROUP BY 1, 2
-      HAVING count(*) >= {min_shared})
-SELECT p.left_id, p.right_id, CAST(p.n_shared AS INT) AS n_shared,
-       p.n_shared::DOUBLE
-         / (sa.n + sb.n - p.n_shared)::DOUBLE AS fp_jaccard
-FROM p JOIN sizes sa ON sa.doc_id = p.left_id
-       JOIN sizes sb ON sb.doc_id = p.right_id
-"""
-
-
-def q_dedup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STAGED (r16) — NOT registered (r20 ALTERNATE candidate, backlog
-    depth for the final-pairing call). Corpus duplication report
-    (operators/graph.py::dedup_cluster_stats): cluster-size histogram
-    of the MinHash-LSH dedup run with removable-doc counts and corpus
-    fractions — the removal-rate table CCNet/RefinedWeb publish."""
-    from .operators.graph import dedup_cluster_stats, dedup_components
-
-    docs = load_table(spark, sf_dir, "documents")
-    handles: list = []
-    pairs = D.minhash_lsh_pairs(
-        docs, threshold=0.5, cache_handles=handles, pinned=D.pins_for(sf_dir)
-    )
-    comps = dedup_components(pairs)
-    for h in handles:
-        h.unpersist()
-    return dedup_cluster_stats(comps, spread(docs))
-
-
-def _oracle_dedup_cluster_stats() -> str:
-    return f"""
-WITH RECURSIVE
-{_dedup_components_ctes()},
-cl AS (SELECT component, count(*) AS sz FROM comp GROUP BY component),
-hist AS (
-  SELECT sz AS cluster_size, count(*) AS n_clusters FROM cl GROUP BY sz
-  UNION ALL
-  SELECT CAST(1 AS BIGINT),
-         (SELECT count(*) FROM documents)
-           - coalesce((SELECT sum(sz) FROM cl), 0)
-),
-t AS (SELECT count(*) AS total FROM documents)
-SELECT CAST(cluster_size AS BIGINT) AS cluster_size,
-       CAST(n_clusters AS BIGINT) AS n_clusters,
-       CAST(cluster_size * n_clusters AS BIGINT) AS n_docs,
-       CAST((cluster_size - 1) * n_clusters AS BIGINT) AS n_removable,
-       ((cluster_size - 1) * n_clusters)::DOUBLE / t.total::DOUBLE
-         AS removable_frac
-FROM hist, t WHERE n_clusters > 0
-"""
