@@ -624,7 +624,7 @@ def test_knn_join_arrow_k_exceeds_corpus(spark):
     assert got == [(1, 0), (2, 1), (3, 2)]
 
 
-def test_knn_join_arrow_ivf_matches_reference(spark):
+def test_knn_join_arrow_ivf_matches_reference(spark, monkeypatch):
     """IVF-tier serving kernel (r11, VERDICT r10 #3): per-query results
     equal a numpy reference that scores each query against EXACTLY the
     rows of its own probed inverted lists (same BLAS formula, ties to
@@ -685,8 +685,14 @@ def test_knn_join_arrow_ivf_matches_reference(spark):
         svid, sdist = got[(qid, 1)]
         assert svid == qid and sdist < 1e-6
 
-    # plan contract: pruned scan (union-of-probes partition filter
+    # plan contract of the distributed path (the driver-path bound
+    # forced to 0): pruned scan (union-of-probes partition filter
     # before mapInPandas), one candidate-window exchange, no BNLJ
+    from the_build_project_image_retrieval_with_vector_databases_spark.operators import (
+        knn,
+    )
+
+    monkeypatch.setattr(knn, "ARROW_DRIVER_MAX_BYTES", 0)
     df = knn_join_arrow_ivf(layout, qids, qvecs, probes, k=k)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange hashpartitioning") == 1

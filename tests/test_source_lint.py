@@ -7,6 +7,12 @@ calls), never through a per-element ``F.array(*[F.lit(x) ...])`` list:
 that form costs one py4j round trip per element (1.7-2.5 s for a
 32×128 centroid matrix) and an O(k·D)-node tree to analyze.
 
+A driver-held table must enter a plan through
+``sources.tables.local_frame`` (an Arrow ``LocalRelation``), never
+through ``createDataFrame(<list>)``: that form plans as
+``Scan ExistingRDD`` and forks Python-worker tasks each time the frame
+is evaluated. ``local_frame`` holds the package's only call.
+
 Every query wrapper (``q_*``) and oracle constant (``ORACLE_*``) defined
 at the top level of a ``queries*.py`` module must be a registry value
 (``QUERIES`` / ``ORACLES``): an unregistered wrapper is code no registry
@@ -58,6 +64,55 @@ def test_lint_pattern_catches_wrapped_and_nested_forms():
         "d = array_lit(q)\n"
     )
     assert _hit_lines(planted) == [1, 2, 5]
+
+
+def _create_dataframe_calls(source: str) -> list[int]:
+    """Lines of ``createDataFrame(`` calls outside ``def local_frame``
+    (comments and docstrings do not count)."""
+    tree = ast.parse(source)
+    allowed = {
+        line
+        for node in ast.walk(tree)
+        if isinstance(node, ast.FunctionDef) and node.name == "local_frame"
+        for line in range(node.lineno, node.end_lineno + 1)
+    }
+    return sorted(
+        node.func.end_lineno
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and getattr(node.func, "attr", getattr(node.func, "id", None))
+        == "createDataFrame"
+        and node.func.end_lineno not in allowed
+    )
+
+
+def test_no_create_dataframe_outside_local_frame():
+    paths = sorted(_PKG.rglob("*.py"))
+    assert paths, "package sources not found"
+    hits = [
+        f"{path.relative_to(_ROOT)}:{line}"
+        for path in paths
+        for line in _create_dataframe_calls(path.read_text(encoding="utf-8"))
+    ]
+    assert not hits, (
+        "createDataFrame outside sources.tables.local_frame: " + ", ".join(hits)
+    )
+
+
+def test_create_dataframe_lint_catches_planted_calls():
+    """Negative control: direct, wrapped and bare calls are reported;
+    the helper's own call, a comment and a docstring are not."""
+    planted = (
+        "def local_frame(spark, rows, schema):\n"
+        "    return spark.createDataFrame(rows, schema=schema)\n"
+        "def offsets(spark, rows):\n"
+        '    """not spark.createDataFrame(rows)"""\n'
+        "    # spark.createDataFrame(rows)\n"
+        "    a = spark.createDataFrame(rows, 'x int')\n"
+        "    b = (\n        spark\n        .createDataFrame(\n            rows)\n    )\n"
+        "    return createDataFrame(rows)\n"
+    )
+    assert _create_dataframe_calls(planted) == [6, 9, 12]
 
 
 def _unregistered(

@@ -1313,15 +1313,21 @@ def test_search_batch_oracle_parity_staged(spark, sf_dir):
     assert ok, msg
 
 
-def test_search_batch_plan_no_corpus_shuffle(spark):
-    """Serving-kernel plan contract: the corpus scan feeds mapInPandas
+def test_search_batch_plan_no_corpus_shuffle(spark, monkeypatch):
+    """Serving-kernel plan contract of the distributed path (the
+    driver-path bound forced to 0): the corpus scan feeds mapInPandas
     directly (no exchange before scoring); the only hash exchange is
     the tiny candidate window (≤ partitions·Q·k rows), and nothing
-    plans a cartesian product."""
+    plans a cartesian product. The driver path's plan is pinned in
+    tests/test_knn_driver_path.py."""
+    from the_build_project_image_retrieval_with_vector_databases_spark.operators import (
+        knn,
+    )
     from the_build_project_image_retrieval_with_vector_databases_spark.queries_ann import (
         q_search_batch,
     )
 
+    monkeypatch.setattr(knn, "ARROW_DRIVER_MAX_BYTES", 0)
     df = q_search_batch(spark, SF_SMOKE)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange hashpartitioning") == 1

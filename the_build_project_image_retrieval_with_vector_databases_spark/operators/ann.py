@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vector import array_lit, l2_dist
+from ..sources.tables import local_frame
 
 try:  # MLlib is in the base image; guard anyway for minimal installs
     from pyspark.ml.clustering import KMeans
@@ -688,8 +689,8 @@ def ivf_search_batch(
     }
     union_probes = sorted({c for ps in probe_sets.values() for c in ps})
 
-    spark = layout.sparkSession
-    qdf = spark.createDataFrame(
+    qdf = local_frame(
+        layout.sparkSession,
         [
             (int(qid), [float(x) for x in qvec], probe_sets[int(qid)])
             for qid, qvec in queries

@@ -61,6 +61,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .spill import spill_dir as _spill_dir
+from ..sources.tables import local_frame
 
 
 # Driver union-find bound: at or below this many symmetric edge
@@ -200,9 +201,9 @@ def connected_components(
                         parent[ra] = rb
             labels_local = sorted((n, find(n)) for n in nodes)
             out_path = _slot(0)
-            spark.createDataFrame(
-                labels_local or [], _LABEL_SCHEMA
-            ).write.mode("overwrite").parquet(out_path)
+            local_frame(spark, labels_local, _LABEL_SCHEMA).write.mode(
+                "overwrite"
+            ).parquet(out_path)
             return spark.read.schema(_LABEL_SCHEMA).parquet(out_path)
         # init = one propagation round for free: label(v) = min(v, N(v)),
         # computed by the same groupBy that enumerates the nodes. Valid

@@ -27,12 +27,16 @@ the scan stage, and only k rows per (query, partition) survive.
 
 from __future__ import annotations
 
+import contextlib
+import ctypes
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .dedup import _pin
 
 from ..functions.vector import array_lit, cosine_sim, dot, l2_dist
+from ..sources.tables import local_frame
 
 _METRICS = {
     "l2": (l2_dist, True),  # (distance fn, ascending?)
@@ -47,6 +51,153 @@ def _score(metric: str, a, b) -> tuple[Column, bool]:
     except KeyError:
         raise ValueError(f"unknown metric {metric!r}; one of {sorted(_METRICS)}")
     return fn(a, b), asc
+
+
+# Driver-path bound for the Arrow/BLAS kernels (knn_join_arrow,
+# knn_join_arrow_ivf), in bytes of the kernel's projected input as the
+# optimizer estimates it. At or below it the input is collected with one
+# toArrow() job, the kernel's own score generator runs in the driver and
+# the candidates are ranked there on the window's key. Above it the
+# mapInPandas + rank-window plan runs unchanged. On a few-MB corpus the
+# distributed plan is all floor cost: each Python-worker task spends
+# ~230 ms of CPU in PySpark's per-task importlib.invalidate_caches()
+# (re-reading pyspark.zip) against 5-22 ms of BLAS, and the rank window
+# adds a shuffle job. 32 MiB is the driver-state class of
+# ann.KMEANS_DRIVER_TRAIN_MAX_BYTES.
+ARROW_DRIVER_MAX_BYTES = 32 << 20
+
+
+def _plan_size_bytes(df: DataFrame) -> int:
+    """The optimizer's size estimate of ``df``; runs no job. For a
+    parquet scan it is the on-disk bytes scaled to the projected
+    columns (partition filters do not shrink it, so a pruned IVF probe
+    is over-estimated); for a cached frame it is the cached size."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+
+def _fits_driver(df: DataFrame) -> bool:
+    # private JVM API: any failure takes the distributed path
+    try:
+        return _plan_size_bytes(df) <= ARROW_DRIVER_MAX_BYTES
+    except Exception:
+        return False
+
+
+def _round6(d, spark):
+    """``F.round(d, 6)`` of a float64 array, value for value. Spark
+    rounds HALF_UP the double's decimal string (``Double.toString``),
+    then converts back. ``rint(d·1e6) / 1e6`` is the same double
+    wherever d·1e6 lies farther than a few ulps from a half-integer;
+    the rare values that do not are rounded from the JVM's own
+    string."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    import numpy as np
+
+    y = d * 1e6
+    out = np.rint(y) / 1e6
+    near = np.abs(y - np.floor(y) - 0.5) <= 1e-9 + 1e-15 * np.abs(y)
+    if near.any():
+        to_string = spark._jvm.java.lang.Double.toString
+        quantum = Decimal("0.000001")
+        for i in np.flatnonzero(near):
+            dec = Decimal(to_string(float(d[i])))
+            out[i] = float(dec.quantize(quantum, ROUND_HALF_UP))
+    return out
+
+
+@contextlib.contextmanager
+def _one_blas_thread():
+    """OpenBLAS limited to one thread, as Spark runs it in a local
+    Python worker (``OMP_NUM_THREADS`` = the task's cores). A threaded
+    GEMM splits the product differently and changes the low bits,
+    which sqrt amplifies to ~1e-8 on a self or duplicate row; pinned,
+    the driver path scores a batch to the worker's exact bits. A no-op
+    where no OpenBLAS is loaded."""
+    try:
+        with open("/proc/self/maps") as maps:
+            path = next(
+                line.split()[-1] for line in maps if "libopenblas" in line
+            )
+        lib = ctypes.CDLL(path)
+        suffix = next(
+            s for s in ("64_", "")
+            if hasattr(lib, f"openblas_set_num_threads{s}")
+        )
+        get = getattr(lib, f"openblas_get_num_threads{suffix}")
+        put = getattr(lib, f"openblas_set_num_threads{suffix}")
+        before = get()
+    except Exception:  # not Linux, or numpy without OpenBLAS
+        yield
+        return
+    put(1)
+    try:
+        yield
+    finally:
+        put(before)
+
+
+def _driver_topk(frame, score, schema, k: int, id_col: str, asc: bool):
+    """The driver path of :func:`_arrow_topk`: one ``toArrow()`` job,
+    ``score`` over the collected table in record batches of
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows (as
+    mapInPandas feeds it, so each step holds batch × Q distances), then
+    the window's rank — (round(dist, 6), id), descending key for
+    cosine/dot — in pandas. Returns an Arrow ``LocalRelation``."""
+    import numpy as np
+    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
+    spark = frame.sparkSession
+    out_schema = StructType(
+        schema.fields + [StructField("rank", IntegerType(), False)]
+    )
+    step = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    table = frame.toArrow()
+    batches = (
+        b.to_pandas()
+        for b in table.to_batches(max_chunksize=step if step > 0 else None)
+    )
+    with _one_blas_thread():
+        parts = list(score(batches))
+    if not parts:
+        return local_frame(spark, [], out_schema)
+    cand = pd.concat(parts, ignore_index=True)
+    key = _round6(cand["dist"].to_numpy(dtype=np.float64), spark)
+    cand["__key"] = key if asc else -key
+    cand = cand.sort_values(["query_id", "__key", id_col], kind="mergesort")
+    cand["rank"] = cand.groupby("query_id").cumcount() + 1
+    cand = cand[cand["rank"] <= k][[f.name for f in out_schema.fields]]
+    return local_frame(
+        spark,
+        pa.Table.from_pandas(
+            cand, schema=to_arrow_schema(out_schema), preserve_index=False
+        ),
+        out_schema,
+    )
+
+
+def _arrow_topk(frame, score, schema, k: int, id_col: str, asc: bool):
+    """Top-k per query of the candidates ``score`` yields over
+    ``frame``'s Arrow batches. Within ``ARROW_DRIVER_MAX_BYTES`` this
+    runs eagerly in the driver (:func:`_driver_topk`); above it, or
+    when the size estimate cannot be read, it is the lazy mapInPandas
+    plan plus the rank window. Both return identical
+    (query_id, id, rank)."""
+    if _fits_driver(frame):
+        return _driver_topk(frame, score, schema, k, id_col, asc)
+    cand = frame.mapInPandas(score, schema)
+    rdist = F.round(F.col("dist"), 6)
+    order = [
+        rdist.asc() if asc else rdist.desc(),
+        F.col(id_col).asc(),
+    ]
+    w = Window.partitionBy("query_id").orderBy(*order)
+    return cand.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
 
 
 def knn_single(
@@ -136,12 +287,25 @@ def knn_join_arrow(
     unbounded in principle (the window still cuts exactly); for
     non-degenerate corpora it is O(partitions·Q·k), independent of N.
 
+    Small inputs take the driver path. When the optimizer estimates the
+    projected ``corpus.select(id_col, vec_col)`` at or below
+    ``ARROW_DRIVER_MAX_BYTES`` (read from the plan's statistics, no
+    job), the call is EAGER: it collects that projection with one
+    ``toArrow()`` job, runs the same ``score`` generator over it in
+    record batches of ``spark.sql.execution.arrow.maxRecordsPerBatch``
+    rows, ranks the candidates on the window's key and returns them as
+    an Arrow ``LocalRelation`` — a later ``.collect()`` runs no job, and
+    no Python-worker task or rank shuffle runs at all. Above the bound,
+    or if the estimate cannot be read, the call is lazy and plans the
+    mapInPandas + rank window described above, unchanged. Both paths
+    return identical (query_id, id, rank).
+
     Caveats vs the exact operator (same contract as
     :func:`~.ann.assign_centroids_arrow`): BLAS accumulation order
     differs from the left-fold, so raw distances carry ~1-ulp noise —
     including BETWEEN EXACT DUPLICATE VECTORS (GEMM micro-kernels vary
-    the accumulation path by row position; caught by the r12 serving
-    fuzz panel on generated corpora with a forced duplicate). Ties are
+    the accumulation path by row position; a serving fuzz panel on
+    generated corpora with a forced duplicate showed it). Ties are
     therefore handled at 6-decimal granularity, the same kept-rounded
     class as the emitted display value: the global rank window orders
     by (round(dist, 6), id), and each batch emits EVERY row whose
@@ -211,7 +375,7 @@ def knn_join_arrow(
             # tie-safe cut: include EVERY row whose 6-decimal-rounded
             # key ties the boundary — a raw argpartition cut breaks
             # duplicate-vector ties by BLAS ulps, diverging from the
-            # oracle's (dist, id) order (r12 serving-fuzz catch)
+            # oracle's (dist, id) order
             kr = np.round(key, 6)
             bound = np.take_along_axis(kr, part, axis=0).max(axis=0)
             # one vectorized mask for ALL queries (no per-query python
@@ -226,8 +390,7 @@ def knn_join_arrow(
             # global window re-cuts to the true top-k for free. 1.5
             # (not 1.0) quanta so ulp-level rounding of `bound + pad`
             # can never land one ulp BELOW a needed lattice point,
-            # while still admitting no second lattice step (ADVICE
-            # r13: strictly between one and two quanta).
+            # while still admitting no second lattice step.
             mask = (kr <= bound[None, :] + 1.5e-6) & np.isfinite(kr)
             ri, qi = np.nonzero(mask)
             yield pd.DataFrame(
@@ -238,16 +401,7 @@ def knn_join_arrow(
                 }
             )
 
-    cand = corpus.mapInPandas(score, schema)
-    rdist = F.round(F.col("dist"), 6)
-    order = [
-        rdist.asc() if asc else rdist.desc(),
-        F.col(id_col).asc(),
-    ]
-    w = Window.partitionBy("query_id").orderBy(*order)
-    return cand.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _arrow_topk(corpus, score, schema, k, id_col, asc)
 
 
 def knn_join_arrow_ivf(
@@ -288,7 +442,16 @@ def knn_join_arrow_ivf(
     ``i`` probes. Output: (query_id, id_col, dist, rank ≤ k), candidate
     volume ≈ batches·Q·k plus boundary-tie multiplicity (see
     :func:`knn_join_arrow` — unbounded only on rounded-distance-
-    degenerate corpora) — independent of N otherwise."""
+    degenerate corpora) — independent of N otherwise.
+
+    The driver path of :func:`knn_join_arrow` applies here too, gated on
+    the estimate of the union-of-probes projection (a partition filter
+    does not shrink a parquet scan's estimate, so the gate over-counts
+    a pruned probe): at or below ``ARROW_DRIVER_MAX_BYTES`` the call is
+    eager — one ``toArrow()`` job of the pruned lists, the same
+    ``score`` in the driver, the rank in the driver, an Arrow
+    ``LocalRelation`` back; above it, the lazy mapInPandas + rank-window
+    plan is unchanged."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import DoubleType, LongType, StructField, StructType
@@ -347,9 +510,9 @@ def knn_join_arrow_ivf(
                 part = np.argpartition(d, kk - 1, axis=0)[:kk]
                 # tie-safe cut at 6-decimal granularity + drop inf rows
                 # (masked self-matches): the raw-argpartition hazards
-                # are duplicate-vector BLAS-ulp tie breaks (r12
-                # serving-fuzz catch on the flat kernel — same GEMM
-                # here) and a probed inverted list with ≤ k finite rows
+                # are duplicate-vector BLAS-ulp tie breaks (the flat
+                # kernel's GEMM) and a probed inverted list with ≤ k
+                # finite rows
                 # surfacing the excluded self row (e.g. nprobe=1 on a
                 # small list).
                 dr = np.round(d, 6)
@@ -368,13 +531,7 @@ def knn_join_arrow_ivf(
                     }
                 )
 
-    cand = pruned.mapInPandas(score, schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.round(F.col("dist"), 6).asc(), F.col(id_col).asc()
-    )
-    return cand.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _arrow_topk(pruned, score, schema, k, id_col, asc=True)
 
 
 def knn_join_exact(
@@ -505,7 +662,7 @@ def knn_recall_eval_exact(
 ) -> DataFrame:
     """Recall@k of the IVF tier vs exact search in ONE corpus scan —
     the fold-into-one-Arrow-pass rewrite of the eval join pipeline
-    (the ``quantized_recall_eval`` precedent, VERDICT r10 #7: its
+    (the ``quantized_recall_eval`` precedent: its
     ADC-≡-L2-to-reconstruction fold took that query 4.95 → 0.97 s).
 
     The naive shape scans twice (exact kNN join + IVF-pruned join) and
@@ -601,9 +758,8 @@ def knn_recall_eval_exact(
         .groupBy("query_id")
         .agg(F.count("*").alias("n_hits"))
     )
-    spark = layout.sparkSession
-    base = spark.createDataFrame(
-        [(int(q),) for q in query_ids], "query_id long"
+    base = local_frame(
+        layout.sparkSession, [(int(q),) for q in query_ids], "query_id long"
     )
     return base.join(F.broadcast(hits), "query_id", "left").select(
         "query_id",
@@ -626,8 +782,8 @@ def knn_multi_recon_recall(
 ) -> DataFrame:
     """Recall@k of N reconstruction tiers vs exact search in ONE corpus
     scan — the quantization-sweep generalization of
-    :func:`knn_recall_eval_exact` (r17 optimization; same fold-into-
-    one-Arrow-pass design, VERDICT r10 #7 precedent). ``recons`` is a
+    :func:`knn_recall_eval_exact` (same fold-into-one-Arrow-pass
+    design). ``recons`` is a
     list of (tier_name, recon_fn) — each recon is the exact float64
     numpy twin of its encode/reconstruct expression (PQ codeword / SQ
     bin-midpoint). Each Arrow batch computes the exact left-fold
@@ -721,17 +877,16 @@ def knn_multi_recon_recall(
             for i in range(len(recons))
         ]
     )
-    spark = corpus.sparkSession
-    base = spark.createDataFrame(
-        [(int(q),) for q in query_ids], "query_id long"
+    base = local_frame(
+        corpus.sparkSession, [(int(q),) for q in query_ids], "query_id long"
     )
     joined = base.join(F.broadcast(per_q), "query_id", "left")
-    # r18 (guide §1.1/§2.4, VERDICT r17 #1): unpivot the per-tier hit
-    # counts from the ONE row-per-query frame with a single generator
-    # instead of unioning one projection of ``joined`` per tier — each
-    # union branch re-derived the entire lazy subtree, physically
-    # duplicating the MapInPandas corpus fold + exchange + window once
-    # per tier (r17 after-plan: TWO corpus scans, no ReusedExchange).
+    # unpivot the per-tier hit counts from the ONE row-per-query frame
+    # with a single generator instead of unioning one projection of
+    # ``joined`` per tier — each union branch would re-derive the entire
+    # lazy subtree, physically duplicating the MapInPandas corpus fold +
+    # exchange + window once per tier (two corpus scans, no
+    # ReusedExchange).
     # ``inline`` is a Generate node over the single subtree, so the
     # corpus is scanned and folded exactly once at any tier count.
     # Values are identical: same (tier, __h{i}) pairs, same coalesce/
@@ -1184,7 +1339,7 @@ def knn_join_arrow_hamming_ivf(
     if not union_probes:
         # all-empty probe sets would silently return an empty result
         # (isin([]) filters every row) — fail loudly like the other
-        # degenerate-input guards (ADVICE r13)
+        # degenerate-input guards
         raise ValueError("every probe set is empty — nothing to scan")
 
     id_field = next(f for f in layout.schema.fields if f.name == id_col)
@@ -1305,10 +1460,10 @@ def knn_join_arrow_hamming_ivf_rescored(
         centroid_col=centroid_col,
     )
     union_probes = sorted({int(c) for ps in probe_sets for c in ps})
-    spark = floats.sparkSession
-    qdf = spark.createDataFrame(
+    qdf = local_frame(
+        floats.sparkSession,
         [(int(q), [float(x) for x in v]) for q, v in zip(query_ids, query_vecs)],
-        schema="query_id long, __qv array<double>",
+        "query_id long, __qv array<double>",
     )
     pruned = floats.filter(F.col(centroid_col).isin(union_probes)).select(
         id_col, vec_col

@@ -45,7 +45,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import md5_long, tokens
-from ..sources.tables import spread
+from ..sources.tables import local_frame, spread
 
 DSIR_BUCKETS = 4096
 DSIR_SCALE = 1_000_000  # λ quantization: round(λ · 1e6) per bucket
@@ -425,8 +425,8 @@ def unimax_mix(
     ]
     quotas = unimax_quotas(counts, budget, epoch_cap)
     ncount = dict(counts)
-    spark = df.sparkSession
-    qdf = spark.createDataFrame(
+    qdf = local_frame(
+        df.sparkSession,
         [
             (s, int(ncount[s]), int(quotas[s]),
              int(quotas[s]) // int(ncount[s]),

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from ..functions.vector import l2_normalize
 from ..operators.sample import stratified_sample
+from ..sources.tables import local_frame
 
 
 def build_index(
@@ -64,8 +65,8 @@ def build_index(
         offsets.append((r[strata_col], acc))
         acc += r["__n"]
     off_df = F.broadcast(
-        normalized.sparkSession.createDataFrame(
-            offsets, f"{strata_col} int, __offset long"
+        local_frame(
+            normalized.sparkSession, offsets, f"{strata_col} int, __offset long"
         )
     )
     per_stratum = Window.partitionBy(strata_col).orderBy(F.col(id_col).asc())

@@ -24,8 +24,8 @@ Scale notes per tier (each inherits its operator's audited plan):
 ``ivf`` = centroid IN-filter → parquet partition pruning (nprobe/k of
 the corpus read); ``pq`` = same zero-shuffle top-k over 32×-smaller
 code columns; ``sq`` = ditto over int8 codes; ``bq`` = ditto over two
-packed-bit BIGINT halves (16 bytes/row, ``bit_count(xor)`` Hamming —
-staged r12, serving twin ``knn_join_arrow_hamming``). Training artifacts
+packed-bit BIGINT halves (16 bytes/row, ``bit_count(xor)`` Hamming;
+serving twin ``knn_join_arrow_hamming``). Training artifacts
 (centroids / codebooks / calibration bounds) are tiny driver-side
 lists — pass ``train_vectors`` explicitly for reproducible builds, or
 let the facade take the lowest-``n_train`` ids as the deterministic
@@ -48,6 +48,7 @@ from .operators.pq import (
     sq_encode,
     sq_train_bounds,
 )
+from .sources.tables import local_frame
 
 INDEX_KINDS = ("flat", "ivf", "pq", "sq", "bq")
 
@@ -253,11 +254,28 @@ def search_batch(
     tiers stay single-query (``search``) — their ADC LUTs are per-query
     literals and batching them is codebook-sized driver work, not a
     corpus-scan amortization.
+
+    The two Arrow/BLAS routes (``flat`` by default, ``ivf`` with
+    ``arrow=True``) answer a small batch in the driver: when the
+    kernel's projected input is estimated at or below
+    ``operators.knn.ARROW_DRIVER_MAX_BYTES``, the call is EAGER — one
+    ``toArrow()`` job collects it, the same BLAS kernel scores it and
+    ranks in the driver, and the result is an Arrow ``LocalRelation``
+    whose ``.collect()`` runs no further job. Larger inputs return the
+    lazy mapInPandas + rank-window plan, unchanged; both give identical
+    (query_id, id, rank). Query ids must be unique (``ValueError``
+    otherwise): every tier ranks per ``query_id``, so two queries
+    sharing one would merge into a single top-k.
     """
     if index not in ("flat", "ivf"):
         raise ValueError("search_batch supports index='flat' or 'ivf'")
     if not queries:
         raise ValueError("queries must be non-empty [(id, vector), ...]")
+    qids = [int(qid) for qid, _ in queries]
+    if len(set(qids)) != len(qids):
+        # every tier ranks per query_id: two queries sharing one would
+        # silently merge into a single top-k
+        raise ValueError("query ids must be unique")
     if index == "ivf":
         from .operators.ann import (
             assign_centroids,
@@ -279,7 +297,7 @@ def search_batch(
 
             return knn_join_arrow_ivf(
                 layout,
-                [int(qid) for qid, _ in queries],
+                qids,
                 [[float(x) for x in qv] for _, qv in queries],
                 [
                     nearest_centroids(train_vectors, qv, nprobe)
@@ -296,8 +314,8 @@ def search_batch(
     if exact:
         from .operators.knn import knn_join
 
-        spark = corpus.sparkSession
-        qdf = spark.createDataFrame(
+        qdf = local_frame(
+            corpus.sparkSession,
             [(int(qid), [float(x) for x in qv]) for qid, qv in queries],
             f"query_id long, {vec_col} array<double>",
         )
@@ -311,7 +329,7 @@ def search_batch(
 
     return knn_join_arrow(
         corpus,
-        [int(qid) for qid, _ in queries],
+        qids,
         [[float(x) for x in qv] for _, qv in queries],
         k=k, metric=metric, vec_col=vec_col, id_col=id_col,
         exclude_self=exclude_self,

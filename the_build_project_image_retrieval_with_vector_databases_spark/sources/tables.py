@@ -145,6 +145,38 @@ def spread(df: DataFrame, factor: int = 1) -> DataFrame:
     return df
 
 
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A DataFrame over driver-held rows that plans as ``LocalTableScan``.
+
+    ``rows`` is a sequence of tuples in ``schema`` order, or a
+    ``pyarrow.Table`` whose columns already carry the schema's names;
+    ``schema`` is a ``StructType`` or a DDL string. A frame built by
+    ``createDataFrame(<list>)`` plans as ``Scan ExistingRDD`` and forks
+    Python-worker tasks every time it is evaluated (~1 s of worker CPU
+    for a 100-row table); an Arrow table becomes a ``LocalRelation``
+    the JVM holds, with no worker at all. The rows go in as a pyarrow
+    table rather than pandas because the pandas route skips Arrow for
+    an empty input and falls back to the list path when Arrow fails
+    (``spark.sql.execution.arrow.pyspark.fallback.enabled``); the
+    table route has no fallback. This is the package's only
+    ``createDataFrame`` call (tests/test_source_lint.py)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType, _parse_datatype_string
+
+    struct = (
+        schema if isinstance(schema, StructType) else _parse_datatype_string(schema)
+    )
+    if not isinstance(rows, pa.Table):
+        arrow_schema = to_arrow_schema(struct)
+        cols = list(zip(*rows)) if rows else [()] * len(struct.fields)
+        rows = pa.Table.from_arrays(
+            [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow_schema)],
+            schema=arrow_schema,
+        )
+    return spark.createDataFrame(rows, schema=struct)
+
+
 def register_views(spark: SparkSession, sf_dir: str, names=TABLES) -> None:
     """Register fixture tables as temp views so ``spark.sql`` queries can
     name them exactly as the DuckDB oracle does."""
