@@ -458,10 +458,17 @@ def main_attrib() -> None:
     Merges ``single_query_cost_breakdown`` into SERVE_LATENCY.json."""
     import numpy as np
 
+    from the_build_project_image_retrieval_with_vector_databases_spark.operators import (
+        knn,
+    )
     from the_build_project_image_retrieval_with_vector_databases_spark.operators.knn import (
         knn_join_arrow,
     )
 
+    # the layers below are those of the distributed plan; a corpus under
+    # the driver-path bound would otherwise be answered eagerly in the
+    # driver, and ``fixed.collect()`` would re-read a LocalRelation
+    knn.ARROW_DRIVER_MAX_BYTES = 0
     corpus_dir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/spark_graft_scale100x"
     n_runs = int(sys.argv[3]) if len(sys.argv) > 3 else 15
     warm = 3

@@ -6,11 +6,16 @@ with one ``toArrow()`` job, scored by the kernel's own generator in the
 driver and ranked there; a larger one runs the mapInPandas + rank-window
 plan. Setting the constant to 0 forces the distributed plan, so every
 parity case below runs both paths on the same input and requires the
-same (query_id, id, rank), with ``dist`` within 1e-9.
+same (query_id, id, rank), with ``dist`` within the 1e-6 rounding
+quantum of the rank key: the driver's BLAS may split the product over
+threads, which moves the low bits (up to ~1e-8 on a self or duplicate
+row, where sqrt amplifies the cancellation), and the rank key absorbs
+that.
 """
 
 from __future__ import annotations
 
+import threading
 import uuid
 
 import numpy as np
@@ -69,7 +74,7 @@ def _assert_parity(monkeypatch, make) -> list:
     )
     want_dist = {key(r): r.dist for r in want}
     for r in got:
-        assert abs(r.dist - want_dist[key(r)]) <= 1e-9, r
+        assert abs(r.dist - want_dist[key(r)]) <= 1e-6, r
     return got
 
 
@@ -243,6 +248,99 @@ def test_unreadable_size_estimate_takes_distributed_path(
     assert sorted((r.query_id, r.vec_id, r.rank) for r in df.collect()) == sorted(
         (r.query_id, r.vec_id, r.rank) for r in want
     )
+
+
+def test_size_estimate_counts_the_whole_relation(spark, monkeypatch, tmp_path):
+    """Narrow extra columns shrink the optimizer's figure for the
+    kernel's projection far below the vector bytes (an array counts as 4
+    bytes a row). The gate reads the relation before projection, so a
+    corpus just above the bound takes the distributed path."""
+    rng = np.random.default_rng(11)
+    n, d = 400, 64
+    cols = {"vec_id": list(range(n))}
+    cols["embedding"] = [[float(x) for x in v] for v in rng.normal(size=(n, d))]
+    for j in range(24):
+        cols[f"c{j}"] = rng.integers(0, 1 << 30, n).tolist()
+    schema = ", ".join(
+        ["vec_id long", "embedding array<float>"] + [f"c{j} int" for j in range(24)]
+    )
+    path = str(tmp_path / "wide.parquet")
+    local_frame(spark, list(zip(*cols.values())), schema).write.parquet(path)
+    corpus = spark.read.parquet(path)
+    proj = corpus.select("vec_id", "embedding")
+
+    size = knn._plan_size_bytes(proj)
+    collected = proj.toArrow().nbytes
+    projected = int(proj._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    assert projected < collected <= size
+
+    qids, qvecs = [0, 1], cols["embedding"][:2]
+    monkeypatch.setattr(knn, "ARROW_DRIVER_MAX_BYTES", size - 1)
+    assert "MapInPandas" in _plan(knn.knn_join_arrow(corpus, qids, qvecs, k=3))
+    monkeypatch.setattr(knn, "ARROW_DRIVER_MAX_BYTES", size)
+    _assert_driver_plan(knn.knn_join_arrow(corpus, qids, qvecs, k=3))
+
+
+def test_pair_bound_sends_large_query_sets_to_distributed_path(
+    spark, monkeypatch, emb, fixture_queries
+):
+    """The driver scores on one Python thread, so the work bound (rows
+    estimated from the relation's bytes, times queries) picks the
+    distributed plan once the query set makes the distance matrix big."""
+    qids, qvecs = fixture_queries
+    proj = emb.select("vec_id", "embedding")
+    rows = knn._plan_size_bytes(proj) // (4 * len(qvecs[0]))
+    assert rows >= proj.count()
+    monkeypatch.setattr(knn, "ARROW_DRIVER_MAX_PAIRS", rows * len(qids) - 1)
+    assert "MapInPandas" in _plan(knn.knn_join_arrow(emb, qids, qvecs, k=5))
+    _assert_driver_plan(knn.knn_join_arrow(emb, qids[:-1], qvecs[:-1], k=5))
+
+
+def test_unbounded_inputs_take_distributed_path(spark, emb):
+    """No over-counting estimate exists for a computed vector column or a
+    cache that is not filled yet, so neither reaches the driver."""
+    computed = emb.withColumn("embedding", F.array_repeat(F.lit(0.5), 4096))
+    assert knn._plan_size_bytes(computed.select("vec_id", "embedding")) is None
+    cached = emb.filter(F.col("vec_id") < 100).cache()
+    try:
+        assert knn._plan_size_bytes(cached.select("vec_id", "embedding")) is None
+        cached.count()
+        assert knn._plan_size_bytes(cached.select("vec_id", "embedding")) > 0
+    finally:
+        cached.unpersist()
+
+
+def test_overlapping_driver_path_calls_agree(spark, emb, fixture_queries):
+    """The serve loops call the kernels from foreachBatch threads; two
+    driver-path calls running at once return what they return alone."""
+    qids, qvecs = fixture_queries
+    calls = [
+        lambda: knn.knn_join_arrow(emb, qids, qvecs, k=10),
+        lambda: knn.knn_join_arrow(emb, qids[:4], qvecs[:4], k=7, metric="cosine"),
+    ]
+
+    def rows(df):
+        return sorted(df.collect(), key=lambda r: (r.query_id, r.rank))
+
+    want = [rows(c()) for c in calls]
+    got = [None, None]
+    start = threading.Barrier(2, timeout=60)
+
+    def run(i):
+        start.wait()
+        got[i] = rows(calls[i]())
+
+    threads = [threading.Thread(target=run, args=(i,)) for i in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+        assert not t.is_alive()
+    for g, w in zip(got, want):
+        assert [(r.query_id, r.vec_id, r.rank) for r in g] == [
+            (r.query_id, r.vec_id, r.rank) for r in w
+        ]
+        assert np.allclose([r.dist for r in g], [r.dist for r in w], rtol=0, atol=1e-6)
 
 
 def _jobs(spark, action) -> int:

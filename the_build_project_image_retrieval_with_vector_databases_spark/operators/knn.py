@@ -27,9 +27,6 @@ the scan stage, and only k rows per (query, partition) survive.
 
 from __future__ import annotations
 
-import contextlib
-import ctypes
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -53,34 +50,80 @@ def _score(metric: str, a, b) -> tuple[Column, bool]:
     return fn(a, b), asc
 
 
-# Driver-path bound for the Arrow/BLAS kernels (knn_join_arrow,
-# knn_join_arrow_ivf), in bytes of the kernel's projected input as the
-# optimizer estimates it. At or below it the input is collected with one
-# toArrow() job, the kernel's own score generator runs in the driver and
-# the candidates are ranked there on the window's key. Above it the
-# mapInPandas + rank-window plan runs unchanged. On a few-MB corpus the
-# distributed plan is all floor cost: each Python-worker task spends
-# ~230 ms of CPU in PySpark's per-task importlib.invalidate_caches()
-# (re-reading pyspark.zip) against 5-22 ms of BLAS, and the rank window
-# adds a shuffle job. 32 MiB is the driver-state class of
-# ann.KMEANS_DRIVER_TRAIN_MAX_BYTES.
+# Driver-path bounds for the Arrow/BLAS kernels (knn_join_arrow,
+# knn_join_arrow_ivf). At or below both, the kernel's projection is
+# collected with one toArrow() job, the kernel's own score generator runs
+# in the driver and the candidates are ranked there on the window's key;
+# otherwise the mapInPandas + rank-window plan runs unchanged. On a
+# few-MB corpus the distributed plan is all floor cost: each Python-worker
+# task spends ~230 ms of CPU in PySpark's per-task
+# importlib.invalidate_caches() (re-reading pyspark.zip) against 5-22 ms
+# of BLAS, and the rank window adds a shuffle job.
+#
+# ARROW_DRIVER_MAX_BYTES bounds what the driver collects: bytes of the
+# relation the kernel reads (_plan_size_bytes). ARROW_DRIVER_MAX_PAIRS
+# bounds the scoring work: rows estimated from those bytes × queries, the
+# entries of the distance matrix. The driver collects and runs the
+# kernel's elementwise passes on one Python thread, the distributed plan
+# on every executor core, so past either bound the distributed plan
+# answers sooner. scripts/knn_driver_crossover.py measured both paths on
+# local[4] (4 vCPU; flat kernel, D=128, k=10; KNN_DRIVER_CROSSOVER.json):
+# every cell estimated at ≤ 6.3 Mi pairs ran faster in the driver, 14 of
+# the 15 estimated at ≥ 8.7 Mi ran faster distributed, and at Q=64 the
+# driver still won at 37 MiB but lost at 70 MiB.
 ARROW_DRIVER_MAX_BYTES = 32 << 20
+ARROW_DRIVER_MAX_PAIRS = 8 << 20
+
+# variable-width types: a Project that computes one of these (rather than
+# passing a relation column through) can emit more bytes than it reads
+_WIDE_TYPES = ("array", "binary", "map", "string", "struct")
 
 
-def _plan_size_bytes(df: DataFrame) -> int:
-    """The optimizer's size estimate of ``df``; runs no job. For a
-    parquet scan it is the on-disk bytes scaled to the projected
-    columns (partition filters do not shrink it, so a pruned IVF probe
-    is over-estimated); for a cached frame it is the cached size."""
-    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+def _plan_size_bytes(df: DataFrame) -> int | None:
+    """An estimate of the bytes ``df`` can hold that only over-counts;
+    None if there is none. Runs no job. ``df`` must be Projects and
+    Filters over one parquet scan or filled cache, and no Project may
+    compute a variable-width column. The estimate is then that
+    relation's whole size, read before any projection: the on-disk
+    bytes of every file of the scan (partition filters not applied), or
+    the measured bytes of the cache. The optimizer's figure for a
+    projection is not used: it scales by default type sizes, which count
+    an array column as 4 bytes whatever its length."""
+    node = df._jdf.queryExecution().optimizedPlan()
+    while node.nodeName() in ("Project", "Filter"):
+        if node.nodeName() == "Project":
+            exprs = node.projectList()
+            for i in range(exprs.size()):
+                e = exprs.apply(i)
+                if e.dataType().typeName() not in _WIDE_TYPES:
+                    continue
+                if e.getClass().getSimpleName() == "Alias":
+                    e = e.child()
+                if e.getClass().getSimpleName() != "AttributeReference":
+                    return None
+        node = node.children().apply(0)
+    if node.nodeName() == "InMemoryRelation":
+        # before the cache is filled its estimate is the cached plan's
+        if not node.cacheBuilder().isCachedColumnBuffersLoaded():
+            return None
+    elif node.nodeName() != "LogicalRelation":
+        return None
+    return int(node.stats().sizeInBytes())
 
 
-def _fits_driver(df: DataFrame) -> bool:
+def _fits_driver(df: DataFrame, n_queries: int, dim: int) -> bool:
+    """Both driver-path bounds hold. A stored float vector takes at
+    least 4 bytes a dimension, so size / (4·dim) over-counts the rows."""
     # private JVM API: any failure takes the distributed path
     try:
-        return _plan_size_bytes(df) <= ARROW_DRIVER_MAX_BYTES
+        size = _plan_size_bytes(df)
     except Exception:
         return False
+    return (
+        size is not None
+        and size <= ARROW_DRIVER_MAX_BYTES
+        and size // (4 * max(dim, 1)) * n_queries <= ARROW_DRIVER_MAX_PAIRS
+    )
 
 
 def _round6(d, spark):
@@ -106,37 +149,6 @@ def _round6(d, spark):
     return out
 
 
-@contextlib.contextmanager
-def _one_blas_thread():
-    """OpenBLAS limited to one thread, as Spark runs it in a local
-    Python worker (``OMP_NUM_THREADS`` = the task's cores). A threaded
-    GEMM splits the product differently and changes the low bits,
-    which sqrt amplifies to ~1e-8 on a self or duplicate row; pinned,
-    the driver path scores a batch to the worker's exact bits. A no-op
-    where no OpenBLAS is loaded."""
-    try:
-        with open("/proc/self/maps") as maps:
-            path = next(
-                line.split()[-1] for line in maps if "libopenblas" in line
-            )
-        lib = ctypes.CDLL(path)
-        suffix = next(
-            s for s in ("64_", "")
-            if hasattr(lib, f"openblas_set_num_threads{s}")
-        )
-        get = getattr(lib, f"openblas_get_num_threads{suffix}")
-        put = getattr(lib, f"openblas_set_num_threads{suffix}")
-        before = get()
-    except Exception:  # not Linux, or numpy without OpenBLAS
-        yield
-        return
-    put(1)
-    try:
-        yield
-    finally:
-        put(before)
-
-
 def _driver_topk(frame, score, schema, k: int, id_col: str, asc: bool):
     """The driver path of :func:`_arrow_topk`: one ``toArrow()`` job,
     ``score`` over the collected table in record batches of
@@ -160,8 +172,7 @@ def _driver_topk(frame, score, schema, k: int, id_col: str, asc: bool):
         b.to_pandas()
         for b in table.to_batches(max_chunksize=step if step > 0 else None)
     )
-    with _one_blas_thread():
-        parts = list(score(batches))
+    parts = list(score(batches))
     if not parts:
         return local_frame(spark, [], out_schema)
     cand = pd.concat(parts, ignore_index=True)
@@ -179,14 +190,14 @@ def _driver_topk(frame, score, schema, k: int, id_col: str, asc: bool):
     )
 
 
-def _arrow_topk(frame, score, schema, k: int, id_col: str, asc: bool):
+def _arrow_topk(frame, score, schema, qm, k: int, id_col: str, asc: bool):
     """Top-k per query of the candidates ``score`` yields over
-    ``frame``'s Arrow batches. Within ``ARROW_DRIVER_MAX_BYTES`` this
-    runs eagerly in the driver (:func:`_driver_topk`); above it, or
-    when the size estimate cannot be read, it is the lazy mapInPandas
-    plan plus the rank window. Both return identical
-    (query_id, id, rank)."""
-    if _fits_driver(frame):
+    ``frame``'s Arrow batches, for the Q×D query matrix ``qm``. Within
+    the driver-path bounds this runs eagerly in the driver
+    (:func:`_driver_topk`); above them, or when no size estimate can be
+    read, it is the lazy mapInPandas plan plus the rank window. Both
+    return the same (query_id, id, rank)."""
+    if _fits_driver(frame, qm.shape[0], qm.shape[1]):
         return _driver_topk(frame, score, schema, k, id_col, asc)
     cand = frame.mapInPandas(score, schema)
     rdist = F.round(F.col("dist"), 6)
@@ -287,18 +298,21 @@ def knn_join_arrow(
     unbounded in principle (the window still cuts exactly); for
     non-degenerate corpora it is O(partitions·Q·k), independent of N.
 
-    Small inputs take the driver path. When the optimizer estimates the
-    projected ``corpus.select(id_col, vec_col)`` at or below
-    ``ARROW_DRIVER_MAX_BYTES`` (read from the plan's statistics, no
-    job), the call is EAGER: it collects that projection with one
-    ``toArrow()`` job, runs the same ``score`` generator over it in
-    record batches of ``spark.sql.execution.arrow.maxRecordsPerBatch``
-    rows, ranks the candidates on the window's key and returns them as
-    an Arrow ``LocalRelation`` — a later ``.collect()`` runs no job, and
-    no Python-worker task or rank shuffle runs at all. Above the bound,
-    or if the estimate cannot be read, the call is lazy and plans the
+    Small inputs take the driver path. The corpus must be Projects and
+    Filters over a parquet scan or a filled cache (whose size the plan
+    holds, read with no job), with at most ``ARROW_DRIVER_MAX_BYTES`` in
+    that whole relation, and its estimated rows × Q at most
+    ``ARROW_DRIVER_MAX_PAIRS``. Then the call is EAGER: it collects the
+    ``(id_col, vec_col)`` projection with one ``toArrow()`` job, runs
+    the same ``score`` generator over it in record batches of
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows, ranks the
+    candidates on the window's key and returns them as an Arrow
+    ``LocalRelation`` — a later ``.collect()`` runs no job, and no
+    Python-worker task or rank shuffle runs at all. Otherwise, or if
+    the estimate cannot be read, the call is lazy and plans the
     mapInPandas + rank window described above, unchanged. Both paths
-    return identical (query_id, id, rank).
+    return the same (query_id, id, rank); ``dist`` may differ in its
+    low bits, as the driver's BLAS may split the product over threads.
 
     Caveats vs the exact operator (same contract as
     :func:`~.ann.assign_centroids_arrow`): BLAS accumulation order
@@ -401,7 +415,7 @@ def knn_join_arrow(
                 }
             )
 
-    return _arrow_topk(corpus, score, schema, k, id_col, asc)
+    return _arrow_topk(corpus, score, schema, qm, k, id_col, asc)
 
 
 def knn_join_arrow_ivf(
@@ -444,13 +458,12 @@ def knn_join_arrow_ivf(
     :func:`knn_join_arrow` — unbounded only on rounded-distance-
     degenerate corpora) — independent of N otherwise.
 
-    The driver path of :func:`knn_join_arrow` applies here too, gated on
-    the estimate of the union-of-probes projection (a partition filter
-    does not shrink a parquet scan's estimate, so the gate over-counts
-    a pruned probe): at or below ``ARROW_DRIVER_MAX_BYTES`` the call is
-    eager — one ``toArrow()`` job of the pruned lists, the same
-    ``score`` in the driver, the rank in the driver, an Arrow
-    ``LocalRelation`` back; above it, the lazy mapInPandas + rank-window
+    The driver path of :func:`knn_join_arrow` applies here too, with the
+    same bounds read for the layout: the whole relation, so a pruned
+    probe is over-counted. Within them the call is eager — one
+    ``toArrow()`` job of the pruned lists, the same ``score`` in the
+    driver, the rank in the driver, an Arrow ``LocalRelation`` back;
+    otherwise the lazy mapInPandas + rank-window
     plan is unchanged."""
     import numpy as np
     import pandas as pd
@@ -531,7 +544,7 @@ def knn_join_arrow_ivf(
                     }
                 )
 
-    return _arrow_topk(pruned, score, schema, k, id_col, asc=True)
+    return _arrow_topk(pruned, score, schema, qm, k, id_col, asc=True)
 
 
 def knn_join_exact(

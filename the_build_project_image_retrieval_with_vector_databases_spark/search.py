@@ -257,13 +257,14 @@ def search_batch(
 
     The two Arrow/BLAS routes (``flat`` by default, ``ivf`` with
     ``arrow=True``) answer a small batch in the driver: when the
-    kernel's projected input is estimated at or below
-    ``operators.knn.ARROW_DRIVER_MAX_BYTES``, the call is EAGER — one
-    ``toArrow()`` job collects it, the same BLAS kernel scores it and
-    ranks in the driver, and the result is an Arrow ``LocalRelation``
-    whose ``.collect()`` runs no further job. Larger inputs return the
-    lazy mapInPandas + rank-window plan, unchanged; both give identical
-    (query_id, id, rank). Query ids must be unique (``ValueError``
+    relation the kernel reads is at most
+    ``operators.knn.ARROW_DRIVER_MAX_BYTES`` and its estimated rows × Q
+    at most ``operators.knn.ARROW_DRIVER_MAX_PAIRS``, the call is EAGER
+    — one ``toArrow()`` job collects the kernel's input, the same BLAS
+    kernel scores it and ranks in the driver, and the result is an
+    Arrow ``LocalRelation`` whose ``.collect()`` runs no further job.
+    Larger inputs return the lazy mapInPandas + rank-window plan,
+    unchanged; both give the same (query_id, id, rank). Query ids must be unique (``ValueError``
     otherwise): every tier ranks per ``query_id``, so two queries
     sharing one would merge into a single top-k.
     """
