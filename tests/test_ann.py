@@ -18,7 +18,6 @@ from the_build_project_image_retrieval_with_vector_databases_spark.operators.ann
 )
 from the_build_project_image_retrieval_with_vector_databases_spark.operators.knn import (
     knn_join,
-    knn_join_two_phase,
     knn_single,
     radius_join,
 )
@@ -139,16 +138,16 @@ def test_lsh_candidates_are_cobucketed_pairs(emb, emb_np):
 
 
 def test_knn_join_matches_numpy_reference(spark, emb, emb_np):
-    """knn_join (and its two-phase alias) against an independent NumPy
-    brute-force reference — pins the actual top-k semantics (L2 order,
-    self-exclusion, id tie-break), not one Spark plan vs another."""
+    """knn_join against an independent NumPy brute-force reference —
+    pins the actual top-k semantics (L2 order, self-exclusion, id
+    tie-break), not one Spark plan vs another."""
     ids, mat = emb_np
     queries = emb.filter(F.col("vec_id") < 16).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
     got = {
         (r.query_id, r.rank): r.vec_id
-        for r in knn_join_two_phase(emb, queries, k=4).collect()
+        for r in knn_join(emb, queries, k=4).collect()
     }
     id_to_row = {int(v): i for i, v in enumerate(ids)}
     for q in range(16):
@@ -375,80 +374,6 @@ def test_k_for_corpus_sizing():
         assert n / k <= 256
         assert k == 1 or n / (k - 1) > 256
     assert k_for_corpus(0) == 1
-
-
-def test_assign_centroids_arrow_matches_literal(spark):
-    """The Arrow/BLAS large-k assignment path agrees with the
-    expression-literal argmin on the real fixture (the ulp-tie caveat is
-    measure-zero on random vectors), including through empty Arrow
-    partitions, and survives a k beyond what expression literals could
-    reasonably inline."""
-    from the_build_project_image_retrieval_with_vector_databases_spark.operators.ann import (
-        assign_centroids,
-        assign_centroids_arrow,
-    )
-
-    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-    cents = [r.embedding for r in emb.orderBy("vec_id").limit(16).collect()]
-    cents = [[float(x) for x in c] for c in cents]
-
-    lit_map = {
-        r.vec_id: r.centroid
-        for r in assign_centroids(emb, cents).select("vec_id", "centroid").collect()
-    }
-    arrow_map = {
-        r.vec_id: r.centroid
-        for r in assign_centroids_arrow(emb.repartition(64), cents)
-        .select("vec_id", "centroid")
-        .collect()
-    }
-    assert arrow_map == lit_map
-
-    # large k: 500 centroids (the fixture itself) — every vector's
-    # nearest centroid is then itself
-    all_cents = [
-        [float(x) for x in r.embedding] for r in emb.orderBy("vec_id").collect()
-    ]
-    ids = [r.vec_id for r in emb.orderBy("vec_id").collect()]
-    self_map = {
-        r.vec_id: r.centroid
-        for r in assign_centroids_arrow(emb, all_cents)
-        .select("vec_id", "centroid")
-        .collect()
-    }
-    for vid, cid in self_map.items():
-        assert ids[cid] == vid
-
-    import pytest
-
-    with pytest.raises(ValueError):
-        assign_centroids_arrow(emb, [])
-
-
-def test_assign_centroids_arrow_overwrites_existing_column(spark):
-    """Re-assignment over a df that already carries 'centroid' (e.g. a
-    second pass after re-training) must overwrite the column — the
-    withColumn semantics of the literal path — never emit a duplicate/
-    ambiguous field."""
-    from the_build_project_image_retrieval_with_vector_databases_spark.operators.ann import (
-        assign_centroids,
-        assign_centroids_arrow,
-    )
-
-    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-    cents = [
-        [float(x) for x in r.embedding]
-        for r in emb.orderBy("vec_id").limit(4).collect()
-    ]
-    once = assign_centroids_arrow(emb, cents)
-    twice = assign_centroids_arrow(once, cents)
-    assert twice.columns.count("centroid") == 1
-    want = {
-        r.vec_id: r.centroid
-        for r in assign_centroids(emb, cents).select("vec_id", "centroid").collect()
-    }
-    got = {r.vec_id: r.centroid for r in twice.select("vec_id", "centroid").collect()}
-    assert got == want
 
 
 def test_lsh_near_dup_sized_planes_parity_across_sfs(spark):
@@ -748,6 +673,45 @@ def test_knn_join_arrow_ivf_duplicate_probes_and_thin_lists(spark):
     import math
 
     assert all(math.isfinite(r.dist) for r in got)
+
+
+@pytest.mark.parametrize("case", ["search", "search_batch", "empty_sets"])
+def test_ivf_probes_reject_nonpositive_nprobe_and_empty_probe_sets(spark, case):
+    """A probe count below 1, or probe sets that are all empty, would
+    scan a silently wrong slice of the layout (nprobe=-1 every list but
+    the farthest, nprobe=0 none): every IVF search refuses them."""
+    from the_build_project_image_retrieval_with_vector_databases_spark.operators.knn import (
+        knn_join_arrow_ivf,
+    )
+    from the_build_project_image_retrieval_with_vector_databases_spark.queries_ann import (
+        _ivf_layout,
+    )
+    from the_build_project_image_retrieval_with_vector_databases_spark.search import (
+        search,
+        search_batch,
+    )
+
+    path, centroids = _ivf_layout(spark, SF_SMOKE)
+    layout = spark.read.parquet(path)
+    rows = layout.select("vec_id", "embedding").orderBy("vec_id").limit(3).collect()
+    qids = [int(r.vec_id) for r in rows]
+    qvecs = [list(r.embedding) for r in rows]
+
+    if case == "search":
+        with pytest.raises(ValueError, match="nprobe"):
+            search(
+                layout, qvecs[0], k=5, index="ivf", train_vectors=centroids,
+                nprobe=-1,
+            )
+    elif case == "search_batch":
+        with pytest.raises(ValueError, match="nprobe"):
+            search_batch(
+                layout, list(zip(qids, qvecs)), k=5, index="ivf",
+                train_vectors=centroids, arrow=True, nprobe=0,
+            )
+    else:
+        with pytest.raises(ValueError, match="probe set is empty"):
+            knn_join_arrow_ivf(layout, qids, qvecs, [[]] * len(qids), k=5)
 
 
 def test_search_batch_ivf_arrow_and_mine_negatives_facades(spark, emb, emb_np):

@@ -105,8 +105,16 @@ def test_knn_join_two_phase_windowgrouplimit(spark):
     """The kNN-join rank filter must plan as two-phase WindowGroupLimit:
     a Partial stage below the exchange (≤k rows per query per map
     partition shuffle — the FAISS local-heap/merge shape) and a Final
-    stage above it."""
-    df = entrymod.queries()["knn_two_phase"](spark, SF_SMOKE)
+    stage above it. The registered ``knn_two_phase`` row is this call."""
+    from the_build_project_image_retrieval_with_vector_databases_spark.operators.knn import (
+        knn_join,
+    )
+
+    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+    queries = emb.filter(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    df = knn_join(emb, queries, k=3, metric="l2")
     plan = _physical(df)
     partial = plan.index("Partial")
     assert "WindowGroupLimit" in plan

@@ -17,6 +17,12 @@ Every query wrapper (``q_*``) and oracle constant (``ORACLE_*``) defined
 at the top level of a ``queries*.py`` module must be a registry value
 (``QUERIES`` / ``ORACLES``): an unregistered wrapper is code no registry
 entry reaches.
+
+``operators/knn.py`` keeps one skeleton for its kNN kernels: one
+function calls ``row_number`` (the rank step every kernel ends in), and
+the SWAR popcount and the bit-exact left fold are each written once, so
+a change to the rank, the Hamming distance or the exact distance is
+made in one place.
 """
 
 from __future__ import annotations
@@ -185,3 +191,86 @@ def test_registry_lint_catches_unregistered_wrapper_and_oracle():
     queries["orphan"] = ns["q_orphan"]
     oracles["orphan"] = ns["ORACLE_ORPHAN"]
     assert _unregistered(planted, ns, queries, oracles) == []
+
+
+# first SWAR popcount mask; the left-fold step is ``acc = acc + d * d``
+_SWAR_MASK = 0x5555555555555555
+
+
+def _knn_skeleton_copies(source: str) -> dict[str, list[str]]:
+    """Top-level functions of ``source`` that call ``row_number``, and
+    the functions holding a SWAR popcount or a left-fold step."""
+    found: dict[str, list[str]] = {"row_number": [], "popcount": [], "left_fold": []}
+    for fn in ast.parse(source).body:
+        if not isinstance(fn, ast.FunctionDef):
+            continue
+        for node in ast.walk(fn):
+            if (
+                isinstance(node, ast.Call)
+                and getattr(node.func, "attr", getattr(node.func, "id", None))
+                == "row_number"
+            ):
+                found["row_number"].append(fn.name)
+            elif isinstance(node, ast.Constant) and node.value == _SWAR_MASK:
+                found["popcount"].append(fn.name)
+            elif (
+                isinstance(node, ast.Assign)
+                and len(node.targets) == 1
+                and isinstance(node.targets[0], ast.Name)
+                and isinstance(node.value, ast.BinOp)
+                and isinstance(node.value.op, ast.Add)
+                and isinstance(node.value.left, ast.Name)
+                and node.value.left.id == node.targets[0].id
+                and isinstance(node.value.right, ast.BinOp)
+                and isinstance(node.value.right.op, ast.Mult)
+                and ast.dump(node.value.right.left) == ast.dump(node.value.right.right)
+            ):
+                found["left_fold"].append(fn.name)
+    found["row_number"] = sorted(set(found["row_number"]))
+    return found
+
+
+def test_knn_kernels_share_one_rank_step_popcount_and_left_fold():
+    found = _knn_skeleton_copies(
+        (_PKG / "operators" / "knn.py").read_text(encoding="utf-8")
+    )
+    assert {k: len(v) for k, v in found.items()} == {
+        "row_number": 1,
+        "popcount": 1,
+        "left_fold": 1,
+    }, found
+
+
+def test_knn_skeleton_lint_catches_planted_copies():
+    """Negative control: a second rank window, popcount or left fold is
+    reported, nested closures and comments included; one of each is not."""
+    one = (
+        "def _rank(cand, w):\n"
+        "    return cand.withColumn('rank', F.row_number().over(w))\n"
+        "def _popcount(x):\n"
+        "    return x - ((x >> 1) & 0x5555555555555555)\n"
+        "def _left_fold(x, q):\n"
+        "    for j in range(q.shape[1]):\n"
+        "        dj = x[:, j] - q[j]\n"
+        "        acc = acc + dj * dj\n"
+        "    return acc\n"
+    )
+    assert _knn_skeleton_copies(one) == {
+        "row_number": ["_rank"],
+        "popcount": ["_popcount"],
+        "left_fold": ["_left_fold"],
+    }
+    planted = one + (
+        "def kernel(frame):\n"
+        "    # F.row_number() in a comment does not count\n"
+        "    def score(batches):\n"
+        "        for pdf in batches:\n"
+        "            m = np.uint64(0x5555555555555555)\n"
+        "            total = total + dd * dd\n"
+        "    return frame.withColumn('r', row_number().over(w))\n"
+    )
+    assert _knn_skeleton_copies(planted) == {
+        "row_number": ["_rank", "kernel"],
+        "popcount": ["_popcount", "kernel"],
+        "left_fold": ["_left_fold", "kernel"],
+    }

@@ -74,66 +74,6 @@ def assign_centroids(
     return df.withColumn("centroid", assigned.cast("int"))
 
 
-def assign_centroids_arrow(
-    df: DataFrame,
-    centroids: list[list[float]],
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Nearest-centroid id per row via an Arrow-batched BLAS matmul —
-    the LARGE-k assignment path.
-
-    :func:`assign_centroids` inlines the centroids as a k·D expression
-    literal: ideal up to k in the hundreds (pure codegen, no UDF), but
-    the plan itself grows with k·D and falls over long before k reaches
-    corpus-sized cluster counts (``k_for_corpus`` at 10¹⁰ docs is
-    k ≈ 4·10⁷). This variant broadcasts the centroid matrix as a numpy
-    array inside a ``mapInPandas`` closure and scores each Arrow batch
-    with one B×D @ D×k matmul (argmin over ||c||² − 2·x·c; the ||x||²
-    term is constant per row and cannot change the argmin) — the same
-    CPU-side shape FAISS uses for its coarse quantizer. Still map-only,
-    no shuffle; memory bound = k·D·8 bytes per executor (k ≈ 10⁶ at
-    64-D ≈ 0.5 GB; beyond that, shard the centroids and argmin the
-    per-shard minima).
-
-    Caveat vs the literal path: distances accumulate in a different
-    order (BLAS vs left-fold), so a pair of centroids equidistant to
-    ~1 ulp can tie-break differently — use the quantized-integer
-    assignment (:func:`kmeans_lloyd_step`) where cross-engine exactness
-    matters; this is the throughput path."""
-    import pandas as pd
-
-    cents = np.asarray(centroids, dtype=np.float64)
-    if cents.ndim != 2 or cents.shape[0] == 0:
-        raise ValueError("assign_centroids_arrow requires a k×D centroid matrix")
-    c2 = (cents * cents).sum(axis=1)
-
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    # mirror withColumn semantics: re-assignment over a df that already
-    # carries 'centroid' (e.g. a previous pass) overwrites, never
-    # duplicates the field
-    if "centroid" in df.columns:
-        df = df.drop("centroid")
-    out_schema = StructType(
-        list(df.schema.fields) + [StructField("centroid", IntegerType(), False)]
-    )
-
-    def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                pdf = pdf.copy()
-                pdf["centroid"] = pd.Series([], dtype="int32")
-                yield pdf
-                continue
-            x = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
-            d = c2[None, :] - 2.0 * (x @ cents.T)
-            pdf = pdf.copy()
-            pdf["centroid"] = d.argmin(axis=1).astype("int32")
-            yield pdf
-
-    return df.mapInPandas(score, out_schema)
-
-
 KMEANS_SCALE = 1 << 20
 
 
@@ -617,7 +557,11 @@ def nearest_centroids(
     centroids: list[list[float]], query_vec: list[float], nprobe: int
 ) -> list[int]:
     """Ids of the ``nprobe`` centroids nearest the query (stable L2
-    order) — the probe-selection step shared by every IVF-family search."""
+    order) — the probe-selection step shared by every IVF-family search.
+    ``ValueError`` if ``nprobe < 1``: a slice would read -1 as "all but
+    the farthest" and 0 as no probe at all."""
+    if nprobe < 1:
+        raise ValueError(f"nprobe must be >= 1, got {nprobe}")
     q = np.asarray(query_vec, dtype=np.float64)
     cents = np.asarray(centroids, dtype=np.float64)
     order = np.argsort(((cents - q) ** 2).sum(axis=1), kind="stable")

@@ -826,7 +826,7 @@ def _assign_arrow_int(
     ties break to the first minimum (np.argmin) exactly like
     ``array_position``/the oracle's ORDER BY dist, cid. Map-only —
     the centroid matrix rides the closure (k·D·8 bytes per executor),
-    the same shape as :func:`~.ann.assign_centroids_arrow`."""
+    the CPU shape FAISS's coarse quantizer uses."""
     import pandas as pd
     from pyspark.sql.types import ArrayType, LongType
 

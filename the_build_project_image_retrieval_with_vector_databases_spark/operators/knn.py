@@ -20,6 +20,16 @@ Spark-first physical strategy:
   ``WindowGroupLimit`` (Partial before the exchange, Final after), so
   only Q×k×partitions rows shuffle — the FAISS local-heap/merge shape
   comes out of the optimizer, not hand-rolled operators.
+- **Driver-held query matrix** → the Arrow kernels (flat and IVF BLAS,
+  bit-exact left fold, Hamming over packed codes) share one skeleton,
+  the block scan of ``index.search``: :func:`_queries` validates the
+  query matrix or codes and groups probe sets by centroid;
+  :func:`_blocks` walks the Arrow batches, handing a flat kernel each
+  batch whole and an IVF kernel each probed inverted list of a batch
+  with only the queries that probe it; the kernel scores a block with
+  :func:`_blas`, :func:`_left_fold` or :func:`_hamming`; :func:`_cut`
+  keeps each query's k best plus every boundary tie; and :func:`_rank`,
+  the one rank window of this module, picks the global top-k.
 
 At 100 TB the corpus never moves: queries broadcast, distances fuse into
 the scan stage, and only k rows per (query, partition) survive.
@@ -27,19 +37,39 @@ the scan stage, and only k rows per (query, partition) survive.
 
 from __future__ import annotations
 
+import sys
+
+import numpy as np
+from pyspark import cloudpickle
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DoubleType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from .dedup import _pin
 
 from ..functions.vector import array_lit, cosine_sim, dot, l2_dist
 from ..sources.tables import local_frame
 
+# The kernels' Arrow closures call this module's helpers. A Python
+# worker need not have the package on its path, so cloudpickle ships
+# the helpers with each closure rather than importing them there.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
+
 _METRICS = {
     "l2": (l2_dist, True),  # (distance fn, ascending?)
     "cosine": (cosine_sim, False),
     "dot": (dot, False),
 }
+
+_QUERY_ID = StructField("query_id", LongType(), False)
+_DIST = StructField("dist", DoubleType(), False)
 
 
 def _score(metric: str, a, b) -> tuple[Column, bool]:
@@ -135,8 +165,6 @@ def _round6(d, spark):
     string."""
     from decimal import ROUND_HALF_UP, Decimal
 
-    import numpy as np
-
     y = d * 1e6
     out = np.rint(y) / 1e6
     near = np.abs(y - np.floor(y) - 0.5) <= 1e-9 + 1e-15 * np.abs(y)
@@ -149,6 +177,178 @@ def _round6(d, spark):
     return out
 
 
+def _queries(query_ids, mat, probe_sets=None, dtype=np.float64, width=None):
+    """``(query ids, Q×D query matrix, probe groups)`` of a driver-held
+    query set, validated. ``width`` pins D: the packed-code halves of a
+    Hamming kernel, whose codes are ``mat``. Given ``probe_sets`` (the
+    centroid ids each query probes), the groups map every probed
+    centroid to the positions of the queries probing it; otherwise they
+    are None, the flat case."""
+    qids = np.asarray(query_ids, dtype=np.int64)
+    qm = np.asarray(mat, dtype=dtype)
+    if (
+        qm.ndim != 2
+        or qm.shape[0] != len(qids)
+        or (width is not None and qm.shape[1] != width)
+        or len(qids) == 0
+    ):
+        if width is None:
+            raise ValueError(
+                "query_mat must be a non-empty Q×D matrix matching query_ids"
+            )
+        raise ValueError(
+            f"query_codes must be a non-empty Q×{width} matrix "
+            "matching code_cols"
+        )
+    if probe_sets is None:
+        return qids, qm, None
+    if len(probe_sets) != len(qids):
+        raise ValueError("probe_sets must align with query_ids")
+    groups: dict[int, list[int]] = {}
+    for qi, probes in enumerate(probe_sets):
+        # dedupe: a repeated centroid id would score and emit the
+        # query's candidates twice, taking two ranks in the window
+        for c in dict.fromkeys(int(c) for c in probes):
+            groups.setdefault(c, []).append(qi)
+    if not groups:
+        # isin([]) would filter every row: an empty answer, not an error
+        raise ValueError("every probe set is empty — nothing to scan")
+    return qids, qm, {c: np.asarray(v, dtype=np.int64) for c, v in groups.items()}
+
+
+def _scan(df, id_col, cols, groups, centroid_col):
+    """The columns a kernel reads: ``id_col`` and ``cols``, projected
+    explicitly because column pruning does not cross mapInPandas (the
+    parquet ReadSchema never carries payload columns the kernel
+    ignores). An IVF kernel also reads the centroid, and only the
+    probed inverted lists: over the ``partitionBy(centroid)`` layout
+    the IN-filter is parquet partition pruning, so at 100 TB only
+    |∪probes|/k_cents of the corpus leaves storage."""
+    if groups is None:
+        return df.select(id_col, *cols)
+    return df.filter(F.col(centroid_col).isin(sorted(groups))).select(
+        id_col, centroid_col, *cols
+    )
+
+
+def _blocks(batches, groups=None, centroid_col=None):
+    """``(rows, query selector)`` blocks of a kernel's Arrow batches.
+    A flat kernel (``groups`` None) scores every non-empty batch whole
+    against all queries, with no per-row grouping work. An IVF kernel
+    scores each batch's rows of one probed centroid against only the
+    queries probing it: Σ_c |rows_c|·|probers_c| ≈ (nprobe/k_cents)·N·Q
+    distance evaluations instead of N·Q."""
+    for pdf in batches:
+        if len(pdf) == 0:
+            continue
+        if groups is None:
+            yield pdf, slice(None)
+            continue
+        cents = pdf[centroid_col].to_numpy()
+        for c in np.unique(cents):
+            qsel = groups.get(int(c))
+            if qsel is not None:
+                yield pdf[cents == c], qsel
+
+
+def _blas(x, q, qn, metric):
+    """B×Q l2 distances, or cosine/dot similarities, of the rows ``x``
+    to the queries ``q`` (squared norms ``qn``), by one B×D @ D×Q
+    matmul."""
+    if metric == "l2":
+        d = (x * x).sum(axis=1)[:, None] - 2.0 * (x @ q.T) + qn[None, :]
+        return np.sqrt(np.maximum(d, 0.0))
+    if metric == "dot":
+        return x @ q.T
+    xn = np.sqrt((x * x).sum(axis=1))
+    return (x @ q.T) / np.maximum(np.sqrt(qn)[None, :] * xn[:, None], 1e-12)
+
+
+def _left_fold(x, q):
+    """B×Q l2 distances accumulated ``acc ← acc + (x_j − q_j)²`` one
+    dimension at a time in float64: the same IEEE-754 operations in the
+    same order as the ``F.aggregate`` left fold of
+    ``functions.vector.l2_dist`` and DuckDB's ``list_reduce`` (float32 →
+    float64 widening is exact, and every sqrt is correctly rounded), so
+    the doubles are bit-identical to the expression path."""
+    acc = np.zeros((x.shape[0], q.shape[0]))
+    for j in range(q.shape[1]):
+        dj = x[:, j, None] - q[None, :, j]
+        acc = acc + dj * dj
+    return np.sqrt(acc)
+
+
+def _popcount(x):
+    """Set bits of each uint64: SWAR (Hacker's Delight §5-1) on the
+    array directly — numpy 1.x has no ``bitwise_count``, and it measured
+    4.4× the 256-entry byte-LUT form, whose per-byte fancy-index gather
+    dominated serving epochs."""
+    x = x - ((x >> np.uint64(1)) & np.uint64(0x5555555555555555))
+    x = (x & np.uint64(0x3333333333333333)) + (
+        (x >> np.uint64(2)) & np.uint64(0x3333333333333333)
+    )
+    x = (x + (x >> np.uint64(4))) & np.uint64(0x0F0F0F0F0F0F0F0F)
+    return ((x * np.uint64(0x0101010101010101)) >> np.uint64(56)).astype(
+        np.int64
+    )
+
+
+def _hamming(pdf, code_cols, qc):
+    """B×Q Hamming distances of the rows' packed codes to the query
+    codes ``qc``: XOR per int64 half, popcount, summed over halves."""
+    d = None
+    for h, col in enumerate(code_cols):
+        half = pdf[col].to_numpy().astype(np.int64).view(np.uint64)
+        dh = _popcount(half[:, None] ^ qc[None, :, h])
+        d = dh if d is None else d + dh
+    return d
+
+
+def _cut(key, k, rounded=False):
+    """``(rows, queries)`` of the candidates a block passes to the rank
+    window: per query column of ``key`` (lower is better), its k best
+    plus every row tying the k-th, in one vectorized mask for all
+    queries. Non-finite keys (masked rows) never pass.
+
+    Exact keys (integer Hamming, left-fold doubles) tie exactly, so the
+    boundary is inclusive and the window's (key, id) order cuts the
+    superset to the same ranks a per-query (key, id) sort would give.
+
+    ``rounded`` is the cut for BLAS distances, which carry ~1-ulp noise
+    even between exact duplicate vectors (GEMM micro-kernels vary the
+    accumulation path by row position). A raw cut would break those ties
+    by ulps; this one compares 6-decimal rounded keys, the window's own
+    key, so rows the window ranks by id are all emitted. The boundary is
+    padded 1.5 quanta: np.round is half-to-even while the window
+    (``F.round``) and the DuckDB oracle round HALF_UP, which differ by one
+    quantum on an exact .5, and 1.5 rather than 1.0 so the ulp-level
+    rounding of ``bound + pad`` never lands below a needed lattice
+    point, while admitting no second lattice step."""
+    kk = min(k, key.shape[0])
+    part = np.argpartition(key, kk - 1, axis=0)[:kk]
+    if rounded:
+        key = np.round(key, 6)
+    bound = np.take_along_axis(key, part, axis=0).max(axis=0)
+    if rounded:
+        bound = bound + 1.5e-6
+    return np.nonzero((key <= bound[None, :]) & np.isfinite(key))
+
+
+def _rank(cand, k, id_col, key="dist", asc=True, rounded=False, by=("query_id",)):
+    """The top-k rows of each ``by`` group of ``cand``, numbered 1..k in
+    ``rank`` by (``key``, ``id_col``), the key rounded to 6 decimals
+    when ``rounded`` (BLAS distances), descending when not ``asc``.
+    Spark plans the rank filter as a two-phase ``WindowGroupLimit``, so
+    only k rows per group and map partition cross the exchange."""
+    order = F.round(F.col(key), 6) if rounded else F.col(key)
+    w = Window.partitionBy(*by).orderBy(
+        order.asc() if asc else order.desc(), F.col(id_col).asc()
+    )
+    return cand.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
+
+
 def _driver_topk(frame, score, schema, k: int, id_col: str, asc: bool):
     """The driver path of :func:`_arrow_topk`: one ``toArrow()`` job,
     ``score`` over the collected table in record batches of
@@ -156,11 +356,9 @@ def _driver_topk(frame, score, schema, k: int, id_col: str, asc: bool):
     mapInPandas feeds it, so each step holds batch × Q distances), then
     the window's rank — (round(dist, 6), id), descending key for
     cosine/dot — in pandas. Returns an Arrow ``LocalRelation``."""
-    import numpy as np
     import pandas as pd
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import IntegerType, StructField, StructType
 
     spark = frame.sparkSession
     out_schema = StructType(
@@ -199,16 +397,62 @@ def _arrow_topk(frame, score, schema, qm, k: int, id_col: str, asc: bool):
     return the same (query_id, id, rank)."""
     if _fits_driver(frame, qm.shape[0], qm.shape[1]):
         return _driver_topk(frame, score, schema, k, id_col, asc)
-    cand = frame.mapInPandas(score, schema)
-    rdist = F.round(F.col("dist"), 6)
-    order = [
-        rdist.asc() if asc else rdist.desc(),
-        F.col(id_col).asc(),
-    ]
-    w = Window.partitionBy("query_id").orderBy(*order)
-    return cand.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
+    return _rank(frame.mapInPandas(score, schema), k, id_col, asc=asc, rounded=True)
+
+
+def _blas_topk(
+    df, qids, qm, groups, k, metric, vec_col, id_col, centroid_col, exclude_self
+):
+    """:func:`knn_join_arrow` (``groups`` None) and
+    :func:`knn_join_arrow_ivf`: the BLAS block scan, the rounded cut and
+    :func:`_arrow_topk`."""
+    import pandas as pd
+
+    asc = _METRICS[metric][1]
+    qn = (qm * qm).sum(axis=1)
+    schema = StructType([_QUERY_ID, df.schema[id_col], _DIST])
+    frame = _scan(df, id_col, [vec_col], groups, centroid_col)
+
+    def score(batches):
+        for pdf, qsel in _blocks(batches, groups, centroid_col):
+            x = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
+            ids = pdf[id_col].to_numpy()
+            sel = qids[qsel]
+            d = _blas(x, qm[qsel], qn[qsel], metric)
+            if exclude_self:
+                d[ids[:, None] == sel[None, :]] = np.inf if asc else -np.inf
+            ri, qi = _cut(d if asc else -d, k, rounded=True)
+            yield pd.DataFrame(
+                {"query_id": sel[qi], id_col: ids[ri], "dist": d[ri, qi]}
+            )
+
+    return _arrow_topk(frame, score, schema, qm, k, id_col, asc)
+
+
+def _hamming_topk(df, qids, qc, groups, k, id_col, code_cols, centroid_col):
+    """:func:`knn_join_arrow_hamming` (``groups`` None) and
+    :func:`knn_join_arrow_hamming_ivf`: the Hamming block scan, the
+    exact cut and the (hamming, id) rank."""
+    import pandas as pd
+
+    schema = StructType(
+        [_QUERY_ID, df.schema[id_col], StructField("hamming", IntegerType(), False)]
     )
+    frame = _scan(df, id_col, code_cols, groups, centroid_col)
+
+    def score(batches):
+        for pdf, qsel in _blocks(batches, groups, centroid_col):
+            d = _hamming(pdf, code_cols, qc[qsel])
+            ri, qi = _cut(d, k)
+            yield pd.DataFrame(
+                {
+                    "query_id": qids[qsel][qi],
+                    id_col: pdf[id_col].to_numpy()[ri],
+                    "hamming": d[ri, qi].astype(np.int32),
+                }
+            )
+
+    return _rank(frame.mapInPandas(score, schema), k, id_col, key="hamming")
 
 
 def knn_single(
@@ -250,7 +494,11 @@ def knn_join(
 
     Output: all query columns (prefixed ``query_id``) + corpus id/label
     columns + ``dist`` + ``rank``. The queries side is broadcast — the
-    corpus is scanned exactly once regardless of Q.
+    corpus is scanned exactly once regardless of Q. The rank filter
+    plans as a two-phase ``WindowGroupLimit`` — a Partial stage before
+    the exchange forwards at most k rows per query and map partition,
+    FAISS's per-block heap + merge (SURVEY §4.3.2) with no extra
+    operator; ``tests/test_plans.py`` pins that plan shape.
     """
     q = queries.select(
         F.col(query_id_col).alias("query_id"),
@@ -261,13 +509,7 @@ def knn_join(
     if exclude_self:
         joined = joined.filter(F.col(id_col) != F.col("query_id"))
     joined = joined.withColumn("dist", score)
-    order = [F.col("dist").asc() if asc else F.col("dist").desc(), F.col(id_col).asc()]
-    w = Window.partitionBy("query_id").orderBy(*order)
-    return (
-        joined.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .drop("__qvec")
-    )
+    return _rank(joined, k, id_col, asc=asc).drop("__qvec")
 
 
 def knn_join_arrow(
@@ -288,10 +530,10 @@ def knn_join_arrow(
     handful of queries, hopeless for a serving batch (2000×2000 pairs
     = 45 s). Here the Q×D query matrix rides the ``mapInPandas``
     closure; each Arrow batch scores ALL queries with one B×D @ D×Q
-    matmul and forwards only its per-query top-k (``argpartition``) —
-    per-partition heaps, exactly the FAISS block-scan — then one tiny
-    window rank over the per-partition candidates picks the global
-    top-k. Corpus never shuffles; candidate volume is
+    matmul and forwards only its per-query top-k (the tie-safe
+    :func:`_cut`) — per-partition heaps, exactly the FAISS block-scan —
+    then one tiny window rank over the per-partition candidates picks
+    the global top-k. Corpus never shuffles; candidate volume is
     partitions·Q·(k + boundary-tie multiplicity) — the tie-safe cut
     emits every row whose rounded key ties the k-boundary, so on a
     corpus where many rows share one rounded distance the tie term is
@@ -314,11 +556,10 @@ def knn_join_arrow(
     return the same (query_id, id, rank); ``dist`` may differ in its
     low bits, as the driver's BLAS may split the product over threads.
 
-    Caveats vs the exact operator (same contract as
-    :func:`~.ann.assign_centroids_arrow`): BLAS accumulation order
-    differs from the left-fold, so raw distances carry ~1-ulp noise —
-    including BETWEEN EXACT DUPLICATE VECTORS (GEMM micro-kernels vary
-    the accumulation path by row position; a serving fuzz panel on
+    Caveats vs the exact operator: BLAS accumulation order differs from
+    the left fold, so raw distances carry ~1-ulp noise — including
+    BETWEEN EXACT DUPLICATE VECTORS (GEMM micro-kernels vary the
+    accumulation path by row position; a serving fuzz panel on
     generated corpora with a forced duplicate showed it). Ties are
     therefore handled at 6-decimal granularity, the same kept-rounded
     class as the emitted display value: the global rank window orders
@@ -328,94 +569,20 @@ def knn_join_arrow(
     or differ below 5e-7 rank by id identically to the DuckDB oracle's
     fold. Distinct rows separated by less than the rounding quantum but
     straddling a rounding boundary remain the documented measure-zero
-    hazard.
-    With ``exclude_self=True`` the masked self row carries dist=inf and
-    can surface in the final top-k only when a partition holds ≤ k
-    finite rows — unreachable for a flat scan of any real corpus
-    (partitions ≫ k rows); the IVF kernel, whose probed subsets CAN be
-    that small, filters non-finite rows before yielding.
-    Use :func:`knn_join` where cross-engine exactness matters; this is
-    the throughput path. Output: (query_id, id_col, dist, rank) with
-    ``dist`` RAW (callers round for display).
+    hazard. With ``exclude_self=True`` the masked self row carries an
+    infinite key and is never emitted.
+    Use :func:`knn_join` or :func:`knn_join_exact` where cross-engine
+    exactness matters; this is the throughput path. Output:
+    (query_id, id_col, dist, rank) with ``dist`` RAW (callers round for
+    display).
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
     _, asc = _METRICS.get(metric, (None, None))
     if asc is None:
         raise ValueError(f"unknown metric {metric!r}; one of {sorted(_METRICS)}")
-    qm = np.asarray(query_mat, dtype=np.float64)
-    qids = np.asarray(query_ids, dtype=np.int64)
-    if qm.ndim != 2 or qm.shape[0] != len(qids) or len(qids) == 0:
-        raise ValueError("query_mat must be a non-empty Q×D matrix matching query_ids")
-    qn = (qm * qm).sum(axis=1)
-
-    id_field = next(f for f in corpus.schema.fields if f.name == id_col)
-    schema = StructType(
-        [
-            StructField("query_id", LongType(), False),
-            id_field,
-            StructField("dist", DoubleType(), False),
-        ]
+    qids, qm, _ = _queries(query_ids, query_mat)
+    return _blas_topk(
+        corpus, qids, qm, None, k, metric, vec_col, id_col, None, exclude_self
     )
-    # Column pruning does not cross mapInPandas — project the two used
-    # columns explicitly so the parquet scan's ReadSchema never carries
-    # payload columns the kernel ignores (at 100 TB that's the
-    # difference between scanning two columns and scanning the table).
-    corpus = corpus.select(id_col, vec_col)
-
-    def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
-            ids = pdf[id_col].to_numpy()
-            if metric == "l2":
-                d = (x * x).sum(axis=1)[:, None] - 2.0 * (x @ qm.T) + qn[None, :]
-                d = np.sqrt(np.maximum(d, 0.0))
-            elif metric == "dot":
-                d = x @ qm.T
-            else:  # cosine
-                xn = np.sqrt((x * x).sum(axis=1))
-                d = (x @ qm.T) / np.maximum(
-                    np.sqrt(qn)[None, :] * xn[:, None], 1e-12
-                )
-            if exclude_self:
-                d[ids[:, None] == qids[None, :]] = np.inf if asc else -np.inf
-            key = d if asc else -d
-            kk = min(k, key.shape[0])
-            part = np.argpartition(key, kk - 1, axis=0)[:kk]
-            # tie-safe cut: include EVERY row whose 6-decimal-rounded
-            # key ties the boundary — a raw argpartition cut breaks
-            # duplicate-vector ties by BLAS ulps, diverging from the
-            # oracle's (dist, id) order
-            kr = np.round(key, 6)
-            bound = np.take_along_axis(kr, part, axis=0).max(axis=0)
-            # one vectorized mask for ALL queries (no per-query python
-            # loop in the serving hot path); isfinite: a batch smaller
-            # than k would otherwise pull the masked self row
-            # (key=inf) through an inf boundary.  The boundary is
-            # padded by 1.5 rounding quanta: np.round is half-to-even
-            # while the global window key (F.round) and the DuckDB
-            # oracle round HALF_UP, and at an exact .5 landing the two
-            # rules differ by exactly one quantum — the pad makes the
-            # emitted set a superset under EITHER rule, and the exact
-            # global window re-cuts to the true top-k for free. 1.5
-            # (not 1.0) quanta so ulp-level rounding of `bound + pad`
-            # can never land one ulp BELOW a needed lattice point,
-            # while still admitting no second lattice step.
-            mask = (kr <= bound[None, :] + 1.5e-6) & np.isfinite(kr)
-            ri, qi = np.nonzero(mask)
-            yield pd.DataFrame(
-                {
-                    "query_id": qids[qi],
-                    id_col: ids[ri],
-                    "dist": d[ri, qi],
-                }
-            )
-
-    return _arrow_topk(corpus, score, schema, qm, k, id_col, asc)
 
 
 def knn_join_arrow_ivf(
@@ -432,7 +599,9 @@ def knn_join_arrow_ivf(
     """IVF-tier Arrow/BLAS kNN join — :func:`knn_join_arrow` with
     per-query inverted-list masking, the serving kernel for rates past
     the flat-scan knee (the batched analogue of the reference's
-    ``IndexIVFFlat.search``; its flat twin covers ``app.py:171``).
+    ``IndexIVFFlat.search``; its flat twin covers ``app.py:171``). The
+    flat kernel is this one's single-group case: the same block scorer,
+    cut and rank.
 
     Two pruning levels compose:
 
@@ -453,7 +622,8 @@ def knn_join_arrow_ivf(
     ties handled at 6-decimal granularity — tie-safe batch cut +
     rounded-key rank window); per-query recall is the nprobe curve
     (RECALL_CURVE.json). ``probe_sets[i]`` lists the centroid ids query
-    ``i`` probes. Output: (query_id, id_col, dist, rank ≤ k), candidate
+    ``i`` probes (a repeated id counts once); ``ValueError`` if every
+    set is empty. Output: (query_id, id_col, dist, rank ≤ k), candidate
     volume ≈ batches·Q·k plus boundary-tie multiplicity (see
     :func:`knn_join_arrow` — unbounded only on rounded-distance-
     degenerate corpora) — independent of N otherwise.
@@ -465,86 +635,11 @@ def knn_join_arrow_ivf(
     driver, the rank in the driver, an Arrow ``LocalRelation`` back;
     otherwise the lazy mapInPandas + rank-window
     plan is unchanged."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-    qm = np.asarray(query_mat, dtype=np.float64)
-    qids = np.asarray(query_ids, dtype=np.int64)
-    if qm.ndim != 2 or qm.shape[0] != len(qids) or len(qids) == 0:
-        raise ValueError("query_mat must be a non-empty Q×D matrix matching query_ids")
-    if len(probe_sets) != len(qids):
-        raise ValueError("probe_sets must align with query_ids")
-    qn = (qm * qm).sum(axis=1)
-    by_cent: dict[int, "np.ndarray"] = {}
-    for qi, probes in enumerate(probe_sets):
-        # dedupe: probe_sets is a public parameter — a repeated centroid
-        # id would score and emit the query's candidates twice, taking
-        # two ranks in the final window (nearest_centroids never
-        # duplicates, but callers may).
-        for c in dict.fromkeys(int(c) for c in probes):
-            by_cent.setdefault(c, []).append(qi)
-    by_cent = {c: np.asarray(v, dtype=np.int64) for c, v in by_cent.items()}
-    union_probes = sorted(by_cent)
-
-    id_field = next(f for f in layout.schema.fields if f.name == id_col)
-    schema = StructType(
-        [
-            StructField("query_id", LongType(), False),
-            id_field,
-            StructField("dist", DoubleType(), False),
-        ]
+    qids, qm, groups = _queries(query_ids, query_mat, probe_sets)
+    return _blas_topk(
+        layout, qids, qm, groups, k, "l2", vec_col, id_col, centroid_col,
+        exclude_self,
     )
-    pruned = layout.filter(
-        F.col(centroid_col).isin(union_probes)
-    ).select(id_col, centroid_col, vec_col)
-
-    def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cents = pdf[centroid_col].to_numpy()
-            for c in np.unique(cents):
-                qsel = by_cent.get(int(c))
-                if qsel is None:
-                    continue
-                sub = pdf[cents == c]
-                x = np.asarray(sub[vec_col].tolist(), dtype=np.float64)
-                ids = sub[id_col].to_numpy()
-                d = (
-                    (x * x).sum(axis=1)[:, None]
-                    - 2.0 * (x @ qm[qsel].T)
-                    + qn[qsel][None, :]
-                )
-                d = np.sqrt(np.maximum(d, 0.0))
-                if exclude_self:
-                    d[ids[:, None] == qids[qsel][None, :]] = np.inf
-                kk = min(k, d.shape[0])
-                part = np.argpartition(d, kk - 1, axis=0)[:kk]
-                # tie-safe cut at 6-decimal granularity + drop inf rows
-                # (masked self-matches): the raw-argpartition hazards
-                # are duplicate-vector BLAS-ulp tie breaks (the flat
-                # kernel's GEMM) and a probed inverted list with ≤ k
-                # finite rows
-                # surfacing the excluded self row (e.g. nprobe=1 on a
-                # small list).
-                dr = np.round(d, 6)
-                bound = np.take_along_axis(dr, part, axis=0).max(axis=0)
-                # one vectorized mask for the whole group's query set;
-                # boundary padded 1.5 quanta (np.round half-to-even vs
-                # the window/oracle's HALF_UP, ulp-safe sum — see
-                # knn_join_arrow)
-                mask = (dr <= bound[None, :] + 1.5e-6) & np.isfinite(dr)
-                ri, qi = np.nonzero(mask)
-                yield pd.DataFrame(
-                    {
-                        "query_id": qids[qsel][qi],
-                        id_col: ids[ri],
-                        "dist": d[ri, qi],
-                    }
-                )
-
-    return _arrow_topk(pruned, score, schema, qm, k, id_col, asc=True)
 
 
 def knn_join_exact(
@@ -564,24 +659,19 @@ def knn_join_exact(
 
     :func:`knn_join_arrow` trades exactness for BLAS throughput (matmul
     accumulation order ≠ the left fold, so distances differ in ulps and
-    ranks can flip on near-ties). Here the distance is instead
-    accumulated with an explicit per-dimension loop,
-    ``acc ← acc + (x_j − q_j)²`` in float64 — every elementwise op is
-    the SAME IEEE-754 binary64 operation in the SAME order as the
-    ``F.aggregate`` left fold of ``functions.vector.l2_dist`` and
-    DuckDB's ``list_reduce`` (float32 → float64 widening is exact, and
-    ``np.sqrt``/JVM ``Math.sqrt``/libm are all correctly rounded), so
-    the produced ``dist`` doubles are bit-identical to the expression
-    path while the D vectorized passes replace ~1 µs-per-element
-    interpreted HOF evaluation (measured ~60× on the 64-D fixtures).
-    Parity is pinned in ``tests/test_knn_exact.py``: full-frame equality
-    against :func:`knn_join` including distance bits.
+    ranks can flip on near-ties). Here the distance is instead the
+    explicit per-dimension float64 fold :func:`_left_fold`, whose
+    doubles are bit-identical to the expression path and DuckDB's
+    ``list_reduce``, while its D vectorized passes replace ~1 µs-per-
+    element interpreted HOF evaluation (measured ~60× on the 64-D
+    fixtures). Parity is pinned in ``tests/test_knn_exact.py``:
+    full-frame equality against :func:`knn_join` including distance
+    bits.
 
-    Per-partition candidates are selected by ``np.lexsort`` on the
-    exact ``(dist, id)`` key — the id tie-break happens BEFORE the k
-    cut (unlike ``argpartition`` in the BLAS kernel), then one tiny
-    window rank over ≤ partitions·Q·k rows picks the global top-k with
-    the identical ordering. The corpus never shuffles.
+    Each batch forwards, per query, its k nearest rows plus every row
+    tying the k-th distance exactly (:func:`_cut`), then one tiny window
+    rank on the exact ``(dist, id)`` key picks the global top-k with the
+    identical ordering. The corpus never shuffles.
 
     Options (all preserve exactness):
     - ``exclude_self`` — drop corpus rows whose id equals the query id.
@@ -595,14 +685,9 @@ def knn_join_exact(
 
     Output: (query_id, id_col[, label_col], dist, rank).
     """
-    import numpy as np
     import pandas as pd
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-    qm = np.asarray(query_mat, dtype=np.float64)
-    qids = np.asarray(query_ids, dtype=np.int64)
-    if qm.ndim != 2 or qm.shape[0] != len(qids) or len(qids) == 0:
-        raise ValueError("query_mat must be a non-empty Q×D matrix matching query_ids")
+    qids, qm, _ = _queries(query_ids, query_mat)
     qlab = None
     if query_labels is not None:
         if label_col is None:
@@ -611,56 +696,33 @@ def knn_join_exact(
         if qlab.shape != qids.shape:
             raise ValueError("query_labels must align with query_ids")
 
-    id_field = next(f for f in corpus.schema.fields if f.name == id_col)
-    fields = [StructField("query_id", LongType(), False), id_field]
-    cols = [id_col, vec_col]
+    fields = [_QUERY_ID, corpus.schema[id_col]]
+    cols = [vec_col]
     if label_col is not None:
-        fields.append(next(f for f in corpus.schema.fields if f.name == label_col))
+        fields.append(corpus.schema[label_col])
         cols.append(label_col)
-    fields.append(StructField("dist", DoubleType(), False))
-    schema = StructType(fields)
+    schema = StructType(fields + [_DIST])
     # Column pruning does not cross mapInPandas — project explicitly.
-    corpus = corpus.select(*cols)
+    frame = corpus.select(id_col, *cols)
 
     def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
+        for pdf, _ in _blocks(batches):
             x = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
             ids = pdf[id_col].to_numpy()
-            if recon is not None:
-                x = recon(x)
-            # exact left fold: acc_j = acc_{j-1} + (x_j - q_j)², float64
-            acc = np.zeros((x.shape[0], qm.shape[0]))
-            for j in range(qm.shape[1]):
-                dj = x[:, j, None] - qm[None, :, j]
-                acc = acc + dj * dj
-            d = np.sqrt(acc)
+            d = _left_fold(x if recon is None else recon(x), qm)
             if exclude_self:
-                d[np.asarray(ids)[:, None] == qids[None, :]] = np.inf
+                d[ids[:, None] == qids[None, :]] = np.inf
             if qlab is not None:
                 labs = pdf[label_col].to_numpy()
-                d[np.asarray(labs)[:, None] == qlab[None, :]] = np.inf
-            kk = min(k, d.shape[0])
-            out: dict[str, list] = {f.name: [] for f in fields}
-            for qi in range(len(qids)):
-                order = np.lexsort((ids, d[:, qi]))[:kk]
-                order = order[np.isfinite(d[order, qi])]
-                n = len(order)
-                out["query_id"].extend([int(qids[qi])] * n)
-                out[id_col].extend(ids[order].tolist())
-                if label_col is not None:
-                    out[label_col].extend(pdf[label_col].to_numpy()[order].tolist())
-                out["dist"].extend(d[order, qi].tolist())
+                d[labs[:, None] == qlab[None, :]] = np.inf
+            ri, qi = _cut(d, k)
+            out = {"query_id": qids[qi], id_col: ids[ri]}
+            if label_col is not None:
+                out[label_col] = pdf[label_col].to_numpy()[ri]
+            out["dist"] = d[ri, qi]
             yield pd.DataFrame(out)
 
-    cand = corpus.mapInPandas(score, schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist").asc(), F.col(id_col).asc()
-    )
-    return cand.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _rank(frame.mapInPandas(score, schema), k, id_col)
 
 
 def knn_recall_eval_exact(
@@ -691,81 +753,53 @@ def knn_recall_eval_exact(
     ``(query_id, vec_id)`` then ``query_id`` — all supersets of the
     exchange key, so Catalyst inserts no further shuffle).
 
-    Distances use the same explicit per-dimension float64 fold as
-    :func:`knn_join_exact` (bit-exact with the expression path and
-    DuckDB's ``list_reduce``) and the same pre-cut ``(dist, id)``
-    lexsort, so ranks — and the resulting (n_hits, recall) — are
-    identical to the two-scan pipeline's. Self matches are excluded in
-    both tiers. Output: (query_id, n_hits int, recall double) for every
-    query, zero-hit queries included."""
-    import numpy as np
+    Distances, cut and window are :func:`knn_join_exact`'s (bit-exact
+    with the expression path and DuckDB's ``list_reduce``), so ranks —
+    and the resulting (n_hits, recall) — are identical to the two-scan
+    pipeline's. Self matches are excluded in both tiers; ``ValueError``
+    if every probe set is empty. Output: (query_id, n_hits int,
+    recall double) for every query, zero-hit queries included."""
     import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
 
-    qm = np.asarray(query_mat, dtype=np.float64)
-    qids = np.asarray(query_ids, dtype=np.int64)
-    if qm.ndim != 2 or qm.shape[0] != len(qids) or len(qids) == 0:
-        raise ValueError("query_mat must be a non-empty Q×D matrix matching query_ids")
-    if len(probe_sets) != len(qids):
-        raise ValueError("probe_sets must align with query_ids")
-    probe_arr = [np.asarray(sorted(ps), dtype=np.int64) for ps in probe_sets]
-
-    id_field = next(f for f in layout.schema.fields if f.name == id_col)
+    qids, qm, groups = _queries(query_ids, query_mat, probe_sets)
     schema = StructType(
         [
-            StructField("query_id", LongType(), False),
-            id_field,
-            StructField("dist", DoubleType(), False),
+            _QUERY_ID,
+            layout.schema[id_col],
+            _DIST,
             StructField("tier", IntegerType(), False),
         ]
     )
     pruned = layout.select(id_col, centroid_col, vec_col)
 
     def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
+        for pdf, _ in _blocks(batches):
             x = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
             ids = pdf[id_col].to_numpy()
-            cents = pdf[centroid_col].to_numpy().astype(np.int64)
-            acc = np.zeros((x.shape[0], qm.shape[0]))
-            for j in range(qm.shape[1]):
-                dj = x[:, j, None] - qm[None, :, j]
-                acc = acc + dj * dj
-            d = np.sqrt(acc)
+            d = _left_fold(x, qm)
             d[ids[:, None] == qids[None, :]] = np.inf  # exclude self
-            out: dict[str, list] = {
-                "query_id": [], id_col: [], "dist": [], "tier": []
-            }
-            kk = min(k, d.shape[0])
-            for qi in range(len(qids)):
-                col = d[:, qi]
-                for tier, mask in ((0, None), (1, np.isin(cents, probe_arr[qi]))):
-                    c = col if mask is None else np.where(mask, col, np.inf)
-                    order = np.lexsort((ids, c))[:kk]
-                    order = order[np.isfinite(c[order])]
-                    n = len(order)
-                    out["query_id"].extend([int(qids[qi])] * n)
-                    out[id_col].extend(ids[order].tolist())
-                    out["dist"].extend(c[order].tolist())
-                    out["tier"].extend([tier] * n)
-            yield pd.DataFrame(out)
+            # probed[u, q]: centroid u of this batch is in query q's set
+            cents, inv = np.unique(
+                pdf[centroid_col].to_numpy(), return_inverse=True
+            )
+            probed = np.zeros((len(cents), len(qids)), dtype=bool)
+            for u, c in enumerate(cents):
+                probed[u, groups.get(int(c), [])] = True
+            for tier, t in ((0, d), (1, np.where(probed[inv], d, np.inf))):
+                ri, qi = _cut(t, k)
+                yield pd.DataFrame(
+                    {
+                        "query_id": qids[qi],
+                        id_col: ids[ri],
+                        "dist": t[ri, qi],
+                        "tier": np.full(len(ri), tier, dtype=np.int32),
+                    }
+                )
 
     cand = pruned.mapInPandas(score, schema).repartition("query_id")
-    w = Window.partitionBy("query_id", "tier").orderBy(
-        F.col("dist").asc(), F.col(id_col).asc()
-    )
-    topk = cand.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
     hits = (
-        topk.groupBy("query_id", id_col)
+        _rank(cand, k, id_col, by=("query_id", "tier"))
+        .groupBy("query_id", id_col)
         .agg(F.count("*").alias("n_tiers"))
         .filter(F.col("n_tiers") == 2)
         .groupBy("query_id")
@@ -801,82 +835,54 @@ def knn_multi_recon_recall(
     numpy twin of its encode/reconstruct expression (PQ codeword / SQ
     bin-midpoint). Each Arrow batch computes the exact left-fold
     distances once per tier matrix (tier 0 = raw vectors), emits
-    per-partition (dist, id)-lexsorted top-k candidates per
-    (tier, query), then ONE repartition on ``query_id`` satisfies every
+    per-(tier, query) candidates by :func:`knn_join_exact`'s exact cut,
+    then ONE repartition on ``query_id`` satisfies every
     later clustering requirement (rank windows by (tier, query_id),
     hit flags by (query_id, id), per-query counts — all supersets of
     the exchange key, so Catalyst inserts no further shuffle).
     Distances and ranks are bit-identical per tier to separate
     :func:`knn_join_exact` passes: same per-dimension float64 fold,
-    same np.inf self-exclusion, same pre-cut lexsort, same global
+    same np.inf self-exclusion, same exact cut, same global
     window ordering. Self matches are excluded in every tier.
 
     Output: (query_id, tier, n_hits int, recall double) for every
     query × non-exact tier, zero-hit queries included."""
-    import numpy as np
     import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
 
-    qm = np.asarray(query_mat, dtype=np.float64)
-    qids = np.asarray(query_ids, dtype=np.int64)
-    if qm.ndim != 2 or qm.shape[0] != len(qids) or len(qids) == 0:
-        raise ValueError("query_mat must be a non-empty Q×D matrix matching query_ids")
+    qids, qm, _ = _queries(query_ids, query_mat)
     if not recons:
         raise ValueError("recons must name at least one tier")
     tiers = [("__exact", None)] + [(str(t), fn) for t, fn in recons]
 
-    id_field = next(f for f in corpus.schema.fields if f.name == id_col)
     schema = StructType(
         [
             StructField("tier", StringType(), False),
-            StructField("query_id", LongType(), False),
-            id_field,
-            StructField("dist", DoubleType(), False),
+            _QUERY_ID,
+            corpus.schema[id_col],
+            _DIST,
         ]
     )
     pruned = corpus.select(id_col, vec_col)
 
     def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
+        for pdf, _ in _blocks(batches):
             x0 = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
             ids = pdf[id_col].to_numpy()
-            out: dict[str, list] = {
-                "tier": [], "query_id": [], id_col: [], "dist": []
-            }
             for tname, recon in tiers:
-                x = x0 if recon is None else recon(x0)
-                acc = np.zeros((x.shape[0], qm.shape[0]))
-                for j in range(qm.shape[1]):
-                    dj = x[:, j, None] - qm[None, :, j]
-                    acc = acc + dj * dj
-                d = np.sqrt(acc)
-                d[np.asarray(ids)[:, None] == qids[None, :]] = np.inf
-                kk = min(k, d.shape[0])
-                for qi in range(len(qids)):
-                    order = np.lexsort((ids, d[:, qi]))[:kk]
-                    order = order[np.isfinite(d[order, qi])]
-                    n = len(order)
-                    out["tier"].extend([tname] * n)
-                    out["query_id"].extend([int(qids[qi])] * n)
-                    out[id_col].extend(ids[order].tolist())
-                    out["dist"].extend(d[order, qi].tolist())
-            yield pd.DataFrame(out)
+                d = _left_fold(x0 if recon is None else recon(x0), qm)
+                d[ids[:, None] == qids[None, :]] = np.inf
+                ri, qi = _cut(d, k)
+                yield pd.DataFrame(
+                    {
+                        "tier": [tname] * len(ri),
+                        "query_id": qids[qi],
+                        id_col: ids[ri],
+                        "dist": d[ri, qi],
+                    }
+                )
 
     cand = pruned.mapInPandas(score, schema).repartition("query_id")
-    w = Window.partitionBy("tier", "query_id").orderBy(
-        F.col("dist").asc(), F.col(id_col).asc()
-    )
-    topk = cand.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    topk = _rank(cand, k, id_col, by=("tier", "query_id"))
     flags = topk.groupBy("query_id", id_col).agg(
         F.max(F.when(F.col("tier") == "__exact", 1).otherwise(0)).alias("__e"),
         *[
@@ -924,44 +930,6 @@ def knn_multi_recon_recall(
             F.coalesce(F.col("__h"), F.lit(0)).cast("double")
             / F.lit(float(k))
         ).alias("recall"),
-    )
-
-
-def knn_join_two_phase(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    metric: str = "l2",
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    query_vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    exclude_self: bool = True,
-) -> DataFrame:
-    """Two-phase (local top-k per partition → global top-k) kNN join —
-    mirrors FAISS's per-block heap + merge (SURVEY §4.3.2).
-
-    Delegates to :func:`knn_join`: Spark ≥3.5 plans the rank-window +
-    ``rank <= k`` filter as ``WindowGroupLimit`` with a **Partial** stage
-    BEFORE the exchange, i.e. each map partition forwards at most k rows
-    per query — the shuffle carries Q×k×P rows, not N×Q. That IS the
-    two-phase execution, natively, with zero extra operators; an earlier
-    hand-rolled phase-1 window keyed by ``spark_partition_id`` only added
-    a redundant second exchange of the same data (the window's partition
-    keys force a hash exchange regardless of how "local" the keys are).
-    The Partial WindowGroupLimit plan shape is pinned in
-    ``tests/test_plans.py``.
-    """
-    return knn_join(
-        corpus,
-        queries,
-        k=k,
-        metric=metric,
-        vec_col=vec_col,
-        id_col=id_col,
-        query_vec_col=query_vec_col,
-        query_id_col=query_id_col,
-        exclude_self=exclude_self,
     )
 
 
@@ -1189,6 +1157,7 @@ def mmr_rerank(
     return shortlist.groupBy(query_id_col).applyInPandas(rerank, out_schema)
 
 
+
 def knn_join_arrow_hamming(
     codes: DataFrame,
     query_ids: list[int],
@@ -1201,99 +1170,26 @@ def knn_join_arrow_hamming(
     of the binary-quantization tier (:func:`~.pq.bq_encode_cols`). Per
     Arrow batch: XOR each packed int64 half (``code_cols`` — dim/32 of
     them; two at 64-D) against every query's halves, SWAR popcount
-    (numpy 1.x has no ``bitwise_count``), per-query exact
-    (hamming, id) selection — a batch scans 16 BYTES per corpus row
-    (vs 256 for the float32 flat kernel), so at 100 TB the Hamming
-    rescore tier reads 6% of the flat tier's bytes at memory-bandwidth
-    throughput.
+    (:func:`_popcount`), per-query exact (hamming, id) selection — a
+    batch scans 16 BYTES per corpus row (vs 256 for the float32 flat
+    kernel), so at 100 TB the Hamming rescore tier reads 6% of the flat
+    tier's bytes at memory-bandwidth throughput.
 
     EXACTNESS (stronger than :func:`knn_join_arrow`'s contract):
     distances are small INTEGERS (no BLAS ulps, no rounding), and ties
     are COMMON, so each batch emits its k-smallest distances PLUS every
-    row tying the k-boundary exactly (a vectorized argpartition +
-    boundary-inclusive mask — one pass for the whole query set, never
-    a per-query Python sort loop: at serving Q≈256 the lexsort form
-    cost ~10× the popcount itself); the global window then ranks by
-    (hamming ASC, id ASC), so the result is bit-identical to the
-    expression form (``bq_hamming`` + TakeOrderedAndProject), pinned
-    in tests/test_ann.py. Output: (query_id, id_col, hamming, rank).
+    row tying the k-boundary exactly (the exact :func:`_cut` — one
+    vectorized pass for the whole query set, never a per-query Python
+    sort loop: at serving Q≈256 the lexsort form cost ~10× the popcount
+    itself); the global window then ranks by (hamming ASC, id ASC), so
+    the result is bit-identical to the expression form (``bq_hamming`` +
+    TakeOrderedAndProject), pinned in tests/test_ann.py. Output:
+    (query_id, id_col, hamming, rank).
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
-
-    qids = np.asarray(query_ids, dtype=np.int64)
-    qc = np.asarray(query_codes, dtype=np.uint64)  # Q × n_halves
-    n_halves = len(code_cols)
-    if (
-        qc.ndim != 2
-        or qc.shape[0] != len(qids)
-        or qc.shape[1] != n_halves
-        or len(qids) == 0
-    ):
-        raise ValueError(
-            f"query_codes must be a non-empty Q×{n_halves} matrix "
-            "matching code_cols"
-        )
-
-    id_field = next(f for f in codes.schema.fields if f.name == id_col)
-    schema = StructType(
-        [
-            StructField("query_id", LongType(), False),
-            id_field,
-            StructField("hamming", IntegerType(), False),
-        ]
+    qids, qc, _ = _queries(
+        query_ids, query_codes, dtype=np.uint64, width=len(code_cols)
     )
-    codes = codes.select(id_col, *code_cols)
-
-    def popcnt64(x: "np.ndarray") -> "np.ndarray":
-        # SWAR popcount (Hacker's Delight §5-1) on the uint64 array
-        # directly — measured 4.4× the 256-entry byte-LUT form, which
-        # expands every word to 8 bytes and pays a fancy-index gather
-        # per byte (the gather, not the XOR, dominated serving epochs)
-        x = x - ((x >> np.uint64(1)) & np.uint64(0x5555555555555555))
-        x = (x & np.uint64(0x3333333333333333)) + (
-            (x >> np.uint64(2)) & np.uint64(0x3333333333333333)
-        )
-        x = (x + (x >> np.uint64(4))) & np.uint64(0x0F0F0F0F0F0F0F0F)
-        return (
-            (x * np.uint64(0x0101010101010101)) >> np.uint64(56)
-        ).astype(np.int64)
-
-    def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf[id_col].to_numpy()
-            # B×Q XOR per half, SWAR popcount, summed over halves
-            d = None
-            for h, col in enumerate(code_cols):
-                half = pdf[col].to_numpy().astype(np.int64).view(np.uint64)
-                dh = popcnt64(half[:, None] ^ qc[None, :, h])
-                d = dh if d is None else d + dh
-            kk = min(k, d.shape[0])
-            # integer distances: the k-boundary tie set is EXACT (no
-            # rounding quantum needed) — emit k rows plus every
-            # boundary tie per query in one vectorized mask, and let
-            # the global (hamming, id) window cut deterministically
-            part = np.argpartition(d, kk - 1, axis=0)[:kk]
-            bound = np.take_along_axis(d, part, axis=0).max(axis=0)
-            ri, qi = np.nonzero(d <= bound[None, :])
-            yield pd.DataFrame(
-                {
-                    "query_id": qids[qi],
-                    id_col: ids[ri],
-                    "hamming": d[ri, qi].astype(np.int32),
-                }
-            )
-
-    cand = codes.mapInPandas(score, schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("hamming").asc(), F.col(id_col).asc()
-    )
-    return cand.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _hamming_topk(codes, qids, qc, None, k, id_col, code_cols, None)
 
 
 def knn_join_arrow_hamming_ivf(
@@ -1308,7 +1204,8 @@ def knn_join_arrow_hamming_ivf(
 ) -> DataFrame:
     """Composed BQ×IVF serving kernel — Hamming scan WITHIN probed
     inverted lists: :func:`knn_join_arrow_hamming` with
-    :func:`knn_join_arrow_ivf`'s per-query list masking. This is the
+    :func:`knn_join_arrow_ivf`'s per-query list masking (the flat
+    kernel is this one's single-group case). This is the
     production shape the bq_tier measurement points at
     (SERVE_LATENCY.json): the two tiers' levers MULTIPLY — IVF prunes
     which lists are read at all (at 100 TB, unprobed lists never leave
@@ -1322,99 +1219,12 @@ def knn_join_arrow_hamming_ivf(
     Exactness contract of the Hamming kernel (integer distances, all
     k-boundary ties emitted, global (hamming, id) rank window);
     recall is the IVF nprobe curve × the BQ sign-quantization curve
-    (RECALL_CURVE.json prices both). Output:
-    (query_id, id_col, hamming, rank ≤ k)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
-
-    qids = np.asarray(query_ids, dtype=np.int64)
-    qc = np.asarray(query_codes, dtype=np.uint64)
-    n_halves = len(code_cols)
-    if (
-        qc.ndim != 2
-        or qc.shape[0] != len(qids)
-        or qc.shape[1] != n_halves
-        or len(qids) == 0
-    ):
-        raise ValueError(
-            f"query_codes must be a non-empty Q×{n_halves} matrix "
-            "matching code_cols"
-        )
-    if len(probe_sets) != len(qids):
-        raise ValueError("probe_sets must align with query_ids")
-    by_cent: dict[int, "np.ndarray"] = {}
-    for qi, probes in enumerate(probe_sets):
-        for c in dict.fromkeys(int(c) for c in probes):
-            by_cent.setdefault(c, []).append(qi)
-    by_cent = {c: np.asarray(v, dtype=np.int64) for c, v in by_cent.items()}
-    union_probes = sorted(by_cent)
-    if not union_probes:
-        # all-empty probe sets would silently return an empty result
-        # (isin([]) filters every row) — fail loudly like the other
-        # degenerate-input guards
-        raise ValueError("every probe set is empty — nothing to scan")
-
-    id_field = next(f for f in layout.schema.fields if f.name == id_col)
-    schema = StructType(
-        [
-            StructField("query_id", LongType(), False),
-            id_field,
-            StructField("hamming", IntegerType(), False),
-        ]
+    (RECALL_CURVE.json prices both). ``ValueError`` if every probe set
+    is empty. Output: (query_id, id_col, hamming, rank ≤ k)."""
+    qids, qc, groups = _queries(
+        query_ids, query_codes, probe_sets, dtype=np.uint64, width=len(code_cols)
     )
-    pruned = layout.filter(
-        F.col(centroid_col).isin(union_probes)
-    ).select(id_col, centroid_col, *code_cols)
-
-    def popcnt64(x: "np.ndarray") -> "np.ndarray":
-        # same SWAR form as knn_join_arrow_hamming
-        x = x - ((x >> np.uint64(1)) & np.uint64(0x5555555555555555))
-        x = (x & np.uint64(0x3333333333333333)) + (
-            (x >> np.uint64(2)) & np.uint64(0x3333333333333333)
-        )
-        x = (x + (x >> np.uint64(4))) & np.uint64(0x0F0F0F0F0F0F0F0F)
-        return (
-            (x * np.uint64(0x0101010101010101)) >> np.uint64(56)
-        ).astype(np.int64)
-
-    def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cents = pdf[centroid_col].to_numpy()
-            for c in np.unique(cents):
-                qsel = by_cent.get(int(c))
-                if qsel is None:
-                    continue
-                sub = pdf[cents == c]
-                ids = sub[id_col].to_numpy()
-                d = None
-                for h, col in enumerate(code_cols):
-                    half = (
-                        sub[col].to_numpy().astype(np.int64).view(np.uint64)
-                    )
-                    dh = popcnt64(half[:, None] ^ qc[qsel][None, :, h])
-                    d = dh if d is None else d + dh
-                kk = min(k, d.shape[0])
-                part = np.argpartition(d, kk - 1, axis=0)[:kk]
-                bound = np.take_along_axis(d, part, axis=0).max(axis=0)
-                ri, qi = np.nonzero(d <= bound[None, :])
-                yield pd.DataFrame(
-                    {
-                        "query_id": qids[qsel][qi],
-                        id_col: ids[ri],
-                        "hamming": d[ri, qi].astype(np.int32),
-                    }
-                )
-
-    cand = pruned.mapInPandas(score, schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("hamming").asc(), F.col(id_col).asc()
-    )
-    return cand.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
+    return _hamming_topk(layout, qids, qc, groups, k, id_col, code_cols, centroid_col)
 
 
 def knn_join_arrow_hamming_ivf_rescored(
@@ -1453,8 +1263,8 @@ def knn_join_arrow_hamming_ivf_rescored(
 
     The rescore stage is pure Catalyst (broadcast the tiny shortlist,
     ``zip_with``/``aggregate`` left-fold in codegen) — no second
-    Python/Arrow hop. Exactness contract of the exact kernels: rank
-    window on (round(dist, 6), id). Output:
+    Python/Arrow hop — ending in the shared rank window on
+    (round(dist, 6), id). Output:
     (query_id, id_col, dist, rank ≤ k) with ``dist`` the exact L2
     recomputed in double — RAW, callers round for display.
     """
@@ -1462,23 +1272,18 @@ def knn_join_arrow_hamming_ivf_rescored(
         raise ValueError(f"overfetch must be >= 1, got {overfetch}")
     if len(query_vecs) != len(query_ids):
         raise ValueError("query_vecs must align with query_ids")
-    short = knn_join_arrow_hamming_ivf(
-        codes,
-        query_ids,
-        query_codes,
-        probe_sets,
-        k=k * overfetch,
-        id_col=id_col,
-        code_cols=code_cols,
-        centroid_col=centroid_col,
+    qids, qc, groups = _queries(
+        query_ids, query_codes, probe_sets, dtype=np.uint64, width=len(code_cols)
     )
-    union_probes = sorted({int(c) for ps in probe_sets for c in ps})
+    short = _hamming_topk(
+        codes, qids, qc, groups, k * overfetch, id_col, code_cols, centroid_col
+    )
     qdf = local_frame(
         floats.sparkSession,
         [(int(q), [float(x) for x in v]) for q, v in zip(query_ids, query_vecs)],
         "query_id long, __qv array<double>",
     )
-    pruned = floats.filter(F.col(centroid_col).isin(union_probes)).select(
+    pruned = floats.filter(F.col(centroid_col).isin(sorted(groups))).select(
         id_col, vec_col
     )
     resc = (
@@ -1499,11 +1304,6 @@ def knn_join_arrow_hamming_ivf_rescored(
             ),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.round(F.col("dist"), 6).asc(), F.col(id_col).asc()
-    )
-    return (
-        resc.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", id_col, "dist", "rank")
+    return _rank(resc, k, id_col, rounded=True).select(
+        "query_id", id_col, "dist", "rank"
     )

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from .functions.vector import array_lit, l2_dist, truncate_renormalize
 from .operators.ann import ivf_search, write_ivf_index
-from .operators.knn import knn_join_two_phase
+from .operators.knn import knn_join
 from .sources.tables import load_table
 
 EMB_DIM = 64  # driver fixture embeddings are 64-D unit float vectors
@@ -593,13 +593,14 @@ FROM pairs WHERE sim > {threshold}
 
 
 def q_knn_two_phase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same result contract as ``knn_join_topk`` (window-rank pattern) via
-    the two-phase local/global top-k — shuffles Q·k·P rows instead of N·Q."""
+    """Top-3 neighbors of 8 corpus rows by :func:`~.operators.knn.knn_join`,
+    whose rank filter plans as the two-phase local/global top-k
+    (``WindowGroupLimit``) — shuffles Q·k·P rows instead of N·Q."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    out = knn_join_two_phase(emb, queries, k=3, metric="l2")
+    out = knn_join(emb, queries, k=3, metric="l2")
     return out.select(
         "query_id",
         F.col("vec_id").alias("neighbor_id"),
@@ -1201,7 +1202,7 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     class) and the greedy's score arithmetic mirrors the oracle
     op-for-op on those rounded doubles, so selections and scores match
     bit-for-bit."""
-    from .operators.knn import knn_join, mmr_rerank
+    from .operators.knn import mmr_rerank
 
     emb = load_table(spark, sf_dir, "embeddings")
     qdf = emb.filter(F.col("vec_id") < MMR_N_QUERIES).select(

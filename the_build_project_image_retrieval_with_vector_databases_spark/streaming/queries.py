@@ -127,9 +127,7 @@ def interval_join(
     sides plus the time-range predicate are what lets Spark expire join
     state (without them the view buffer grows forever) — state per key is
     bounded by watermark + lag. Works identically on batch DataFrames
-    (the twin the test compares against; the batch *aggregate* form was
-    the oracle-checked ``views_before_purchase``, retired r9 with
-    ``asof_join`` as its registered sibling)."""
+    (the twin the test compares against)."""
     p = purchases.withWatermark("ts", f"{watermark_s} seconds").select(
         F.col("user_id").alias("p_user"),
         F.col("event_id").alias("purchase_id"),
@@ -180,6 +178,73 @@ def serve_loop(
     return writer.start()
 
 
+def _payload_pool(
+    df: DataFrame, id_col: str, vec_col: str, payload_pool: int, what: str
+) -> tuple[list[int], list[list[float]]]:
+    """The rate loops' request payloads: (ids, vectors) of the
+    ``payload_pool`` lowest-id rows of ``df``. A stand-in for real
+    requests, which carry their own vectors; one
+    ``TakeOrderedAndProject`` collect of pool×D floats, so driver memory
+    is O(pool·D) whatever the corpus size. Pooled vectors are real corpus
+    rows, so scored distances keep the corpus' neighbor structure, and
+    the emitted query ids are the rows' REAL ids, so rank-1 self-hits
+    hold for any id space (sparse or dense)."""
+    rows = (
+        df.select(id_col, vec_col)
+        .orderBy(F.col(id_col).asc())
+        .limit(payload_pool)
+        .collect()
+    )
+    if not rows:
+        raise ValueError(f"{what} is empty — nothing to serve")
+    return [int(r[0]) for r in rows], [list(r[1]) for r in rows]
+
+
+def _rate_loop(
+    spark,
+    rows_per_second: int,
+    trigger_ms: int,
+    pool_size: int,
+    search: Callable[[list[int]], DataFrame],
+    sink: Callable[[DataFrame, int], None] | None,
+    latencies: list | None,
+) -> StreamingQuery:
+    """Start the rate-source serving loop the ``serve_loop_rate*``
+    tiers share. Each microbatch maps its arrivals onto pool positions
+    (``value % pool_size``), ``search`` answers the sorted distinct
+    positions, the answer goes to ``sink`` (a noop write without one),
+    and the END-TO-END latency of the batch (oldest arrival timestamp →
+    results materialized) is appended to ``latencies``."""
+    import time
+
+    def score_batch(batch: DataFrame, epoch_id: int) -> None:
+        # one job reads the arrival floor AND answers the empty check —
+        # a separate isEmpty() costs a whole extra job per epoch, real
+        # money when the trigger interval is the latency budget
+        agg = batch.agg(
+            F.min("timestamp").alias("t0"),
+            F.collect_list(F.col("value") % pool_size).alias("qids"),
+        ).first()
+        if agg.t0 is None:
+            return
+        out = search(sorted(set(int(v) for v in agg.qids)))
+        if sink is not None:
+            sink(out, epoch_id)
+        else:
+            out.write.format("noop").mode("overwrite").save()
+        if latencies is not None:
+            latencies.append(time.time() - agg.t0.timestamp())
+
+    return (
+        spark.readStream.format("rate")
+        .option("rowsPerSecond", rows_per_second)
+        .load()
+        .writeStream.foreachBatch(score_batch)
+        .trigger(processingTime=f"{trigger_ms} milliseconds")
+        .start()
+    )
+
+
 def serve_loop_rate(
     spark,
     corpus: DataFrame,
@@ -215,42 +280,19 @@ def serve_loop_rate(
     pool is HARNESS state (real requests carry vectors) and is
     SCALE-HONEST: the ``payload_pool`` lowest-id corpus vectors, one
     ``TakeOrderedAndProject`` collect of pool×D floats at loop start —
-    driver memory is O(pool·D) regardless of corpus size (never the
-    r7 full-corpus O(N·D) collect). Pooled vectors are real corpus
+    driver memory is O(pool·D) regardless of corpus size, never a
+    full-corpus O(N·D) collect. Pooled vectors are real corpus
     rows, so scored distances keep the corpus' neighbor structure; the
     measured path (:func:`knn_join_arrow`) is unchanged."""
-    import time
-
     from ..operators.knn import knn_join_arrow
 
     corpus = corpus.cache()
-    pool_rows = (
-        corpus.select(id_col, vec_col)
-        .orderBy(F.col(id_col).asc())
-        .limit(payload_pool)
-        .collect()
+    pool_ids, payload = _payload_pool(
+        corpus, id_col, vec_col, payload_pool, "corpus"
     )
-    # pooled (corpus id, vector) pairs — emitted query_ids are the REAL
-    # ids of the pooled rows, so rank-1 self-hits hold for any id space
-    # (sparse or dense), not just 0..N-1 fixtures
-    pool_ids = [int(r[0]) for r in pool_rows]
-    payload = [list(r[1]) for r in pool_rows]
-    n = len(payload)
-    if n == 0:
-        raise ValueError("corpus is empty — nothing to serve")
 
-    def score_batch(batch: DataFrame, epoch_id: int) -> None:
-        # one job reads the arrival floor AND answers the empty check —
-        # a separate isEmpty() costs a whole extra job per epoch, real
-        # money when the trigger interval is the latency budget
-        agg = batch.agg(
-            F.min("timestamp").alias("t0"),
-            F.collect_list(F.col("value") % n).alias("qids"),
-        ).first()
-        if agg.t0 is None:
-            return
-        qidx = sorted(set(int(v) for v in agg.qids))
-        out = knn_join_arrow(
+    def search(qidx: list[int]) -> DataFrame:
+        return knn_join_arrow(
             corpus,
             [pool_ids[q] for q in qidx],
             [payload[q] for q in qidx],
@@ -259,20 +301,10 @@ def serve_loop_rate(
             vec_col=vec_col,
             exclude_self=False,
         )
-        if sink is not None:
-            sink(out, epoch_id)
-        else:
-            out.write.format("noop").mode("overwrite").save()
-        if latencies is not None:
-            latencies.append(time.time() - agg.t0.timestamp())
 
-    return (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", rows_per_second)
-        .load()
-        .writeStream.foreachBatch(score_batch)
-        .trigger(processingTime=f"{trigger_ms} milliseconds")
-        .start()
+    return _rate_loop(
+        spark, rows_per_second, trigger_ms, len(payload), search, sink,
+        latencies,
     )
 
 
@@ -327,8 +359,8 @@ def serve_loop_rate_ivf(
     flat Arrow/BLAS scan replaced by the inverted-list kernel
     (:func:`~..operators.knn.knn_join_arrow_ivf`) over the materialized
     ``partitionBy(centroid)`` layout. This is the engine's answer to
-    "what serves the rates past the flat-scan knee" (VERDICT r8/r9/r10
-    #3): per epoch, only the probed inverted lists are READ (parquet
+    "what serves the rates past the flat-scan knee": per epoch, only
+    the probed inverted lists are READ (parquet
     partition pruning — at 100 TB the unprobed corpus never leaves
     storage) and each list is scored only against the queries probing
     it, so per-epoch multiply-adds drop by ~nprobe/k_cents at the
@@ -357,8 +389,6 @@ def serve_loop_rate_ivf(
     ``.cache()`` calls would otherwise accumulate in executor storage
     memory with no release path); call :func:`release_layout_cache`
     when a sweep is done with a path."""
-    import time
-
     from ..operators.ann import nearest_centroids
     from ..operators.knn import knn_join_arrow_ivf
 
@@ -370,28 +400,13 @@ def serve_loop_rate_ivf(
             _LAYOUT_CACHE[cache_key] = layout
     else:
         layout = spark.read.parquet(layout_path)
-    pool_rows = (
-        layout.select(id_col, vec_col)
-        .orderBy(F.col(id_col).asc())
-        .limit(payload_pool)
-        .collect()
+    pool_ids, payload = _payload_pool(
+        layout, id_col, vec_col, payload_pool, "layout"
     )
-    pool_ids = [int(r[0]) for r in pool_rows]
-    payload = [list(r[1]) for r in pool_rows]
-    n = len(payload)
-    if n == 0:
-        raise ValueError("layout is empty — nothing to serve")
     pool_probes = [nearest_centroids(centroids, v, nprobe) for v in payload]
 
-    def score_batch(batch: DataFrame, epoch_id: int) -> None:
-        agg = batch.agg(
-            F.min("timestamp").alias("t0"),
-            F.collect_list(F.col("value") % n).alias("qids"),
-        ).first()
-        if agg.t0 is None:
-            return
-        qidx = sorted(set(int(v) for v in agg.qids))
-        out = knn_join_arrow_ivf(
+    def search(qidx: list[int]) -> DataFrame:
+        return knn_join_arrow_ivf(
             layout,
             [pool_ids[q] for q in qidx],
             [payload[q] for q in qidx],
@@ -401,20 +416,10 @@ def serve_loop_rate_ivf(
             vec_col=vec_col,
             exclude_self=False,
         )
-        if sink is not None:
-            sink(out, epoch_id)
-        else:
-            out.write.format("noop").mode("overwrite").save()
-        if latencies is not None:
-            latencies.append(time.time() - agg.t0.timestamp())
 
-    return (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", rows_per_second)
-        .load()
-        .writeStream.foreachBatch(score_batch)
-        .trigger(processingTime=f"{trigger_ms} milliseconds")
-        .start()
+    return _rate_loop(
+        spark, rows_per_second, trigger_ms, len(payload), search, sink,
+        latencies,
     )
 
 
@@ -455,8 +460,6 @@ def serve_loop_rate_bq(
     the BQ curve (sign quantization), not exact — production rescores
     the Hamming shortlist with full floats (``pq_rerank_topk``'s
     pattern); this loop measures the shortlist scan itself."""
-    import time
-
     from ..operators.knn import knn_join_arrow_hamming
     from ..operators.pq import (
         bq_encode_cols,
@@ -464,18 +467,10 @@ def serve_loop_rate_bq(
         bq_train_thresholds,
     )
 
-    pool_rows = (
-        corpus.select(id_col, vec_col)
-        .orderBy(F.col(id_col).asc())
-        .limit(payload_pool)
-        .collect()
+    pool_ids, payload = _payload_pool(
+        corpus, id_col, vec_col, payload_pool, "corpus"
     )
-    pool_ids = [int(r[0]) for r in pool_rows]
-    payload = [list(r[1]) for r in pool_rows]
-    n = len(payload)
-    if n == 0:
-        raise ValueError("corpus is empty — nothing to serve")
-    train = payload[: min(train_n, n)]
+    train = payload[: min(train_n, len(payload))]
     thr = bq_train_thresholds(train)
     halves = bq_encode_cols(thr, len(train), vec_col)
     names = [f"bq_h{i}" for i in range(len(halves))]
@@ -499,15 +494,8 @@ def serve_loop_rate_bq(
         code_cache.append(codes)
     pool_codes = [bq_encode_query(v, thr, len(train)) for v in payload]
 
-    def score_batch(batch: DataFrame, epoch_id: int) -> None:
-        agg = batch.agg(
-            F.min("timestamp").alias("t0"),
-            F.collect_list(F.col("value") % n).alias("qids"),
-        ).first()
-        if agg.t0 is None:
-            return
-        qidx = sorted(set(int(v) for v in agg.qids))
-        out = knn_join_arrow_hamming(
+    def search(qidx: list[int]) -> DataFrame:
+        return knn_join_arrow_hamming(
             codes,
             [pool_ids[q] for q in qidx],
             [pool_codes[q] for q in qidx],
@@ -515,20 +503,10 @@ def serve_loop_rate_bq(
             id_col=id_col,
             code_cols=tuple(names),
         )
-        if sink is not None:
-            sink(out, epoch_id)
-        else:
-            out.write.format("noop").mode("overwrite").save()
-        if latencies is not None:
-            latencies.append(time.time() - agg.t0.timestamp())
 
-    return (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", rows_per_second)
-        .load()
-        .writeStream.foreachBatch(score_batch)
-        .trigger(processingTime=f"{trigger_ms} milliseconds")
-        .start()
+    return _rate_loop(
+        spark, rows_per_second, trigger_ms, len(payload), search, sink,
+        latencies,
     )
 
 
@@ -562,7 +540,7 @@ def serve_loop_rate_bq_ivf(
     packed-code parquet layout the centroid INSET filter is partition
     pruning). Harness contract identical to the other rate loops.
 
-    ``rescore_overfetch`` (r14) turns on the PRODUCTION shape: Hamming
+    ``rescore_overfetch`` turns on the PRODUCTION shape: Hamming
     shortlist at ``k·rescore_overfetch`` within probed lists → exact
     float re-rank of the shortlist
     (:func:`~..operators.knn.knn_join_arrow_hamming_ivf_rescored`).
@@ -571,8 +549,6 @@ def serve_loop_rate_bq_ivf(
     scale only shortlist rows inside already-probed lists are
     fetched). Recall at the measured operating point is priced in
     RECALL_CURVE.json ``bq_ivf_rescored``."""
-    import time
-
     from ..operators.ann import nearest_centroids
     from ..operators.knn import (
         knn_join_arrow_hamming_ivf,
@@ -585,18 +561,10 @@ def serve_loop_rate_bq_ivf(
     )
 
     layout = spark.read.parquet(layout_path)
-    pool_rows = (
-        layout.select(id_col, vec_col)
-        .orderBy(F.col(id_col).asc())
-        .limit(payload_pool)
-        .collect()
+    pool_ids, payload = _payload_pool(
+        layout, id_col, vec_col, payload_pool, "layout"
     )
-    pool_ids = [int(r[0]) for r in pool_rows]
-    payload = [list(r[1]) for r in pool_rows]
-    n = len(payload)
-    if n == 0:
-        raise ValueError("layout is empty — nothing to serve")
-    train = payload[: min(train_n, n)]
+    train = payload[: min(train_n, len(payload))]
     thr = bq_train_thresholds(train)
     halves = bq_encode_cols(thr, len(train), vec_col)
     names = [f"bq_h{i}" for i in range(len(halves))]
@@ -632,22 +600,18 @@ def serve_loop_rate_bq_ivf(
     pool_codes = [bq_encode_query(v, thr, len(train)) for v in payload]
     pool_probes = [nearest_centroids(centroids, v, nprobe) for v in payload]
 
-    def score_batch(batch: DataFrame, epoch_id: int) -> None:
-        agg = batch.agg(
-            F.min("timestamp").alias("t0"),
-            F.collect_list(F.col("value") % n).alias("qids"),
-        ).first()
-        if agg.t0 is None:
-            return
-        qidx = sorted(set(int(v) for v in agg.qids))
+    def search(qidx: list[int]) -> DataFrame:
+        ids = [pool_ids[q] for q in qidx]
+        qcodes = [pool_codes[q] for q in qidx]
+        probes = [pool_probes[q] for q in qidx]
         if rescore_overfetch is not None:
-            out = knn_join_arrow_hamming_ivf_rescored(
+            return knn_join_arrow_hamming_ivf_rescored(
                 codes,
                 floats,
-                [pool_ids[q] for q in qidx],
+                ids,
                 [payload[q] for q in qidx],
-                [pool_codes[q] for q in qidx],
-                [pool_probes[q] for q in qidx],
+                qcodes,
+                probes,
                 k=k,
                 overfetch=rescore_overfetch,
                 id_col=id_col,
@@ -655,31 +619,20 @@ def serve_loop_rate_bq_ivf(
                 code_cols=tuple(names),
                 centroid_col=centroid_col,
             )
-        else:
-            out = knn_join_arrow_hamming_ivf(
-                codes,
-                [pool_ids[q] for q in qidx],
-                [pool_codes[q] for q in qidx],
-                [pool_probes[q] for q in qidx],
-                k=k,
-                id_col=id_col,
-                code_cols=tuple(names),
-                centroid_col=centroid_col,
-            )
-        if sink is not None:
-            sink(out, epoch_id)
-        else:
-            out.write.format("noop").mode("overwrite").save()
-        if latencies is not None:
-            latencies.append(time.time() - agg.t0.timestamp())
+        return knn_join_arrow_hamming_ivf(
+            codes,
+            ids,
+            qcodes,
+            probes,
+            k=k,
+            id_col=id_col,
+            code_cols=tuple(names),
+            centroid_col=centroid_col,
+        )
 
-    return (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", rows_per_second)
-        .load()
-        .writeStream.foreachBatch(score_batch)
-        .trigger(processingTime=f"{trigger_ms} milliseconds")
-        .start()
+    return _rate_loop(
+        spark, rows_per_second, trigger_ms, len(payload), search, sink,
+        latencies,
     )
 
 
