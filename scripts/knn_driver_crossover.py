@@ -1,10 +1,14 @@
-"""Where the driver path of the Arrow/BLAS kNN kernel stops paying.
+"""Where the kNN driver paths stop paying.
 
 Times ``operators.knn.knn_join_arrow`` (flat kernel, k=10) from call
 through ``.collect()`` on both of its paths — the driver path (bounds
 raised out of the way) and the distributed mapInPandas + rank-window
 plan (bounds set to 0) — over synthetic D-dimensional float32 parquet
-corpora of N rows in 8 files, for each requested (N, Q) cell. Each cell
+corpora of N rows in 8 files, for each requested (N, Q) cell. The Q=1
+cells time ``operators.knn.knn_single`` (l2, k=10) the same way: its
+driver path against its expression plan (``TakeOrderedAndProject``,
+recorded under ``distributed``), for N from 4k rows up to the byte
+bound. Each cell
 runs one warm-up call per path, then ``reps`` timed calls. Wall time is
 the caller's; CPU is that of this process and all its descendants (the
 driver, the JVM and its Python workers), read from /proc, so it runs on
@@ -17,10 +21,12 @@ driver may collect) and ``knn.ARROW_DRIVER_MAX_PAIRS`` (estimated rows ×
 queries); the cell list below brackets the pair bound from both sides at
 several Q.
 
-    python scripts/knn_driver_crossover.py [workdir] [reps]
+    python scripts/knn_driver_crossover.py [workdir] [reps] [batch|single|all]
 
 Writes KNN_DRIVER_CROSSOVER.json at the repo root: every timed run,
-plus per-cell medians.
+plus per-cell medians (``cells``/``runs`` for the batch kernel,
+``single_cells``/``single_runs`` for Q=1). A run of one kind keeps the
+other kind's section of an existing file.
 """
 
 from __future__ import annotations
@@ -57,6 +63,10 @@ CELLS = [
     (8192, 2000), (16384, 1000), (32768, 512), (65536, 256), (131072, 128),
     (61440, 512), (16384, 2000), (32768, 2000), (131072, 512),
 ]
+# Q=1 corpora for knn_single, 4k rows up to ~29 MiB of parquet (the byte
+# bound is 32 MiB; 61,440 rows measured 35 MiB)
+SINGLE_N = [4096, 8192, 16384, 24576, 32768, 40960, 49152]
+PATHS = (("driver", 1 << 62), ("distributed", 0))
 
 
 def tree_cpu_s() -> float:
@@ -103,56 +113,88 @@ def write_corpus(path: str, n: int, rng) -> None:
         )
 
 
+def time_paths(cell: dict, call, reps: int, runs: list) -> None:
+    """Per-path median wall and CPU of ``call()`` into ``cell``, every
+    timed run into ``runs``."""
+    for name, bound in PATHS:
+        knn.ARROW_DRIVER_MAX_BYTES = bound
+        knn.ARROW_DRIVER_MAX_PAIRS = bound
+        walls, cpus = [], []
+        for rep in range(reps + 1):
+            c0, t0 = tree_cpu_s(), time.perf_counter()
+            call()
+            wall, cpu = time.perf_counter() - t0, tree_cpu_s() - c0
+            if rep:
+                walls.append(round(wall, 3))
+                cpu = round(cpu, 3) if cpu >= 0 else None
+                if cpu is not None:
+                    cpus.append(cpu)
+                runs.append({**cell, "path": name, "rep": rep,
+                             "wall_s": walls[-1], "cpu_s": cpu})
+        cell[f"{name}_wall_s_p50"] = statistics.median(walls)
+        cell[f"{name}_cpu_s_p50"] = statistics.median(cpus)
+    cell["faster"] = min(
+        ("driver", "distributed"), key=lambda p: cell[f"{p}_wall_s_p50"]
+    )
+    print(json.dumps(cell), flush=True)
+
+
 def main() -> None:
     workdir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/knn_driver_crossover"
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 3
+    kinds = sys.argv[3] if len(sys.argv) > 3 else "all"
     spark = get_spark(app_name="knn-driver-crossover")
     rng = np.random.default_rng(0)
     queries = np.random.default_rng(1).standard_normal((max(q for _, q in CELLS), D))
-    paths = (("driver", 1 << 62), ("distributed", 0))
-    runs, cells = [], []
-    for n, q in CELLS:
-        path = os.path.join(workdir, f"n{n}")
-        if not os.path.exists(path):
-            write_corpus(path, n, rng)
-        corpus = spark.read.parquet(path)
-        size = knn._plan_size_bytes(corpus.select("vec_id", "embedding"))
-        cell = {"n": n, "q": q, "pairs": n * q, "relation_bytes": size}
-        for name, bound in paths:
-            knn.ARROW_DRIVER_MAX_BYTES = bound
-            knn.ARROW_DRIVER_MAX_PAIRS = bound
-            walls, cpus = [], []
-            for rep in range(reps + 1):
-                c0, t0 = tree_cpu_s(), time.perf_counter()
-                got = knn.knn_join_arrow(
-                    corpus, list(range(10**7, 10**7 + q)), queries[:q], k=K
-                ).collect()
-                wall, cpu = time.perf_counter() - t0, tree_cpu_s() - c0
-                assert len(got) == q * K
-                if rep:
-                    walls.append(round(wall, 3))
-                    cpu = round(cpu, 3) if cpu >= 0 else None
-                    if cpu is not None:
-                        cpus.append(cpu)
-                    runs.append({**cell, "path": name, "rep": rep,
-                                 "wall_s": walls[-1], "cpu_s": cpu})
-            cell[f"{name}_wall_s_p50"] = statistics.median(walls)
-            cell[f"{name}_cpu_s_p50"] = statistics.median(cpus)
-        cell["faster"] = min(
-            ("driver", "distributed"), key=lambda p: cell[f"{p}_wall_s_p50"]
-        )
-        print(json.dumps(cell), flush=True)
-        cells.append(cell)
     out = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "KNN_DRIVER_CROSSOVER.json",
     )
+    art = {}
+    if kinds != "all" and os.path.exists(out):
+        with open(out) as f:
+            art = json.load(f)
+
+    def corpus(n):
+        path = os.path.join(workdir, f"n{n}")
+        if not os.path.exists(path):
+            write_corpus(path, n, rng)
+        df = spark.read.parquet(path)
+        return df, knn._plan_size_bytes(df.select("vec_id", "embedding"))
+
+    if kinds in ("batch", "all"):
+        cells, runs = [], []
+        for n, q in CELLS:
+            df, size = corpus(n)
+            cell = {"n": n, "q": q, "pairs": n * q, "relation_bytes": size}
+
+            def batch():
+                got = knn.knn_join_arrow(
+                    df, list(range(10**7, 10**7 + q)), queries[:q], k=K
+                ).collect()
+                assert len(got) == q * K
+
+            time_paths(cell, batch, reps, runs)
+            cells.append(cell)
+        art.update(cells=cells, runs=runs, reps=reps)
+    if kinds in ("single", "all"):
+        cells, runs = [], []
+        for n in SINGLE_N:
+            df, size = corpus(n)
+            cell = {"n": n, "q": 1, "pairs": n, "relation_bytes": size}
+
+            def single():
+                assert len(knn.knn_single(df, queries[0], k=K).collect()) == K
+
+            time_paths(cell, single, reps, runs)
+            cells.append(cell)
+        art.update(single_cells=cells, single_runs=runs, single_reps=reps)
+    art.update(
+        dim=D, k=K, master=spark.sparkContext.master,
+        cpus=len(os.sched_getaffinity(0)),
+    )
     with open(out, "w") as f:
-        json.dump(
-            {"dim": D, "k": K, "master": spark.sparkContext.master,
-             "cpus": len(os.sched_getaffinity(0)), "reps": reps, "cells": cells, "runs": runs},
-            f, indent=1,
-        )
+        json.dump(art, f, indent=1)
 
 
 if __name__ == "__main__":

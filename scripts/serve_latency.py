@@ -467,7 +467,9 @@ def main_attrib() -> None:
 
     # the layers below are those of the distributed plan; a corpus under
     # the driver-path bound would otherwise be answered eagerly in the
-    # driver, and ``fixed.collect()`` would re-read a LocalRelation
+    # driver, and ``fixed.collect()`` would re-read a LocalRelation. The
+    # bound is the one every kNN driver path reads (the two BLAS kernels
+    # and knn_single), so 0 keeps this script timing distributed layers
     knn.ARROW_DRIVER_MAX_BYTES = 0
     corpus_dir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/spark_graft_scale100x"
     n_runs = int(sys.argv[3]) if len(sys.argv) > 3 else 15

@@ -4,7 +4,11 @@ IVF layout + partition-pruned probe."""
 
 from __future__ import annotations
 
+import contextlib
+import os
+
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from the_build_project_image_retrieval_with_vector_databases_spark.plans.index_build import (
@@ -140,3 +144,119 @@ def test_ivf_layout_roundtrip(spark, tmp_path):
     # full probe (nprobe == k) includes the query row itself at dist 0
     assert got[0].vec_id == qrow.vec_id
     assert abs(got[0].dist) < 1e-6
+
+
+def _files_per_list(path: str) -> dict[int, int]:
+    """Parquet data files in each ``centroid=<id>`` directory of an IVF
+    layout."""
+    out = {}
+    for d in sorted(os.listdir(path)):
+        if d.startswith("centroid="):
+            files = os.listdir(os.path.join(path, d))
+            out[int(d.split("=")[1])] = sum(f.endswith(".parquet") for f in files)
+    return out
+
+
+@contextlib.contextmanager
+def _session_conf(spark, confs: dict):
+    """Set session confs for the block, then put back what was there
+    (unset keys are unset again)."""
+    old = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+# lists far below the advisory partition size (Spark's 64MB default,
+# pinned because other tests lower it for the session)
+_SMALL_LISTS = {"spark.sql.adaptive.advisoryPartitionSizeInBytes": "64MB"}
+
+
+@pytest.mark.parametrize("aqe", ["true", "false"])
+def test_ivf_write_and_append_leave_one_file_per_list(spark, tmp_path, aqe):
+    """Each input partition used to write its own file into every list:
+    a 4-partition input left up to 4 files per list, and every append up
+    to one more per batch partition. With AQE on small lists share a
+    task; with it off the rebalance is a hash repartition on centroid.
+    Either way a list is one file."""
+    from the_build_project_image_retrieval_with_vector_databases_spark.operators.ann import (
+        append_to_ivf_index,
+        assign_centroids,
+        train_centroids,
+        write_ivf_index,
+    )
+
+    emb = _emb(spark)
+    base = emb.filter(F.col("vec_id") < 400).repartition(4)
+    extra = emb.filter(F.col("vec_id") >= 400).repartition(3)
+    assert base.rdd.getNumPartitions() == 4
+    cents = train_centroids(base, k=4, seed=42)
+    path = str(tmp_path / "ivf_lists")
+    touched = {
+        r.centroid
+        for r in assign_centroids(extra, cents).select("centroid").distinct().collect()
+    }
+    with _session_conf(spark, {**_SMALL_LISTS, "spark.sql.adaptive.enabled": aqe}):
+        write_ivf_index(base, path, cents)
+        written = _files_per_list(path)
+        append_to_ivf_index(extra, path, cents)
+    assert written and set(written.values()) == {1}, written
+    after = _files_per_list(path)
+    assert after == {c: written.get(c, 0) + (c in touched) for c in after}, after
+    # every row sits in the list assign_centroids gives it
+    got = {
+        (r.vec_id, r.centroid)
+        for r in spark.read.parquet(path).select("vec_id", "centroid").collect()
+    }
+    want = {
+        (r.vec_id, r.centroid)
+        for r in assign_centroids(emb, cents).select("vec_id", "centroid").collect()
+    }
+    assert got == want
+
+
+def test_ivf_write_splits_a_list_past_the_advisory_size(spark, tmp_path):
+    """A list larger than ``advisoryPartitionSizeInBytes`` is written by
+    several tasks, not funnelled into one: at scale a skewed list does
+    not land on one task."""
+    from the_build_project_image_retrieval_with_vector_databases_spark.operators.ann import (
+        train_centroids,
+        write_ivf_index,
+    )
+
+    emb = _emb(spark)
+    cents = train_centroids(emb, k=4, seed=42)
+    path = str(tmp_path / "ivf_split")
+    with _session_conf(
+        spark,
+        {
+            "spark.sql.adaptive.enabled": "true",
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes": "8KB",
+        },
+    ):
+        write_ivf_index(emb.repartition(4), path, cents)
+    assert max(_files_per_list(path).values()) > 1
+    assert spark.read.parquet(path).count() == emb.count()
+
+
+def test_build_index_ivf_leaves_one_file_per_list(spark, tmp_path):
+    """With partition coalescing off the build's last stage keeps every
+    shuffle partition, the many-task shape of a large input, and each
+    of them used to write its own file into every list."""
+    path = str(tmp_path / "ivf_build")
+    with _session_conf(
+        spark, {**_SMALL_LISTS, "spark.sql.adaptive.coalescePartitions.enabled": "false"}
+    ):
+        built = build_index(_emb(spark), out_path=path, per_class=20, ivf_k=4)
+    files = _files_per_list(path)
+    assert files and set(files.values()) == {1}, files
+    assert sorted(r.vec_id for r in spark.read.parquet(path).collect()) == sorted(
+        r.vec_id for r in built.collect()
+    )

@@ -136,17 +136,46 @@ def test_ngram_jaccard_no_scanfilter_tokenize(spark):
     assert "SortMergeJoin" in plan
 
 
-def test_ivf_topk_partition_pruned(spark):
+def test_ivf_topk_partition_pruned(spark, monkeypatch):
     """The benched IVF probe must run against the materialized
     partitioned layout with the centroid IN-filter applied as parquet
     *partition pruning* (nprobe/16 of the data read), self-exclusion
-    pushed to the scan, and a zero-shuffle TakeOrderedAndProject top-k."""
+    pushed to the scan, and a zero-shuffle TakeOrderedAndProject top-k.
+    This is the expression plan, which the driver path (bound forced to
+    0 here) falls back to above its bounds."""
+    from the_build_project_image_retrieval_with_vector_databases_spark.operators import (
+        knn,
+    )
+
+    monkeypatch.setattr(knn, "ARROW_DRIVER_MAX_BYTES", 0)
     df = entrymod.queries()["ivf_topk"](spark, SF_SMOKE)
     plan = _physical(df)
     assert re.search(r"PartitionFilters: \[.*centroid.*IN \(", plan)
     assert "Not(EqualTo(vec_id,0))" in plan  # self-exclusion pushed down
     assert "TakeOrderedAndProject" in plan
     assert "Exchange hashpartitioning" not in plan
+
+
+def test_ivf_topk_driver_path_reads_only_probed_lists(spark, monkeypatch):
+    """Within the driver-path bounds the same probe is ranked in the
+    driver, and the one ``toArrow()`` job behind it still prunes: its
+    scan carries the centroid IN-filter as a partition filter and the
+    self-exclusion as a pushed filter."""
+    frame_cls = type(spark.range(1))
+    read = []
+    to_arrow = frame_cls.toArrow
+
+    def spy(df):
+        read.append(_physical(df))
+        return to_arrow(df)
+
+    monkeypatch.setattr(frame_cls, "toArrow", spy)
+    df = entrymod.queries()["ivf_topk"](spark, SF_SMOKE)
+    assert "LocalTableScan" in _physical(df)
+    assert len(read) == 1
+    assert re.search(r"PartitionFilters: \[.*centroid.*IN \(", read[0])
+    assert "Not(EqualTo(vec_id,0))" in read[0]
+    assert len(df.collect()) == 5
 
 
 def test_pq_topk_scans_codes_only(spark):

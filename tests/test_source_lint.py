@@ -231,9 +231,13 @@ def _knn_skeleton_copies(source: str) -> dict[str, list[str]]:
 
 
 def test_knn_kernels_share_one_rank_step_popcount_and_left_fold():
-    found = _knn_skeleton_copies(
-        (_PKG / "operators" / "knn.py").read_text(encoding="utf-8")
-    )
+    """``operators/ann.py`` is read too: ``ivf_search_batch``, the
+    default ``search_batch(index="ivf")`` path, ranks with ``_rank``."""
+    found: dict[str, list[str]] = {}
+    for name in ("knn.py", "ann.py"):
+        source = (_PKG / "operators" / name).read_text(encoding="utf-8")
+        for kind, fns in _knn_skeleton_copies(source).items():
+            found.setdefault(kind, []).extend(f"{name}::{fn}" for fn in fns)
     assert {k: len(v) for k, v in found.items()} == {
         "row_number": 1,
         "popcount": 1,

@@ -7,7 +7,8 @@ ops so Catalyst's partition pruning does the index lookup:
 
 - **IVF (inverted file)**: KMeans centroids (MLlib) → every vector is
   assigned its nearest centroid id → table written
-  ``partitionBy("centroid")``. A query probes the ``nprobe`` nearest
+  ``partitionBy("centroid")``, one parquet file per list
+  (:func:`write_lists`). A query probes the ``nprobe`` nearest
   centroids; the centroid filter becomes *partition pruning* on the
   parquet scan — the FAISS ``IndexIVFFlat`` analogue, with Spark's
   storage layout as the inverted lists.
@@ -26,11 +27,12 @@ from __future__ import annotations
 import math
 
 import numpy as np
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vector import array_lit, l2_dist
 from ..sources.tables import local_frame
+from .knn import _rank, knn_single
 
 try:  # MLlib is in the base image; guard anyway for minimal installs
     from pyspark.ml.clustering import KMeans
@@ -521,18 +523,38 @@ def kmeans_train_exact(
     )
 
 
+def write_lists(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+    """Write ``df``, which carries a ``centroid`` column, as IVF
+    inverted lists: one ``centroid=<id>`` directory per list, holding
+    ONE parquet file per list, as FAISS holds each list as one array. A
+    plain ``partitionBy`` writes one file per list from every input
+    partition holding rows of it, so a search opens |lists| × |tasks|
+    files. With AQE on, a REBALANCE hint shuffles rows by ``centroid``
+    first: small lists are packed into shared tasks, so each list gets
+    one file, and a skewed list is split into files of about
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes``, so no list
+    lands on one task at scale. Spark ignores the hint with AQE off, so
+    then the shuffle is a hash repartition on ``centroid``: still one
+    file per list."""
+    if df.sparkSession.conf.get("spark.sql.adaptive.enabled").lower() == "true":
+        df = df.hint("rebalance", "centroid")
+    else:
+        df = df.repartition("centroid")
+    df.write.mode(mode).partitionBy("centroid").parquet(path)
+
+
 def write_ivf_index(
     df: DataFrame,
     path: str,
     centroids: list[list[float]],
     vec_col: str = "embedding",
 ) -> None:
-    """Materialize the IVF layout: embeddings partitioned by centroid —
-    the engine's replacement for ``faiss.write_index`` (S5; reference
+    """Materialize the IVF layout: embeddings partitioned by centroid,
+    one parquet file per inverted list (:func:`write_lists`) — the
+    engine's replacement for ``faiss.write_index`` (S5; reference
     ``utils/faiss_utils.py:11-13``). Partition pruning over this layout
     is the inverted-list probe."""
-    assigned = assign_centroids(df, centroids, vec_col)
-    assigned.write.mode("overwrite").partitionBy("centroid").parquet(path)
+    write_lists(assign_centroids(df, centroids, vec_col), path)
 
 
 def append_to_ivf_index(
@@ -546,11 +568,13 @@ def append_to_ivf_index(
     coarse quantizer and APPEND into the partitioned layout. Each append
     writes only its own partition files (existing files untouched);
     readers see the merged inverted lists on the next scan, and partition
-    pruning keeps working because the directory key is unchanged. Re-run
+    pruning keeps working because the directory key is unchanged. Like
+    the full write it goes through :func:`write_lists`, so an append adds
+    at most one file to each list it touches, whatever the batch's
+    partitioning (a shuffle of the batch buys that). Re-run
     :func:`train_centroids` + full rewrite only when drift degrades
     recall (same trade FAISS makes with a frozen coarse quantizer)."""
-    assigned = assign_centroids(df, centroids, vec_col)
-    assigned.write.mode("append").partitionBy("centroid").parquet(path)
+    write_lists(assign_centroids(df, centroids, vec_col), path, "append")
 
 
 def nearest_centroids(
@@ -578,7 +602,11 @@ def ivf_search(
     id_col: str = "vec_id",
     path: str | None = None,
 ) -> DataFrame:
-    """Probe the ``nprobe`` nearest centroid partitions, exact top-k inside.
+    """Probe the ``nprobe`` nearest centroid partitions, exact top-k
+    inside: the probe's IN-filter, then :func:`~.knn.knn_single`, which
+    holds the single-query top-k (and its driver path: within the
+    driver-path bounds the call is eager and the probed lists are
+    ranked in the driver).
 
     With ``path`` (the partitioned layout) the centroid IN-filter prunes
     parquet partitions — only nprobe/k of the corpus is read. Given a
@@ -593,12 +621,9 @@ def ivf_search(
         df = spark_or_df
         if "centroid" not in df.columns:
             df = assign_centroids(df, centroids, vec_col)
-    qlit = array_lit(q)
-    return (
-        df.filter(F.col("centroid").isin(probe))
-        .withColumn("dist", l2_dist(F.col(vec_col), qlit))
-        .orderBy(F.col("dist").asc(), F.col(id_col).asc())
-        .limit(k)
+    return knn_single(
+        df.filter(F.col("centroid").isin(probe)), q, k=k, vec_col=vec_col,
+        id_col=id_col,
     )
 
 
@@ -625,8 +650,6 @@ def ivf_search_batch(
     cross the one shuffle). At 100 TB: scan bytes amortize across the
     whole query batch and nothing but Q×k×P rows ever moves.
     """
-    from pyspark.sql import Window
-
     probe_sets = {
         int(qid): nearest_centroids(centroids, qvec, nprobe)
         for qid, qvec in queries
@@ -649,14 +672,7 @@ def ivf_search_batch(
     )
     if exclude_self:
         scored = scored.filter(F.col(id_col) != F.col("query_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist").asc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .drop("__qvec", "__probes")
-    )
+    return _rank(scored, k, id_col).drop("__qvec", "__probes")
 
 
 # ---------------------------------------------------------------------------

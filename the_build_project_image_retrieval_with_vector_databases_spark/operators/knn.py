@@ -13,7 +13,9 @@ Spark-first physical strategy:
   corpus scan + ``ORDER BY dist LIMIT k`` — Catalyst plans
   ``TakeOrderedAndProject``: per-partition top-k heaps, driver merge.
   Zero shuffle. This is exactly FAISS's flat-search heap merge,
-  distributed.
+  distributed. A driver-held query over a corpus within the driver-path
+  bounds is instead ranked in the driver after one ``toArrow()`` job,
+  with the same ``dist`` doubles and order (:func:`knn_single`).
 - **Query set** → ``crossJoin(broadcast(queries))`` (no shuffle of the
   corpus — the N×Q expansion streams through codegen) + per-query
   window rank. Spark ≥3.5 plans the rank filter as a two-phase
@@ -46,6 +48,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
     IntegerType,
+    IntegralType,
     LongType,
     StringType,
     StructField,
@@ -72,16 +75,22 @@ _QUERY_ID = StructField("query_id", LongType(), False)
 _DIST = StructField("dist", DoubleType(), False)
 
 
-def _score(metric: str, a, b) -> tuple[Column, bool]:
+def _metric(metric: str) -> tuple:
+    """(distance expression builder, ascending?) of ``metric``."""
     try:
-        fn, asc = _METRICS[metric]
+        return _METRICS[metric]
     except KeyError:
         raise ValueError(f"unknown metric {metric!r}; one of {sorted(_METRICS)}")
+
+
+def _score(metric: str, a, b) -> tuple[Column, bool]:
+    fn, asc = _metric(metric)
     return fn(a, b), asc
 
 
 # Driver-path bounds for the Arrow/BLAS kernels (knn_join_arrow,
-# knn_join_arrow_ivf). At or below both, the kernel's projection is
+# knn_join_arrow_ivf) and for knn_single, read there for one query. At or
+# below both, the kernel's projection is
 # collected with one toArrow() job, the kernel's own score generator runs
 # in the driver and the candidates are ranked there on the window's key;
 # otherwise the mapInPandas + rank-window plan runs unchanged. On a
@@ -264,18 +273,31 @@ def _blas(x, q, qn, metric):
     return (x @ q.T) / np.maximum(np.sqrt(qn)[None, :] * xn[:, None], 1e-12)
 
 
-def _left_fold(x, q):
-    """B×Q l2 distances accumulated ``acc ← acc + (x_j − q_j)²`` one
-    dimension at a time in float64: the same IEEE-754 operations in the
-    same order as the ``F.aggregate`` left fold of
-    ``functions.vector.l2_dist`` and DuckDB's ``list_reduce`` (float32 →
-    float64 widening is exact, and every sqrt is correctly rounded), so
-    the doubles are bit-identical to the expression path."""
+def _left_fold(x, q, metric="l2"):
+    """B×Q l2 distances, or cosine/dot similarities, of the rows ``x``
+    to the queries ``q``, accumulated ``acc ← acc + (x_j − q_j)²`` (or
+    ``acc + x_j·q_j``) one dimension at a time in float64: the same
+    IEEE-754 operations in the same order as the ``F.aggregate`` left
+    folds of ``functions.vector`` (``l2_dist``, ``dot``, and
+    ``cosine_sim``'s ``dot / greatest(l2_norm·l2_norm, 1e-12)``) and
+    DuckDB's ``list_reduce`` (float32 → float64 widening is exact, and
+    every sqrt is correctly rounded), so the doubles are bit-identical
+    to the expression path. A norm is the l2 fold to the origin:
+    ``v_j − 0.0`` is ``v_j`` exactly."""
     acc = np.zeros((x.shape[0], q.shape[0]))
     for j in range(q.shape[1]):
-        dj = x[:, j, None] - q[None, :, j]
-        acc = acc + dj * dj
-    return np.sqrt(acc)
+        if metric == "l2":
+            dj = x[:, j, None] - q[None, :, j]
+            acc = acc + dj * dj
+        else:
+            acc = acc + x[:, j, None] * q[None, :, j]
+    if metric == "l2":
+        return np.sqrt(acc)
+    if metric == "dot":
+        return acc
+    origin = np.zeros((1, q.shape[1]))
+    norms = _left_fold(x, origin) * _left_fold(q, origin).T
+    return acc / np.maximum(norms, 1e-12)
 
 
 def _popcount(x):
@@ -455,26 +477,80 @@ def _hamming_topk(df, qids, qc, groups, k, id_col, code_cols, centroid_col):
     return _rank(frame.mapInPandas(score, schema), k, id_col, key="hamming")
 
 
+def _driver_single(frame, q, k: int, metric: str, vec_col: str, id_col: str):
+    """The driver path of :func:`knn_single`: one ``toArrow()`` job of
+    every column of ``frame``, the :func:`_left_fold` distances of the
+    (N, D) float64 matrix of its vectors to ``q``, and the expression
+    path's order — ``dist`` (descending for cosine/dot), then ascending
+    id — by one ``np.lexsort``. Returns the k rows plus ``dist`` as an
+    Arrow ``LocalRelation``, or None where only the expression plan
+    gives the answer: a null vector, element or id, a vector whose
+    length is not D (its expression ``dist`` is null and sorts first),
+    or a NaN distance."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    schema = frame.schema
+    if not isinstance(schema[id_col].dataType, IntegralType):
+        return None
+    table = frame.toArrow()
+    vecs = table.column(vec_col).combine_chunks()
+    values, ids = vecs.flatten(), table.column(id_col)
+    if vecs.null_count or values.null_count or ids.null_count:
+        return None
+    n, dim = len(vecs), len(q)
+    if not (pc.list_value_length(vecs).to_numpy() == dim).all():
+        return None
+    x = values.to_numpy().astype(np.float64, copy=False).reshape(n, dim)
+    d = _left_fold(x, q[None, :], metric)[:, 0]
+    if np.isnan(d).any():
+        return None
+    top = np.lexsort((ids.to_numpy(), d if _METRICS[metric][1] else -d))[:k]
+    return local_frame(
+        frame.sparkSession,
+        table.take(top).append_column("dist", pa.array(d[top], pa.float64())),
+        StructType(schema.fields + [StructField("dist", DoubleType(), True)]),
+    )
+
+
 def knn_single(
     corpus: DataFrame,
-    query_vec: Column,
+    query_vec,
     k: int = 5,
     metric: str = "l2",
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     exclude_id=None,
 ) -> DataFrame:
-    """Top-k rows of ``corpus`` nearest to one query vector.
+    """Top-k rows of ``corpus`` nearest to one query vector: the corpus
+    columns plus ``dist``, best-first, ties broken by ascending id.
 
-    ``query_vec`` is a literal/broadcastable Column (e.g. ``F.lit(...)``
-    array or a scalar-subquery column). Plans as a single scan +
+    ``query_vec`` is driver-held values (a list or ndarray) or a
+    literal/broadcastable Column (e.g. ``F.lit(...)`` array or a
+    scalar-subquery column). A Column plans as a single scan +
     ``TakeOrderedAndProject`` — no shuffle, no UDF.
+
+    Driver-held values within the driver-path bounds of
+    :func:`knn_join_arrow` (read for one query) make the call EAGER:
+    :func:`_driver_single` collects the corpus with one ``toArrow()``
+    job and ranks it in the driver with the left fold, whose ``dist``
+    doubles and order are the expression plan's, bit for bit. Above the
+    bounds, or where the expression's answer has a null or NaN
+    ``dist``, the values become an :func:`array_lit` and the call plans
+    as a Column query does.
     """
-    score, asc = _score(metric, F.col(vec_col), query_vec)
+    fn, asc = _metric(metric)
     out = corpus
     if exclude_id is not None:
         out = out.filter(F.col(id_col) != F.lit(exclude_id))
-    out = out.withColumn("dist", score)
+    if not isinstance(query_vec, Column):
+        q = np.asarray(query_vec, dtype=np.float64)
+        if q.ndim == 1 and len(q) and _fits_driver(out, 1, len(q)):
+            top = _driver_single(out, q, k, metric, vec_col, id_col)
+            if top is not None:
+                return top
+        query_vec = array_lit(q.tolist())
+    out = out.withColumn("dist", fn(F.col(vec_col), query_vec))
     order = [F.col("dist").asc() if asc else F.col("dist").desc(), F.col(id_col).asc()]
     return out.orderBy(*order).limit(k)
 
@@ -576,9 +652,7 @@ def knn_join_arrow(
     (query_id, id_col, dist, rank) with ``dist`` RAW (callers round for
     display).
     """
-    _, asc = _METRICS.get(metric, (None, None))
-    if asc is None:
-        raise ValueError(f"unknown metric {metric!r}; one of {sorted(_METRICS)}")
+    _metric(metric)
     qids, qm, _ = _queries(query_ids, query_mat)
     return _blas_topk(
         corpus, qids, qm, None, k, metric, vec_col, id_col, None, exclude_self

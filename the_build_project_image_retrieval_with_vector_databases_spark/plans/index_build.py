@@ -19,7 +19,8 @@ Engine DAG (one lazy chain, one columnar sink):
 At 100 TB: the embed stage is embarrassingly parallel (no shuffle); the
 only shuffles are the sample's per-stratum rank and the final id window —
 both keyed well. The write is partitioned by centroid so later searches
-partition-prune.
+partition-prune, one parquet file per inverted list
+(``operators.ann.write_lists``).
 """
 
 from __future__ import annotations
@@ -78,12 +79,12 @@ def build_index(
     )
 
     if ivf_k > 0:
-        from ..operators.ann import assign_centroids, train_centroids
+        from ..operators.ann import assign_centroids, train_centroids, write_lists
 
         cents = train_centroids(indexed, k=ivf_k, vec_col=vec_col, seed=seed)
         indexed = assign_centroids(indexed, cents, vec_col)
         if out_path:
-            indexed.write.mode("overwrite").partitionBy("centroid").parquet(out_path)
+            write_lists(indexed, out_path)
         return indexed
 
     if out_path:

@@ -341,7 +341,7 @@ def _pq_layout(spark: SparkSession, sf_dir: str):
 # partitionBy(centroid) directories of (vec_id, label, code_0..7) rows.
 def _ivfpq_layout(spark: SparkSession, sf_dir: str):
     def build(emb, train, path, fresh):
-        from .operators.ann import assign_centroids
+        from .operators.ann import assign_centroids, write_lists
         from .operators.pq import pq_encode, slice_codebooks
 
         codebooks = slice_codebooks(train, PQ_M)
@@ -349,7 +349,7 @@ def _ivfpq_layout(spark: SparkSession, sf_dir: str):
             df = pq_encode(assign_centroids(emb, train), codebooks).select(
                 "vec_id", "label", "centroid", *[f"code_{j}" for j in range(PQ_M)]
             )
-            df.write.mode("overwrite").partitionBy("centroid").parquet(path)
+            write_lists(df, path)
         return path, train, codebooks, train[0]
 
     return _layout(spark, sf_dir, "ivfpq", build)

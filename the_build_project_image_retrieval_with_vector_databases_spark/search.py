@@ -22,7 +22,8 @@ change, exactly like swapping FAISS index factories.
 Scale notes per tier (each inherits its operator's audited plan):
 ``flat`` = zero-shuffle TakeOrderedAndProject over the corpus scan;
 ``ivf`` = centroid IN-filter → parquet partition pruning (nprobe/k of
-the corpus read); ``pq`` = same zero-shuffle top-k over 32×-smaller
+the corpus read; both answer small corpora in the driver, see
+:func:`search`); ``pq`` = same zero-shuffle top-k over 32×-smaller
 code columns; ``sq`` = ditto over int8 codes; ``bq`` = ditto over two
 packed-bit BIGINT halves (16 bytes/row, ``bit_count(xor)`` Hamming;
 serving twin ``knn_join_arrow_hamming``). Training artifacts
@@ -92,6 +93,17 @@ def search(
     value for flat; squared/approximate distances dequantized per tier),
     best-first, ties broken by ascending id.
 
+    The ``flat`` and ``ivf`` tiers answer through
+    :func:`~.operators.knn.knn_single`: when the relation it reads (the
+    corpus, or the layout for ``ivf``) is within the kNN driver-path
+    bounds (``operators.knn.ARROW_DRIVER_MAX_BYTES`` and
+    ``ARROW_DRIVER_MAX_PAIRS``, read for one query), the call is EAGER —
+    one ``toArrow()`` job reads the corpus (for ``ivf``, the probed
+    lists only), the driver ranks it with the expression's own left
+    fold, and the result is an Arrow ``LocalRelation`` whose
+    ``.collect()`` runs no further job. Rows and ``dist`` are the lazy
+    plan's, bit for bit; larger inputs return that plan unchanged.
+
     ``metric`` ("l2" | "cosine" | "dot") applies to the ``flat`` tier;
     the quantized tiers are L2-metric structures (same constraint as
     FAISS's IVF/PQ defaults) and raise on anything else rather than
@@ -124,8 +136,7 @@ def search(
 
     if index == "flat":
         return knn_single(
-            out, array_lit(query_vec), k=k, metric=metric,
-            vec_col=vec_col, id_col=id_col,
+            out, query_vec, k=k, metric=metric, vec_col=vec_col, id_col=id_col
         )
 
     if train_vectors is None:
