@@ -27,10 +27,14 @@ def skew_confs(spark):
     old = {k: spark.conf.get(k, None) for k in SKEW_CONFS}
     for k, v in SKEW_CONFS.items():
         spark.conf.set(k, v)
-    yield
-    for k, v in old.items():
-        if v is not None:
-            spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def test_aqe_splits_skewed_join(spark, skew_confs):
@@ -45,7 +49,13 @@ def test_aqe_splits_skewed_join(spark, skew_confs):
     dim = spark.range(0, 200).select(
         F.col("id").alias("k"), F.concat(F.lit("d"), F.col("id")).alias("name")
     )
-    joined = fact.join(dim, "k").groupBy("name").agg(F.count("*").alias("n"))
+    joined = (
+        fact.join(dim, "k")
+        .groupBy("name")
+        # read payload after the join, else column pruning drops it before
+        # the shuffle and only the (highly compressible) key is exchanged
+        .agg(F.count("*").alias("n"), F.max(F.length("payload")).alias("w"))
+    )
     rows = joined.collect()  # execute so AQE finalizes the plan
     plan = joined._jdf.queryExecution().executedPlan().toString()
     assert "skew=true" in plan, plan[:2000]
@@ -53,3 +63,6 @@ def test_aqe_splits_skewed_join(spark, skew_confs):
     got = {r.name: r.n for r in rows}
     assert got["d7"] == 24_000
     assert sum(got.values()) == 40_000
+    # the payload crossed the join: 64 "v"s plus a 5-digit key-7 id
+    w = {r.name: r.w for r in rows}
+    assert w["d7"] == 69

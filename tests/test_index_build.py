@@ -175,7 +175,7 @@ def _session_conf(spark, confs: dict):
 
 
 # lists far below the advisory partition size (Spark's 64MB default,
-# pinned because other tests lower it for the session)
+# pinned so the layout tests do not depend on the session's state)
 _SMALL_LISTS = {"spark.sql.adaptive.advisoryPartitionSizeInBytes": "64MB"}
 
 
