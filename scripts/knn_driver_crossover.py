@@ -8,7 +8,11 @@ corpora of N rows in 8 files, for each requested (N, Q) cell. The Q=1
 cells time ``operators.knn.knn_single`` (l2, k=10) the same way: its
 driver path against its expression plan (``TakeOrderedAndProject``,
 recorded under ``distributed``), for N from 4k rows up to the byte
-bound. Each cell
+bound. The append cells time ``operators.ann.append_to_ivf_index`` of
+an N-row batch into a 32-list layout the same way: its driver path
+(pyarrow writes) against Spark's writer (``write_lists``, recorded under
+``distributed``), for N from 256 rows up to the byte bound, each call
+into a fresh layout directory. Each cell
 runs one warm-up call per path, then ``reps`` timed calls. Wall time is
 the caller's; CPU is that of this process and all its descendants (the
 driver, the JVM and its Python workers), read from /proc, so it runs on
@@ -21,18 +25,20 @@ driver may collect) and ``knn.ARROW_DRIVER_MAX_PAIRS`` (estimated rows ×
 queries); the cell list below brackets the pair bound from both sides at
 several Q.
 
-    python scripts/knn_driver_crossover.py [workdir] [reps] [batch|single|all]
+    python scripts/knn_driver_crossover.py [workdir] [reps] [batch|single|append|all]
 
 Writes KNN_DRIVER_CROSSOVER.json at the repo root: every timed run,
 plus per-cell medians (``cells``/``runs`` for the batch kernel,
-``single_cells``/``single_runs`` for Q=1). A run of one kind keeps the
-other kind's section of an existing file.
+``single_cells``/``single_runs`` for Q=1, ``append_cells``/
+``append_runs`` for the append). A run of one kind keeps the other
+kinds' sections of an existing file.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import statistics
 import sys
 import time
@@ -45,6 +51,7 @@ os.environ.setdefault("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
 import numpy as np  # noqa: E402
 
 from the_build_project_image_retrieval_with_vector_databases_spark.operators import (  # noqa: E402
+    ann,
     knn,
 )
 from the_build_project_image_retrieval_with_vector_databases_spark.session import (  # noqa: E402
@@ -66,6 +73,10 @@ CELLS = [
 # Q=1 corpora for knn_single, 4k rows up to ~29 MiB of parquet (the byte
 # bound is 32 MiB; 61,440 rows measured 35 MiB)
 SINGLE_N = [4096, 8192, 16384, 24576, 32768, 40960, 49152]
+# append batches into a 32-list layout, the benchmark's 256 rows up to
+# the byte bound
+APPEND_N = [256, 1024, 4096, 16384, 49152]
+APPEND_LISTS = 32
 PATHS = (("driver", 1 << 62), ("distributed", 0))
 
 
@@ -113,14 +124,16 @@ def write_corpus(path: str, n: int, rng) -> None:
         )
 
 
-def time_paths(cell: dict, call, reps: int, runs: list) -> None:
+def time_paths(cell: dict, call, reps: int, runs: list, reset=None) -> None:
     """Per-path median wall and CPU of ``call()`` into ``cell``, every
-    timed run into ``runs``."""
+    timed run into ``runs``; ``reset()``, untimed, before each call."""
     for name, bound in PATHS:
         knn.ARROW_DRIVER_MAX_BYTES = bound
         knn.ARROW_DRIVER_MAX_PAIRS = bound
         walls, cpus = [], []
         for rep in range(reps + 1):
+            if reset is not None:
+                reset()
             c0, t0 = tree_cpu_s(), time.perf_counter()
             call()
             wall, cpu = time.perf_counter() - t0, tree_cpu_s() - c0
@@ -189,6 +202,22 @@ def main() -> None:
             time_paths(cell, single, reps, runs)
             cells.append(cell)
         art.update(single_cells=cells, single_runs=runs, single_reps=reps)
+    if kinds in ("append", "all"):
+        cells, runs = [], []
+        cents = np.random.default_rng(2).standard_normal((APPEND_LISTS, D)).tolist()
+        layout = os.path.join(workdir, "append_layout")
+        for n in APPEND_N:
+            df, size = corpus(n)
+            cell = {"n": n, "lists": APPEND_LISTS, "pairs": n * APPEND_LISTS,
+                    "relation_bytes": size}
+
+            def append():
+                ann.append_to_ivf_index(df, layout, cents)
+
+            time_paths(cell, append, reps, runs,
+                       reset=lambda: shutil.rmtree(layout, ignore_errors=True))
+            cells.append(cell)
+        art.update(append_cells=cells, append_runs=runs, append_reps=reps)
     art.update(
         dim=D, k=K, master=spark.sparkContext.master,
         cpus=len(os.sched_getaffinity(0)),

@@ -19,6 +19,9 @@ from the_build_project_image_retrieval_with_vector_databases_spark.plans.index_b
 from the_build_project_image_retrieval_with_vector_databases_spark.operators.ann import (
     ivf_search,
 )
+from the_build_project_image_retrieval_with_vector_databases_spark.operators import (
+    knn,
+)
 from the_build_project_image_retrieval_with_vector_databases_spark.functions.vector import (
     l2_norm,
 )
@@ -179,13 +182,12 @@ def _session_conf(spark, confs: dict):
 _SMALL_LISTS = {"spark.sql.adaptive.advisoryPartitionSizeInBytes": "64MB"}
 
 
-@pytest.mark.parametrize("aqe", ["true", "false"])
-def test_ivf_write_and_append_leave_one_file_per_list(spark, tmp_path, aqe):
-    """Each input partition used to write its own file into every list:
-    a 4-partition input left up to 4 files per list, and every append up
-    to one more per batch partition. With AQE on small lists share a
-    task; with it off the rebalance is a hash repartition on centroid.
-    Either way a list is one file."""
+def _append_adds_one_file_per_touched_list(spark, tmp_path, aqe, extra_parts):
+    """Write a 4-partition base layout, append the rest of the fixture
+    split into ``extra_parts`` partitions (None: the filtered scan as
+    is), and require one file per list after the write and one more per
+    list the batch touches after the append, every row in the list
+    ``assign_centroids`` gives it."""
     from the_build_project_image_retrieval_with_vector_databases_spark.operators.ann import (
         append_to_ivf_index,
         assign_centroids,
@@ -195,7 +197,9 @@ def test_ivf_write_and_append_leave_one_file_per_list(spark, tmp_path, aqe):
 
     emb = _emb(spark)
     base = emb.filter(F.col("vec_id") < 400).repartition(4)
-    extra = emb.filter(F.col("vec_id") >= 400).repartition(3)
+    extra = emb.filter(F.col("vec_id") >= 400)
+    if extra_parts is not None:
+        extra = extra.repartition(extra_parts)
     assert base.rdd.getNumPartitions() == 4
     cents = train_centroids(base, k=4, seed=42)
     path = str(tmp_path / "ivf_lists")
@@ -220,6 +224,25 @@ def test_ivf_write_and_append_leave_one_file_per_list(spark, tmp_path, aqe):
         for r in assign_centroids(emb, cents).select("vec_id", "centroid").collect()
     }
     assert got == want
+
+
+@pytest.mark.parametrize("aqe", ["true", "false"])
+def test_ivf_write_and_append_leave_one_file_per_list(spark, monkeypatch, tmp_path, aqe):
+    """Each input partition used to write its own file into every list:
+    a 4-partition input left up to 4 files per list, and every append up
+    to one more per batch partition. With AQE on small lists share a
+    task; with it off the rebalance is a hash repartition on centroid.
+    Either way a list is one file. A zero driver-path byte bound keeps
+    the append on Spark's writer (``write_lists``)."""
+    monkeypatch.setattr(knn, "ARROW_DRIVER_MAX_BYTES", 0)
+    _append_adds_one_file_per_touched_list(spark, tmp_path, aqe, extra_parts=3)
+
+
+@pytest.mark.parametrize("aqe", ["true", "false"])
+def test_ivf_driver_append_leaves_one_file_per_list(spark, tmp_path, aqe):
+    """The driver path's twin: a batch within the driver-path bounds is
+    appended by pyarrow, one file per list it touches."""
+    _append_adds_one_file_per_touched_list(spark, tmp_path, aqe, extra_parts=None)
 
 
 def test_ivf_write_splits_a_list_past_the_advisory_size(spark, tmp_path):

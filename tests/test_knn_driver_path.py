@@ -7,8 +7,9 @@ driver and ranked there; a larger one runs the mapInPandas + rank-window
 plan. Setting the constant to 0 forces the distributed plan, so every
 parity case below runs both paths on the same input and requires the
 same (query_id, id, rank), with ``dist`` within the 1e-6 rounding
-quantum of the rank key: the driver's BLAS may split the product over
-threads, which moves the low bits (up to ~1e-8 on a self or duplicate
+quantum of the rank key: BLAS accumulation order varies with a block's
+shape and its rows' positions, which differ between the two paths'
+batches; that moves the low bits (up to ~1e-8 on a self or duplicate
 row, where sqrt amplifies the cancellation), and the rank key absorbs
 that.
 """
@@ -431,3 +432,65 @@ def test_local_frame_plans_local_table_scan(spark, rows, schema):
     plan = _plan(df)
     assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
     assert [tuple(r) for r in df.collect()] == [tuple(r) for r in rows]
+
+
+def _blas_threads() -> int:
+    get, _ = knn._openblas_threads()
+    return get()
+
+
+@pytest.fixture
+def openblas():
+    """Skip where numpy links no OpenBLAS; put the thread count back."""
+    fns = knn._openblas_threads()
+    if fns is None:
+        pytest.skip("numpy has no OpenBLAS loaded")
+    get, put = fns
+    old = get()
+    yield
+    put(old)
+
+
+def test_driver_path_scores_on_one_blas_thread(
+    spark, monkeypatch, emb, fixture_queries, openblas
+):
+    """``_driver_topk`` runs the kernel's BLAS products on one OpenBLAS
+    thread, the count a Python-worker task gets, and restores the count
+    after."""
+    qids, qvecs = fixture_queries
+    _, put = knn._openblas_threads()
+    put(2)
+    seen = []
+    blas = knn._blas
+
+    def recording(*args):
+        seen.append(_blas_threads())
+        return blas(*args)
+
+    monkeypatch.setattr(knn, "_blas", recording)
+    assert len(knn.knn_join_arrow(emb, qids, qvecs, k=5).collect()) == 5 * len(qids)
+    assert seen and set(seen) == {1}
+    assert _blas_threads() == 2
+
+
+def test_blas_pin_restores_the_count_after_an_exception(openblas):
+    _, put = knn._openblas_threads()
+    put(2)
+    with pytest.raises(RuntimeError):
+        with knn._one_blas_thread():
+            assert _blas_threads() == 1
+            with knn._one_blas_thread():  # nested: one pin
+                assert _blas_threads() == 1
+            assert _blas_threads() == 1
+            raise RuntimeError("inside the pin")
+    assert _blas_threads() == 2
+
+
+def test_blas_pin_is_a_no_op_without_openblas(monkeypatch, openblas):
+    """With no OpenBLAS found the block runs and sets no count."""
+    get, put = knn._openblas_threads()
+    put(2)
+    monkeypatch.setattr(knn, "_openblas_threads", lambda: None)
+    with knn._one_blas_thread():
+        assert get() == 2
+    assert get() == 2

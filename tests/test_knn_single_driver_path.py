@@ -242,10 +242,12 @@ def test_single_search_is_one_job(spark, emb, ivf):
 
 # py4j round trips of one search(index="ivf") with exclude_id, from the
 # call through .collect(): 322 at the expression plan (most of them
-# building the distance's higher-order-function lambdas), 131 on the
-# driver path. Releases of garbage-collected JVM handles ("m" commands)
-# are not the call's own and are not counted.
-SEARCH_IVF_PY4J_CALLS = 150
+# building the distance's higher-order-function lambdas), 66 on the
+# driver path, whose probe and exclusion filters are one F.expr each
+# (with one F.lit per probed id and an F.lit comparison they took 131).
+# Releases of garbage-collected JVM handles ("m" commands) are not the
+# call's own and are not counted.
+SEARCH_IVF_PY4J_CALLS = 66
 
 
 def test_ivf_search_py4j_call_budget(spark, monkeypatch, ivf):
@@ -269,3 +271,26 @@ def test_ivf_search_py4j_call_budget(spark, monkeypatch, ivf):
     monkeypatch.setattr(ClientServerConnection, "send_command", counted)
     assert len(run()) == 10
     assert calls[0] <= SEARCH_IVF_PY4J_CALLS, calls[0]
+
+
+def _optimized(df: DataFrame) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+@pytest.mark.parametrize(
+    "values", [[3], [5, 1, 7, 2], list(range(0, 24, 2)), [2**40, -(2**40)]]
+)
+def test_isin_filter_plans_as_per_value_literals(spark, ivf, values):
+    """``knn._isin`` (one ``F.expr``) analyzes to the ``In`` / ``InSet``
+    of ``isin`` with one ``F.lit`` per value."""
+    layout, _ = ivf
+    assert _optimized(layout.filter(knn._isin("centroid", values))) == _optimized(
+        layout.filter(F.col("centroid").isin(values))
+    )
+
+
+@pytest.mark.parametrize("value", [5, np.int64(5), -3, 2**40, "5", 5.0])
+def test_not_equal_filter_plans_as_lit_comparison(spark, emb, value):
+    assert _optimized(emb.filter(knn._not_equal("vec_id", value))) == _optimized(
+        emb.filter(F.col("vec_id") != F.lit(value))
+    )

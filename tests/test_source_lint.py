@@ -18,6 +18,11 @@ at the top level of a ``queries*.py`` module must be a registry value
 (``QUERIES`` / ``ORACLES``): an unregistered wrapper is code no registry
 entry reaches.
 
+The IVF append's driver path (``operators/ann.py::_append_lists_driver``)
+holds the package's only direct pyarrow parquet write: every other
+write goes through Spark's writer, whose commit protocol and schema
+footer the layout's readers rely on.
+
 ``operators/knn.py`` keeps one skeleton for its kNN kernels: one
 function calls ``row_number`` (the rank step every kernel ends in), and
 the SWAR popcount and the bit-exact left fold are each written once, so
@@ -278,3 +283,58 @@ def test_knn_skeleton_lint_catches_planted_copies():
         "popcount": ["_popcount", "kernel"],
         "left_fold": ["_left_fold", "kernel"],
     }
+
+
+# pyarrow.parquet's writers: the function, the dataset form and the class
+_PARQUET_WRITERS = {"write_table", "write_to_dataset", "ParquetWriter"}
+
+
+def _parquet_writes(source: str) -> list[tuple[str, int]]:
+    """(enclosing top-level function or ``<module>``, line) of each call
+    of a pyarrow parquet writer in ``source``."""
+    hits = []
+    for top in ast.parse(source).body:
+        owner = top.name if isinstance(top, (ast.FunctionDef, ast.ClassDef)) else "<module>"
+        for node in ast.walk(top):
+            if (
+                isinstance(node, ast.Call)
+                and getattr(node.func, "attr", getattr(node.func, "id", None))
+                in _PARQUET_WRITERS
+            ):
+                hits.append((owner, node.func.end_lineno))
+    return hits
+
+
+def test_only_the_append_driver_path_writes_parquet_with_pyarrow():
+    found = [
+        (str(path.relative_to(_PKG)), owner)
+        for path in sorted(_PKG.rglob("*.py"))
+        for owner, _ in _parquet_writes(path.read_text(encoding="utf-8"))
+    ]
+    assert found == [("operators/ann.py", "_append_lists_driver")], found
+
+
+def test_parquet_write_lint_catches_planted_calls():
+    """Negative control: the function, dataset and class writers are
+    reported wherever they sit, wrapped or nested; a comment, a
+    docstring and a read are not."""
+    planted = (
+        "import pyarrow.parquet as pq\n"
+        "def _append_lists_driver(t, path):\n"
+        "    pq.write_table(t, path)\n"
+        "def spill(t, path):\n"
+        '    """pq.write_table(t, path)"""\n'
+        "    # pq.write_table(t, path)\n"
+        "    pq.read_table(path)\n"
+        "    def inner():\n"
+        "        return (\n            pq\n            .write_to_dataset(t, path))\n"
+        "    with pq.ParquetWriter(path, t.schema) as w:\n"
+        "        w.write(t)\n"
+        "write_table(t, 'x')\n"
+    )
+    assert _parquet_writes(planted) == [
+        ("_append_lists_driver", 3),
+        ("spill", 11),
+        ("spill", 12),
+        ("<module>", 14),
+    ]

@@ -25,14 +25,27 @@ weaker rows-only check for them (SURVEY §5.2).
 from __future__ import annotations
 
 import math
+import os
+import uuid
 
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    BinaryType,
+    BooleanType,
+    DoubleType,
+    FloatType,
+    IntegralType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from ..functions.vector import array_lit, l2_dist
 from ..sources.tables import local_frame
-from .knn import _rank, knn_single
+from .knn import _fits_driver, _isin, _left_fold, _rank, knn_single
 
 try:  # MLlib is in the base image; guard anyway for minimal installs
     from pyspark.ml.clustering import KMeans
@@ -557,6 +570,123 @@ def write_ivf_index(
     write_lists(assign_centroids(df, centroids, vec_col), path)
 
 
+# Column types the driver append writes with pyarrow: each one's parquet
+# type reads back as the same Spark type. Any other type (timestamp,
+# date, decimal, map, struct, nested array) takes Spark's writer.
+_NUMERIC_TYPES = (IntegralType, FloatType, DoubleType)
+_DRIVER_WRITE_TYPES = _NUMERIC_TYPES + (StringType, BinaryType, BooleanType)
+
+
+def _driver_writable(dt) -> bool:
+    if isinstance(dt, ArrayType):
+        dt = dt.elementType
+    return isinstance(dt, _DRIVER_WRITE_TYPES)
+
+
+def _local_dir(spark, path: str) -> str | None:
+    """The local directory ``path`` names when its Hadoop file system is
+    ``file``, else None."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    if fs.getScheme() != "file":
+        return None
+    return fs.makeQualified(jpath).toUri().getPath()
+
+
+def _append_lists_driver(
+    df: DataFrame, path: str, centroids: list[list[float]], vec_col: str
+) -> bool:
+    """The driver path of :func:`append_to_ivf_index`: one ``toArrow()``
+    job, each row's list by :func:`~.knn._left_fold` and a first-minimum
+    ``argmin`` (the doubles and the tie rule of :func:`assign_centroids`),
+    then one parquet file per touched list written by pyarrow under a
+    hidden name and renamed into ``centroid=<id>/``, and the cached data
+    of ``path`` refreshed, as Spark's writer does. The files carry
+    Spark's row-schema footer key, so ``spark.read.parquet`` reads the
+    same schema whichever file it takes it from.
+
+    Returns False, having written nothing, where Spark's writer must
+    answer: a column type outside :data:`_DRIVER_WRITE_TYPES` or a
+    non-numeric vector, a ``path`` whose Hadoop file system is not
+    ``file``, a batch past the kNN driver-path bounds read for its k
+    centroids, a null anywhere (a vector, an element, an id), a vector
+    whose length is not D (its expression distance is null) or a NaN
+    distance."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    cents = np.asarray(centroids, dtype=np.float64)
+    data = df.drop("centroid")  # partitionBy leaves it out of the files
+    types = {f.name: f.dataType for f in data.schema.fields}
+    vec_type = types.get(vec_col)
+    if not (
+        isinstance(vec_type, ArrayType)
+        and isinstance(vec_type.elementType, _NUMERIC_TYPES)
+        and all(_driver_writable(t) for t in types.values())
+    ):
+        return False
+    try:  # private JVM API: any failure takes Spark's writer
+        local = _local_dir(df.sparkSession, path)
+    except Exception:
+        return False
+    if local is None or not _fits_driver(df, len(cents), cents.shape[1]):
+        return False
+
+    table = data.toArrow()
+    vecs = table.column(vec_col).combine_chunks()
+    values = vecs.flatten()
+    n, dim = len(vecs), cents.shape[1]
+    if (
+        any(c.null_count for c in table.columns)
+        or values.null_count
+        or not (pc.list_value_length(vecs).to_numpy() == dim).all()
+    ):
+        return False
+    x = values.to_numpy().astype(np.float64, copy=False).reshape(n, dim)
+    dists = _left_fold(x, cents)
+    if np.isnan(dists).any():
+        return False
+    lists = dists.argmin(axis=1)
+
+    # Spark writes every column nullable, arrays with nullable elements
+    schema = StructType(
+        [
+            StructField(
+                f.name,
+                ArrayType(f.dataType.elementType, True)
+                if isinstance(f.dataType, ArrayType)
+                else f.dataType,
+                True,
+                f.metadata,
+            )
+            for f in data.schema.fields
+        ]
+    )
+    table = table.cast(
+        to_arrow_schema(schema).with_metadata(
+            {"org.apache.spark.sql.parquet.row.metadata": schema.json()}
+        )
+    )
+    for c in np.unique(lists):
+        list_dir = os.path.join(local, f"centroid={c}")
+        os.makedirs(list_dir, exist_ok=True)
+        name = f"part-{uuid.uuid4()}.c000.snappy.parquet"
+        tmp = os.path.join(list_dir, f".{name}.tmp")  # readers skip ".*"
+        try:
+            pq.write_table(
+                table.filter(pa.array(lists == c)), tmp,
+                compression="snappy", store_schema=False,
+            )
+            os.replace(tmp, os.path.join(list_dir, name))
+        finally:
+            if os.path.exists(tmp):
+                os.remove(tmp)
+    df.sparkSession.catalog.refreshByPath(path)
+    return True
+
+
 def append_to_ivf_index(
     df: DataFrame,
     path: str,
@@ -566,15 +696,25 @@ def append_to_ivf_index(
     """Incremental index maintenance — the answer to 'how do I add
     vectors without rebuilding?': assign the NEW batch to the existing
     coarse quantizer and APPEND into the partitioned layout. Each append
-    writes only its own partition files (existing files untouched);
-    readers see the merged inverted lists on the next scan, and partition
-    pruning keeps working because the directory key is unchanged. Like
-    the full write it goes through :func:`write_lists`, so an append adds
-    at most one file to each list it touches, whatever the batch's
-    partitioning (a shuffle of the batch buys that). Re-run
+    writes only its own files (existing files untouched) and adds at
+    most one file to each list it touches; readers see the merged
+    inverted lists on the next scan, and partition pruning keeps working
+    because the directory key is unchanged. Re-run
     :func:`train_centroids` + full rewrite only when drift degrades
-    recall (same trade FAISS makes with a frozen coarse quantizer)."""
-    write_lists(assign_centroids(df, centroids, vec_col), path, "append")
+    recall (same trade FAISS makes with a frozen coarse quantizer).
+
+    A batch within the kNN driver-path bounds (read for its k
+    centroids), on a layout on the local file system, is appended in
+    the driver (:func:`_append_lists_driver`), as FAISS's ``index.add``
+    runs in process: one ``toArrow()`` job, the assignment in numpy, one
+    pyarrow write per touched list. Spark's writer would add a rebalance
+    shuffle and a write job, and on the local file system Hadoop forks
+    a ``chmod`` for every directory, data file and checksum file it
+    makes when no native library is loaded. Every other batch goes
+    through :func:`write_lists` (a shuffle of the batch buys one file
+    per list). Both paths give every row the same list."""
+    if not _append_lists_driver(df, path, centroids, vec_col):
+        write_lists(assign_centroids(df, centroids, vec_col), path, "append")
 
 
 def nearest_centroids(
@@ -622,7 +762,7 @@ def ivf_search(
         if "centroid" not in df.columns:
             df = assign_centroids(df, centroids, vec_col)
     return knn_single(
-        df.filter(F.col("centroid").isin(probe)), q, k=k, vec_col=vec_col,
+        df.filter(_isin("centroid", probe)), q, k=k, vec_col=vec_col,
         id_col=id_col,
     )
 
@@ -665,7 +805,7 @@ def ivf_search_batch(
         "query_id long, __qvec array<double>, __probes array<int>",
     )
     scored = (
-        layout.filter(F.col("centroid").isin(union_probes))
+        layout.filter(_isin("centroid", union_probes))
         .crossJoin(F.broadcast(qdf))
         .filter(F.array_contains("__probes", F.col("centroid").cast("int")))
         .withColumn("dist", l2_dist(F.col(vec_col), F.col("__qvec")))

@@ -39,7 +39,10 @@ the scan stage, and only k rows per (query, partition) survive.
 
 from __future__ import annotations
 
+import contextlib
+import functools
 import sys
+import threading
 
 import numpy as np
 from pyspark import cloudpickle
@@ -88,6 +91,28 @@ def _score(metric: str, a, b) -> tuple[Column, bool]:
     return fn(a, b), asc
 
 
+def _sql_col(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _isin(col: str, values) -> Column:
+    """``F.col(col).isin(values)`` for integer ``values``, built by one
+    ``F.expr`` with the values as SQL literals: ``isin`` makes a py4j
+    round trip per value. The analyzed ``In`` is the same."""
+    values = [int(v) for v in values]
+    if not values:  # SQL has no empty IN list
+        return F.col(col).isin(values)
+    return F.expr(f"{_sql_col(col)} IN ({', '.join(map(str, values))})")
+
+
+def _not_equal(col: str, value) -> Column:
+    """``F.col(col) != F.lit(value)``, by one ``F.expr`` when ``value``
+    is an integer (the same analyzed ``NOT (col = value)``)."""
+    if isinstance(value, (int, np.integer)) and not isinstance(value, bool):
+        return F.expr(f"{_sql_col(col)} != {int(value)}")
+    return F.col(col) != F.lit(value)
+
+
 # Driver-path bounds for the Arrow/BLAS kernels (knn_join_arrow,
 # knn_join_arrow_ivf) and for knn_single, read there for one query. At or
 # below both, the kernel's projection is
@@ -106,10 +131,13 @@ def _score(metric: str, a, b) -> tuple[Column, bool]:
 # kernel's elementwise passes on one Python thread, the distributed plan
 # on every executor core, so past either bound the distributed plan
 # answers sooner. scripts/knn_driver_crossover.py measured both paths on
-# local[4] (4 vCPU; flat kernel, D=128, k=10; KNN_DRIVER_CROSSOVER.json):
-# every cell estimated at ≤ 6.3 Mi pairs ran faster in the driver, 14 of
-# the 15 estimated at ≥ 8.7 Mi ran faster distributed, and at Q=64 the
-# driver still won at 37 MiB but lost at 70 MiB.
+# local[4] (4 vCPU; flat kernel, D=128, k=10; KNN_DRIVER_CROSSOVER.json),
+# the driver's BLAS on one thread: every cell inside both bounds ran
+# faster in the driver, all 15 estimated at ≥ 8.7 Mi pairs ran faster
+# distributed, and at Q=64 the driver still won at 37 MiB but lost at 39
+# and 70 MiB. ann.append_to_ivf_index reads the same bounds for its k
+# centroids; its driver path beat Spark's writer in every cell up to the
+# byte bound.
 ARROW_DRIVER_MAX_BYTES = 32 << 20
 ARROW_DRIVER_MAX_PAIRS = 8 << 20
 
@@ -235,7 +263,7 @@ def _scan(df, id_col, cols, groups, centroid_col):
     |∪probes|/k_cents of the corpus leaves storage."""
     if groups is None:
         return df.select(id_col, *cols)
-    return df.filter(F.col(centroid_col).isin(sorted(groups))).select(
+    return df.filter(_isin(centroid_col, sorted(groups))).select(
         id_col, centroid_col, *cols
     )
 
@@ -371,13 +399,76 @@ def _rank(cand, k, id_col, key="dist", asc=True, rounded=False, by=("query_id",)
     )
 
 
+@functools.cache
+def _openblas_threads():
+    """``(get, set)`` of the thread count of the OpenBLAS loaded in this
+    process, or None when none is. NumPy's wheels bundle it as
+    ``libopenblas64_``, whose symbols end in ``64_``; a system build
+    exports the plain names. Only a library already mapped into the
+    process counts (``/proc/self/maps``), so this loads no second copy."""
+    import ctypes
+
+    try:
+        with open("/proc/self/maps") as f:
+            paths = sorted({ln.split()[-1] for ln in f if "openblas" in ln.lower()})
+    except OSError:
+        return None
+    for path in paths:
+        try:
+            lib = ctypes.CDLL(path)
+        except OSError:
+            continue
+        for suffix in ("64_", ""):
+            get = getattr(lib, f"openblas_get_num_threads{suffix}", None)
+            put = getattr(lib, f"openblas_set_num_threads{suffix}", None)
+            if get is not None and put is not None:
+                get.argtypes, get.restype = [], ctypes.c_int
+                put.argtypes, put.restype = [ctypes.c_int], None
+                return get, put
+    return None
+
+
+_BLAS_PIN_LOCK = threading.Lock()
+_blas_pin = {"depth": 0, "saved": None}
+
+
+@contextlib.contextmanager
+def _one_blas_thread():
+    """Run the block with OpenBLAS on one thread, then put back the count
+    it had; a no-op when no OpenBLAS is loaded. One thread is what a
+    Python-worker task gets (Spark sets a worker's ``OMP_NUM_THREADS`` to
+    ``spark.task.cpus``). On the driver path's small products the pool's
+    other threads only spin-wait after each GEMM. The count is process
+    state, so nested or concurrent blocks share one pin: the first in
+    saves the count, the last out restores it."""
+    fns = _openblas_threads()
+    if fns is None:
+        yield
+        return
+    get, put = fns
+    with _BLAS_PIN_LOCK:
+        if _blas_pin["depth"] == 0:
+            _blas_pin["saved"] = get()
+            put(1)
+        _blas_pin["depth"] += 1
+    try:
+        yield
+    finally:
+        with _BLAS_PIN_LOCK:
+            _blas_pin["depth"] -= 1
+            if _blas_pin["depth"] == 0:
+                put(_blas_pin["saved"])
+
+
 def _driver_topk(frame, score, schema, k: int, id_col: str, asc: bool):
     """The driver path of :func:`_arrow_topk`: one ``toArrow()`` job,
     ``score`` over the collected table in record batches of
     ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows (as
-    mapInPandas feeds it, so each step holds batch × Q distances), then
-    the window's rank — (round(dist, 6), id), descending key for
-    cosine/dot — in pandas. Returns an Arrow ``LocalRelation``."""
+    mapInPandas feeds it, so each step holds batch × Q distances) with
+    OpenBLAS on one thread (:func:`_one_blas_thread`), as a
+    Python-worker task runs it, then the window's rank —
+    (round(dist, 6), id), descending key for cosine/dot — in pandas.
+    Returns an Arrow ``LocalRelation``."""
     import pandas as pd
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
@@ -392,7 +483,8 @@ def _driver_topk(frame, score, schema, k: int, id_col: str, asc: bool):
         b.to_pandas()
         for b in table.to_batches(max_chunksize=step if step > 0 else None)
     )
-    parts = list(score(batches))
+    with _one_blas_thread():
+        parts = list(score(batches))
     if not parts:
         return local_frame(spark, [], out_schema)
     cand = pd.concat(parts, ignore_index=True)
@@ -542,7 +634,7 @@ def knn_single(
     fn, asc = _metric(metric)
     out = corpus
     if exclude_id is not None:
-        out = out.filter(F.col(id_col) != F.lit(exclude_id))
+        out = out.filter(_not_equal(id_col, exclude_id))
     if not isinstance(query_vec, Column):
         q = np.asarray(query_vec, dtype=np.float64)
         if q.ndim == 1 and len(q) and _fits_driver(out, 1, len(q)):
@@ -630,7 +722,8 @@ def knn_join_arrow(
     the estimate cannot be read, the call is lazy and plans the
     mapInPandas + rank window described above, unchanged. Both paths
     return the same (query_id, id, rank); ``dist`` may differ in its
-    low bits, as the driver's BLAS may split the product over threads.
+    low bits, as BLAS accumulation order varies with a block's shape and
+    its rows' positions, which differ between the paths' batches.
 
     Caveats vs the exact operator: BLAS accumulation order differs from
     the left fold, so raw distances carry ~1-ulp noise — including
@@ -1357,7 +1450,7 @@ def knn_join_arrow_hamming_ivf_rescored(
         [(int(q), [float(x) for x in v]) for q, v in zip(query_ids, query_vecs)],
         "query_id long, __qv array<double>",
     )
-    pruned = floats.filter(F.col(centroid_col).isin(sorted(groups))).select(
+    pruned = floats.filter(_isin(centroid_col, sorted(groups))).select(
         id_col, vec_col
     )
     resc = (

@@ -8,13 +8,20 @@ All oracle-checked; the fixture inputs live inside the package
 from __future__ import annotations
 
 import os
+import sys
 
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .sources.images import scan_image_folder
 from .sources.manifest import read_manifest
 from .sources.tables import load_table
+
+# _decode_rows_query's Python-worker closure is defined in this module.
+# A worker need not have the package on its path, so cloudpickle ships
+# the closure by value rather than importing this module there.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 _FIXTURES = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures")
 MANIFEST_PATH = os.path.join(_FIXTURES, "train_val.json")

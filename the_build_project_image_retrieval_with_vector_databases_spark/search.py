@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 
 from .functions.vector import array_lit
 from .operators.ann import ivf_search
-from .operators.knn import knn_single
+from .operators.knn import _not_equal, knn_single
 from .operators.pq import (
     pq_adc_topk,
     pq_encode,
@@ -132,7 +132,7 @@ def search(
 
     out = corpus
     if exclude_id is not None:
-        out = out.filter(F.col(id_col) != F.lit(exclude_id))
+        out = out.filter(_not_equal(id_col, exclude_id))
 
     if index == "flat":
         return knn_single(

@@ -24,11 +24,19 @@ the reference's PIL/torch bodies when those libraries are importable.
 from __future__ import annotations
 
 import hashlib
+import sys
 from collections.abc import Iterator
 
 import pandas as pd
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+# The Python-worker closures below call this module's functions. A
+# worker need not have the package on its path, so cloudpickle ships
+# the module's functions with each closure rather than importing them
+# there.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 # Optional real codecs/models — absent in this container; every consumer
 # takes a `decoder=`/loader argument so the stub stays the default for

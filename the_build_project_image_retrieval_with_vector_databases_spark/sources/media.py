@@ -23,10 +23,18 @@ Stub contracts (clearly marked, swapped at deploy time):
 from __future__ import annotations
 
 import hashlib
+import sys
 from collections.abc import Iterator
 
 import pandas as pd
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame
+
+# The Python-worker closures below call this module's functions. A
+# worker need not have the package on its path, so cloudpickle ships
+# the module's functions with each closure rather than importing them
+# there.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 STUB_FRAME_BYTES = 256
 STUB_FPS = 25.0
