@@ -1,64 +1,11 @@
-"""SA3 fixed-size batch iterator (DataLoader analogue) contract tests."""
+"""Training-batch layout contract tests: context-window packing and
+the SA3 canonical batch assignment (DataLoader analogue)."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from the_build_project_image_retrieval_with_vector_databases_spark.operators.batching import (
-    fixed_batches,
-)
 from .conftest import SF_SMOKE
-
-
-def _emb(spark):
-    return spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-
-
-def test_drop_last_exact_batches(spark):
-    out = fixed_batches(_emb(spark), batch_size=16, drop_last=True).cache()
-    sizes = (
-        out.groupBy("part_id", "batch_id").agg(F.count("*").alias("n")).collect()
-    )
-    assert len(sizes) > 0
-    assert all(r.n == 16 for r in sizes)
-    # no row appears twice
-    assert out.select("vec_id").distinct().count() == out.count()
-
-
-def test_keep_last_covers_everything(spark):
-    df = _emb(spark)
-    out = fixed_batches(df, batch_size=16, drop_last=False).cache()
-    assert out.count() == df.count()
-    sizes = [
-        r.n
-        for r in out.groupBy("part_id", "batch_id")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    ]
-    assert all(n <= 16 for n in sizes)
-    # at most one partial batch per partition
-    partials = (
-        out.groupBy("part_id", "batch_id")
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") < 16)
-        .groupBy("part_id")
-        .count()
-        .collect()
-    )
-    assert all(r["count"] == 1 for r in partials)
-
-
-def test_shuffle_is_deterministic(spark):
-    df = _emb(spark)
-    a = fixed_batches(df, batch_size=16, seed=1).select(
-        "vec_id", "part_id", "batch_id"
-    )
-    b = fixed_batches(df, batch_size=16, seed=1).select(
-        "vec_id", "part_id", "batch_id"
-    )
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-    c = fixed_batches(df, batch_size=16, seed=2).select("vec_id", "part_id", "batch_id")
-    assert sorted(map(tuple, a.collect())) != sorted(map(tuple, c.collect()))
 
 
 # ---------------------------------------------------------------------------

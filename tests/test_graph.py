@@ -74,13 +74,12 @@ def test_dedup_components_releases_all_cached_blocks(spark):
     assert jsc.getPersistentRDDs().size() == before
 
 
-def test_local_checkpoint_blocks_freed_without_jvm_gc(spark, monkeypatch):
-    """The default local-checkpoint loop frees every round's checkpoint
+def test_local_checkpoint_blocks_freed_without_jvm_gc(spark):
+    """The local-checkpoint loop frees every round's checkpoint
     blocks through the ``_jdf`` accessor in ``_free_checkpoint``: the
     persistent-RDD count is back to its starting value right after the
     call, with no JVM GC in between. Without that fast path the blocks
     would wait for the ContextCleaner, which only acts after a GC."""
-    monkeypatch.delenv("SPARK_GRAFT_CC_CHECKPOINT", raising=False)
     jsc = spark.sparkContext._jsc.sc()
     edges = [(i, i + 1) for i in range(1, 24)] + [(40, 41)]
     before = jsc.getPersistentRDDs().size()
@@ -88,33 +87,6 @@ def test_local_checkpoint_blocks_freed_without_jvm_gc(spark, monkeypatch):
     assert jsc.getPersistentRDDs().size() == before
     got = {r.node: r.comp for r in cc.collect()}
     assert got == {**{i: 1 for i in range(1, 25)}, 40: 40, 41: 40}
-
-
-def test_parquet_checkpoint_mode_matches_local(spark, monkeypatch):
-    """SPARK_GRAFT_CC_CHECKPOINT=parquet (the fault-tolerant per-round
-    checkpoint for real clusters) must produce the identical fixpoint
-    as the default localCheckpoint mode, and release its cached blocks
-    just the same."""
-    edges = [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (20, 21), (21, 22)]
-    # driver_max_edges=0 on both runs: this test pins the DISTRIBUTED
-    # loop's checkpoint modes against each other
-    want = {
-        r.node: r.comp
-        for r in connected_components(
-            _edges(spark, edges), driver_max_edges=0
-        ).collect()
-    }
-    monkeypatch.setenv("SPARK_GRAFT_CC_CHECKPOINT", "parquet")
-    jsc = spark.sparkContext._jsc.sc()
-    before = jsc.getPersistentRDDs().size()
-    got = {
-        r.node: r.comp
-        for r in connected_components(
-            _edges(spark, edges), driver_max_edges=0
-        ).collect()
-    }
-    assert got == want == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 6: 1, 20: 20, 21: 20, 22: 20}
-    assert jsc.getPersistentRDDs().size() == before
 
 
 def test_fused_round_fixpoint_matches_union_find_random_graphs(spark):

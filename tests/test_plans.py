@@ -422,11 +422,6 @@ def test_banded_candidate_joins_pin_shuffle_hash(spark):
     # the registered queries materialize through a spill (FileScan plan),
     # so pin the operator-level plans the spill consumes
     cases = {
-        "minhash_lsh_incremental": D.minhash_lsh_incremental(
-            docs.filter(F.col("doc_id") < 450),
-            docs.filter(F.col("doc_id") >= 450),
-            n=3, num_hashes=8, bands=4, threshold=0.5,
-        ),
         "radius_join_lsh": radius_join(
             emb, emb, radius=0.9, metric="cosine",
             blocking="lsh", planes=LSH_PLANES, n_bands=2,

@@ -1,6 +1,6 @@
 """Product quantization (operators.pq): encode/ADC structural contracts
-vs NumPy, recall floors vs the exact operator, the ADC→exact re-rank
-shape, and the (non-portable) per-subspace KMeans training path."""
+vs NumPy, recall floors vs the exact operator, and the ADC→exact re-rank
+shape."""
 
 from __future__ import annotations
 
@@ -17,7 +17,6 @@ from the_build_project_image_retrieval_with_vector_databases_spark.operators.pq 
     pq_adc_topk,
     pq_encode,
     slice_codebooks,
-    train_pq_codebooks_kmeans,
 )
 
 from .conftest import SF_SMOKE
@@ -148,18 +147,3 @@ def test_sq_topk_high_recall(spark, emb, emb_np):
     # codes are genuinely 8-bit
     row = enc.first()
     assert all(0 <= c <= 255 for c in row.sq_codes)
-
-
-def test_kmeans_codebooks_path(emb):
-    """The FAISS-style trained-codebook path: per-subspace MLlib KMeans,
-    codes in range, ADC search returns k rows (property-only — KMeans
-    isn't oracle-portable)."""
-    sub = emb.limit(200)
-    books = train_pq_codebooks_kmeans(sub, m=4, ksub=8, seed=42)
-    assert len(books) == 4 and all(len(b) == 8 for b in books)
-    enc = pq_encode(sub, books)
-    row = sub.first()
-    out = pq_adc_topk(enc, books, list(map(float, row.embedding)), k=5).collect()
-    assert len(out) == 5
-    for r in out:
-        assert all(0 <= r[f"code_{j}"] < 8 for j in range(4))

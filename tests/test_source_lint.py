@@ -28,6 +28,12 @@ function calls ``row_number`` (the rank step every kernel ends in), and
 the SWAR popcount and the bit-exact left fold are each written once, so
 a change to the rank, the Hamming distance or the exact distance is
 made in one place.
+
+Every public top-level function or class of the package is reached:
+some AST node of the package, ``bench.py``, ``__spark_entry__.py``,
+``scripts/`` or ``perfbench/`` names it. A definition only its own tests
+call is code the behavioural contract does not reach; the few kept on
+purpose are listed, each with its reason, in ``_UNREACHED_KEPT``.
 """
 
 from __future__ import annotations
@@ -337,4 +343,153 @@ def test_parquet_write_lint_catches_planted_calls():
         ("spill", 11),
         ("spill", 12),
         ("<module>", 14),
+    ]
+
+
+# Public names no package, bench, entry, script or perfbench code
+# references, kept on purpose. Each is reached from tests only.
+_UNREACHED_KEPT = {
+    # the search API's public entry point for hard-negative mining,
+    # alongside search() and search_batch()
+    "search.py::mine_negatives",
+    # streaming operators: kept until the four serve loops collapse into
+    # one, which decides which of them that loop reaches
+    "streaming/queries.py::streaming_tumbling_counts",
+    "streaming/queries.py::streaming_dedup",
+    "streaming/queries.py::streaming_slot_latest",
+    "streaming/queries.py::serve_loop",
+    "streaming/queries.py::ingest_dedup_loop",
+    "streaming/stateful.py::running_user_counters",
+    "streaming/stateful.py::batch_user_counters",
+    # the reference's image/media decode-and-embed path (its app.py
+    # upload → embed flow) as library functions
+    "sources/images.py::decode_images",
+    "sources/images.py::embed_images_torch",
+    "sources/images.py::embed_images_pure",
+    "sources/images.py::stub_embed_text",
+    "sources/media.py::resize_images",
+    "sources/media.py::audio_chunks",
+    # the exact pass that bloom_decontaminate's approximate screen hands
+    # its flagged documents to for confirmation
+    "operators/decontam.py::ngram_overlap",
+}
+
+
+def _docstring_nodes(tree: ast.AST) -> set[int]:
+    """ids of the string constants that are docstrings."""
+    out = set()
+    for node in ast.walk(tree):
+        if isinstance(
+            node, (ast.Module, ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+        ):
+            body = node.body
+            if (
+                body
+                and isinstance(body[0], ast.Expr)
+                and isinstance(body[0].value, ast.Constant)
+                and isinstance(body[0].value.value, str)
+            ):
+                out.add(id(body[0].value))
+    return out
+
+
+def _unreached(sources: dict[str, str], package: set[str]) -> list[str]:
+    """``path::name`` of each public top-level function or class defined
+    in a ``package`` source that no AST node of any source names: a
+    ``Name``, an ``Attribute`` or a whole string constant. A reference
+    inside the definition itself, a docstring, a comment and anything in
+    an ``__init__.py`` (re-exports) do not count."""
+    defs = []
+    refs = set()
+    for path, source in sources.items():
+        tree = ast.parse(source)
+        own = {}
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                own[node.name] = (node.lineno, node.end_lineno)
+                if path in package and not node.name.startswith("_"):
+                    defs.append((path, node.name))
+        if path.rsplit("/", 1)[-1] == "__init__.py":
+            continue
+        docs = _docstring_nodes(tree)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name):
+                name = node.id
+            elif isinstance(node, ast.Attribute):
+                name = node.attr
+            elif (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and id(node) not in docs
+            ):
+                name = node.value
+            else:
+                continue
+            span = own.get(name)
+            if span and span[0] <= node.lineno <= span[1]:
+                continue
+            refs.add(name)
+    return sorted(f"{path}::{name}" for path, name in defs if name not in refs)
+
+
+def _reach_sources() -> tuple[dict[str, str], set[str]]:
+    package = {
+        str(p.relative_to(_PKG)): p.read_text(encoding="utf-8")
+        for p in sorted(_PKG.rglob("*.py"))
+    }
+    others = [_ROOT / "bench.py", _ROOT / "__spark_entry__.py"]
+    others += sorted((_ROOT / "scripts").glob("*.py"))
+    others += sorted((_ROOT / "perfbench").glob("*.py"))
+    sources = dict(package)
+    for p in others:
+        sources[str(p.relative_to(_ROOT))] = p.read_text(encoding="utf-8")
+    return sources, set(package)
+
+
+def test_every_public_package_definition_is_reached():
+    sources, package = _reach_sources()
+    assert len(package) > 20, "package sources not found"
+    found = set(_unreached(sources, package))
+    assert found - _UNREACHED_KEPT == set(), (
+        "public definitions nothing outside tests reaches: "
+        + ", ".join(sorted(found - _UNREACHED_KEPT))
+    )
+    # a kept name that is now reached (or gone) leaves the set
+    assert _UNREACHED_KEPT - found == set(), sorted(_UNREACHED_KEPT - found)
+
+
+def test_unreached_lint_catches_planted_definitions():
+    """Negative control: an unreferenced function and class, a function
+    only its own body or a docstring/comment names, and one only an
+    ``__init__.py`` re-exports are reported; a called function, a
+    private one, and one a script looks up by string are not."""
+    planted = {
+        "ops.py": (
+            "def used():\n    return 1\n"
+            "def orphan():\n    return used()\n"
+            "class Orphan:\n    pass\n"
+            "def _private():\n    return None\n"
+            "def recursive(n):\n    return recursive(n - 1) if n else 0\n"
+            "def doc_only():\n"
+            '    """Not orphan(); see exported() and recursive()."""\n'
+            "    # doc_only() in a comment\n"
+            "    return None\n"
+            "def exported():\n    return None\n"
+            "def by_string():\n    return None\n"
+        ),
+        "__init__.py": (
+            "from .ops import exported  # noqa: F401\n"
+            "__all__ = ['exported', 'orphan']\n"
+        ),
+        "scripts/run.py": (
+            "import ops\n"
+            "fn = getattr(ops, 'by_string')\n"
+        ),
+    }
+    assert _unreached(planted, {"ops.py", "__init__.py"}) == [
+        "ops.py::Orphan",
+        "ops.py::doc_only",
+        "ops.py::exported",
+        "ops.py::orphan",
+        "ops.py::recursive",
     ]

@@ -225,48 +225,31 @@ def test_bm25_oracle_parity_staged(spark, sf_dir):
     assert ok, msg
 
 
-def test_kmeans_step_matches_numpy_reference(spark):
-    """Round-6 staged Lloyd step: quantized assignment and the new
-    centroid means agree bit-exactly with a numpy/pure-Python reference
-    (same floor-quantization, same first-min tie-break, same division
-    order) over the real embeddings fixture."""
+def _lloyd_round_py(rows, cents):
+    """One pure-Python Lloyd round over floor-quantized vectors: each
+    vector goes to the first-min argmin of integer L2² over ``cents``.
+    Returns {cid: (n_members, [Σ qv[d] per dim])} — exact integers."""
+    out: dict = {}
+    for qv in rows:
+        dists = [sum((a - b) * (a - b) for a, b in zip(qv, c)) for c in cents]
+        cid = dists.index(min(dists))  # first-min tie-break
+        n, acc = out.get(cid, (0, [0] * len(qv)))
+        out[cid] = (n + 1, [s + v for s, v in zip(acc, qv)])
+    return out
+
+
+def _floor_quantized_py(emb):
+    """floor(x·KMEANS_SCALE + 0.5) per dim of every vector, in id order."""
     import math
 
     from the_build_project_image_retrieval_with_vector_databases_spark.operators.ann import (
         KMEANS_SCALE,
-        kmeans_lloyd_step,
     )
 
-    k = 8
-    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-    got = {(r.cid, r.dim): r for r in kmeans_lloyd_step(emb, k=k).collect()}
-
-    rows = sorted(
-        (r.vec_id, [math.floor(float(x) * float(KMEANS_SCALE) + 0.5) for x in r.embedding])
-        for r in emb.collect()
-    )
-    cents = [qv for _, qv in rows[:k]]
-    sums: dict = {}
-    counts: dict = {}
-    for _, qv in rows:
-        dists = [sum((a - b) * (a - b) for a, b in zip(qv, c)) for c in cents]
-        cid = dists.index(min(dists))  # first-min tie-break
-        counts[cid] = counts.get(cid, 0) + 1
-        acc = sums.setdefault(cid, [0] * len(qv))
-        for i, v in enumerate(qv):
-            acc[i] += v
-    expect_keys = set()
-    for cid, acc in sums.items():
-        for dim, s in enumerate(acc):
-            expect_keys.add((cid, dim))
-            g = got[(cid, dim)]
-            assert g.n_members == counts[cid]
-            assert g.mean == (float(s) / float(counts[cid])) / float(KMEANS_SCALE), (
-                cid,
-                dim,
-            )
-    assert set(got) == expect_keys
-    assert len({cid for cid, _ in got}) >= 2, "degenerate clustering"
+    return [
+        [math.floor(float(x) * float(KMEANS_SCALE) + 0.5) for x in r.embedding]
+        for r in sorted(emb.collect(), key=lambda r: r.vec_id)
+    ]
 
 
 def test_kmeans_train_exact_matches_python_loop(spark):
@@ -285,33 +268,23 @@ def test_kmeans_train_exact_matches_python_loop(spark):
     emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
     got_cents, got_rounds = kmeans_train_exact(emb, k=k, max_iter=iters)
 
-    rows = sorted(
-        (r.vec_id, [math.floor(float(x) * float(KMEANS_SCALE) + 0.5) for x in r.embedding])
-        for r in emb.collect()
-    )
-    cents = [list(qv) for _, qv in rows[:k]]
+    rows = _floor_quantized_py(emb)
+    cents = [list(qv) for qv in rows[:k]]
     ref_rounds = 0
     for ref_rounds in range(1, iters + 1):
-        sums: dict = {}
-        counts: dict = {}
-        for _, qv in rows:
-            dists = [sum((a - b) * (a - b) for a, b in zip(qv, c)) for c in cents]
-            cid = dists.index(min(dists))
-            counts[cid] = counts.get(cid, 0) + 1
-            acc = sums.setdefault(cid, [0] * len(qv))
-            for i, v in enumerate(qv):
-                acc[i] += v
+        sums = _lloyd_round_py(rows, cents)
         new = []
         for cid in range(k):
             if cid in sums:
+                n, acc = sums[cid]
                 new.append(
                     [
                         math.floor(
-                            ((float(s) / float(counts[cid])) / float(KMEANS_SCALE))
+                            ((float(s) / float(n)) / float(KMEANS_SCALE))
                             * float(KMEANS_SCALE)
                             + 0.5
                         )
-                        for s in sums[cid]
+                        for s in acc
                     ]
                 )
             else:
@@ -325,15 +298,14 @@ def test_kmeans_train_exact_matches_python_loop(spark):
 
 
 def test_lloyd_round_partials_fold_and_agg_paths_agree(spark):
-    """r17 optimization internals: the training round's Arrow partial
-    sums return the identical {cid: (n, sums)} through BOTH driver-pull
-    shapes — the small-layout driver fold and the wide-layout k-row
-    Spark aggregate — and both match kmeans_lloyd_step's posexplode
-    aggregate (the pre-r17 round) on the same centroids."""
+    """The training round's Arrow partial sums return the identical
+    {cid: (n, sums)} through BOTH driver-pull shapes — the small-layout
+    driver fold and the wide-layout k-row Spark aggregate — and both
+    equal the pure-Python first-min integer-L2² round on the same
+    centroids."""
     from the_build_project_image_retrieval_with_vector_databases_spark.operators.ann import (
         KMEANS_SCALE,
         _lloyd_round_partials,
-        kmeans_lloyd_step,
         quantize_vec,
     )
 
@@ -348,27 +320,9 @@ def test_lloyd_round_partials_fold_and_agg_paths_agree(spark):
     agg = _lloyd_round_partials(q, init, n_parts=10_000)  # > threshold
     assert fold == agg
 
-    step = kmeans_lloyd_step(emb, k=k, centroids_q=init, pre_quantized=q)
-    ref: dict = {}
-    for r in step.collect():
-        n, s = ref.setdefault(r.cid, (r.n_members, [0] * len(init[0])))
-        assert n == r.n_members
-        # lloyd_step emits means; recover the integer sum it divided:
-        # mean = (s/n)/scale with exact operands, so s = the engine's
-        # sum iff round-tripping through the SAME double ops agrees —
-        # compare on the means instead to avoid re-deriving s
-        s[r.dim] = r.mean
-    got_means = {
-        cid: [
-            (float(s[d]) / float(n)) / float(KMEANS_SCALE)
-            for d in range(len(s))
-        ]
-        for cid, (n, s) in fold.items()
-    }
-    assert set(got_means) == set(ref)
-    for cid, means in got_means.items():
-        assert means == ref[cid][1], cid
-        assert fold[cid][0] == ref[cid][0]
+    ref = _lloyd_round_py(_floor_quantized_py(emb), init)
+    assert fold == ref
+    assert len(ref) >= 2, "degenerate clustering"
 
 
 def test_assign_cids_arrow_matches_literal_argmin(spark):
@@ -491,21 +445,6 @@ def test_kmeans_train_centroids_drive_ivf_assignment(spark):
     )
     assert {r.centroid for r in counts} == {0, 1, 2, 3}
     assert sum(r["count"] for r in counts) == emb.count()
-
-
-def test_kmeans_step_plan_single_update_shuffle(spark):
-    """Assignment is map-only (broadcast-literal centroids, no join);
-    the centroid update is the single hash exchange, keyed (cid, dim)
-    with map-side partial aggregation."""
-    from the_build_project_image_retrieval_with_vector_databases_spark.operators.ann import (
-        kmeans_lloyd_step,
-    )
-
-    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-    plan = kmeans_lloyd_step(emb)._jdf.queryExecution().executedPlan().toString()
-    assert "Join" not in plan
-    assert plan.count("Exchange hashpartitioning") == 1
-    assert "partial_count" in plan or "HashAggregate" in plan
 
 
 def test_bm25_plan_no_corpus_shuffle(spark):
@@ -1112,18 +1051,41 @@ def test_mmr_rerank_oracle_parity_staged(spark, sf_dir):
     assert ok, msg
 
 
+def _quality_score(df, text_col="text", id_col="doc_id"):
+    """Heuristic document quality per row: the ``quality_exprs``
+    signals (alpha-char ratio, mean token length band, stopword
+    presence) and their composite in [0, 1], as raw doubles."""
+    from the_build_project_image_retrieval_with_vector_databases_spark.functions.text import (
+        tokens,
+    )
+    from the_build_project_image_retrieval_with_vector_databases_spark.operators.textops import (
+        quality_exprs,
+    )
+    from the_build_project_image_retrieval_with_vector_databases_spark.sources.tables import (
+        spread,
+    )
+
+    alpha_ratio, mean_tok_len, stop_ratio, score = quality_exprs(
+        F.col(text_col), tokens(text_col)
+    )
+    return spread(df).select(
+        F.col(id_col),
+        alpha_ratio.alias("alpha_ratio"),
+        mean_tok_len.alias("mean_tok_len"),
+        stop_ratio.alias("stop_ratio"),
+        score.alias("quality"),
+    )
+
+
 def test_dedup_keep_best_matches_reference(spark):
-    """Staged r8: per-cluster best-quality representative — cluster
-    membership must match dedup_components' rosters and the pick must
-    be the max-quality member (ties → lowest id), recomputed from the
-    quality_score operator's output."""
+    """Per-cluster best-quality representative — cluster membership
+    must match dedup_components' rosters and the pick must be the
+    max-quality member (ties → lowest id), recomputed from
+    ``_quality_score``."""
     import collections
 
     import __spark_entry__ as entrymod
 
-    from the_build_project_image_retrieval_with_vector_databases_spark.operators.textops import (
-        quality_score,
-    )
     from the_build_project_image_retrieval_with_vector_databases_spark.queries_text import (
         q_dedup_keep_best,
     )
@@ -1136,7 +1098,7 @@ def test_dedup_keep_best_matches_reference(spark):
     comp_rows = entrymod.queries()["dedup_components"](spark, SF_SMOKE).collect()
     qual = {
         r.doc_id: r.quality
-        for r in quality_score(
+        for r in _quality_score(
             spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
         ).collect()
     }
@@ -3484,241 +3446,6 @@ def test_exact_substring_dedup_oracle_parity_staged(spark, sf_dir):
     assert ok, msg
 
 
-def _entropy_py(rows, thr):
-    """Single-threaded mirror of operators.textops.token_entropy under
-    the integer micro-nat quantization contract."""
-    import math
-    from collections import Counter
-
-    out = {}
-    for i, t in rows:
-        toks = [x for x in t.lower().split() if x]
-        if not toks:
-            continue
-        cnt = Counter(toks)
-        n = sum(cnt.values())
-        s_q = sum(c * round(math.log(c) * 1e6) for c in cnt.values())
-        ent = round(math.log(n) * 1e6) - s_q // n
-        out[i] = (n, len(cnt), ent, ent < thr)
-    return out
-
-
-def test_token_entropy_matches_python_reference(spark):
-    """Integer micro-nat entropies equal the single-threaded mirror on
-    the fixture corpus at a NON-registry threshold."""
-    from the_build_project_image_retrieval_with_vector_databases_spark.operators.textops import (
-        token_entropy,
-    )
-
-    thr = 3_000_000  # NOT the registry constant
-    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    rows = [(r.doc_id, r.text) for r in docs.collect()]
-    want = _entropy_py(rows, thr)
-    got = {
-        r.doc_id: (r.n_tokens, r.n_distinct, r.entropy_micro, r.is_templated)
-        for r in token_entropy(docs, templated_below=thr).collect()
-    }
-    assert got == want
-    assert any(v[3] for v in got.values()) and not all(v[3] for v in got.values())
-
-
-def test_token_entropy_pathological_docs(spark):
-    """Hand shapes: a single repeated token has entropy exactly 0 and
-    flags; a uniform all-distinct doc hits ln(n) to within quantization
-    (+-1 micro-nat); a one-token doc is 0; token-less docs emit no
-    row."""
-    import math
-
-    from the_build_project_image_retrieval_with_vector_databases_spark.operators.textops import (
-        token_entropy,
-    )
-
-    rows = [
-        (1, "spam spam spam spam spam spam"),
-        (2, "a b c d e f g h"),
-        (3, "solo"),
-        (4, ""),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        r.doc_id: (r.n_tokens, r.entropy_micro, r.is_templated)
-        for r in token_entropy(df, templated_below=1_000_000).collect()
-    }
-    assert set(got) == {1, 2, 3}
-    assert got[1] == (6, round(math.log(6) * 1e6) - (6 * round(math.log(6) * 1e6)) // 6, True)
-    assert got[1][1] == 0
-    assert abs(got[2][1] - round(math.log(8) * 1e6)) <= 1
-    assert got[3] == (1, 0, True)
-
-
-def test_token_entropy_plan_shape(spark):
-    """Plan contract: two keyed exchanges ((doc, token) count then the
-    doc aggregate), both map-side partial; no join, no Python."""
-    from the_build_project_image_retrieval_with_vector_databases_spark.operators.textops import (
-        token_entropy,
-    )
-    from the_build_project_image_retrieval_with_vector_databases_spark.sources.tables import spread
-
-    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    df = token_entropy(spread(docs), templated_below=2_500_000)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange hashpartitioning") == 2
-    assert "BatchEvalPython" not in plan
-    assert "Join" not in plan
-    assert plan.count("partial_count") + plan.count("partial_sum") >= 2
-
-
-def _bpe_train_py(texts, n_merges):
-    """Single-threaded Sennrich et al. 2016 learn_bpe + apply_bpe
-    mirror: per round, count adjacent symbol pairs weighted by word
-    frequency, fuse the (count desc, pair asc) argmax greedily
-    left-to-right non-overlapping in every word."""
-    import re
-    from collections import Counter
-
-    pat = re.compile(r"[a-z]+|[0-9]+|[^a-z0-9 \t\n\f\r]")
-    vocab = Counter()
-    for t in texts:
-        vocab.update(pat.findall(t.lower()))
-    segs = {w: list(w) for w in vocab}
-    for _ in range(n_merges):
-        pairs = Counter()
-        for w, f in vocab.items():
-            s = segs[w]
-            for i in range(len(s) - 1):
-                pairs[(s[i], s[i + 1])] += f
-        if not pairs:
-            continue
-        a, b = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))[0]
-        for w, s in segs.items():
-            out = []
-            for sym in s:
-                if out and out[-1] == a and sym == b:
-                    out[-1] = a + b
-                else:
-                    out.append(sym)
-            segs[w] = out
-    counts = Counter()
-    for w, f in vocab.items():
-        for sym in segs[w]:
-            counts[sym] += f
-    return dict(counts)
-
-
-def test_bpe_train_encode_matches_python_reference(spark):
-    """Learned vocabulary + occurrence counts equal the single-threaded
-    Sennrich mirror at a NON-registry merge count, and training
-    actually fused multi-char tokens."""
-    from the_build_project_image_retrieval_with_vector_databases_spark.operators.textops import (
-        bpe_train_encode,
-    )
-
-    n = 3  # NOT the registry constant
-    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    texts = [r.text for r in docs.collect()]
-    want = _bpe_train_py(texts, n)
-    got = {
-        r.token: r.n_occurrences
-        for r in bpe_train_encode(docs, n_merges=n).collect()
-    }
-    assert got == want
-    assert any(len(t) > 1 for t in got)  # real merges happened
-
-
-def test_bpe_train_encode_classic_corpus(spark):
-    """The canonical Sennrich example shape: 'low/lower/newest/widest'
-    — the first merges fuse the high-frequency suffix pairs, within-
-    word repeats fuse non-overlapping ('aaaa' + (a,a) → two 'aa'), and
-    a single-char vocabulary survives n_merges rounds as identity."""
-    from the_build_project_image_retrieval_with_vector_databases_spark.operators.textops import (
-        bpe_train_encode,
-    )
-
-    rows = [(1, "low low low low low lower lower newest newest newest "
-                "newest newest newest widest widest widest")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        r.token: r.n_occurrences
-        for r in bpe_train_encode(df, n_merges=4).collect()
-    }
-    want = _bpe_train_py([rows[0][1]], 4)
-    assert got == want
-    assert "est" in got and got["est"] == 9  # newest*6 + widest*3
-    dfa = spark.createDataFrame([(1, "aaaa aaaa")], "doc_id long, text string")
-    gota = {
-        r.token: r.n_occurrences
-        for r in bpe_train_encode(dfa, n_merges=1).collect()
-    }
-    assert gota == {"aa": 4}  # greedy non-overlap: each 'aaaa' → 2×'aa'
-    dfs = spark.createDataFrame([(1, "a b a b")], "doc_id long, text string")
-    gots = {
-        r.token: r.n_occurrences
-        for r in bpe_train_encode(dfs, n_merges=3).collect()
-    }
-    assert gots == {"a": 2, "b": 2}  # no pairs ever; identity rounds
-
-
-def test_bpe_train_encode_plan_shape(spark):
-    """Plan contract for the returned-DataFrame lineage: the merge
-    literals embed in codegen'd fuse projections over the PERSISTED
-    segmentation (InMemoryTableScan), so the only NEW exchange above
-    the cache is the final token aggregate; the cache subtree holds
-    only the word-keyed vocab aggregate (its exchange prints once per
-    nested InMemoryRelation level — count keys, not lines). No join,
-    no Python. (Per-round pair counts are separate driver-collected
-    jobs, the kmeans_train_assign shape.)"""
-    import re
-
-    from the_build_project_image_retrieval_with_vector_databases_spark.operators.textops import (
-        bpe_train_encode,
-    )
-
-    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    handles: list = []
-    df = bpe_train_encode(docs, n_merges=2, cache_handles=handles)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    for h in handles:
-        h.unpersist()
-    keys = {
-        re.match(r"(\w+)", k).group(1)
-        for k in re.findall(r"Exchange hashpartitioning\(([^,]+)", plan)
-    }
-    assert keys == {"token", "word"}, keys
-    assert plan.count("Exchange hashpartitioning(token") == 1
-    assert "InMemoryTableScan" in plan  # fuse chain rides the cache
-    assert "BatchEvalPython" not in plan
-    assert "Join" not in plan
-    assert "CartesianProduct" not in plan
-
-
-def test_bpe_train_encode_self_managed_cache_release(spark):
-    """r15 ADVICE: without cache_handles the training loop must release
-    superseded segmentations itself — a direct caller pins at most the
-    last two small vocab tables (the returned lineage reads the newest
-    cache), never n_merges+1. With handles, the caller owns all of
-    them, exactly as before."""
-    from the_build_project_image_retrieval_with_vector_databases_spark.operators.textops import (
-        bpe_train_encode,
-    )
-
-    jsc = spark.sparkContext._jsc.sc()
-    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-
-    before = jsc.getPersistentRDDs().size()
-    rows = bpe_train_encode(docs, n_merges=5).collect()
-    assert rows
-    leaked = jsc.getPersistentRDDs().size() - before
-    assert leaked <= 2, f"self-managed mode pinned {leaked} caches"
-    spark.catalog.clearCache()
-
-    handles: list = []
-    before = jsc.getPersistentRDDs().size()
-    bpe_train_encode(docs, n_merges=5, cache_handles=handles).collect()
-    assert len(handles) == 6  # seg0 + one per round — caller-owned
-    for h in handles:
-        h.unpersist()
-
-
 def test_bpe_oracle_regex_single_spelling():
     """Every DuckDB mirror of the BPE word regex must embed the ONE
     shared textops.BPE_PATTERN constant, so hand-spelled copies cannot
@@ -3740,10 +3467,6 @@ def test_bpe_oracle_regex_single_spelling():
         assert want in sql, f"{name} drifted from BPE_PATTERN"
         for ctrl in "\t\n\f\r":
             assert ctrl not in want  # literal escapes, not control chars
-
-
-    # bpe_train_encode has its own parity test above (heavier: 6
-    # driver-collected rounds) -- kept separate so -k filters compose
 
 
 def test_staged_r17_oracle_parity(spark, sf_dir):
@@ -3796,301 +3519,3 @@ def test_staged_r17_plan_shapes(spark):
     assert "CartesianProduct" not in p2
     assert "BroadcastNestedLoopJoin" not in p2
     assert "BatchEvalPython" not in p2
-
-
-# ---------------------------------------------------------------------------
-# gopher_length_screen / fineweb_filter_chain / domain_quota_sample —
-# unregistered operators, checked against Python references.
-# ---------------------------------------------------------------------------
-
-
-def test_gopher_length_screen_matches_python_reference(spark):
-    """Length signals and the pass flag equal the single-threaded
-    mirror on forced shapes: bullet lines, ellipsis lines, blank and
-    whitespace-only lines, a numeric-token doc (alpha fraction), an
-    empty doc, and one doc long enough to pass every rule."""
-    from the_build_project_image_retrieval_with_vector_databases_spark.operators.textops import (
-        GOPHER_LENGTH_RULES,
-        gopher_length_screen,
-    )
-
-    passing = " ".join(f"word{i}" for i in range(60)) + "."
-    rows = [
-        (0, "- bullet one\n- bullet two\nplain line."),
-        (1, "to be continued...\nanother line\n\n   \nlast..."),
-        (2, "12345 67890 42"),
-        (3, ""),
-        (4, passing),
-        (5, "* starred\n-not-a-bullet\n   - padded bullet\nend?"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        r.doc_id: (
-            r.n_words, r.mean_word_len, r.alpha_word_frac,
-            r.bullet_line_frac, r.ellipsis_line_frac, r.passes,
-        )
-        for r in gopher_length_screen(df).collect()
-    }
-    R = GOPHER_LENGTH_RULES
-    for i, text in rows:
-        toks = [t for t in text.lower().split() if t]
-        nw = max(len(toks), 1)
-        lines = [ln.strip(" \t\r") for ln in text.split("\n")]
-        lines = [ln for ln in lines if ln]
-        nl = max(len(lines), 1)
-        mean = sum(len(t) for t in toks) / nw
-        alpha = sum(any(c.isalpha() for c in t) for t in toks) / nw
-        bullet = sum(
-            ln.startswith("- ") or ln.startswith("* ") for ln in lines
-        ) / nl
-        ell = sum(ln.endswith("...") for ln in lines) / nl
-        passes = (
-            R["min_words"] <= len(toks) <= R["max_words"]
-            and R["min_mean_word_len"] <= mean <= R["max_mean_word_len"]
-            and alpha > R["min_alpha_word_frac"]
-            and bullet <= R["max_bullet_line_frac"]
-            and ell <= R["max_ellipsis_line_frac"]
-        )
-        assert got[i] == (len(toks), mean, alpha, bullet, ell, passes), i
-    assert got[4][5]  # the constructed passing doc actually passes
-    assert not got[2][5] and not got[3][5]
-
-
-def test_fineweb_filter_chain_matches_python_reference(spark):
-    """Rule booleans, keep, and first-failed attribution equal the
-    single-threaded mirror, with each rule forced to be the first
-    failure at least once (the attribution order is the contract)."""
-    from collections import Counter
-
-    from the_build_project_image_retrieval_with_vector_databases_spark.operators.textops import (
-        FINEWEB_PUNCT_MIN_FRAC,
-        FINEWEB_RULE_ORDER,
-        GOPHER_LENGTH_RULES,
-        LANG_STOPWORDS,
-        fineweb_filter_chain,
-    )
-
-    en_pass = (
-        "the quick fox and the lazy dog of the old farm with all "
-        + " ".join(f"token{i}" for i in range(45))
-        + " end."
-    )
-    rows = [
-        (0, "le chat et la maison de la rue."),          # fails lang
-        (1, "the and of short."),                        # fails n_words
-        (2, en_pass),                                    # keeps
-        (3, "the " * 60 + "end."),                       # fails repetition
-        (4, en_pass.replace(".", "")),                   # fails punct
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        r.doc_id: (
-            r.r_lang, r.r_n_words, r.r_mean_word_len, r.r_repetition,
-            r.r_punct, r.keep, r.first_failed,
-        )
-        for r in fineweb_filter_chain(df).collect()
-    }
-    R = GOPHER_LENGTH_RULES
-    for i, text in rows:
-        toks = [t for t in text.lower().split() if t]
-        nw = max(len(toks), 1)
-        scores = {
-            lg: sum(t in LANG_STOPWORDS[lg] for t in toks) / nw
-            for lg in LANG_STOPWORDS
-        }
-        best = max(scores.values())
-        pred = "und"
-        if best > 0:
-            pred = min(lg for lg, s in scores.items() if s == best)
-        r_lang = pred == "en"
-        r_words = R["min_words"] <= len(toks) <= R["max_words"]
-        mean = sum(len(t) for t in toks) / nw
-        r_mean = R["min_mean_word_len"] <= mean <= R["max_mean_word_len"]
-        top = max(Counter(toks).values()) / nw if toks else 0.0
-        g2 = [" ".join(toks[j : j + 2]) for j in range(len(toks) - 1)]
-        dup = 1.0 - len(set(g2)) / len(g2) if g2 else 0.0
-        r_rep = top <= 0.2 and dup <= 0.4
-        lines = [ln.strip(" \t\r") for ln in text.split("\n")]
-        lines = [ln for ln in lines if ln]
-        punct = (
-            sum(ln[-1] in '.!?"' for ln in lines) / max(len(lines), 1)
-        )
-        r_punct = punct >= FINEWEB_PUNCT_MIN_FRAC
-        rules = {
-            "lang": r_lang, "n_words": r_words, "mean_word_len": r_mean,
-            "repetition": r_rep, "punct": r_punct,
-        }
-        keep = all(rules.values())
-        first = next(
-            (n for n in FINEWEB_RULE_ORDER if not rules[n]), None
-        )
-        assert got[i] == (
-            r_lang, r_words, r_mean, r_rep, r_punct, keep, first,
-        ), i
-    assert got[2][5] and got[2][6] is None
-    assert {got[0][6], got[1][6], got[3][6], got[4][6]} == {
-        "lang", "n_words", "repetition", "punct",
-    }
-
-
-def test_domain_quota_sample_matches_python_reference(spark):
-    """Host normalization, per-host counts, surrogate-order ranks and
-    the quota flag equal the single-threaded mirror (same hash
-    constants), including scheme/www/case variants collapsing to one
-    host and a host with fewer docs than the quota."""
-    from the_build_project_image_retrieval_with_vector_databases_spark.operators.sample import (
-        HASH_MOD,
-        HASH_MULT,
-        domain_quota_sample,
-    )
-
-    rows = [
-        (0, "http://WWW.Alpha.COM/a"),
-        (1, "https://alpha.com/b"),
-        (2, "alpha.com:443/c"),
-        (3, "www2.alpha.com/d#frag"),
-        (4, "http://beta.org/only"),
-        (5, "ALPHA.com/e"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, url string")
-    got = {
-        r.doc_id: (r.host, r.n_host_docs, r.rank_in_host, r.is_kept)
-        for r in domain_quota_sample(df, max_per_host=2).collect()
-    }
-    hosts = {0: "alpha.com", 1: "alpha.com", 2: "alpha.com",
-             3: "alpha.com", 4: "beta.org", 5: "alpha.com"}
-    by_host: dict = {}
-    for i, h in hosts.items():
-        by_host.setdefault(h, []).append(i)
-    for h, ids in by_host.items():
-        order = sorted(ids, key=lambda i: (((i + 42) * HASH_MULT) % HASH_MOD, i))
-        for rank, i in enumerate(order, start=1):
-            assert got[i] == (h, len(ids), rank, rank <= 2), i
-    assert sum(k for _, _, _, k in got.values()) == 3  # 2 alpha + 1 beta
-
-
-def test_staged_r19_plan_shapes(spark):
-    """Plan contracts: gopher_length_screen and fineweb_filter_chain —
-    ZERO hash exchanges (pure per-row expression chains over one scan,
-    no joins between rule stages; the only Exchange is spread()'s
-    deliberate RoundRobin fan-out of the small fixture);
-    domain_quota_sample — exactly ONE hash exchange (the host key),
-    shared by the count window and the rank window. All: no cartesian,
-    no BNLJ, no row-Python."""
-    from the_build_project_image_retrieval_with_vector_databases_spark.operators.sample import (
-        domain_quota_sample,
-    )
-    from the_build_project_image_retrieval_with_vector_databases_spark.operators.textops import (
-        fineweb_filter_chain,
-        gopher_length_screen,
-    )
-    from the_build_project_image_retrieval_with_vector_databases_spark.sources.tables import spread
-
-    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    d = F.col("doc_id")
-    urls = docs.select(
-        "doc_id",
-        F.concat(
-            F.lit("https://s"), (d % 37).cast("string"), F.lit("."),
-            F.col("source"), F.lit(".example.com/d/"), d.cast("string"),
-        ).alias("url"),
-    )
-    plans = {}
-    for name, df in [
-        ("len", gopher_length_screen(spread(docs))),
-        ("chain", fineweb_filter_chain(spread(docs))),
-        ("quota", domain_quota_sample(urls, "url", max_per_host=2)),
-    ]:
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "CartesianProduct" not in plan, name
-        assert "BroadcastNestedLoopJoin" not in plan, name
-        assert "BatchEvalPython" not in plan, name
-        assert "Join" not in plan, name
-        plans[name] = plan
-    assert plans["len"].count("Exchange hashpartitioning") == 0
-    assert plans["chain"].count("Exchange hashpartitioning") == 0
-    assert plans["quota"].count("Exchange hashpartitioning") == 1
-    assert plans["quota"].count("Window") >= 1
-
-
-# ---------------------------------------------------------------------------
-# winnow_overlap_pairs — unregistered operator, checked against a Python
-# reference.
-# ---------------------------------------------------------------------------
-
-
-def test_winnow_overlap_pairs_matches_python_reference(spark):
-    """Pair counts and fingerprint Jaccard equal the single-threaded
-    mirror built on _winnow_py, at NON-registry (k, w) and with the
-    df cap active: a boilerplate gram shared by every doc must be
-    dropped before pairing."""
-    from collections import Counter
-
-    from the_build_project_image_retrieval_with_vector_databases_spark.operators.textops import (
-        winnow_overlap_pairs,
-    )
-
-    k, w, min_shared, max_df = 2, 3, 1, 3
-    common = "standard footer text here"
-    rows = [
-        (0, f"alpha beta gamma delta epsilon zeta {common}"),
-        (1, f"alpha beta gamma delta other words {common}"),
-        (2, f"completely different content stream {common}"),
-        (3, f"unrelated fourth document body {common}"),
-        (4, "alpha beta gamma delta epsilon eta"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    fps = {
-        i: {h for _, h in _winnow_py(
-            [t for t in text.lower().split() if t], k, w)}
-        for i, text in rows
-    }
-    dfc = Counter(h for s in fps.values() for h in s)
-    fps = {i: {h for h in s if dfc[h] <= max_df} for i, s in fps.items()}
-    expect = {}
-    ids = sorted(fps)
-    for a in ids:
-        for b in ids:
-            if a < b:
-                shared = len(fps[a] & fps[b])
-                if shared >= min_shared:
-                    expect[(a, b)] = (
-                        shared,
-                        shared / (len(fps[a]) + len(fps[b]) - shared),
-                    )
-    got = {
-        (r.left_id, r.right_id): (r.n_shared, r.fp_jaccard)
-        for r in winnow_overlap_pairs(
-            df, k=k, w=w, min_shared=min_shared, max_df=max_df
-        ).collect()
-    }
-    assert got == expect
-    assert (0, 1) in got  # the real overlap pair survives
-    # without the cap the footer would pair everything with everything:
-    uncapped = {
-        (r.left_id, r.right_id)
-        for r in winnow_overlap_pairs(
-            df, k=k, w=w, min_shared=min_shared, max_df=None
-        ).collect()
-    }
-    assert (2, 3) in uncapped and (2, 3) not in got
-
-
-def test_staged_r20_plan_shapes(spark):
-    """Plan contract: every winnow_overlap_pairs join is a hash/sort-merge
-    EQUI join on the fingerprint hash or doc id, never a nested loop;
-    no cartesian, no row-Python."""
-    from the_build_project_image_retrieval_with_vector_databases_spark.operators.textops import (
-        winnow_overlap_pairs,
-    )
-    from the_build_project_image_retrieval_with_vector_databases_spark.queries_text import WN_K, WN_W
-    from the_build_project_image_retrieval_with_vector_databases_spark.sources.tables import spread
-
-    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    df = winnow_overlap_pairs(spread(docs), k=WN_K, w=WN_W, min_shared=2, max_df=10)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-

@@ -1,22 +1,12 @@
-"""Z-order layout: key correctness + the empirical co-clustering effect
-(per-file min/max bounding boxes shrink, which is what parquet row-group
-stat pruning consumes at scale)."""
+"""Z-order key: the Morton interleave is bit-exact."""
 
 from __future__ import annotations
-
-import glob
-import os
-
-import pyarrow.parquet as pq
 
 from pyspark.sql import functions as F
 
 from the_build_project_image_retrieval_with_vector_databases_spark.plans.zorder import (
-    write_zordered,
     z_interleave,
 )
-
-from .conftest import SF_SMOKE
 
 
 def test_z_interleave_bit_exact(spark):
@@ -34,61 +24,3 @@ def test_z_interleave_bit_exact(spark):
     assert rows.z == 0b01101100 == 108
     assert rows.z0 == 0
     assert rows.zf == 255
-
-
-def _file_bboxes(path, col_a, col_b):
-    boxes = []
-    for f in glob.glob(os.path.join(path, "part-*.parquet")):
-        md = pq.ParquetFile(f).metadata
-        lo_a = hi_a = lo_b = hi_b = None
-        for rg in range(md.num_row_groups):
-            g = md.row_group(rg)
-            for ci in range(g.num_columns):
-                c = g.column(ci)
-                name = c.path_in_schema
-                st = c.statistics
-                if st is None:
-                    continue
-                if name == col_a:
-                    lo_a = st.min if lo_a is None else min(lo_a, st.min)
-                    hi_a = st.max if hi_a is None else max(hi_a, st.max)
-                elif name == col_b:
-                    lo_b = st.min if lo_b is None else min(lo_b, st.min)
-                    hi_b = st.max if hi_b is None else max(hi_b, st.max)
-        if lo_a is not None and lo_b is not None:
-            boxes.append((hi_a - lo_a, hi_b - lo_b))
-    return boxes
-
-
-def test_zorder_shrinks_file_bounding_boxes(spark, tmp_path):
-    li = spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet").select(
-        "l_partkey", "l_suppkey", "l_quantity"
-    )
-    ranges = li.agg(
-        (F.max("l_partkey") - F.min("l_partkey")).alias("ra"),
-        (F.max("l_suppkey") - F.min("l_suppkey")).alias("rb"),
-    ).first()
-    domain = float(ranges.ra) * float(ranges.rb)
-
-    zpath = str(tmp_path / "zordered")
-    spath = str(tmp_path / "shuffled")
-    write_zordered(li, zpath, "l_partkey", "l_suppkey", files=16)
-    li.repartition(16).write.mode("overwrite").parquet(spath)
-
-    def avg_area(path):
-        boxes = _file_bboxes(path, "l_partkey", "l_suppkey")
-        assert boxes, path
-        return sum(float(a) * float(b) for a, b in boxes) / len(boxes) / domain
-
-    z_area, s_area = avg_area(zpath), avg_area(spath)
-    # hash layout: every file spans ~the whole domain; z-order: a thin
-    # rectangle of it. The gap is the prunable fraction at scale.
-    assert s_area > 0.8, f"shuffled baseline unexpectedly clustered: {s_area}"
-    assert z_area < 0.4 * s_area, f"z-order bbox not tight: {z_area} vs {s_area}"
-
-    # layout preserves content exactly
-    back = spark.read.parquet(zpath)
-    assert back.count() == li.count()
-    a = li.agg(F.sum("l_partkey"), F.sum("l_suppkey")).first()
-    b = back.agg(F.sum("l_partkey"), F.sum("l_suppkey")).first()
-    assert tuple(a) == tuple(b)

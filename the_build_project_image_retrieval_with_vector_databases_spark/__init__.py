@@ -7,8 +7,9 @@ Design (see SURVEY.md):
 - One **embeddings table** ``(id, path, label, category, embedding array<float>)``
   replaces the reference's FAISS index + JSON/pickle sidecars (SURVEY §1.4).
 - Distances are **pure Catalyst column expressions** over ``array<float>``
-  (higher-order functions — codegen'd, oracle-checkable); pandas-UDF fast
-  paths exist only where built-ins can't express the semantics.
+  (higher-order functions, oracle-checkable; ``transform``/``aggregate``
+  run interpreted inside the generated stage); pandas-UDF fast paths
+  exist only where built-ins can't express the semantics.
 - Exact kNN = broadcast query + columnar scan + top-k
   (``TakeOrderedAndProject`` / window-rank); approximate kNN = IVF
   (KMeans-centroid partition pruning) or MLlib LSH.

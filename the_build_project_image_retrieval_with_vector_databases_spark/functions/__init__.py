@@ -1,8 +1,11 @@
 """Column-expression library: vector math and text primitives.
 
-All functions here return Catalyst ``Column`` expressions (JVM-side,
-whole-stage-codegen'd) — no Python UDFs. This is the engine's replacement
-for the reference's NumPy/FAISS kernels (SURVEY §2.2, §4.3.1).
+All functions here return Catalyst ``Column`` expressions evaluated
+JVM-side — no Python UDFs. The higher-order functions among them
+(``transform``, ``aggregate``) have no code generation of their own and
+run interpreted inside the generated stage. This is the engine's
+replacement for the reference's NumPy/FAISS kernels (SURVEY §2.2,
+§4.3.1).
 """
 
 from .vector import (  # noqa: F401
@@ -15,7 +18,6 @@ from .vector import (  # noqa: F401
     to_double_array,
 )
 from .text import (  # noqa: F401
-    char_ngrams,
     hex_prefix_to_long,
     token_shingles,
     tokens,

@@ -47,17 +47,6 @@ def token_shingles(
     return F.when(count >= 1, sh).otherwise(empty)
 
 
-def char_ngrams(text: Column | str, n: int = 3) -> Column:
-    """Distinct character n-grams → ``array<string>`` (same short-input
-    guard as :func:`token_shingles`)."""
-    c = F.col(text) if isinstance(text, str) else text
-    count = F.length(c) - F.lit(n - 1)
-    idx = F.sequence(F.lit(1), count)
-    grams = F.transform(idx, lambda i: F.substring(c, i, n))
-    empty = F.array().cast("array<string>")
-    return F.when(count >= 1, F.array_distinct(grams)).otherwise(empty)
-
-
 def hex_prefix_to_long(hex_col: Column | str, digits: int = 8) -> Column:
     """First ``digits`` hex chars → non-negative bigint via ``conv``.
 

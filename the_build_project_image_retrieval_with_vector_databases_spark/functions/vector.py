@@ -4,8 +4,10 @@ The reference computes these inside FAISS (``IndexFlatL2.search``,
 reference ``utils/faiss_utils.py:19-22``) and torch
 (``F.normalize(emb, p=2, dim=1)``, reference ``src/model.py:58``).
 Here they are pure Catalyst higher-order-function expressions —
-JVM-side, codegen'd, and usable in any filter/join/sort, so Catalyst
-can push them through its normal optimizations. No UDF round-trip.
+JVM-side (``transform`` and ``aggregate`` run interpreted inside the
+generated stage: Spark gives them no code generation of their own) and
+usable in any filter/join/sort, so Catalyst can push them through its
+normal optimizations. No UDF round-trip.
 
 Numerical contract: all arithmetic is performed in ``double`` after an
 explicit elementwise cast (float32 → float64 is exact), accumulation is a
@@ -127,10 +129,8 @@ def truncate_renormalize(v: Column | str, dims: int) -> Column:
     bounded recall for a dims/D cut in scan bytes and FLOPs — the
     cheapest ANN speed knob of all, applied BEFORE any index tier.
     Pure expression (slice + the same fold as :func:`l2_normalize`), so
-    it composes with every search plan and stays codegen'd.
-
-    Staged round 5 (pytest recall property); a registry query is planned
-    for the next rotation window.
+    it composes with every search plan (the registry's
+    ``matryoshka_topk`` ranks with it).
     """
     t = F.slice(to_double_array(v), 1, dims)
     return l2_normalize(t)

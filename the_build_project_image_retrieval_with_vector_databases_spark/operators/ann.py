@@ -113,8 +113,9 @@ def assign_cids_arrow_int(
     with_dist2: bool = False,
 ) -> DataFrame:
     """(id, cid[, dist2]) exact integer argmin assignment — the lean
-    Arrow twin of the k·D expression-literal argmin
-    (``_semantic_assign`` / :func:`kmeans_lloyd_step`): distances are
+    Arrow twin of ``_semantic_assign``'s k·D expression-literal argmin
+    (first-min argmin of integer L2² over floor-quantized vectors):
+    distances are
     exact int64 (|q−c|² = |q|² − 2·q·c + |c|²; the per-row |q|²
     constant shifts every centroid's distance equally, so np.argmin's
     first-min tie-break equals
@@ -161,87 +162,15 @@ def assign_cids_arrow_int(
     return q.select(id_col, "qv").mapInPandas(score, out_schema)
 
 
-def kmeans_lloyd_step(
-    df: DataFrame,
-    k: int = 8,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    scale: int = KMEANS_SCALE,
-    centroids_q: list[list[int]] | None = None,
-    pre_quantized: DataFrame | None = None,
-) -> DataFrame:
-    """One distributed Lloyd iteration of k-means, value-exact across
-    engines — the training step behind the IVF coarse quantizer
-    (reference trains it inside FAISS, ``utils/faiss_utils.py:7-9``),
-    expressed as DataFrame ops so every piece is auditable: MLlib's
-    KMeans (:func:`train_centroids`) stays the deploy path, this is the
-    oracle-checkable core loop.
-
-    Exactness: vectors quantize to int64 (:func:`quantize_vec`);
-    init centroids = the ``k`` lowest-``id_col`` quantized vectors
-    (deterministic, an O(k·D) driver collect); assignment = argmin of
-    exact integer L2² with first-min tie-break (the
-    :func:`assign_centroids` idiom); new centroid means = two mirrored
-    IEEE divisions on exact operands. No float aggregate anywhere, so
-    accumulation order is irrelevant.
-
-    Scale shape: assignment is map-only (centroids are a broadcast
-    literal, k·D ints); the update is ONE hash shuffle keyed
-    (cid, dim) — k·D groups — with map-side partial aggregation.
-    Output: k·D rows (cid, dim, n_members, mean)."""
-    from ..sources.tables import spread
-
-    if k < 1:
-        raise ValueError("kmeans_lloyd_step requires k >= 1")
-    # the training loop passes the persisted quantized table so each
-    # round skips the scan + quantize (pre_quantized carries (id, qv))
-    if pre_quantized is not None:
-        q = pre_quantized
-    else:
-        q = spread(df).select(
-            F.col(id_col), quantize_vec(vec_col, scale).alias("qv")
-        )
-    if centroids_q is not None:
-        init = [list(c) for c in centroids_q]
-    else:
-        init = [r.qv for r in q.orderBy(id_col).limit(k).collect()]
-    if not init:
-        raise ValueError("kmeans_lloyd_step on an empty table")
-    cents = array_lit(init, "array<array<bigint>>")
-    dists = F.transform(
-        cents,
-        lambda c: F.aggregate(
-            F.zip_with(F.col("qv"), c, lambda a, b: (a - b) * (a - b)),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ),
-    )
-    assigned = q.withColumn(
-        "cid", (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-    )
-    sums = (
-        assigned.select("cid", F.posexplode("qv").alias("dim", "qval"))
-        .groupBy("cid", "dim")
-        .agg(F.count("*").alias("n_members"), F.sum("qval").alias("s"))
-    )
-    return sums.select(
-        "cid",
-        "dim",
-        "n_members",
-        (
-            (F.col("s").cast("double") / F.col("n_members").cast("double"))
-            / F.lit(float(scale))
-        ).alias("mean"),
-    )
-
-
 def _lloyd_round_partials(
     q: DataFrame, cents_q: list[list[int]], n_parts: int | None = None
 ) -> dict[int, tuple[int, list[int]]]:
     """One Lloyd round's per-cluster (member count, per-dim int64 sums)
-    — the training loop's hot path, VALUE-IDENTICAL to
-    :func:`kmeans_lloyd_step`'s assignment + posexplode aggregate but
-    shaped for a driver-looped round (optimization guide §1.2/§4.2):
+    — the training loop's hot path: first-min argmin of integer L2²
+    over the floor-quantized vectors, then int64 sums per cluster —
+    value-identical to an expression-literal assignment plus a
+    posexplode ``(cid, dim)`` aggregate, but shaped for a driver-looped
+    round (optimization guide §1.2/§4.2):
 
     - assignment: exact integer argmin via one numpy int64 matmul per
       Arrow batch (|q−c|² = |q|² − 2·q·c + |c|²; the per-row |q|²
@@ -428,8 +357,11 @@ def kmeans_train_exact(
     scale: int = KMEANS_SCALE,
     driver_train_max_bytes: int | None = None,
 ) -> tuple[list[list[float]], int]:
-    """Full Lloyd training by iterating :func:`kmeans_lloyd_step` —
-    quantized k-means, bit-reproducible on any cluster size or data
+    """Full Lloyd training — quantized k-means (vectors floor-quantized
+    by :func:`quantize_vec`; init = the ``k`` lowest-``id_col`` quantized
+    vectors; assignment = first-min argmin of integer L2²; new centroid
+    = the integer sums divided by the member count, then by ``scale``,
+    re-quantized), bit-reproducible on any cluster size or data
     layout (every per-round quantity is integer-exact; nothing depends
     on partition order or float accumulation order).
 
@@ -442,8 +374,7 @@ def kmeans_train_exact(
 
     Returns (centroids as floats in data units, rounds actually run).
     Deploy note: MLlib's :func:`train_centroids` remains the fast path;
-    this is the auditable/reproducible one (one oracle-checkable step =
-    ``kmeans_lloyd_step``, the registry's ``kmeans_step``).
+    this is the auditable/reproducible one.
 
     When rows × D × 8 is at or below ``KMEANS_DRIVER_TRAIN_MAX_BYTES``
     (override via ``driver_train_max_bytes``; the test seam) the
@@ -484,8 +415,7 @@ def kmeans_train_exact(
         .repartition(target)
         .persist()
     )
-    # the init collect (k lowest-id quantized vectors — the same init
-    # kmeans_lloyd_step derives when centroids_q is omitted) doubles as
+    # the init collect (the k lowest-id quantized vectors) doubles as
     # the cache-materializing action: one job warms the blocks AND
     # returns the k·D init state, so no separate warm-up scan runs
     init_rows = q.orderBy(id_col).limit(k).collect()
@@ -500,12 +430,12 @@ def kmeans_train_exact(
             # fast round: Arrow partial sums instead of the
             # posexplode form — value-identical; see
             # _lloyd_round_partials. The mean → re-quantize math below
-            # replays kmeans_lloyd_step's SQL double ops in the SAME
-            # IEEE order ((s→double / n→double) / scale, then
-            # floor(mean·scale + 0.5)): Python floats ARE IEEE doubles
-            # and int→float conversion rounds to nearest exactly like
-            # the JVM long→double cast, so the trained centroids are
-            # bit-identical to iterating kmeans_lloyd_step (pinned by
+            # is (s→double / n→double) / scale, then
+            # floor(mean·scale + 0.5), in that IEEE order: Python floats
+            # ARE IEEE doubles and int→float conversion rounds to
+            # nearest exactly like the JVM long→double cast, so an SQL
+            # replay of the same expression yields bit-identical
+            # centroids (pinned by
             # test_kmeans_train_exact_matches_python_loop).
             sums = _lloyd_round_partials(q, cents_q, n_parts=target)
             new_q = []
@@ -932,5 +862,3 @@ def lsh_candidates(
             *[F.col(f"__r.{c}").alias(f"{c}_r") for c in carry],
         )
     )
-
-

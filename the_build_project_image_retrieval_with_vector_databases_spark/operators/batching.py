@@ -1,74 +1,17 @@
-"""Fixed-size batch iteration (SURVEY §2.5 SA3) — the reference's
+"""Training-batch layout (SURVEY §2.5 SA3): the reference's
 ``DataLoader(batch_size=16, shuffle=True, drop_last=True)``
-(``train_model.py:49-50``) as a DataFrame operator.
-
-Shape: deterministic shuffle (multiplicative-hash sort key, same contract
-as ``operators.sample``) → ``mapInPandas`` chunking each partition's Arrow
-stream into exact ``batch_size`` row groups. ``drop_last`` discards the
-trailing partial batch *per partition* (the reference drops one partial
-batch globally; per-partition is documented as the distributed analogue —
-at 1000 executors a global remainder barrier would serialize the job for
-at most one batch of rows).
-
-Batch ids are ``(partition_id, local_batch_index)`` — stable within a run,
-and the model-training consumer (gradient step per batch) only needs
-batch *membership*, not a global order.
+(``train_model.py:49-50``) as a globally canonical batch assignment
+(:func:`batch_assignments`), and context-window sequence packing
+(:func:`pack_sequences`). Both rank rows globally in two phases, never
+with a single-task sort.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .sample import shuffle_key
-
-
-def fixed_batches(
-    df: DataFrame,
-    batch_size: int = 16,
-    drop_last: bool = True,
-    shuffle: bool = True,
-    id_col: str = "vec_id",
-    seed: int = 42,
-) -> DataFrame:
-    """Tag every row with (``part_id``, ``batch_id``) of its fixed-size
-    batch; rows of a dropped partial batch are filtered out."""
-    out_schema = ", ".join(f"{c} {t}" for c, t in df.dtypes)
-    out_schema += ", part_id int, batch_id long"
-
-    if shuffle:
-        df = df.repartition(
-            df.sparkSession.sparkContext.defaultParallelism,
-            shuffle_key(id_col, seed),
-        ).sortWithinPartitions(shuffle_key(id_col, seed).asc(), F.col(id_col).asc())
-
-    def chunk(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pyspark
-
-        part = pyspark.TaskContext.get().partitionId()
-        buf: list[pd.DataFrame] = []
-        have = 0
-        emitted = 0
-
-        def emit(pdf: pd.DataFrame, bid: int) -> pd.DataFrame:
-            return pdf.assign(part_id=part, batch_id=bid)
-
-        for pdf in it:
-            buf.append(pdf)
-            have += len(pdf)
-            while have >= batch_size:
-                cat = pd.concat(buf, ignore_index=True)
-                yield emit(cat.iloc[:batch_size], emitted)
-                emitted += 1
-                rest = cat.iloc[batch_size:]
-                buf, have = ([rest] if len(rest) else []), len(rest)
-        if have and not drop_last:
-            yield emit(pd.concat(buf, ignore_index=True), emitted)
-
-    return df.mapInPandas(chunk, schema=out_schema)
 
 
 def pack_sequences(
@@ -142,20 +85,17 @@ def batch_assignments(
     seed: int = 42,
     bucket_width: int = 1 << 22,
 ) -> DataFrame:
-    """Globally-CANONICAL fixed-size batches — the oracle-checkable form
-    of :func:`fixed_batches` (SURVEY §2.5 SA3, the reference's
-    ``DataLoader(batch_size, shuffle=True, drop_last=True)``,
-    ``train_model.py:49-50``). Where ``fixed_batches`` tags
-    ``(partition_id, local_batch)`` — stable within a run but dependent
-    on the physical partitioning — this operator derives batch ids from
-    the GLOBAL deterministic-shuffle order, so the assignment is a pure
+    """Globally-CANONICAL fixed-size batches (SURVEY §2.5 SA3, the
+    reference's ``DataLoader(batch_size, shuffle=True, drop_last=True)``,
+    ``train_model.py:49-50``). Batch ids derive from the GLOBAL
+    deterministic-shuffle order, never from the physical partitioning,
+    so the assignment is a pure
     function of (ids, seed, batch_size): reproducible across cluster
     sizes, re-runs, and engines. Output one row per surviving input
     row: ``(id_col, batch_id, pos)`` with ``batch_id =
     floor(global_rank / batch_size)`` and ``pos`` the 0-based slot
     inside the batch; ``drop_last`` removes the trailing partial batch
-    GLOBALLY (exactly the reference's semantics, unlike the
-    per-partition analogue documented on ``fixed_batches``).
+    GLOBALLY (exactly the reference's semantics).
 
     Scale shape (the 100 TB question): a naive global
     ``row_number() OVER (ORDER BY key)`` is a single-task sort. This

@@ -73,7 +73,7 @@ def ngram_overlap(
     than incidental collisions).
     """
     # ONE full tokenize+shingle pass over the corpus (the dominant cost;
-    # profiled round 5: folding size(grams) into the same projection as
+    # profiled: folding size(grams) into the same projection as
     # explode(grams) doubles the generated code for the shingle
     # expression past the codegen limit and runs ~13x slower interpreted
     # — the gram count must NOT ride the explode projection).
@@ -97,9 +97,9 @@ def ngram_overlap(
     # Per-doc gram counts are needed ONLY for flagged docs (contamination
     # is rare by construction — benchmark ≪ corpus), so join the hit set
     # back to the corpus FIRST and tokenize just the survivors: the
-    # second shingle evaluation touches hit docs, not the corpus.
-    # Round-4 scale-proof follow-up — the old shape ran a second
-    # corpus-wide tokenize pass and shuffled an N-row sizes table.
+    # second shingle evaluation touches hit docs, not the corpus (a
+    # corpus-wide sizes table would cost a second corpus tokenize pass
+    # and an N-row shuffle).
     # The hit-set side is NOT broadcast-hinted: its size tracks the
     # CONTAMINATION RATE, not the benchmark size (a tiny benchmark
     # leaked corpus-wide yields corpus-sized hits), so the runtime
@@ -341,8 +341,7 @@ def contamination_eval_split(
     n: int = 4,
     dirty_min_hits: int = 1,
 ) -> DataFrame:
-    """GPT-3 Appendix-C dirty/clean EVAL split (staged r14, r16
-    registration candidate) — the REVERSE direction of
+    """GPT-3 Appendix-C dirty/clean EVAL split — the REVERSE direction of
     :func:`ngram_overlap`: instead of flagging training documents that
     leak benchmark text, score each EVALUATION example by its n-gram
     overlap with the training corpus and split the benchmark into a

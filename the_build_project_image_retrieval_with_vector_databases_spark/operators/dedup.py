@@ -609,117 +609,6 @@ def simhash_near_dup_pairs(
     )
 
 
-def minhash_lsh_incremental(
-    corpus: DataFrame,
-    batch: DataFrame,
-    n: int = 3,
-    num_hashes: int = 8,
-    bands: int = 4,
-    threshold: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    cache_handles: list | None = None,
-    pinned: bool = True,
-) -> DataFrame:
-    """Incremental near-dup: a NEW ingest batch checked against the
-    EXISTING corpus — the daily-pipeline shape, where corpus × corpus
-    work must never re-run. Band-bucket join of batch signatures against
-    corpus signatures only; exact-Jaccard verify on candidates.
-
-    At 100 TB the corpus side of this join is a PRE-BUILT banded
-    signature index (materialize `(band, k*) → doc_id` once, append each
-    ingest's bands — the same build-once/append lifecycle as
-    ``append_to_ivf_index``); batch-side work and candidate volume scale
-    with the batch, not the corpus. Here both sides derive in-plan
-    (fixture scale); the join/verify shapes are identical either way.
-    """
-    assert num_hashes % bands == 0
-    rows_per_band = num_hashes // bands
-
-    def prep(df):
-        shs = _opt_persist(doc_shingles(df, n, text_col, id_col), cache_handles)
-        # sentinel=False: same provably-dropped-candidates argument as
-        # minhash_lsh_pairs
-        sigs = minhash_signatures(
-            df, n, num_hashes, text_col, id_col,
-            shingles=shs, pinned=pinned, sentinel=False,
-        )
-        band_structs = F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    *[
-                        F.col(f"mh{b * rows_per_band + r}").alias(f"k{r}")
-                        for r in range(rows_per_band)
-                    ],
-                )
-                for b in range(bands)
-            ]
-        )
-        return shs, sigs.select(F.col(id_col), F.inline_outer(band_structs))
-
-    key_cols = ["band"] + [f"k{r}" for r in range(rows_per_band)]
-    c_shs, c_banded = prep(corpus)
-    b_shs, b_banded = prep(batch)
-    candidates = (
-        # shuffle_hash pin: the corpus band index is never broadcastable
-        # at real scale and the batch side may not be either; a
-        # mis-estimated static broadcast here is the same hazard as in
-        # minhash_lsh_pairs. AQE still handles skew on the shuffled form.
-        c_banded.select(F.col(id_col).alias("corpus_id"), *key_cols)
-        .join(
-            _pin(
-                b_banded.select(F.col(id_col).alias("batch_id"), *key_cols),
-                "shuffle_hash",
-                pinned,
-            ),
-            key_cols,
-        )
-        .select("corpus_id", "batch_id")
-        .distinct()
-    )
-    # merge pin — same corpus-scaled verify-side broadcast-estimate
-    # hazard as minhash_lsh_pairs (the batch side too: a 100 TB daily
-    # ingest is still GBs of shingle sets)
-    verified = (
-        candidates.join(
-            _pin(
-                c_shs.select(
-                    F.col(id_col).alias("corpus_id"), F.col("sh").alias("sh_l")
-                ),
-                "merge",
-                pinned,
-            ),
-            "corpus_id",
-        )
-        .join(
-            _pin(
-                b_shs.select(
-                    F.col(id_col).alias("batch_id"), F.col("sh").alias("sh_r")
-                ),
-                "merge",
-                pinned,
-            ),
-            "batch_id",
-        )
-        .withColumn("n_inter", F.size(F.array_intersect("sh_l", "sh_r")))
-        .withColumn(
-            "n_union", F.size("sh_l") + F.size("sh_r") - F.col("n_inter")
-        )
-        .withColumn(
-            # raw integer-ratio double, CASE-guarded against the
-            # zero-shingle sentinel collision (see minhash_lsh_pairs)
-            "jaccard",
-            F.when(
-                F.col("n_union") > 0,
-                F.col("n_inter").cast("double") / F.col("n_union").cast("double"),
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-    return verified.select("corpus_id", "batch_id", "jaccard")
-
-
 def _semantic_assign(
     df: DataFrame,
     centroids_q: list[list[int]],
@@ -912,8 +801,9 @@ def semantic_dedup(
     — the pairwise work is blocked by cluster, never all-pairs.
 
     Exactness (the oracle unlock): vectors quantize to int64
-    (:func:`~.ann.quantize_vec`), assignment is the exact integer-L2²
-    argmin of :func:`~.ann.kmeans_lloyd_step`, and the cosine threshold
+    (:func:`~.ann.quantize_vec`), assignment is the first-min argmin of
+    exact integer L2² over the quantized vectors (a tie goes to the
+    lower centroid id), and the cosine threshold
     evaluates WITHOUT any float math: with τ = num/den,
 
         cos(l, r) > τ  ⟺  dot > 0  ∧  den²·dot² > num²·|l|²·|r|²
@@ -1092,9 +982,9 @@ def semantic_dedup_incremental(
     cache_handles: list | None = None,
     pinned: bool = True,
 ) -> DataFrame:
-    """Batch-vs-corpus SemDeDup — the daily-ingest shape (the semantic
-    twin of :func:`minhash_lsh_incremental`, mirroring
-    ``append_to_ivf_index`` on the ANN side), with TRUE sequential-ingest
+    """Batch-vs-corpus SemDeDup — the daily-ingest shape, where corpus ×
+    corpus work must never re-run (mirroring ``append_to_ivf_index`` on
+    the ANN side), with TRUE sequential-ingest
     semantics: the keep set equals the outcome of ingesting the batch one
     vector at a time in ``id_col`` order against a sink that appends only
     kept rows. A batch vector is dropped iff it has a SAME-CLUSTER
@@ -1163,7 +1053,9 @@ def semantic_dedup_incremental(
     )
 
     # (a) batch vs corpus: any qualifying corpus neighbor drops the
-    # batch vector — shuffle_hash pin (see minhash_lsh_incremental)
+    # batch vector — shuffle_hash pin: the corpus side is never
+    # broadcastable at real scale, so a mis-estimated static broadcast
+    # is the hazard; AQE still handles skew on the shuffled form
     vs_corpus = (
         c_l.join(_pin(b_r, "shuffle_hash", pinned), "cid")
         .withColumn("__dot", _sq_dot())

@@ -33,14 +33,12 @@ convergence checksum rides the checkpoint job via ``observe`` — ONE
 Spark job per round, no per-round parquet committer round-trip
 (measured 0.66 s write + 0.68 s read-back of a 500-row label table at
 sf0.1: pure fixed cost, ~2 s/round). Rounds free the previous round's
-checkpoint blocks as they go (rolling two-generation discipline, same
-as the old two-slot spill dirs); ``SPARK_GRAFT_CC_CHECKPOINT=parquet``
-restores the reliable per-round parquet checkpoint for clusters where
-executor loss matters more than per-round latency (localCheckpoint is
-not fault-tolerant by design). The converged labels ARE written to
-parquet once, so the caller-visible contract is unchanged: the
-returned labels are a plain file scan, ZERO cached blocks outlive the
-call, repeated calls leak nothing into the executor storage pool.
+checkpoint blocks as they go (rolling two-generation discipline). A
+localCheckpoint is not fault-tolerant by design: an executor lost
+mid-loop takes its checkpoint blocks with it and fails the call. The
+converged labels ARE written to parquet once: the returned labels are a
+plain file scan, ZERO cached blocks outlive the call, repeated calls
+leak nothing into the executor storage pool.
 Spill dirs are process-temp and removed at exit.
 
 The *driver* runs only the bounded loop + an O(1) convergence check
@@ -55,7 +53,6 @@ algorithm's fixpoint.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
@@ -101,12 +98,7 @@ def connected_components(
     untouched either way.
     """
     spark = edges.sparkSession
-    root = _spill_dir("cc-labels-")
-
-    def _slot(i: int) -> str:
-        return os.path.join(root, f"r{i}")
-
-    mode = os.environ.get("SPARK_GRAFT_CC_CHECKPOINT", "local")
+    out_path = os.path.join(_spill_dir("cc-labels-"), "labels")
     _LABEL_SCHEMA = "node long, comp long"
 
     # ONE evaluation of the (potentially expensive) pairs plan: explode
@@ -145,27 +137,14 @@ def connected_components(
         except Exception:
             pass
 
-    def _cut(df: DataFrame, rnd: int) -> tuple[DataFrame, int]:
+    def _cut(df: DataFrame) -> tuple[DataFrame, int]:
         # lineage cut + convergence checksum in ONE job: labels only
         # ever DECREASE elementwise, so the label sum is strictly
         # monotone until the fixpoint — an unchanged sum IS convergence.
         # The sum rides the materializing job itself via observe().
         obs = Observation()
         observed = df.observe(obs, F.sum("comp").alias("s"))
-        if mode == "parquet":
-            observed.write.mode("overwrite").parquet(_slot(rnd))
-            # explicit schema: skips the footer-sniffing job per round
-            return (
-                spark.read.schema(_LABEL_SCHEMA).parquet(_slot(rnd)),
-                obs.get["s"],
-            )
         return observed.localCheckpoint(eager=True), obs.get["s"]
-
-    def _release(df: DataFrame, rnd: int) -> None:
-        if mode == "parquet":
-            shutil.rmtree(_slot(rnd), ignore_errors=True)
-        else:
-            _free_checkpoint(df)
 
     try:
         limit = (
@@ -200,7 +179,6 @@ def connected_components(
                     else:
                         parent[ra] = rb
             labels_local = sorted((n, find(n)) for n in nodes)
-            out_path = _slot(0)
             local_frame(spark, labels_local, _LABEL_SCHEMA).write.mode(
                 "overwrite"
             ).parquet(out_path)
@@ -217,8 +195,8 @@ def connected_components(
                 F.least(F.col("a"), F.col("__nbr_min")).alias("comp"),
             )
         )
-        labels, prev_sum = _cut(init, 0)
-        for rnd in range(max_iter):
+        labels, prev_sum = _cut(init)
+        for _ in range(max_iter):
             # fused propagate + pointer jump (module doc): round edges =
             # sym ∪ self-loops ∪ pointer edges (v → comp(v)), then ONE
             # keyed join + min aggregate computes
@@ -244,21 +222,19 @@ def connected_components(
                 .agg(F.min("__c").alias("comp"))
                 .select(F.col("a").alias("node"), "comp")
             )
-            new_labels, new_sum = _cut(out, rnd + 1)  # lineage cut
+            new_labels, new_sum = _cut(out)  # lineage cut
             # the generation two rounds back is released as we go —
             # storage stays bounded at two label generations
-            _release(labels, rnd)
+            _free_checkpoint(labels)
             labels = new_labels
             if new_sum == prev_sum:
-                if mode == "parquet":
-                    return labels
                 # contract: the returned labels are a plain file scan —
-                # ONE write of the converged table replaces the old
-                # per-round parquet round-trips; every checkpoint block
-                # is freed before returning.
-                labels.write.mode("overwrite").parquet(_slot(rnd + 1))
+                # ONE write of the converged table, no per-round parquet
+                # round-trips; every checkpoint block is freed before
+                # returning.
+                labels.write.mode("overwrite").parquet(out_path)
                 _free_checkpoint(labels)
-                return spark.read.schema(_LABEL_SCHEMA).parquet(_slot(rnd + 1))
+                return spark.read.schema(_LABEL_SCHEMA).parquet(out_path)
             prev_sum = new_sum
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds"
@@ -306,8 +282,8 @@ def leakage_safe_split(
     per doc: (id, component, split).
 
     Scale shape: components via :func:`connected_components`
-    (pointer jumping, O(log n) rounds, parquet-checkpointed — zero
-    cached blocks after the call); the label table holds only nodes
+    (pointer jumping, O(log n) rounds, lineage cut by localCheckpoint —
+    zero cached blocks after the call); the label table holds only nodes
     that APPEAR in pairs (dup-involved docs, ≪ corpus for real
     crawls), joined back id-keyed in one shuffle; the hash split is a
     codegen'd projection. Integer-exact cross-engine: the hash is the

@@ -12,7 +12,7 @@ doubles — trivially a broadcast literal), and each row's distance is
 per-row float vector math at all.
 
 Spark-first shape: encoding is a pure Catalyst expression (slice +
-transform + array_position argmin — codegen'd, zero shuffle,
+transform + array_position argmin — zero shuffle,
 embarrassingly parallel), the encoded table is a normal parquet sink
 (composable with the IVF ``partitionBy(centroid)`` layout for the full
 IVFPQ: prune partitions, then ADC-scan only the probed cells), and the
@@ -22,8 +22,7 @@ ADC query plans as TakeOrderedAndProject over one scan of the *codes*
 Portability contract: codebooks here are **sliced from data rows**
 (deterministic, no RNG), so a DuckDB oracle derives bit-identical codes
 and distances; real deployments would train per-subspace KMeans
-(:func:`train_pq_codebooks_kmeans`, MLlib) — everything downstream is
-codebook-agnostic.
+codebooks instead — everything downstream is codebook-agnostic.
 """
 
 from __future__ import annotations
@@ -46,34 +45,6 @@ def slice_codebooks(
         [[float(x) for x in v[j * dsub : (j + 1) * dsub]] for v in vectors]
         for j in range(m)
     ]
-
-
-def train_pq_codebooks_kmeans(
-    df: DataFrame,
-    m: int,
-    ksub: int = 16,
-    vec_col: str = "embedding",
-    seed: int = 42,
-) -> list[list[list[float]]]:
-    """Per-subspace KMeans codebooks (the FAISS-style training path; not
-    oracle-portable — property-tested instead). One MLlib fit per
-    subspace over the sliced column."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    dim = len(df.select(vec_col).first()[0])
-    assert dim % m == 0
-    dsub = dim // m
-    books = []
-    for j in range(m):
-        sub = df.select(
-            array_to_vector(
-                F.slice(F.col(vec_col), j * dsub + 1, dsub).cast("array<double>")
-            ).alias("__features")
-        )
-        km = KMeans(k=ksub, seed=seed, maxIter=20, featuresCol="__features")
-        books.append([c.tolist() for c in km.fit(sub).clusterCenters()])
-    return books
 
 
 def pq_encode(

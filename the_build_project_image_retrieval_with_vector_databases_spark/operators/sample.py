@@ -51,13 +51,6 @@ def stratified_sample(
     )
 
 
-def random_split(
-    df: DataFrame, weights: list[float], seed: int = 42
-) -> list[DataFrame]:
-    """SA2 — the reference's 80/20 ``random_split`` (``train_model.py:42-45``)."""
-    return df.randomSplit(weights, seed)
-
-
 def weighted_multinomial_sample(
     df: DataFrame,
     *,
@@ -127,49 +120,4 @@ def weighted_multinomial_sample(
             (F.col("_u") >= F.col("_lo")) & (F.col("_u") < F.col("_hi")),
         )
         .select("probe", id_col, F.col("_w").alias("weight"))
-    )
-
-
-def domain_quota_sample(
-    df: DataFrame,
-    url_col: str = "url",
-    max_per_host: int = 10,
-    id_col: str = "doc_id",
-    seed: int = 42,
-) -> DataFrame:
-    """Per-registered-domain document cap — the crawl-balance rule of
-    RefinedWeb (Penedo et al. 2023) / Dolma: no single host may
-    contribute more than ``max_per_host`` documents, so hot domains
-    (forums, link farms) cannot dominate the training mix.
-
-    Per input row: the normalized ``host`` (the same pure-Catalyst
-    normalization as :func:`..dedup.normalize_url` — URL-level dedup
-    and domain quotas run on the same key), the host's total document
-    count, the row's deterministic ``rank_in_host`` under the
-    multiplicative-hash surrogate order (crawl-order-free: the kept
-    subset is a pseudo-random per-host sample, the
-    :func:`stratified_sample` contract with a derived stratum), and
-    ``is_kept`` = rank ≤ quota.
-
-    Scale shape at 100 TB: ONE exchange keyed by host; the count and
-    the rank window share that partitioning (one Exchange, one Sort in
-    the plan). Host cardinality at web scale is ~10⁷ registered
-    domains with crawl-shaped skew; a pathological single-host corpus
-    degrades to one partition — the same bound as any per-key window,
-    mitigated the stratified_sample way (salt the hot stratum, AQE
-    skew handling on the exchange)."""
-    from .dedup import normalize_url
-
-    host, _key = normalize_url(url_col)
-    w = Window.partitionBy("host")
-    return (
-        df.select(F.col(id_col), host.alias("host"))
-        .withColumn("n_host_docs", F.count(F.lit(1)).over(w))
-        .withColumn(
-            "rank_in_host",
-            F.row_number().over(
-                w.orderBy(shuffle_key(id_col, seed).asc(), F.col(id_col).asc())
-            ),
-        )
-        .withColumn("is_kept", F.col("rank_in_host") <= max_per_host)
     )

@@ -66,8 +66,10 @@ def language_id(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
 
 def quality_exprs(txt, toks):
     """(alpha_ratio, mean_tok_len, stop_ratio, quality) expressions over a
-    text column + its token array — the reusable core of
-    :func:`quality_score`."""
+    text column + its token array: heuristic document quality from the
+    alpha-char ratio, a mean-token-length band and stopword presence,
+    a composite in [0, 1]. The quality gate of the fused
+    ``queries_text`` pipelines."""
     n_tok = F.greatest(F.size(toks), F.lit(1)).cast("double")
     n_chars = F.greatest(F.length(txt), F.lit(1)).cast("double")
     alpha_ratio = (
@@ -152,7 +154,7 @@ def gopher_quality(
     """Per-document Gopher-rule repetition gate: the three signals of
     :func:`repetition_exprs` plus the published-threshold flag
     (top-word > 0.2, duplicated 2-grams > 0.4, or symbols > 0.3 ⇒
-    ``flagged``) — the repetition companion to :func:`quality_score`'s
+    ``flagged``) — the repetition companion to :func:`quality_exprs`'
     composition signals. One scan, no shuffle, no UDF."""
     toks = tokens(text_col)
     top_word_frac, dup_2gram_frac, symbol_ratio = repetition_exprs(
@@ -169,22 +171,6 @@ def gopher_quality(
         dup_2gram_frac.alias("dup_2gram_frac"),
         symbol_ratio.alias("symbol_ratio"),
         flagged.alias("flagged"),
-    )
-
-
-def quality_score(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Heuristic document quality: alpha-char ratio, mean token length
-    band, stopword presence — composite in [0, 1] (raw doubles, portable)."""
-    alpha_ratio, mean_tok_len, stop_ratio, score = quality_exprs(
-        F.col(text_col), tokens(text_col)
-    )
-    return spread(df).select(
-        F.col(id_col),
-        # raw integer-ratio doubles (see token_stats for the tie rationale)
-        alpha_ratio.alias("alpha_ratio"),
-        mean_tok_len.alias("mean_tok_len"),
-        stop_ratio.alias("stop_ratio"),
-        score.alias("quality"),
     )
 
 
@@ -945,481 +931,4 @@ def exact_substring_spans(
         ),
         F.coalesce(frac, F.lit(0.0)).alias("dup_frac"),
         (F.coalesce(frac, F.lit(0.0)) > F.lit(flag_above)).alias("flagged"),
-    )
-
-
-def token_entropy(
-    df: DataFrame,
-    templated_below: int = 2_500_000,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Per-document Shannon entropy of the doc's OWN unigram
-    distribution, in integer micro-nats — the templated/boilerplate
-    screen (low entropy ⇒ a few tokens dominate ⇒ generated or
-    navigational text; Shannon 1948, applied as in the Gopher/C4
-    repetition family but distribution-wide instead of top-gram).
-
-    H = ln(n) − (Σ_tok c·ln c)/n over per-doc token counts c. Exact
-    cross-engine via the dsir/perplexity quantization contract
-    (operators/mixing.py): each DISTINCT token contributes
-    ``lam_q = round(ln(c)·10⁶)`` — ONE correctly-rounded int→double
-    cast into the single 1-ulp ``ln``, rounded to integer micro-units
-    — so the per-doc sum ``Σ c·lam_q`` is an INTEGER sum (commutative,
-    order-free across partitions), and
-    ``entropy_micro = round(ln(n)·10⁶) − S_q div n`` is integer
-    arithmetic both engines replay exactly (±1 micro-nat quantization,
-    deterministic). ``is_templated = entropy_micro < templated_below``
-    (default 2.5 nats ≈ fewer than ~12 effective distinct tokens).
-
-    Plan: explode → (doc, token) count → per-doc aggregate: two keyed
-    exchanges, both map-side partial; wire carries (id, count) pairs.
-    Token-less docs emit no row (the repetition_quality convention).
-    Reference: /root/reference/app.py (no counterpart — north-star
-    extension, SURVEY §2.11; quality family sibling)."""
-    from ..functions.text import tokens
-
-    exploded = (
-        df.select(
-            F.col(id_col), F.explode_outer(tokens(text_col)).alias("__tok")
-        )
-        .filter(F.col("__tok").isNotNull())
-    )
-    per_tok = exploded.groupBy(id_col, "__tok").agg(
-        F.count(F.lit(1)).alias("__c")
-    )
-    lam_q = F.round(F.log(F.col("__c").cast("double")) * F.lit(1e6)).cast(
-        "long"
-    )
-    per_doc = per_tok.groupBy(id_col).agg(
-        F.sum("__c").alias("n_tokens"),
-        F.count(F.lit(1)).alias("n_distinct"),
-        F.sum(F.col("__c") * lam_q).alias("__s_q"),
-    )
-    ln_n_q = F.round(
-        F.log(F.col("n_tokens").cast("double")) * F.lit(1e6)
-    ).cast("long")
-    ent = (ln_n_q - F.expr("__s_q div n_tokens")).alias("entropy_micro")
-    return per_doc.select(
-        F.col(id_col),
-        F.col("n_tokens"),
-        F.col("n_distinct"),
-        ent,
-        (
-            ln_n_q - F.expr("__s_q div n_tokens")
-            < F.lit(templated_below).cast("long")
-        ).alias("is_templated"),
-    )
-
-
-def _bpe_fuse(syms, a, b):
-    """Greedy left-to-right NON-OVERLAPPING fuse of adjacent symbol pair
-    (a, b) → a||b over a symbol array — exactly the reference BPE merge
-    application (Sennrich et al. 2016's replace pass): scanning left,
-    a symbol joins the previous one iff (prev, cur) == (a, b); a just-
-    fused symbol can immediately fuse again only if the MERGED token
-    matches `a` (the "aaa" + (a,a) → [aa, a] rule). NULL a/b (a round
-    that found no pair) is the identity — the condition is NULL and
-    every symbol appends (how the unrolled oracle replays early-stop
-    rounds without branching on emptiness)."""
-    return F.aggregate(
-        syms,
-        F.array().cast("array<string>"),
-        lambda acc, s: F.when(
-            (F.size(acc) > 0) & (F.element_at(acc, -1) == a) & (s == b),
-            F.concat(
-                F.slice(acc, 1, F.greatest(F.size(acc) - 1, F.lit(0))),
-                F.array(F.concat(a, b)),
-            ),
-        ).otherwise(F.concat(acc, F.array(s))),
-    )
-
-
-def bpe_train_encode(
-    df: DataFrame,
-    n_merges: int = 6,
-    text_col: str = "text",
-    cache_handles: list | None = None,
-) -> DataFrame:
-    """FULL distributed BPE tokenizer training + corpus encoding
-    (Sennrich, Haddow & Birch, ACL 2016 — the complete learn_bpe +
-    apply_bpe loop, not just one merge round): ``n_merges`` iterations
-    of [count adjacent symbol pairs weighted by word frequency → fuse
-    the most frequent pair everywhere (ties: count desc, then pair
-    lexicographic)], then encode the corpus with the learned merges and
-    return the token vocabulary with occurrence counts.
-
-    Scale shape — why tokenizer training distributes this way: the
-    corpus collapses to its VOCABULARY after one map-side-partial
-    aggregate (distinct words ≪ corpus tokens), so every training round
-    runs on the small (word, freq, syms) table: one pair-count
-    aggregate (two bounded shuffles) + one driver-collected argmax row
-    (the kmeans_train_assign driver-loop precedent — k tiny jobs, k×2
-    strings of driver state) + one codegen'd per-row fuse fold. The
-    merge literals embed in the plan, so the returned DataFrame's
-    lineage is deterministic and persist-free after
-    ``materialize_and_release``. Cache ownership: with
-    ``cache_handles`` the caller owns release (the registry path hands
-    every round's persist to ``materialize_and_release``); WITHOUT it,
-    each round unpersists the segmentation it superseded as soon as
-    the argmax collect has materialized its child — a direct caller
-    pins at most the last two small vocab tables (needed so the
-    returned lineage reads a cache, not an n-deep recompute), never
-    n_merges+1. Rounds that find no pair (vocabulary
-    already fused to single symbols) record a NULL merge — the fuse
-    fold degrades to identity, and the unrolled DuckDB oracle replays
-    the same via LEFT JOIN of its possibly-empty per-round argmax CTE.
-
-    Output: ``(token, n_occurrences)`` — the trained subword vocabulary
-    applied to the corpus. Reference: /root/reference/app.py (no
-    counterpart — north-star extension, SURVEY §2.11 tokenizer
-    family; bpe_merge_step is this loop's single round)."""
-    words = (
-        df.select(
-            F.explode_outer(
-                F.regexp_extract_all(
-                    F.lower(F.col(text_col)), F.lit(BPE_PATTERN), 0
-                )
-            ).alias("word")
-        )
-        .filter(F.col("word").isNotNull())
-    )
-    vocab = words.groupBy("word").agg(F.count(F.lit(1)).alias("freq"))
-    seg = vocab.select(
-        "word",
-        "freq",
-        F.transform(
-            F.sequence(F.lit(1), F.length("word")),
-            lambda i: F.substring("word", i, F.lit(1)),
-        ).alias("syms"),
-    ).persist()
-    if cache_handles is not None:
-        cache_handles.append(seg)
-    prev: DataFrame | None = None
-    for _ in range(n_merges):
-        pair_arr = F.when(
-            F.size("syms") >= 2,
-            F.transform(
-                F.sequence(F.lit(1), F.size("syms") - 1),
-                lambda i: F.struct(
-                    F.element_at(F.col("syms"), i).alias("a"),
-                    F.element_at(F.col("syms"), i + F.lit(1)).alias("b"),
-                ),
-            ),
-        )
-        top = (
-            seg.select(F.col("freq"), F.explode_outer(pair_arr).alias("p"))
-            .filter(F.col("p").isNotNull())
-            .groupBy("p.a", "p.b")
-            .agg(F.sum("freq").alias("cnt"))
-            .orderBy(F.col("cnt").desc(), F.col("a").asc(), F.col("b").asc())
-            .limit(1)
-            .collect()
-        )
-        a, b = (top[0].a, top[0].b) if top else (None, None)
-        # the collect above materialized `seg`; its parent segmentation
-        # is superseded — in self-managed mode release it now
-        if cache_handles is None and prev is not None:
-            prev.unpersist()
-        new_seg = seg.select(
-            "word",
-            "freq",
-            _bpe_fuse(
-                F.col("syms"),
-                F.lit(a).cast("string"),
-                F.lit(b).cast("string"),
-            ).alias("syms"),
-        ).persist()
-        if cache_handles is not None:
-            cache_handles.append(new_seg)
-        prev, seg = seg, new_seg
-    return (
-        seg.select(F.explode_outer("syms").alias("token"), F.col("freq"))
-        .filter(F.col("token").isNotNull())
-        .groupBy("token")
-        .agg(F.sum("freq").alias("n_occurrences"))
-    )
-
-
-# ---------------------------------------------------------------------------
-# Unregistered corpus filters: Python-reference and plan tests in
-# tests/test_staged_ops.py
-# ---------------------------------------------------------------------------
-
-# Rae et al. 2021 (Gopher) Table A1 document/word-length screens — the
-# length complement of gopher_quality's repetition signals and
-# repetition_ngram_fractions' char-mass rules. Published thresholds.
-GOPHER_LENGTH_RULES = {
-    "min_words": 50,
-    "max_words": 100_000,
-    "min_mean_word_len": 3.0,
-    "max_mean_word_len": 10.0,
-    "min_alpha_word_frac": 0.8,
-    "max_bullet_line_frac": 0.9,
-    "max_ellipsis_line_frac": 0.3,
-}
-
-
-def line_exprs(txt) -> "F.Column":
-    """Non-empty trimmed lines of a text column (array<string>). The
-    trim is an explicit ``[ \\t\\r]`` class: Java's ``\\s`` includes
-    \\x0B while RE2's does not, so ``\\s`` would silently diverge
-    between Spark and the DuckDB oracle (the BPE_PATTERN lesson)."""
-    return F.filter(
-        F.transform(
-            F.split(txt, "\n"),
-            lambda l: F.regexp_replace(l, r"^[ \t\r]+|[ \t\r]+$", ""),
-        ),
-        lambda l: l != "",
-    )
-
-
-def gopher_length_screen(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Gopher Table-A1 length screens (Rae et al. 2021): per document,
-    word count, mean word length, alphabetic-word fraction, bullet-line
-    and ellipsis-line fractions, and the published-threshold ``passes``
-    flag (GOPHER_LENGTH_RULES). The length complement of
-    :func:`gopher_quality` (repetition ratios) and
-    :func:`repetition_ngram_fractions` (char-mass rules).
-
-    Scale shape: pure per-row codegen'd expressions over ONE corpus
-    scan — zero shuffle, zero UDF, trivially linear at 100 TB. The
-    token and line arrays each materialize in their OWN projection
-    (the CollapseProject/doc_shingles contract) so the regex split
-    runs once per row, not once per expression that references it.
-    All ratios are raw int/int doubles — bit-exact cross-engine.
-
-    Reference: /root/reference/app.py (no counterpart — north-star
-    extension, SURVEY §2.11 quality family)."""
-    R = GOPHER_LENGTH_RULES
-    base = spread(df).select(
-        F.col(id_col),
-        tokens(text_col).alias("__toks"),
-        line_exprs(F.col(text_col)).alias("__lines"),
-    )
-    toks, lines = F.col("__toks"), F.col("__lines")
-    n_words = F.size(toks)
-    nw = F.greatest(n_words, F.lit(1)).cast("double")
-    mean_word_len = (
-        F.aggregate(toks, F.lit(0), lambda a, t: a + F.length(t)).cast(
-            "double"
-        )
-        / nw
-    )
-    alpha_word_frac = (
-        F.size(F.filter(toks, lambda t: t.rlike("[a-z]"))).cast("double") / nw
-    )
-    n_lines = F.greatest(F.size(lines), F.lit(1)).cast("double")
-    bullet_line_frac = (
-        F.size(
-            F.filter(
-                lines, lambda l: l.startswith("- ") | l.startswith("* ")
-            )
-        ).cast("double")
-        / n_lines
-    )
-    ellipsis_line_frac = (
-        F.size(F.filter(lines, lambda l: l.endswith("..."))).cast("double")
-        / n_lines
-    )
-    passes = (
-        (n_words >= R["min_words"])
-        & (n_words <= R["max_words"])
-        & (mean_word_len >= R["min_mean_word_len"])
-        & (mean_word_len <= R["max_mean_word_len"])
-        & (alpha_word_frac > R["min_alpha_word_frac"])
-        & (bullet_line_frac <= R["max_bullet_line_frac"])
-        & (ellipsis_line_frac <= R["max_ellipsis_line_frac"])
-    )
-    return base.select(
-        F.col(id_col),
-        n_words.alias("n_words"),
-        mean_word_len.alias("mean_word_len"),
-        alpha_word_frac.alias("alpha_word_frac"),
-        bullet_line_frac.alias("bullet_line_frac"),
-        ellipsis_line_frac.alias("ellipsis_line_frac"),
-        passes.alias("passes"),
-    )
-
-
-# FineWeb (Penedo et al. 2024) / C4 (Raffel et al. 2020) composed
-# keep/drop rules, applied in a FIXED order so drop attribution is
-# deterministic: language gate, Gopher word-count bounds, Gopher
-# mean-word-length band, Gopher repetition caps, C4 terminal-
-# punctuation line fraction (FineWeb's 0.12 threshold).
-FINEWEB_RULE_ORDER = ("lang", "n_words", "mean_word_len", "repetition", "punct")
-FINEWEB_PUNCT_MIN_FRAC = 0.12
-
-
-def fineweb_filter_chain(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    lang: str = "en",
-) -> DataFrame:
-    """The composed FineWeb-style corpus filter (Penedo et al. 2024;
-    rules from C4 + Gopher): per document, one boolean per rule, the
-    overall ``keep`` decision, and ``first_failed`` — the first rule
-    (in FINEWEB_RULE_ORDER) that rejected the doc, NULL when kept.
-    Per-rule drop attribution is how pipeline owners tune a filter
-    chain (FineWeb reports exactly these removal rates per step).
-
-    Rules: pred_lang == ``lang`` with a positive stopword score
-    (:func:`lang_pred_expr`); 50 ≤ words ≤ 100k and 3 ≤ mean word
-    length ≤ 10 (GOPHER_LENGTH_RULES); top-word ≤ 0.2 and duplicated
-    2-grams ≤ 0.4 (:func:`repetition_exprs`); ≥ 12% of lines end in
-    terminal punctuation (./!/?/") — FineWeb's C4-subset threshold.
-
-    Scale shape: every rule is a per-row codegen'd expression fused
-    into ONE corpus scan — zero shuffle, zero UDF, no joins between
-    rule stages (the naive composition materializes one DataFrame per
-    filter and joins them back). Generalizes q_clean_corpus's
-    quality-gate stage with attribution.
-
-    Reference: /root/reference/app.py (no counterpart — north-star
-    extension, SURVEY §2.11 quality family)."""
-    R = GOPHER_LENGTH_RULES
-    base = spread(df).select(
-        F.col(id_col),
-        F.col(text_col),
-        tokens(text_col).alias("__toks"),
-        line_exprs(F.col(text_col)).alias("__lines"),
-    )
-    toks, lines = F.col("__toks"), F.col("__lines")
-    pred, _best = lang_pred_expr(toks)
-    r_lang = pred == lang
-    n_words = F.size(toks)
-    nw = F.greatest(n_words, F.lit(1)).cast("double")
-    mean_word_len = (
-        F.aggregate(toks, F.lit(0), lambda a, t: a + F.length(t)).cast(
-            "double"
-        )
-        / nw
-    )
-    r_words = (n_words >= R["min_words"]) & (n_words <= R["max_words"])
-    r_mean = (mean_word_len >= R["min_mean_word_len"]) & (
-        mean_word_len <= R["max_mean_word_len"]
-    )
-    top_word_frac, dup_2gram_frac, _sym = repetition_exprs(
-        F.col(text_col), toks
-    )
-    r_rep = (top_word_frac <= 0.2) & (dup_2gram_frac <= 0.4)
-    n_lines = F.greatest(F.size(lines), F.lit(1)).cast("double")
-    punct_frac = (
-        F.size(
-            F.filter(
-                lines,
-                lambda l: l.endswith(".")
-                | l.endswith("!")
-                | l.endswith("?")
-                | l.endswith('"'),
-            )
-        ).cast("double")
-        / n_lines
-    )
-    r_punct = punct_frac >= FINEWEB_PUNCT_MIN_FRAC
-    rules = {
-        "lang": r_lang,
-        "n_words": r_words,
-        "mean_word_len": r_mean,
-        "repetition": r_rep,
-        "punct": r_punct,
-    }
-    keep = r_lang & r_words & r_mean & r_rep & r_punct
-    first_failed = F.lit(None).cast("string")
-    for name in reversed(FINEWEB_RULE_ORDER):
-        first_failed = F.when(~rules[name], F.lit(name)).otherwise(
-            first_failed
-        )
-    return base.select(
-        F.col(id_col),
-        rules["lang"].alias("r_lang"),
-        rules["n_words"].alias("r_n_words"),
-        rules["mean_word_len"].alias("r_mean_word_len"),
-        rules["repetition"].alias("r_repetition"),
-        rules["punct"].alias("r_punct"),
-        keep.alias("keep"),
-        first_failed.alias("first_failed"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Winnowing overlap report (unregistered): Python-reference and plan
-# tests in tests/test_staged_ops.py
-# ---------------------------------------------------------------------------
-
-
-def winnow_overlap_pairs(
-    df: DataFrame,
-    k: int = 3,
-    w: int = 4,
-    min_shared: int = 2,
-    max_df: int | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Pairwise local-overlap detection over winnowing fingerprints —
-    the MOSS report step (Schleimer et al. SIGMOD 2003 §5): two
-    documents sharing ≥ ``min_shared`` distinct fingerprint hashes
-    share that many (w + k − 1)-token-or-longer regions. Output per
-    surviving pair: the shared-fingerprint count and the fingerprint-
-    set Jaccard (shared / (|A| + |B| − shared), an int-ratio double).
-
-    ``max_df`` drops fingerprints selected in more than that many
-    documents BEFORE pairing — the published MOSS move (ignore hashes
-    in too many submissions: boilerplate), and the same df-capped
-    stop-shingle guard as ``ngram_jaccard_dedup``. It is also the
-    scale guard: a fingerprint shared by d documents contributes
-    d·(d−1)/2 candidate pairs, so the cap bounds the join fan-out per
-    hash key — candidates come only from shared-hash buckets, never
-    all-pairs.
-
-    Scale shape: distinct → df-cap window → self equi-join on the hash
-    → pair aggregate — every exchange keyed, the join key uniform md5.
-
-    Reference: /root/reference/app.py (no counterpart — north-star
-    extension, SURVEY §2.11 fingerprinting family)."""
-    fps = winnowing_fingerprints(
-        df, k=k, w=w, text_col=text_col, id_col=id_col
-    )
-    f = fps.select(F.col(id_col), F.col("fp_hash")).distinct()
-    if max_df is not None:
-        wdf = Window.partitionBy("fp_hash")
-        f = (
-            f.withColumn("__df", F.count(F.lit(1)).over(wdf))
-            .filter(F.col("__df") <= max_df)
-            .drop("__df")
-        )
-    sizes = f.groupBy(id_col).agg(F.count(F.lit(1)).alias("__n"))
-    a = f.select(F.col(id_col).alias("left_id"), "fp_hash")
-    b = f.select(F.col(id_col).alias("right_id"), "fp_hash")
-    pairs = (
-        a.join(b, "fp_hash")
-        .filter(F.col("left_id") < F.col("right_id"))
-        .groupBy("left_id", "right_id")
-        .agg(F.count(F.lit(1)).cast("int").alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
-    )
-    sa = sizes.select(
-        F.col(id_col).alias("left_id"), F.col("__n").alias("__na")
-    )
-    sb = sizes.select(
-        F.col(id_col).alias("right_id"), F.col("__n").alias("__nb")
-    )
-    return (
-        pairs.join(sa, "left_id")
-        .join(sb, "right_id")
-        .select(
-            "left_id",
-            "right_id",
-            "n_shared",
-            (
-                F.col("n_shared").cast("double")
-                / (F.col("__na") + F.col("__nb") - F.col("n_shared")).cast(
-                    "double"
-                )
-            ).alias("fp_jaccard"),
-        )
     )

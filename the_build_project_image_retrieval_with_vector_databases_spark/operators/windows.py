@@ -152,10 +152,8 @@ def gap_fill(
     and the forward-fill window are both keyed by ``key_col`` — one
     partitioning serves join AND window. Slots before a key's first
     observation cannot exist by construction (the grid starts at the
-    key's min), so the fill is total.
-
-    Staged round 5 (pytest-verified); registry entry + DuckDB oracle
-    (generate_series + window) planned for the next rotation window.
+    key's min), so the fill is total. The registry's ``gap_fill`` entry
+    checks it against a DuckDB generate_series + window oracle.
     """
     ep = F.unix_timestamp(F.col(ts_col)).cast("long")
     slot = (F.floor(ep / step_s) * step_s).cast("long")

@@ -1,4 +1,4 @@
-"""Z-order (Morton-curve) multi-column clustering layout.
+"""Z-order (Morton-curve) key over two integer columns.
 
 A single-column sort gives parquet min/max row-group pruning on one
 predicate column only; queries filtering on BOTH (a, b) still scan
@@ -6,24 +6,16 @@ everything when sorted by a alone. Interleaving the bits of the two
 columns into one Morton key and range-partition-sorting by it co-locates
 rows that are close in BOTH dimensions, so every file/row-group covers a
 small (a, b) rectangle and two-sided predicates prune most of them —
-the standard lakehouse `OPTIMIZE ZORDER BY` technique, built here from
-plain Spark primitives (no table format required).
+the standard lakehouse `OPTIMIZE ZORDER BY` technique.
 
 The z-value is pure integer bit arithmetic (shift/mask/or), identical in
 Spark and DuckDB — so unlike engine-private layout features, the key
 itself is oracle-checkable.
-
-Scale shape: one `repartitionByRange` shuffle on the z-key (range
-boundaries from a sample), sort within partitions, write. Reads stay
-plain parquet scans; the benefit arrives through row-group statistics,
-invisible to the plan but measured empirically in tests/test_zorder.py
-(per-file bounding boxes shrink from ~full-domain to ~1/files of the
-domain).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -54,26 +46,3 @@ def duckdb_z_interleave(a: str, b: str, bits: int = 16) -> str:
         terms.append(f"(((CAST({a} AS BIGINT) >> {i}) & 1) << {2 * i})")
         terms.append(f"(((CAST({b} AS BIGINT) >> {i}) & 1) << {2 * i + 1})")
     return "(" + " | ".join(terms) + ")"
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    col_a: str,
-    col_b: str,
-    *,
-    files: int = 16,
-    bits: int = 16,
-) -> None:
-    """Materialize ``df`` clustered by the Morton key of (col_a, col_b):
-    range-partition into ``files`` output files and sort within each, so
-    parquet column chunks carry tight min/max rectangles over BOTH
-    columns."""
-    keyed = df.withColumn("__z", z_interleave(col_a, col_b, bits=bits))
-    (
-        keyed.repartitionByRange(files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )

@@ -929,7 +929,7 @@ def _oracle_semantic_dedup(
     k: int | None = None, dim: int = EMB_DIM, num: int = 3, den: int = 10
 ) -> str:
     """Mirror of semantic_dedup at the registered pin: same floor
-    quantization, the kmeans_step argmin assignment, and the
+    quantization, the first-min integer-L2² argmin assignment, and the
     sign-guarded squared-cosine threshold in HUGEINT — every compared
     quantity is an exact integer on both engines. ``k`` defaults to the
     corpus-sized derivation at the driver's sf0.01 fixture
@@ -1683,7 +1683,8 @@ def q_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     a training pipeline runs before indexing (degenerate/garbage
     embeddings poison both ANN recall and semantic dedup): assign every
     vector to its nearest of k=8 lowest-id centroids with the exact
-    integer-L2² argmin (the `kmeans_lloyd_step` machinery), then flag rows
+    integer-L2² argmin over floor-quantized vectors (first-min ties go
+    to the lower centroid id), then flag rows
     whose squared distance exceeds ``OUT_NUM/OUT_DEN ×`` their
     cluster's mean squared distance. The test is division-free
     cross-multiplied integer arithmetic
@@ -1738,7 +1739,7 @@ def _oracle_embedding_outliers(
     dim: int = EMB_DIM,
 ) -> str:
     """Mirror: same floor-quantization and lowest-id centroids as the
-    kmeans_step oracle, min-distance assignment (first-min ties), then
+    operator, min-distance assignment (first-min ties), then
     the identical cross-multiplied integer outlier test in HUGEINT."""
     scale = 1 << 20
     return f"""
@@ -1776,8 +1777,7 @@ BA_SEED = 42
 
 def q_batch_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Globally-canonical DataLoader batching (SA3, reference
-    ``train_model.py:49-50``) — the oracle-checkable complement of
-    ``fixed_batches``: batch ids derive from the GLOBAL
+    ``train_model.py:49-50``): batch ids derive from the GLOBAL
     deterministic-shuffle rank (a pure function of ids/seed/size, never
     of the physical partitioning), with the trailing partial batch
     dropped globally exactly as ``drop_last=True`` does. Two-phase

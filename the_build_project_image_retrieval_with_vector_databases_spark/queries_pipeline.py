@@ -282,8 +282,8 @@ def q_image_knn_pipeline(
     (the truncated fixture) drop out at the F2 gate exactly as the
     reference's error-tolerant loader skips corrupt files.
 
-    FULL DuckDB oracle since round 6 (previously the registry's one
-    rows-only entry): the embed uses ``embed_images_int`` — resize and
+    Checked against a FULL DuckDB oracle, not rows-only: the embed uses
+    ``embed_images_int`` — resize and
     block-SUM pooling stay in uint8/int64, the projection is the shared
     quantized-integer matrix (``int_projection_weights``, inlined into
     the oracle as literals) — so every embedding coordinate is an EXACT
@@ -598,30 +598,6 @@ SELECT epoch,
        count(*) AS n_samples
 FROM sim GROUP BY epoch ORDER BY epoch
 """
-
-
-# ---------------------------------------------------------------------------
-# P8 + T3 — formatted result display (score strings, 5-wide result grid)
-# ---------------------------------------------------------------------------
-# The P8/T3 display projection (the `%.4f` score string + 5-wide grid
-# chunk, reference utils/__init__.py:130-152) is a stateless column
-# projection, :func:`score_grid` below, pinned by
-# tests/test_pipeline_queries.py against the Python formatter.
-
-
-def score_grid(ranked: DataFrame, dist_col: str = "dist_exact",
-               rank_col: str = "rank", per_row: int = 5) -> DataFrame:
-    """P8 + T3 — the reference's result rendering
-    (``utils/__init__.py:130-152``): ``f"{score:.4f}"`` score strings
-    and ``per_row``-wide grid chunking over any ranked kNN result.
-    Pure projection — composes onto ``search_batch``/``knn_single``
-    output with zero plan cost (no shuffle, stays in codegen)."""
-    return ranked.select(
-        "vec_id",
-        F.format_number(F.col(dist_col), 4).alias("dist_str"),
-        F.floor((F.col(rank_col) - 1) / per_row).cast("int").alias("grid_row"),
-        ((F.col(rank_col) - 1) % per_row).cast("int").alias("grid_col"),
-    )
 
 
 PIPELINE_QUERIES = {

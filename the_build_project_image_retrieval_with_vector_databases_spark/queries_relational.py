@@ -510,13 +510,13 @@ def q_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(value).alias("part_value_d"),
         F.count("*").alias("n_items"),
     )
-    # r17 note: computing the total as a rollup of per_part (hoping for
-    # ReuseExchange to dedupe the scan) does NOT fire — column pruning
-    # gives the two branches different partial aggregates (n_items only
-    # on one side), so the canonicalized exchanges differ and the
-    # rollup branch just adds a part-keyed exchange. Measured 1.25 s →
-    # 1.52 s; reverted. The two-scan form's second pass is a pure
-    # map-side partial global sum (a 1-row exchange).
+    # Two scans on purpose: a rollup of per_part (hoping for
+    # ReuseExchange to dedupe the scan) does NOT reuse it — column
+    # pruning gives the two branches different partial aggregates
+    # (n_items only on one side), so the canonicalized exchanges differ
+    # and the rollup branch just adds a part-keyed exchange (measured
+    # 1.25 s → 1.52 s). The second scan is a pure map-side partial
+    # global sum (a 1-row exchange).
     total = li.agg(F.sum(value).alias("total_value_d"))
     return (
         per_part.join(F.broadcast(total))
@@ -722,10 +722,10 @@ def q_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     to 'EXISTS in a 100 TB fact'."""
     li = load_table(spark, sf_dir, "lineitem")
     supp = load_table(spark, sf_dir, "supplier")
-    # r17 (guide §2.4/§1.1): ONE lineitem scan, NO Expand. The old shape
-    # ran a second scan for the distinct (orderkey, returned-supplier)
-    # pairs and joined it back, and its two countDistincts planned an
-    # Expand (3× the scan rows into the shuffle). Two-level aggregate
+    # ONE lineitem scan, NO Expand (guide §2.4/§1.1). A second scan for
+    # the distinct (orderkey, returned-supplier) pairs joined back would
+    # read lineitem twice, and two countDistincts plan an Expand (3×
+    # the scan rows into the shuffle). Two-level aggregate
     # instead: collapse to distinct (order, supplier) pairs with a
     # returned flag (map-side partial dedup — the shuffle carries ~one
     # row per pair), then per-order counts from the pair table. On the
@@ -834,11 +834,10 @@ GROUP BY c_mktsegment
 
 def q_zorder_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Morton (z-order) keys over (l_partkey, l_suppkey) — the clustering
-    key ``plans/zorder.py::write_zordered`` range-sorts by so files carry
-    tight min/max rectangles over BOTH columns (two-sided predicates then
-    prune row groups; the empirical bbox-shrink is pinned in
-    tests/test_zorder.py). Pure shift/mask/or bigint arithmetic —
-    engine-portable, so even the layout key is oracle-checked."""
+    key whose range-sorted layout gives files tight min/max rectangles
+    over BOTH columns, so two-sided predicates prune row groups. Pure
+    shift/mask/or bigint arithmetic — engine-portable, so even the
+    layout key is oracle-checked."""
     from .plans.zorder import z_interleave
 
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") < 100)
@@ -968,7 +967,6 @@ ORDER BY s_suppkey
 
 
 RELATIONAL_QUERIES = {
-    # "regional_volume": retired r9 (siblings: part_profit + supplier_rollup)
     "part_profit": q_part_profit,
     "forecast_revenue": q_forecast_revenue,
     "running_revenue": q_running_revenue,
@@ -981,7 +979,6 @@ RELATIONAL_QUERIES = {
     "asof_join": q_asof_join,
     "important_stock": q_important_stock,
     "large_orders": q_large_orders,
-    # "ship_mode_counts": retired r9 (sibling: order_count_distribution)
     "revenue_growth": q_revenue_growth,
     "ntile_segments": q_ntile_segments,
     "zorder_keys": q_zorder_keys,

@@ -99,7 +99,7 @@ def q_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-rule repetition gate (Rae et al. 2021 §A1.1): top-word
     fraction, duplicated-2-gram fraction, symbol ratio, and the
     published-threshold flag per document — the repetition companion to
-    ``quality_score``. One scan, zero shuffles, pure expressions."""
+    ``quality_exprs``. One scan, zero shuffles, pure expressions."""
     docs = load_table(spark, sf_dir, "documents")
     return T.gopher_quality(spread(docs))
 

@@ -43,7 +43,7 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # fixture events.parquet carries TIMESTAMP(NANOS); read as long
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # r17: FileOutputCommitter v2 — task output moves to the
+        # FileOutputCommitter v2 — task output moves to the
         # destination at task commit instead of a second job-commit
         # rename pass. Saves ~0.1-0.15 s of fixed committer cost on
         # every small spill/checkpoint write (measured, quiet machine);
@@ -51,10 +51,10 @@ def get_spark(
         # is irrelevant to process-temp spill dirs that are overwritten
         # or removed, and v2 is the standard production choice on
         # object stores for the same reason.
-        # r18 note (ADVICE r17): this is SESSION-wide, so any EXTERNAL
-        # parquet write through get_spark inherits the v2 caveat too —
-        # a job that dies mid-write can leave partial task output at
-        # the destination instead of nothing. Every engine-internal
+        # This is SESSION-wide, so any EXTERNAL parquet write through
+        # get_spark inherits the v2 caveat too — a job that dies
+        # mid-write can leave partial task output at the destination
+        # instead of nothing. Every engine-internal
         # write is overwrite-mode into a fresh process-temp dir (safe
         # by construction); external writers that need all-or-nothing
         # job commit should set

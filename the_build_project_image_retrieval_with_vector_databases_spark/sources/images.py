@@ -429,8 +429,8 @@ def _parse_jpeg_inner(payload: bytes):
     """Baseline JFIF JPEG → (h, w, 3) uint8 RGB array, dependency-free —
     the reference's PRIMARY corpus format (uploads accept jpg/jpeg,
     reference ``app.py:78``; the Caltech101 corpus is ``.jpg``,
-    ``README.md:24-36``). Closes the r5 boundary where JPEG was the one
-    reference format that still required PIL.
+    ``README.md:24-36``). With it, no reference image format needs
+    PIL.
 
     Supported: baseline/extended sequential Huffman DCT (SOF0/SOF1),
     8-bit samples, 1 or 3 components, any sampling factors (4:4:4,

@@ -16,8 +16,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .tables import local_frame
-
 
 def read_manifest(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
     """Read a train_val.json-shaped manifest → (train, categories)."""
@@ -32,15 +30,4 @@ def read_manifest(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]
     categories = raw.select(
         F.posexplode("categories").alias("label", "category")
     ).select(F.col("label").cast("int"), "category")
-    return train, categories
-
-
-def manifest_from_rows(
-    spark: SparkSession, train_rows, category_names
-) -> tuple[DataFrame, DataFrame]:
-    """Build the same two tables from in-memory rows (test fixture path)."""
-    train = local_frame(spark, list(train_rows), "label int, relpath string")
-    categories = local_frame(
-        spark, list(enumerate(category_names)), "label int, category string"
-    )
     return train, categories

@@ -27,7 +27,7 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# r17: per-(sf_dir, table) READER SCHEMA cache. A bare
+# Per-(sf_dir, table) READER SCHEMA cache. A bare
 # ``spark.read.parquet(path)`` pays file listing + footer schema
 # inference on EVERY call — measured ~0.11 s of fixed driver-side
 # metadata work per load (vs ~0.02 s with an explicit schema), which a
@@ -55,10 +55,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         except Exception:
             pass
     path = os.path.join(sf_dir, f"{name}.parquet")
-    # r18 (ADVICE r17): the cache key carries the file's mtime+size, so
-    # a fixture regenerated in-process with a different schema is read
-    # fresh instead of silently decoded with the stale schema (one
-    # os.stat per load — noise next to the ~0.1 s footer sniff saved)
+    # the cache key carries the file's mtime+size, so a fixture
+    # regenerated in-process with a different schema is read fresh
+    # instead of silently decoded with the stale schema (one os.stat
+    # per load — noise next to the ~0.1 s footer sniff saved)
     try:
         st = os.stat(path)
         key = (sf_dir, name, st.st_mtime_ns, st.st_size)
@@ -175,10 +175,3 @@ def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
             schema=arrow_schema,
         )
     return spark.createDataFrame(rows, schema=struct)
-
-
-def register_views(spark: SparkSession, sf_dir: str, names=TABLES) -> None:
-    """Register fixture tables as temp views so ``spark.sql`` queries can
-    name them exactly as the DuckDB oracle does."""
-    for name in names:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -4,6 +4,5 @@ reference's closest analogue is the interactive serve loop, app.py:124-179)."""
 from .queries import (  # noqa: F401
     serve_loop,
     streaming_dedup,
-    streaming_session_window,
     streaming_tumbling_counts,
 )

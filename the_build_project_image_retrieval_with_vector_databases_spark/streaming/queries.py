@@ -40,34 +40,6 @@ def streaming_tumbling_counts(
     )
 
 
-def streaming_session_window(
-    stream: DataFrame,
-    gap_s: int = 1800,
-    watermark_s: int = 3600,
-    ts_col: str = "ts",
-    user_col: str = "user_id",
-) -> DataFrame:
-    """Native session windows (``session_window``) — the streaming
-    equivalent of operators.windows.sessionize."""
-    return (
-        stream.withWatermark(ts_col, f"{watermark_s} seconds")
-        .groupBy(
-            F.session_window(F.col(ts_col), f"{gap_s} seconds"), F.col(user_col)
-        )
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            F.col(user_col),
-            F.unix_timestamp(F.col("session_window.start"))
-            .cast("long")
-            .alias("session_start"),
-            F.unix_timestamp(F.col("session_window.end"))
-            .cast("long")
-            .alias("session_end"),
-            "n_events",
-        )
-    )
-
-
 def streaming_dedup(
     stream: DataFrame,
     key_cols: list[str],
