@@ -12,9 +12,9 @@ from the_build_project_image_retrieval_with_vector_databases_spark.operators.ann
     assign_centroids,
     hyperplanes,
     ivf_search,
+    kmeans_train_exact,
     lsh_bucket,
     lsh_candidates,
-    train_centroids,
 )
 from the_build_project_image_retrieval_with_vector_databases_spark.operators.knn import (
     knn_join,
@@ -73,7 +73,7 @@ def test_ivf_partial_probe_recall(spark, emb, emb_np):
     worst case for IVF, so the bar is deliberately modest (> 0.3) and the
     real assertion is structural: results come only from probed cells."""
     ids, mat = emb_np
-    centroids = train_centroids(emb, k=16, seed=42)
+    centroids = kmeans_train_exact(emb, k=16, max_iter=20)[0]
     q = list(map(float, mat[0]))
     qlit = F.array(*[F.lit(x) for x in q]).cast("array<double>")
     corpus = assign_centroids(emb, centroids).filter(F.col("vec_id") != 0).cache()

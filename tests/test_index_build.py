@@ -85,14 +85,14 @@ def test_ivf_append_maintenance(spark, tmp_path):
     new rows land in their assigned partitions, probes see both."""
     from the_build_project_image_retrieval_with_vector_databases_spark.operators.ann import (
         append_to_ivf_index,
-        train_centroids,
+        kmeans_train_exact,
         write_ivf_index,
     )
 
     emb = _emb(spark)
     base = emb.filter(F.col("vec_id") < 400)
     extra = emb.filter(F.col("vec_id") >= 400)
-    cents = train_centroids(base, k=4, seed=42)
+    cents = kmeans_train_exact(base, k=4, max_iter=20)[0]
     path = str(tmp_path / "ivf_inc")
     write_ivf_index(base, path, cents)
     n_base = spark.read.parquet(path).count()
@@ -136,9 +136,9 @@ def test_ivf_layout_roundtrip(spark, tmp_path):
     # probe over the materialized layout returns top-k with metadata intact
     qrow = built.filter(F.col("vec_id") == built.select(F.min("vec_id")).first()[0]).first()
     from the_build_project_image_retrieval_with_vector_databases_spark.operators.ann import (
-        train_centroids,
+        kmeans_train_exact,
     )
-    cents = train_centroids(_emb(spark), k=4, seed=42)
+    cents = kmeans_train_exact(_emb(spark), k=4, max_iter=20)[0]
     got = ivf_search(
         spark, cents, list(map(float, qrow.embedding)), k=3, nprobe=4, path=path
     ).collect()
@@ -191,7 +191,7 @@ def _append_adds_one_file_per_touched_list(spark, tmp_path, aqe, extra_parts):
     from the_build_project_image_retrieval_with_vector_databases_spark.operators.ann import (
         append_to_ivf_index,
         assign_centroids,
-        train_centroids,
+        kmeans_train_exact,
         write_ivf_index,
     )
 
@@ -201,7 +201,7 @@ def _append_adds_one_file_per_touched_list(spark, tmp_path, aqe, extra_parts):
     if extra_parts is not None:
         extra = extra.repartition(extra_parts)
     assert base.rdd.getNumPartitions() == 4
-    cents = train_centroids(base, k=4, seed=42)
+    cents = kmeans_train_exact(base, k=4, max_iter=20)[0]
     path = str(tmp_path / "ivf_lists")
     touched = {
         r.centroid
@@ -233,7 +233,7 @@ def test_ivf_write_and_append_leave_one_file_per_list(spark, monkeypatch, tmp_pa
     to one more per batch partition. With AQE on small lists share a
     task; with it off the rebalance is a hash repartition on centroid.
     Either way a list is one file. A zero driver-path byte bound keeps
-    the append on Spark's writer (``write_lists``)."""
+    the write and the append on Spark's writer (``write_lists``)."""
     monkeypatch.setattr(knn, "ARROW_DRIVER_MAX_BYTES", 0)
     _append_adds_one_file_per_touched_list(spark, tmp_path, aqe, extra_parts=3)
 
@@ -245,17 +245,19 @@ def test_ivf_driver_append_leaves_one_file_per_list(spark, tmp_path, aqe):
     _append_adds_one_file_per_touched_list(spark, tmp_path, aqe, extra_parts=None)
 
 
-def test_ivf_write_splits_a_list_past_the_advisory_size(spark, tmp_path):
+def test_ivf_write_splits_a_list_past_the_advisory_size(spark, monkeypatch, tmp_path):
     """A list larger than ``advisoryPartitionSizeInBytes`` is written by
     several tasks, not funnelled into one: at scale a skewed list does
-    not land on one task."""
+    not land on one task. A zero driver-path byte bound keeps the write
+    on Spark's writer."""
+    monkeypatch.setattr(knn, "ARROW_DRIVER_MAX_BYTES", 0)
     from the_build_project_image_retrieval_with_vector_databases_spark.operators.ann import (
-        train_centroids,
+        kmeans_train_exact,
         write_ivf_index,
     )
 
     emb = _emb(spark)
-    cents = train_centroids(emb, k=4, seed=42)
+    cents = kmeans_train_exact(emb, k=4, max_iter=20)[0]
     path = str(tmp_path / "ivf_split")
     with _session_conf(
         spark,
@@ -269,10 +271,12 @@ def test_ivf_write_splits_a_list_past_the_advisory_size(spark, tmp_path):
     assert spark.read.parquet(path).count() == emb.count()
 
 
-def test_build_index_ivf_leaves_one_file_per_list(spark, tmp_path):
+def test_build_index_ivf_leaves_one_file_per_list(spark, monkeypatch, tmp_path):
     """With partition coalescing off the build's last stage keeps every
     shuffle partition, the many-task shape of a large input, and each
-    of them used to write its own file into every list."""
+    of them used to write its own file into every list. A zero
+    driver-path byte bound keeps the build on the Spark path."""
+    monkeypatch.setattr(knn, "ARROW_DRIVER_MAX_BYTES", 0)
     path = str(tmp_path / "ivf_build")
     with _session_conf(
         spark, {**_SMALL_LISTS, "spark.sql.adaptive.coalescePartitions.enabled": "false"}

@@ -62,7 +62,7 @@ def test_driver_append_matches_spark_writer(spark, monkeypatch, tmp_path, emb):
     """Same rows and lists as Spark's writer, one new file per touched
     list and no temp file, the same schema read back, also from a list
     only the driver wrote, and a cached layout frame sees the rows."""
-    cents = ann.train_centroids(emb.filter(F.col("vec_id") < 400), k=4, seed=42)
+    cents = ann.kmeans_train_exact(emb.filter(F.col("vec_id") < 400), k=4, max_iter=20)[0]
     assigned = ann.assign_centroids(emb, cents)
     # the base layout lacks list 0, so only the append writes it
     base = assigned.filter((F.col("vec_id") < 400) & (F.col("centroid") != 0))
@@ -182,7 +182,7 @@ def test_local_dir_resolves_only_the_local_file_system(spark, tmp_path):
 def test_driver_append_leaves_existing_files_untouched(spark, tmp_path, emb):
     """Appending twice adds one file per touched list each time and keeps
     every earlier file byte for byte."""
-    cents = ann.train_centroids(emb.filter(F.col("vec_id") < 400), k=4, seed=42)
+    cents = ann.kmeans_train_exact(emb.filter(F.col("vec_id") < 400), k=4, max_iter=20)[0]
     path = str(tmp_path / "layout")
     ann.write_ivf_index(emb.filter(F.col("vec_id") < 300), path, cents)
     snap = str(tmp_path / "snap")

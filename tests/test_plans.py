@@ -381,8 +381,10 @@ def test_decontaminate_broadcasts_benchmark_grams(spark):
 
 def test_matryoshka_topk_is_take_ordered_no_shuffle(spark):
     """Truncated-embedding top-k keeps the flagship physical shape: the
-    1-row truncated query vector broadcasts, the fold stays codegen'd,
-    and the top-10 is a zero-shuffle TakeOrderedAndProject — truncation
+    1-row truncated query vector broadcasts, the fold stays in the
+    scan's projection (its ``aggregate`` runs interpreted inside the
+    generated stage), and the top-10 is a zero-shuffle
+    TakeOrderedAndProject — truncation
     must not cost the plan anything."""
     df = entrymod.queries()["matryoshka_topk"](spark, SF_SMOKE)
     plan = _explain(df)

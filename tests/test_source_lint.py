@@ -18,10 +18,11 @@ at the top level of a ``queries*.py`` module must be a registry value
 (``QUERIES`` / ``ORACLES``): an unregistered wrapper is code no registry
 entry reaches.
 
-The IVF append's driver path (``operators/ann.py::_append_lists_driver``)
-holds the package's only direct pyarrow parquet write: every other
-write goes through Spark's writer, whose commit protocol and schema
-footer the layout's readers rely on.
+The IVF layout's driver writer (``operators/ann.py::_write_list_files``,
+behind the driver paths of the build, the write and the append) holds
+the package's only direct pyarrow parquet write: every other write goes
+through Spark's writer, whose commit protocol and schema footer the
+layout's readers rely on.
 
 ``operators/knn.py`` keeps one skeleton for its kNN kernels: one
 function calls ``row_number`` (the rank step every kernel ends in), and
@@ -312,12 +313,14 @@ def _parquet_writes(source: str) -> list[tuple[str, int]]:
 
 
 def test_only_the_append_driver_path_writes_parquet_with_pyarrow():
+    """The IVF driver writer behind the append's, the layout write's and
+    the build's driver paths holds the one pyarrow parquet write."""
     found = [
         (str(path.relative_to(_PKG)), owner)
         for path in sorted(_PKG.rglob("*.py"))
         for owner, _ in _parquet_writes(path.read_text(encoding="utf-8"))
     ]
-    assert found == [("operators/ann.py", "_append_lists_driver")], found
+    assert found == [("operators/ann.py", "_write_list_files")], found
 
 
 def test_parquet_write_lint_catches_planted_calls():
@@ -326,7 +329,7 @@ def test_parquet_write_lint_catches_planted_calls():
     docstring and a read are not."""
     planted = (
         "import pyarrow.parquet as pq\n"
-        "def _append_lists_driver(t, path):\n"
+        "def _write_list_files(t, path):\n"
         "    pq.write_table(t, path)\n"
         "def spill(t, path):\n"
         '    """pq.write_table(t, path)"""\n'
@@ -339,7 +342,7 @@ def test_parquet_write_lint_catches_planted_calls():
         "write_table(t, 'x')\n"
     )
     assert _parquet_writes(planted) == [
-        ("_append_lists_driver", 3),
+        ("_write_list_files", 3),
         ("spill", 11),
         ("spill", 12),
         ("<module>", 14),

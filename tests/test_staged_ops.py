@@ -2042,7 +2042,7 @@ def test_bq_hamming_oracle_parity_staged(spark, sf_dir):
 
 def test_bq_hamming_plan_and_near_dup_retrieval(spark):
     """Plan contract: the flagship zero-shuffle shape — encode is one
-    codegen'd projection (literal thresholds), search is
+    projection (literal thresholds), search is
     TakeOrderedAndProject, NO exchange/BNLJ/Python anywhere.
 
     Retrieval property (the BQ use case — near-duplicate/rescore
@@ -2665,7 +2665,7 @@ def test_winnowing_shared_substring_guarantee(spark):
 
 
 def test_winnowing_plan_zero_shuffle(spark):
-    """Plan contract: ONE codegen'd projection chain — explode over a
+    """Plan contract: ONE projection chain — explode over a
     per-row array, ZERO exchanges, no Python, no join."""
     from the_build_project_image_retrieval_with_vector_databases_spark.queries_text import (
         q_winnowing_fingerprint,

@@ -12,7 +12,7 @@ Design (see SURVEY.md):
   exist only where built-ins can't express the semantics.
 - Exact kNN = broadcast query + columnar scan + top-k
   (``TakeOrderedAndProject`` / window-rank); approximate kNN = IVF
-  (KMeans-centroid partition pruning) or MLlib LSH.
+  (k-means-centroid partition pruning) or random-hyperplane LSH.
 - LLM-data-pipeline extensions (dedup, text analysis, similarity search,
   multimodal columns) are first-class operators on the same stack.
 

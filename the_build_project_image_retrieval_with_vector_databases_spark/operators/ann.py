@@ -5,7 +5,8 @@ brute-force scan is a last resort; the engine layers two classic ANN
 schemes on top of the same embeddings table, both expressed as DataFrame
 ops so Catalyst's partition pruning does the index lookup:
 
-- **IVF (inverted file)**: KMeans centroids (MLlib) → every vector is
+- **IVF (inverted file)**: exact quantized k-means centroids
+  (:func:`kmeans_train_exact`) → every vector is
   assigned its nearest centroid id → table written
   ``partitionBy("centroid")``, one parquet file per list
   (:func:`write_lists`). A query probes the ``nprobe`` nearest
@@ -26,6 +27,7 @@ from __future__ import annotations
 
 import math
 import os
+import shutil
 import uuid
 
 import numpy as np
@@ -47,34 +49,10 @@ from ..functions.vector import array_lit, l2_dist
 from ..sources.tables import local_frame
 from .knn import _fits_driver, _isin, _left_fold, _rank, knn_single
 
-try:  # MLlib is in the base image; guard anyway for minimal installs
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    _HAVE_MLLIB = True
-except Exception:  # pragma: no cover
-    _HAVE_MLLIB = False
-
 
 # ---------------------------------------------------------------------------
 # IVF
 # ---------------------------------------------------------------------------
-
-
-def train_centroids(
-    df: DataFrame,
-    k: int = 16,
-    vec_col: str = "embedding",
-    seed: int = 42,
-    max_iter: int = 20,
-) -> list[list[float]]:
-    """KMeans centroids for the IVF coarse quantizer (driver-side list,
-    tiny: k × D floats)."""
-    if not _HAVE_MLLIB:
-        raise RuntimeError("pyspark.ml unavailable")
-    km = KMeans(k=k, seed=seed, maxIter=max_iter, featuresCol="__features")
-    model = km.fit(df.select(array_to_vector(F.col(vec_col)).alias("__features")))
-    return [c.tolist() for c in model.clusterCenters()]
 
 
 def assign_centroids(
@@ -280,19 +258,18 @@ KMEANS_DRIVER_TRAIN_MAX_BYTES = 32 << 20
 
 
 def _kmeans_train_driver(
-    df: DataFrame,
+    ids: np.ndarray,
+    X: np.ndarray,
     k: int,
     max_iter: int,
-    vec_col: str,
-    id_col: str,
     scale: int,
 ) -> tuple[list[list[float]], int]:
-    """Driver-side Lloyd loop for tables at/below
-    ``KMEANS_DRIVER_TRAIN_MAX_BYTES`` — ONE Spark job (the quantize +
-    collect; quantization stays the pinned Spark expression), then
-    every round is pure numpy with the exact integers the distributed
-    loop computes: assignment is the identical
-    ``argmin(|c|² − 2·x@cᵀ)`` int64 kernel of
+    """The driver-side Lloyd loop over collected quantized vectors ``X``
+    (n×D int64, row i keyed by ``ids[i]``), shared by
+    :func:`kmeans_train_exact` below ``KMEANS_DRIVER_TRAIN_MAX_BYTES``
+    and the driver path of ``plans.index_build.build_index``. Every round
+    is pure numpy with the exact integers the distributed loop computes:
+    assignment is the identical ``argmin(|c|² − 2·x@cᵀ)`` int64 kernel of
     :func:`_lloyd_round_partials` (the per-row |q|² shift argument),
     per-cluster sums are int64-exact (the byte gate admits n ≤ 2²² rows;
     with |qv| < 2³⁰ that keeps Σ < 2⁵²), and the mean → re-quantize math
@@ -302,14 +279,9 @@ def _kmeans_train_driver(
     through the cluster."""
     import math
 
-    rows = (
-        df.select(F.col(id_col), quantize_vec(vec_col, scale).alias("qv"))
-        .collect()
-    )
-    if not rows:
+    if not len(X):
         raise ValueError("kmeans_train_exact on an empty table")
-    rows.sort(key=lambda r: r[0])  # ≡ orderBy(id): ids are unique
-    X = np.asarray([list(r.qv) for r in rows], dtype=np.int64)
+    X = X[np.argsort(ids, kind="stable")]  # ≡ orderBy(id): ids are unique
     cents_q: list[list[int]] = [
         [int(v) for v in X[i]] for i in range(min(k, len(X)))
     ]
@@ -373,8 +345,10 @@ def kmeans_train_exact(
     fixed point — which implies the assignment is too.
 
     Returns (centroids as floats in data units, rounds actually run).
-    Deploy note: MLlib's :func:`train_centroids` remains the fast path;
-    this is the auditable/reproducible one.
+    It is the engine's one k-means trainer: the IVF build
+    (``plans.index_build.build_index``) trains with it, or with its
+    driver loop (:func:`_kmeans_train_driver`) on the build's own
+    collect, so both build paths give the same centroids.
 
     When rows × D × 8 is at or below ``KMEANS_DRIVER_TRAIN_MAX_BYTES``
     (override via ``driver_train_max_bytes``; the test seam) the
@@ -405,8 +379,14 @@ def kmeans_train_exact(
         else driver_train_max_bytes
     )
     if n_rows * max(dim or 0, 0) * 8 <= limit:
+        # ONE Spark job: the quantization stays the pinned Spark expression
+        rows = df.select(
+            F.col(id_col), quantize_vec(vec_col, scale).alias("qv")
+        ).collect()
         return _kmeans_train_driver(
-            df, k, max_iter, vec_col, id_col, scale
+            np.asarray([r[0] for r in rows]),
+            np.asarray([list(r.qv) for r in rows], dtype=np.int64),
+            k, max_iter, scale,
         )
     parallelism = df.sparkSession.sparkContext.defaultParallelism
     target = max(1, min(parallelism, -(-n_rows // 512)))
@@ -493,14 +473,20 @@ def write_ivf_index(
     vec_col: str = "embedding",
 ) -> None:
     """Materialize the IVF layout: embeddings partitioned by centroid,
-    one parquet file per inverted list (:func:`write_lists`) — the
-    engine's replacement for ``faiss.write_index`` (S5; reference
-    ``utils/faiss_utils.py:11-13``). Partition pruning over this layout
-    is the inverted-list probe."""
-    write_lists(assign_centroids(df, centroids, vec_col), path)
+    one parquet file per inverted list — the engine's replacement for
+    ``faiss.write_index`` (S5; reference ``utils/faiss_utils.py:11-13``).
+    Partition pruning over this layout is the inverted-list probe.
+
+    Under the bounds of :func:`append_to_ivf_index`'s driver path the
+    layout is written in the driver (:func:`_write_lists_driver`, one
+    ``toArrow()`` job); otherwise by :func:`write_lists`. Either way
+    ``path`` is replaced, ``_SUCCESS`` marks the finished layout, and
+    every row lands in the list :func:`assign_centroids` gives it."""
+    if not _write_lists_driver(df, path, centroids, vec_col, overwrite=True):
+        write_lists(assign_centroids(df, centroids, vec_col), path)
 
 
-# Column types the driver append writes with pyarrow: each one's parquet
+# Column types the driver writer writes with pyarrow: each one's parquet
 # type reads back as the same Spark type. Any other type (timestamp,
 # date, decimal, map, struct, nested array) takes Spark's writer.
 _NUMERIC_TYPES = (IntegralType, FloatType, DoubleType)
@@ -523,62 +509,74 @@ def _local_dir(spark, path: str) -> str | None:
     return fs.makeQualified(jpath).toUri().getPath()
 
 
-def _append_lists_driver(
-    df: DataFrame, path: str, centroids: list[list[float]], vec_col: str
-) -> bool:
-    """The driver path of :func:`append_to_ivf_index`: one ``toArrow()``
-    job, each row's list by :func:`~.knn._left_fold` and a first-minimum
-    ``argmin`` (the doubles and the tie rule of :func:`assign_centroids`),
-    then one parquet file per touched list written by pyarrow under a
-    hidden name and renamed into ``centroid=<id>/``, and the cached data
-    of ``path`` refreshed, as Spark's writer does. The files carry
-    Spark's row-schema footer key, so ``spark.read.parquet`` reads the
-    same schema whichever file it takes it from.
-
-    Returns False, having written nothing, where Spark's writer must
-    answer: a column type outside :data:`_DRIVER_WRITE_TYPES` or a
-    non-numeric vector, a ``path`` whose Hadoop file system is not
-    ``file``, a batch past the kNN driver-path bounds read for its k
-    centroids, a null anywhere (a vector, an element, an id), a vector
-    whose length is not D (its expression distance is null) or a NaN
-    distance."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    cents = np.asarray(centroids, dtype=np.float64)
-    data = df.drop("centroid")  # partitionBy leaves it out of the files
-    types = {f.name: f.dataType for f in data.schema.fields}
-    vec_type = types.get(vec_col)
+def _driver_dir(df: DataFrame, path: str, vec_col: str) -> str | None:
+    """The local directory the driver writer may write ``df`` to at
+    ``path``, else None: every column type in :data:`_DRIVER_WRITE_TYPES`,
+    a numeric ``vec_col`` vector, and a ``path`` on the ``file`` Hadoop
+    file system. Runs no job."""
+    types = [f.dataType for f in df.schema.fields]
+    vec_type = df.schema[vec_col].dataType if vec_col in df.columns else None
     if not (
         isinstance(vec_type, ArrayType)
         and isinstance(vec_type.elementType, _NUMERIC_TYPES)
-        and all(_driver_writable(t) for t in types.values())
+        and all(_driver_writable(t) for t in types)
     ):
-        return False
+        return None
     try:  # private JVM API: any failure takes Spark's writer
-        local = _local_dir(df.sparkSession, path)
+        return _local_dir(df.sparkSession, path)
     except Exception:
-        return False
-    if local is None or not _fits_driver(df, len(cents), cents.shape[1]):
-        return False
+        return None
 
-    table = data.toArrow()
+
+def _driver_vectors(table, vec_col: str, dim: int | None = None):
+    """The n×D float64 matrix of the collected ``table``'s ``vec_col``,
+    or None where the driver must not answer: a null anywhere (a column,
+    a vector, an element) or a vector whose length is not D (``dim``,
+    else the first vector's); the expression distance of a vector of
+    another length is null."""
+    import pyarrow.compute as pc
+
     vecs = table.column(vec_col).combine_chunks()
     values = vecs.flatten()
-    n, dim = len(vecs), cents.shape[1]
-    if (
-        any(c.null_count for c in table.columns)
-        or values.null_count
-        or not (pc.list_value_length(vecs).to_numpy() == dim).all()
-    ):
-        return False
-    x = values.to_numpy().astype(np.float64, copy=False).reshape(n, dim)
+    if any(c.null_count for c in table.columns) or values.null_count:
+        return None
+    lengths = pc.list_value_length(vecs).to_numpy()
+    if dim is None:
+        dim = int(lengths[0]) if len(lengths) else 0
+    if not (lengths == dim).all():
+        return None
+    return values.to_numpy().astype(np.float64, copy=False).reshape(-1, dim)
+
+
+def _assign_driver(x: np.ndarray, cents: np.ndarray):
+    """Each row's list: :func:`~.knn._left_fold` distances and a
+    first-minimum ``argmin``, the doubles and the tie rule of
+    :func:`assign_centroids`. None if a distance is NaN."""
     dists = _left_fold(x, cents)
     if np.isnan(dists).any():
-        return False
-    lists = dists.argmin(axis=1)
+        return None
+    return dists.argmin(axis=1)
+
+
+def _write_list_files(
+    spark, path: str, local: str, table, schema: StructType, lists,
+    overwrite: bool = False,
+) -> None:
+    """Write the rows of the collected ``table`` (Spark schema
+    ``schema``, no ``centroid`` column) into ``local``, the directory of
+    ``path``, as one parquet file per list in ``lists`` (row i goes to
+    ``centroid=<lists[i]>/``), written by pyarrow under a hidden name and
+    renamed into place, then refresh the cached data of ``path``, as
+    Spark's writer does. The files carry Spark's row-schema footer key,
+    so ``spark.read.parquet`` reads the same schema whichever file it
+    takes it from. ``overwrite`` first removes what is at ``local`` and
+    writes ``_SUCCESS`` after the last list file, as Spark's committer
+    does, so a reader that takes ``_SUCCESS`` as "complete" never sees
+    a partial layout; without it the files are added beside the ones
+    there."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     # Spark writes every column nullable, arrays with nullable elements
     schema = StructType(
@@ -591,29 +589,77 @@ def _append_lists_driver(
                 True,
                 f.metadata,
             )
-            for f in data.schema.fields
+            for f in schema.fields
         ]
     )
-    table = table.cast(
+    table = table.select(schema.names).cast(
         to_arrow_schema(schema).with_metadata(
             {"org.apache.spark.sql.parquet.row.metadata": schema.json()}
         )
     )
+    if overwrite:
+        if os.path.isdir(local):
+            shutil.rmtree(local)
+        elif os.path.lexists(local):
+            os.remove(local)
     for c in np.unique(lists):
         list_dir = os.path.join(local, f"centroid={c}")
         os.makedirs(list_dir, exist_ok=True)
         name = f"part-{uuid.uuid4()}.c000.snappy.parquet"
         tmp = os.path.join(list_dir, f".{name}.tmp")  # readers skip ".*"
         try:
+            # the footer keeps the schema's key-value metadata (the Spark
+            # row schema) only when the Arrow schema is stored too. No
+            # dictionaries: over distinct floats one is as large as the
+            # data, and Spark's writer falls back to plain for them
             pq.write_table(
                 table.filter(pa.array(lists == c)), tmp,
-                compression="snappy", store_schema=False,
+                compression="snappy", use_dictionary=False,
             )
             os.replace(tmp, os.path.join(list_dir, name))
         finally:
             if os.path.exists(tmp):
                 os.remove(tmp)
-    df.sparkSession.catalog.refreshByPath(path)
+    if overwrite:
+        os.makedirs(local, exist_ok=True)
+        open(os.path.join(local, "_SUCCESS"), "wb").close()
+    spark.catalog.refreshByPath(path)
+
+
+def _write_lists_driver(
+    df: DataFrame,
+    path: str,
+    centroids: list[list[float]],
+    vec_col: str,
+    overwrite: bool = False,
+) -> bool:
+    """The driver path of :func:`append_to_ivf_index` and
+    :func:`write_ivf_index`: one ``toArrow()`` job, each row's list by
+    :func:`_assign_driver`, then one pyarrow file per list
+    (:func:`_write_list_files`; ``overwrite`` replaces ``path``).
+
+    Returns False, having written nothing, where Spark's writer must
+    answer: a column type outside :data:`_DRIVER_WRITE_TYPES` or a
+    non-numeric vector, a ``path`` whose Hadoop file system is not
+    ``file``, a batch past the kNN driver-path bounds read for its k
+    centroids, a null anywhere (a vector, an element, an id), a vector
+    whose length is not D, a NaN distance, or no rows to overwrite
+    with."""
+    cents = np.asarray(centroids, dtype=np.float64)
+    data = df.drop("centroid")  # partitionBy leaves it out of the files
+    local = _driver_dir(data, path, vec_col)
+    if local is None or not _fits_driver(df, len(cents), cents.shape[1]):
+        return False
+    table = data.toArrow()
+    x = _driver_vectors(table, vec_col, cents.shape[1])
+    if x is None or (overwrite and not len(x)):
+        return False
+    lists = _assign_driver(x, cents)
+    if lists is None:
+        return False
+    _write_list_files(
+        df.sparkSession, path, local, table, data.schema, lists, overwrite
+    )
     return True
 
 
@@ -629,13 +675,14 @@ def append_to_ivf_index(
     writes only its own files (existing files untouched) and adds at
     most one file to each list it touches; readers see the merged
     inverted lists on the next scan, and partition pruning keeps working
-    because the directory key is unchanged. Re-run
-    :func:`train_centroids` + full rewrite only when drift degrades
-    recall (same trade FAISS makes with a frozen coarse quantizer).
+    because the directory key is unchanged. Retrain
+    (:func:`kmeans_train_exact`) and rewrite the layout
+    (:func:`write_ivf_index`) only when drift degrades recall (same
+    trade FAISS makes with a frozen coarse quantizer).
 
     A batch within the kNN driver-path bounds (read for its k
     centroids), on a layout on the local file system, is appended in
-    the driver (:func:`_append_lists_driver`), as FAISS's ``index.add``
+    the driver (:func:`_write_lists_driver`), as FAISS's ``index.add``
     runs in process: one ``toArrow()`` job, the assignment in numpy, one
     pyarrow write per touched list. Spark's writer would add a rebalance
     shuffle and a write job, and on the local file system Hadoop forks
@@ -643,7 +690,7 @@ def append_to_ivf_index(
     makes when no native library is loaded. Every other batch goes
     through :func:`write_lists` (a shuffle of the batch buys one file
     per list). Both paths give every row the same list."""
-    if not _append_lists_driver(df, path, centroids, vec_col):
+    if not _write_lists_driver(df, path, centroids, vec_col):
         write_lists(assign_centroids(df, centroids, vec_col), path, "append")
 
 
@@ -798,7 +845,9 @@ def lsh_bucket(
     out_col: str = "bucket",
 ) -> DataFrame:
     """Sign-bit bucket key: bit_i = 1 if v·h_i > 0. Pure expression
-    (dot products over literal plane arrays) — codegen'd, no UDF."""
+    (dot products over literal plane arrays), no UDF; the dot product's
+    ``zip_with``/``aggregate`` run interpreted inside the generated
+    stage."""
     from ..functions.vector import dot
 
     key = None

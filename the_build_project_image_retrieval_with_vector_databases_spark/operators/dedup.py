@@ -1190,8 +1190,8 @@ def url_host_dedup(
     ``n_copies``, and ``is_kept`` (lowest id per key survives — the
     same keep rule as :func:`exact_dedup`).
 
-    Scale shape at 100 TB: the normalization is a codegen'd projection
-    fused into the scan; the ONLY exchange is one shuffle keyed by the
+    Scale shape at 100 TB: the normalization is a projection fused into
+    the scan (its query-parameter ``filter`` runs interpreted there); the ONLY exchange is one shuffle keyed by the
     short canonical-key string (same single-shuffle budget as
     content-hash exact dedup, but ~100 bytes/row instead of a
     tokenize+md5 pass — which is why crawl pipelines run it first).

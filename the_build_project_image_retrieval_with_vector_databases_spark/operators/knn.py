@@ -17,7 +17,7 @@ Spark-first physical strategy:
   bounds is instead ranked in the driver after one ``toArrow()`` job,
   with the same ``dist`` doubles and order (:func:`knn_single`).
 - **Query set** → ``crossJoin(broadcast(queries))`` (no shuffle of the
-  corpus — the N×Q expansion streams through codegen) + per-query
+  corpus — the N×Q expansion streams through the scan stage) + per-query
   window rank. Spark ≥3.5 plans the rank filter as a two-phase
   ``WindowGroupLimit`` (Partial before the exchange, Final after), so
   only Q×k×partitions rows shuffle — the FAISS local-heap/merge shape
@@ -1158,8 +1158,9 @@ def _band_bucket_exprs(
     planes: list[list[float]], n_bands: int, vec_col: str
 ) -> list[Column]:
     """One integer bucket per band: band b owns the contiguous plane slice
-    [b·w, (b+1)·w); bit_i = 1 iff v·h_i > 0. Pure codegen'd expressions
-    (dot products over literal plane arrays) — no UDF."""
+    [b·w, (b+1)·w); bit_i = 1 iff v·h_i > 0. Pure expressions (dot
+    products over literal plane arrays, whose ``zip_with``/``aggregate``
+    run interpreted inside the generated stage) — no UDF."""
     from ..functions.vector import dot
 
     width = len(planes) // n_bands
@@ -1429,7 +1430,8 @@ def knn_join_arrow_hamming_ivf_rescored(
     raw Hamming's 0.33 back to ≈0.70 on the fixture corpus).
 
     The rescore stage is pure Catalyst (broadcast the tiny shortlist,
-    ``zip_with``/``aggregate`` left-fold in codegen) — no second
+    ``zip_with``/``aggregate`` left-fold, run interpreted inside the
+    generated stage) — no second
     Python/Arrow hop — ending in the shared rank window on
     (round(dist, 6), id). Output:
     (query_id, id_col, dist, rank ≤ k) with ``dist`` the exact L2

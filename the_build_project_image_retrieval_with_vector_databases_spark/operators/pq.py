@@ -143,8 +143,8 @@ def sq_encode(
     """int8 scalar quantization: code_i = clamp(floor((x_i − lo_i) /
     range_i · 255), 0, 255). ``floor`` (not round) — floor is defined
     identically in every engine, round-half rules are not. One
-    ``zip_with`` over a literal struct array; codegen'd, no UDF; 4×
-    smaller than float32 storage."""
+    ``zip_with`` over a literal struct array (run interpreted inside the
+    generated stage), no UDF; 4× smaller than float32 storage."""
     structs = array_lit(
         [{"lo": lo, "rng": rng} for lo, rng in bounds],
         "array<struct<lo:double,rng:double>>",
@@ -316,7 +316,8 @@ def bq_encode_cols(
     """Packed-code column expressions: bit i of the dim-D vector lands
     in half i//32, position i%32. Pure Catalyst — a zip_with bit test
     against the literal threshold array, then a weighted sum against
-    literal powers of two; codegen'd, zero shuffle, no UDF. Returns a
+    literal powers of two (``transform``/``zip_with``/``aggregate``, run
+    interpreted inside the generated stage); zero shuffle, no UDF. Returns a
     (dim/32)-tuple of Columns — (lo, hi) for the 64-dim corpus; every
     consumer (:func:`~.knn.knn_join_arrow_hamming`, ``bq_hamming``,
     the ``search`` facade) handles n halves generically."""

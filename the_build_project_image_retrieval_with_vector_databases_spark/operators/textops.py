@@ -3,8 +3,9 @@ extensions; SURVEY §7.2 M4): token stats, top terms, TF-IDF, language ID,
 quality scoring, document fingerprinting.
 
 Everything is built-in Catalyst expressions (split/explode/aggregates) —
-no Python UDFs — so the operators stay in whole-stage codegen and scale
-linearly with executors. Hashing uses the md5-hex trick from
+no Python UDFs — so the operators stay inside the generated stages (the
+higher-order functions among them, such as the tokenizer's ``filter``,
+run interpreted there) and scale linearly with executors. Hashing uses the md5-hex trick from
 ``functions.text`` so DuckDB oracles can reproduce values exactly.
 """
 
@@ -188,7 +189,9 @@ def bpe_token_counts(
     """Per-document token counts under BOTH tokenizers: whitespace words
     and the BPE-ish regex (`BPE_PATTERN`) — the cost-estimation numbers
     an LLM-pipeline owner asks for ('how many tokens is this corpus?').
-    Pure codegen'd expressions; raw ratio doubles hash cross-engine."""
+    Pure expressions (the whitespace tokenizer's ``filter`` runs
+    interpreted inside the generated stage); raw ratio doubles hash
+    cross-engine."""
     lowered = F.lower(F.col(text_col))
     ws = tokens(text_col)
     bpe = F.regexp_extract_all(lowered, F.lit(BPE_PATTERN), 0)
@@ -375,8 +378,9 @@ def passage_chunks(
     floors, so the ``greatest(0, ·)`` runs BEFORE the division where
     the two rules agree.
 
-    Scale shape: tokenize → sequence → explode → slice, one codegen'd
-    projection chain with ZERO shuffles; output size is Σ n_chunks
+    Scale shape: tokenize → sequence → explode → slice, one projection
+    chain (the tokenizer's ``filter`` runs interpreted inside the
+    generated stage) with ZERO shuffles; output size is Σ n_chunks
     (linear in corpus tokens · window/stride). The tokenize runs in
     its own projection (the doc_shingles contract — multi-referenced
     heavy aliases are not collapsed)."""

@@ -188,7 +188,8 @@ def q_matryoshka_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     index tier — on MRL-trained embeddings it's the cheapest ANN speed
     knob (negative-control recall property pinned in
     tests/test_staged_ops.py). The plan is the flagship shape: broadcast
-    1-row query → codegen'd fold → zero-shuffle TakeOrderedAndProject.
+    1-row query → left fold (``aggregate``, run interpreted inside the
+    generated stage) → zero-shuffle TakeOrderedAndProject.
     Oracle mirrors slice → cast → left-fold norm → renormalize exactly
     (list_reduce ↔ F.aggregate, both sequential left folds).
     """
@@ -1829,8 +1830,9 @@ def q_bq_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     vec_id-0 row — the whole pipeline is cross-checked, not just the
     scan), and every Hamming distance bit-for-bit.
 
-    Scale shape: encode is one codegen'd projection (zero shuffle,
-    literal thresholds); search scans 16 bytes/row instead of 256 and
+    Scale shape: encode is one projection (zero shuffle, literal
+    thresholds; its ``transform``/``zip_with``/``aggregate`` run
+    interpreted inside the generated stage); search scans 16 bytes/row instead of 256 and
     plans the flagship TakeOrderedAndProject — no exchange anywhere.
     The serving path over the same packed columns is
     :func:`~.operators.knn.knn_join_arrow_hamming` (uint64 numpy XOR +

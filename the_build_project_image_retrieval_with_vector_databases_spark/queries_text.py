@@ -1138,8 +1138,8 @@ def q_passage_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Overlapping token-window chunking (operators/textops.py::
     passage_chunks, window 32 / stride 24): the RAG-retrieval and
     long-context-pretraining splitter — every token lands in ≥ 1
-    chunk, consecutive chunks share 8 tokens. Zero-shuffle codegen'd
-    projection chain; the oracle re-derives the chunk count's integer
+    chunk, consecutive chunks share 8 tokens. Zero-shuffle projection
+    chain; the oracle re-derives the chunk count's integer
     ceil and each slice/join identically."""
     from .operators.textops import passage_chunks
 
@@ -1408,8 +1408,8 @@ def q_winnowing_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     textops.py::winnowing_fingerprints; Schleimer et al. SIGMOD 2003):
     per-window rightmost-minimal k-gram hash selection — local
     (substring-level) overlap detection, the robust superset of a
-    single corpus-wide min-hash fingerprint. Zero-shuffle
-    codegen'd projection chain."""
+    single corpus-wide min-hash fingerprint. Zero-shuffle projection
+    chain."""
     docs = load_table(spark, sf_dir, "documents")
     return T.winnowing_fingerprints(spread(docs), k=WN_K, w=WN_W)
 

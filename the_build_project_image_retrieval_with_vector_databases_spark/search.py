@@ -120,7 +120,7 @@ def search(
     reuse is an explicit caller assertion, never inferred from column
     presence (looking a foreign code up in this call's LUT would return
     confidently wrong neighbors). The default re-encode is a cheap
-    codegen'd projection fused into the scan.
+    projection fused into the scan.
     """
     if index not in INDEX_KINDS:
         raise ValueError(f"unknown index {index!r}; one of {INDEX_KINDS}")

@@ -414,7 +414,7 @@ def serve_loop_rate_bq(
     :func:`serve_loop_rate_ivf` = inverted lists). Setup, ONCE per
     loop: train per-dim integer thresholds on the ``train_n`` lowest-id
     corpus rows, project the corpus to dim/32 packed BIGINT halves
-    (:func:`~..operators.pq.bq_encode_cols` — codegen'd, zero shuffle)
+    (:func:`~..operators.pq.bq_encode_cols` — one projection, zero shuffle)
     and CACHE the code table (16 bytes/row at 64-D vs 256 for floats —
     the BQ memory model is the tier's point: 6% of the flat tier's
     cached bytes). Per epoch: encode is already done, so the batch is
