@@ -173,7 +173,7 @@ def main() -> None:
         if not os.path.exists(path):
             write_corpus(path, n, rng)
         df = spark.read.parquet(path)
-        return df, knn._plan_size_bytes(df.select("vec_id", "embedding"))
+        return df, knn.scan_plan(df.select("vec_id", "embedding")).size
 
     if kinds in ("batch", "all"):
         cells, runs = [], []

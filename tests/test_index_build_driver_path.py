@@ -3,9 +3,10 @@
 ``build_index(ivf_k > 0, out_path=...)`` and ``write_ivf_index`` run in
 the driver when the input is within the kNN driver-path bounds, the
 path's Hadoop file system is ``file``, every column is driver-writable
-and no vector holds a null or NaN or has another length: one
-``toArrow()`` job, then numpy (row ids, k-means, assignment) and one
-pyarrow file per list. Setting ``ARROW_DRIVER_MAX_BYTES`` to 0 forces
+and no vector holds a null or NaN or has another length: the input
+collected (the build's sample by one ``toArrow()`` job; a layout write's
+bare local parquet input by pyarrow, with no job), then numpy (row ids,
+k-means, assignment) and one pyarrow file per list. Setting ``ARROW_DRIVER_MAX_BYTES`` to 0 forces
 the Spark path (``kmeans_train_exact`` + ``assign_centroids`` +
 ``write_lists``), so each parity case writes the same input both ways
 and requires the same schema and the same rows, bit for bit.
@@ -177,11 +178,22 @@ _PLANTED = {
 
 
 def _outcome(action):
-    """The rows ``action`` gives, or the class of what it raises."""
+    """The rows ``action`` gives, or the class of what it raises (with
+    the message of a ``ValueError``, which names no path)."""
     try:
         return _rows(action())
-    except Exception as e:  # the Spark path's own failure, on both sides
+    except ValueError as e:  # the Spark path's own failure, on both sides
+        return ValueError, str(e)
+    except Exception as e:
         return type(e)
+
+
+# case -> what the Spark build raises on it: the column and the fault
+_BUILD_ERRORS = {
+    "null stratum": "stratum column 'label' holds a null",
+    "null element": "column 'embedding' holds a null vector or element",
+    "ragged vector": "column 'embedding' holds vectors of different lengths",
+}
 
 
 @pytest.mark.parametrize(
@@ -194,7 +206,8 @@ def test_unwritable_inputs_take_the_spark_path(spark, monkeypatch, tmp_path, kin
     """A null stratum, a null or NaN element, a ragged vector and a path
     off the ``file`` file system each go to the Spark path, which gives
     what it gives when forced: rows, or the same error (the Spark build
-    raises on a null stratum, a null element and a ragged vector)."""
+    raises a ``ValueError`` naming the column and the fault on a null
+    stratum, a null element and a ragged vector)."""
     labels, vecs = _PLANTED.get(case, (_LABELS, _VECS))
     src = _manifest(str(tmp_path / "src"), labels, vecs)
     cents = [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0]]
@@ -218,6 +231,8 @@ def test_unwritable_inputs_take_the_spark_path(spark, monkeypatch, tmp_path, kin
             m.setattr(ann, "_local_dir", lambda spark, path: None)
         got = _outcome(run("driver"))
     assert got == forced
+    if kind == "build" and case in _BUILD_ERRORS:
+        assert forced[0] is ValueError and _BUILD_ERRORS[case] in forced[1], forced
     if case == "non-file path":
         assert isinstance(forced, list) and forced
         assert ann._driver_dir(spark.read.parquet(src), "nosuchfs://host/layout", "embedding") is None
@@ -295,7 +310,8 @@ def test_small_build_and_write_job_budget(spark, tmp_path, emb):
     """Within the bounds, the IVF build and both sidecars run 5 Spark
     jobs: the sample's shuffle and the collect, the read-back's schema
     job, and one write job per sidecar (the Spark path runs 16 here).
-    A layout write is its collect."""
+    A layout write of a bare local parquet scan runs none: pyarrow reads
+    it."""
     out = tmp_path / "build"
 
     def build():
@@ -305,4 +321,7 @@ def test_small_build_and_write_job_budget(spark, tmp_path, emb):
 
     assert _jobs(spark, build) == 5
     cents, _ = ann.kmeans_train_exact(emb, k=4, max_iter=20)
-    assert _jobs(spark, lambda: ann.write_ivf_index(emb, str(tmp_path / "w"), cents)) == 1
+    # a copy no cached frame matches, so the write reads the bare scan
+    emb.write.parquet(str(tmp_path / "src"))
+    src = spark.read.parquet(str(tmp_path / "src"))
+    assert _jobs(spark, lambda: ann.write_ivf_index(src, str(tmp_path / "w"), cents)) == 0

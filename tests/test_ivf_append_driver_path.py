@@ -1,8 +1,9 @@
 """Driver path of ``append_to_ivf_index``.
 
 A batch within the kNN driver-path bounds, read for its k centroids, on a
-layout whose Hadoop file system is ``file``, is collected with one
-``toArrow()`` job, assigned in numpy with the left fold and a
+layout whose Hadoop file system is ``file``, is collected (by pyarrow
+with no job when it is a bare local parquet scan, else by one
+``toArrow()`` job), assigned in numpy with the left fold and a
 first-minimum argmin, and written by pyarrow, one file per touched list.
 Setting ``ARROW_DRIVER_MAX_BYTES`` to 0 forces Spark's writer
 (``write_lists(assign_centroids(...))``), so the parity case appends the
@@ -66,7 +67,9 @@ def test_driver_append_matches_spark_writer(spark, monkeypatch, tmp_path, emb):
     assigned = ann.assign_centroids(emb, cents)
     # the base layout lacks list 0, so only the append writes it
     base = assigned.filter((F.col("vec_id") < 400) & (F.col("centroid") != 0))
-    extra = emb.filter(F.col("vec_id") >= 400)
+    # the batch as its own parquet files, which pyarrow reads
+    emb.filter(F.col("vec_id") >= 400).write.parquet(str(tmp_path / "extra"))
+    extra = spark.read.parquet(str(tmp_path / "extra"))
     touched = {
         r.centroid
         for r in assigned.filter(F.col("vec_id") >= 400).select("centroid").distinct().collect()
@@ -82,8 +85,9 @@ def test_driver_append_matches_spark_writer(spark, monkeypatch, tmp_path, emb):
     try:
         n_base = cached.count()
         stages = _jobs(spark, lambda: ann.append_to_ivf_index(extra, paths["driver"], cents))
-        # the fast path ran: one collect job of one stage, no shuffle or write job
-        assert stages == [1], stages
+        # the fast path ran: no job at all (pyarrow read the batch), where
+        # Spark's writer runs a shuffle and a write job
+        assert stages == [], stages
         assert cached.count() == n_base + extra.count()
     finally:
         cached.unpersist()

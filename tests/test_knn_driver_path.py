@@ -2,7 +2,8 @@
 ``knn_join_arrow_ivf``).
 
 An input estimated at or below ``ARROW_DRIVER_MAX_BYTES`` is collected
-with one ``toArrow()`` job, scored by the kernel's own generator in the
+by ``sources.tables.collect_arrow`` (no job for a bare local parquet
+scan, else one ``toArrow()`` job), scored by the kernel's own generator in the
 driver and ranked there; a larger one runs the mapInPandas + rank-window
 plan. Setting the constant to 0 forces the distributed plan, so every
 parity case below runs both paths on the same input and requires the
@@ -243,7 +244,7 @@ def test_unreadable_size_estimate_takes_distributed_path(
     def boom(_df):
         raise RuntimeError("plan statistics unavailable")
 
-    monkeypatch.setattr(knn, "_plan_size_bytes", boom)
+    monkeypatch.setattr(knn, "scan_plan", boom)
     df = knn.knn_join_arrow(emb, qids, qvecs, k=10)
     assert "MapInPandas" in _plan(df)
     assert sorted((r.query_id, r.vec_id, r.rank) for r in df.collect()) == sorted(
@@ -270,7 +271,7 @@ def test_size_estimate_counts_the_whole_relation(spark, monkeypatch, tmp_path):
     corpus = spark.read.parquet(path)
     proj = corpus.select("vec_id", "embedding")
 
-    size = knn._plan_size_bytes(proj)
+    size = knn.scan_plan(proj).size
     collected = proj.toArrow().nbytes
     projected = int(proj._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     assert projected < collected <= size
@@ -290,7 +291,7 @@ def test_pair_bound_sends_large_query_sets_to_distributed_path(
     distributed plan once the query set makes the distance matrix big."""
     qids, qvecs = fixture_queries
     proj = emb.select("vec_id", "embedding")
-    rows = knn._plan_size_bytes(proj) // (4 * len(qvecs[0]))
+    rows = knn.scan_plan(proj).size // (4 * len(qvecs[0]))
     assert rows >= proj.count()
     monkeypatch.setattr(knn, "ARROW_DRIVER_MAX_PAIRS", rows * len(qids) - 1)
     assert "MapInPandas" in _plan(knn.knn_join_arrow(emb, qids, qvecs, k=5))
@@ -301,12 +302,12 @@ def test_unbounded_inputs_take_distributed_path(spark, emb):
     """No over-counting estimate exists for a computed vector column or a
     cache that is not filled yet, so neither reaches the driver."""
     computed = emb.withColumn("embedding", F.array_repeat(F.lit(0.5), 4096))
-    assert knn._plan_size_bytes(computed.select("vec_id", "embedding")) is None
+    assert knn.scan_plan(computed.select("vec_id", "embedding")).size is None
     cached = emb.filter(F.col("vec_id") < 100).cache()
     try:
-        assert knn._plan_size_bytes(cached.select("vec_id", "embedding")) is None
+        assert knn.scan_plan(cached.select("vec_id", "embedding")).size is None
         cached.count()
-        assert knn._plan_size_bytes(cached.select("vec_id", "embedding")) > 0
+        assert knn.scan_plan(cached.select("vec_id", "embedding")).size > 0
     finally:
         cached.unpersist()
 
@@ -355,10 +356,12 @@ def _jobs(spark, action) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_small_search_batch_is_one_job(spark, ivf):
+def test_small_search_batch_runs_no_job(spark, ivf):
+    """Over a local parquet layout both Arrow routes read their input
+    (the whole layout, or the probed lists) with pyarrow: no job."""
     layout, centroids, qids, qvecs, _ = ivf
     queries = list(zip(qids, qvecs))
-    assert _jobs(spark, lambda: search_batch(layout, queries, k=5).collect()) == 1
+    assert _jobs(spark, lambda: search_batch(layout, queries, k=5).collect()) == 0
     assert (
         _jobs(
             spark,
@@ -367,7 +370,7 @@ def test_small_search_batch_is_one_job(spark, ivf):
                 arrow=True,
             ).collect(),
         )
-        == 1
+        == 0
     )
 
 

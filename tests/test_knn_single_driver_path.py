@@ -2,8 +2,9 @@
 ``search(index="flat"|"ivf")`` and ``ivf_search``).
 
 A driver-held query over a relation within the kNN driver-path bounds is
-collected with one ``toArrow()`` job and ranked in the driver with the
-left fold. Setting ``ARROW_DRIVER_MAX_BYTES`` to 0 forces the expression
+collected by ``sources.tables.collect_arrow`` (no job for a bare local
+parquet scan, one ``toArrow()`` job otherwise) and ranked in the driver
+with the left fold. Setting ``ARROW_DRIVER_MAX_BYTES`` to 0 forces the expression
 plan, so every parity case runs both paths on the same input and
 requires the same rows in the same order, ``dist`` bit for bit: the
 left fold replays the expression's IEEE operations in their order.
@@ -230,35 +231,36 @@ def _jobs(spark, action) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_single_search_is_one_job(spark, emb, ivf):
+def test_single_search_job_budget(spark, emb, ivf):
+    """An IVF search reads its probed lists with pyarrow and runs no job
+    (the probe is a partition filter); ``exclude_id`` is a filter on a
+    data column, so that search is one ``toArrow()`` job."""
     layout, centroids = ivf
     q = centroids[2]
-    for run in (
-        lambda: search(layout, q, 10, index="ivf", train_vectors=centroids).collect(),
-        lambda: search(emb, q, 10, index="flat", exclude_id=2).collect(),
-    ):
-        assert _jobs(spark, run) == 1
+    assert _jobs(
+        spark, lambda: search(layout, q, 10, index="ivf", train_vectors=centroids).collect()
+    ) == 0
+    assert _jobs(
+        spark, lambda: search(emb, q, 10, index="flat", exclude_id=2).collect()
+    ) == 1
 
 
 # py4j round trips of one search(index="ivf") with exclude_id, from the
 # call through .collect(): 322 at the expression plan (most of them
 # building the distance's higher-order-function lambdas), 66 on the
-# driver path, whose probe and exclusion filters are one F.expr each
-# (with one F.lit per probed id and an F.lit comparison they took 131).
-# Releases of garbage-collected JVM handles ("m" commands) are not the
-# call's own and are not counted.
+# driver path, whose probe and exclusion filters are one SQL condition
+# each (with one F.lit per probed id and an F.lit comparison they took
+# 131). The exclusion is a filter on a data column, so the collect is a
+# toArrow() job. Releases of garbage-collected JVM handles ("m"
+# commands) are not the call's own and are not counted.
 SEARCH_IVF_PY4J_CALLS = 66
+# the same search without exclude_id, whose 4 probed lists pyarrow reads
+# with no job: 28 calls walk and check the plan, then 8 go to each list
+# file (it took 60 when a toArrow() job collected the lists)
+SEARCH_IVF_FAST_PY4J_CALLS = 91
 
 
-def test_ivf_search_py4j_call_budget(spark, monkeypatch, ivf):
-    layout, centroids = ivf
-
-    def run():
-        return search(
-            layout, centroids[5], 10, index="ivf", train_vectors=centroids,
-            exclude_id=5,
-        ).collect()
-
+def _py4j_calls(monkeypatch, run) -> int:
     run()  # first use of each JVM class goes through reflection once
     gc.collect()
     calls = [0]
@@ -268,9 +270,33 @@ def test_ivf_search_py4j_call_budget(spark, monkeypatch, ivf):
         calls[0] += not command.startswith("m\n")
         return send(self, command)
 
-    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
-    assert len(run()) == 10
-    assert calls[0] <= SEARCH_IVF_PY4J_CALLS, calls[0]
+    with monkeypatch.context() as m:
+        m.setattr(ClientServerConnection, "send_command", counted)
+        assert len(run()) == 10
+    return calls[0]
+
+
+def test_ivf_search_py4j_call_budget(spark, monkeypatch, ivf):
+    layout, centroids = ivf
+    calls = _py4j_calls(
+        monkeypatch,
+        lambda: search(
+            layout, centroids[5], 10, index="ivf", train_vectors=centroids,
+            exclude_id=5,
+        ).collect(),
+    )
+    assert calls <= SEARCH_IVF_PY4J_CALLS, calls
+
+
+def test_fast_path_ivf_search_py4j_call_budget(spark, monkeypatch, ivf):
+    layout, centroids = ivf
+    calls = _py4j_calls(
+        monkeypatch,
+        lambda: search(
+            layout, centroids[5], 10, index="ivf", train_vectors=centroids
+        ).collect(),
+    )
+    assert calls <= SEARCH_IVF_FAST_PY4J_CALLS, calls
 
 
 def _optimized(df: DataFrame) -> str:
@@ -281,7 +307,7 @@ def _optimized(df: DataFrame) -> str:
     "values", [[3], [5, 1, 7, 2], list(range(0, 24, 2)), [2**40, -(2**40)]]
 )
 def test_isin_filter_plans_as_per_value_literals(spark, ivf, values):
-    """``knn._isin`` (one ``F.expr``) analyzes to the ``In`` / ``InSet``
+    """``knn._isin`` (one SQL condition string) analyzes to the ``In`` / ``InSet``
     of ``isin`` with one ``F.lit`` per value."""
     layout, _ = ivf
     assert _optimized(layout.filter(knn._isin("centroid", values))) == _optimized(

@@ -28,7 +28,9 @@ M = 8
 def emb(spark):
     df = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet").cache()
     df.count()
-    return df
+    yield df
+    # a cache left behind serves every later read of the file
+    df.unpersist()
 
 
 @pytest.fixture(scope="module")

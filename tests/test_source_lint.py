@@ -22,7 +22,12 @@ The IVF layout's driver writer (``operators/ann.py::_write_list_files``,
 behind the driver paths of the build, the write and the append) holds
 the package's only direct pyarrow parquet write: every other write goes
 through Spark's writer, whose commit protocol and schema footer the
-layout's readers rely on.
+layout's readers rely on. Likewise ``sources/tables.py::collect_arrow``
+holds the package's only pyarrow parquet read (``pq.read_table``,
+``pq.ParquetFile``, ``pyarrow.dataset``): it reads a file only after
+checking that Spark would read the same rows and types from it. The
+driver paths' collects in ``operators/knn.py``, ``operators/ann.py``
+and ``plans/index_build.py`` go through it, never a bare ``toArrow()``.
 
 ``operators/knn.py`` keeps one skeleton for its kNN kernels: one
 function calls ``row_number`` (the rank step every kernel ends in), and
@@ -294,22 +299,41 @@ def test_knn_skeleton_lint_catches_planted_copies():
 
 # pyarrow.parquet's writers: the function, the dataset form and the class
 _PARQUET_WRITERS = {"write_table", "write_to_dataset", "ParquetWriter"}
+# its readers; pyarrow.dataset is matched by its import
+_PARQUET_READERS = {"read_table", "ParquetFile", "ParquetDataset"}
 
 
-def _parquet_writes(source: str) -> list[tuple[str, int]]:
+def _calls(source: str, names) -> list[tuple[str, int]]:
     """(enclosing top-level function or ``<module>``, line) of each call
-    of a pyarrow parquet writer in ``source``."""
+    in ``source`` of a function or class named in ``names``, and, for
+    the name ``pyarrow.dataset``, of each import of that module."""
     hits = []
     for top in ast.parse(source).body:
         owner = top.name if isinstance(top, (ast.FunctionDef, ast.ClassDef)) else "<module>"
         for node in ast.walk(top):
-            if (
-                isinstance(node, ast.Call)
-                and getattr(node.func, "attr", getattr(node.func, "id", None))
-                in _PARQUET_WRITERS
-            ):
-                hits.append((owner, node.func.end_lineno))
-    return hits
+            if isinstance(node, ast.Call):
+                name = getattr(node.func, "attr", getattr(node.func, "id", None))
+                line = node.func.end_lineno
+            elif isinstance(node, ast.Import):
+                name = next((a.name for a in node.names if a.name == "pyarrow.dataset"), None)
+                line = node.lineno
+            elif isinstance(node, ast.ImportFrom):
+                dataset = node.module == "pyarrow" and any(a.name == "dataset" for a in node.names)
+                name = "pyarrow.dataset" if dataset or node.module == "pyarrow.dataset" else None
+                line = node.lineno
+            else:
+                continue
+            if name in names:
+                hits.append((owner, line))
+    return sorted(hits, key=lambda hit: hit[1])
+
+
+def _parquet_writes(source: str) -> list[tuple[str, int]]:
+    return _calls(source, _PARQUET_WRITERS)
+
+
+def _parquet_reads(source: str) -> list[tuple[str, int]]:
+    return _calls(source, _PARQUET_READERS | {"pyarrow.dataset"})
 
 
 def test_only_the_append_driver_path_writes_parquet_with_pyarrow():
@@ -347,6 +371,72 @@ def test_parquet_write_lint_catches_planted_calls():
         ("spill", 12),
         ("<module>", 14),
     ]
+
+
+def test_only_collect_arrow_reads_parquet_with_pyarrow():
+    found = {
+        (str(path.relative_to(_PKG)), owner)
+        for path in sorted(_PKG.rglob("*.py"))
+        for owner, _ in _parquet_reads(path.read_text(encoding="utf-8"))
+    }
+    assert found == {("sources/tables.py", "collect_arrow")}, found
+
+
+def test_parquet_read_lint_catches_planted_reads():
+    """Negative control: the function, file and dataset readers and the
+    dataset module's imports are reported wherever they sit; a comment,
+    a docstring, a footer read and a write are not."""
+    planted = (
+        "import pyarrow.parquet as pq\n"
+        "def collect_arrow(df):\n"
+        "    with pq.ParquetFile(path) as f:\n"
+        "        return f.read()\n"
+        "def load(path):\n"
+        '    """pq.read_table(path)"""\n'
+        "    # pq.read_table(path)\n"
+        "    pq.read_metadata(path)\n"
+        "    pq.write_table(t, path)\n"
+        "    t = (\n        pq\n        .read_table(path))\n"
+        "    import pyarrow.dataset as ds\n"
+        "    from pyarrow import dataset\n"
+        "    return pq.ParquetDataset(path)\n"
+        "from pyarrow.dataset import dataset\n"
+    )
+    assert _parquet_reads(planted) == [
+        ("collect_arrow", 3),
+        ("load", 12),
+        ("load", 13),
+        ("load", 14),
+        ("load", 15),
+        ("<module>", 16),
+    ]
+
+
+# driver-path modules whose collects go through sources.tables.collect_arrow
+_COLLECT_ARROW_MODULES = ("operators/knn.py", "operators/ann.py", "plans/index_build.py")
+
+
+def test_driver_paths_collect_through_collect_arrow():
+    found = [
+        (module, line)
+        for module in _COLLECT_ARROW_MODULES
+        for _, line in _calls((_PKG / module).read_text(encoding="utf-8"), {"toArrow"})
+    ]
+    assert not found, found
+
+
+def test_to_arrow_lint_catches_planted_calls():
+    """Negative control: direct and wrapped ``toArrow()`` calls are
+    reported; a comment, a docstring and ``collect_arrow`` are not."""
+    planted = (
+        "def _driver(frame, plan):\n"
+        '    """one ``toArrow()`` job"""\n'
+        "    # frame.toArrow()\n"
+        "    a = collect_arrow(frame, plan)\n"
+        "    b = frame.toArrow()\n"
+        "    return (\n        frame\n        .toArrow())\n"
+    )
+    assert _calls(planted, {"toArrow"}) == [("_driver", 5), ("_driver", 8)]
 
 
 # Public names no package, bench, entry, script or perfbench code

@@ -35,18 +35,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
-    BooleanType,
     DoubleType,
     FloatType,
     IntegralType,
-    StringType,
     StructField,
     StructType,
 )
 
 from ..functions.vector import array_lit, l2_dist
-from ..sources.tables import local_frame
+from ..sources.tables import collect_arrow, driver_parquet_type, local_frame
 from .knn import _fits_driver, _isin, _left_fold, _rank, knn_single
 
 
@@ -383,10 +380,20 @@ def kmeans_train_exact(
         rows = df.select(
             F.col(id_col), quantize_vec(vec_col, scale).alias("qv")
         ).collect()
+        vecs = [r.qv for r in rows]
+        try:
+            qv = np.asarray(vecs, dtype=np.int64)
+        except (TypeError, ValueError):
+            fault = (
+                "a null vector or element"
+                if any(v is None or None in v for v in vecs)
+                else "vectors of different lengths"
+            )
+            raise ValueError(
+                f"kmeans_train_exact: column {vec_col!r} holds {fault}"
+            ) from None
         return _kmeans_train_driver(
-            np.asarray([r[0] for r in rows]),
-            np.asarray([list(r.qv) for r in rows], dtype=np.int64),
-            k, max_iter, scale,
+            np.asarray([r[0] for r in rows]), qv, k, max_iter, scale
         )
     parallelism = df.sparkSession.sparkContext.defaultParallelism
     target = max(1, min(parallelism, -(-n_rows // 512)))
@@ -478,7 +485,8 @@ def write_ivf_index(
     Partition pruning over this layout is the inverted-list probe.
 
     Under the bounds of :func:`append_to_ivf_index`'s driver path the
-    layout is written in the driver (:func:`_write_lists_driver`, one
+    layout is written in the driver (:func:`_write_lists_driver`, no
+    Spark job when ``df`` is a bare local parquet scan, else one
     ``toArrow()`` job); otherwise by :func:`write_lists`. Either way
     ``path`` is replaced, ``_SUCCESS`` marks the finished layout, and
     every row lands in the list :func:`assign_centroids` gives it."""
@@ -486,17 +494,7 @@ def write_ivf_index(
         write_lists(assign_centroids(df, centroids, vec_col), path)
 
 
-# Column types the driver writer writes with pyarrow: each one's parquet
-# type reads back as the same Spark type. Any other type (timestamp,
-# date, decimal, map, struct, nested array) takes Spark's writer.
 _NUMERIC_TYPES = (IntegralType, FloatType, DoubleType)
-_DRIVER_WRITE_TYPES = _NUMERIC_TYPES + (StringType, BinaryType, BooleanType)
-
-
-def _driver_writable(dt) -> bool:
-    if isinstance(dt, ArrayType):
-        dt = dt.elementType
-    return isinstance(dt, _DRIVER_WRITE_TYPES)
 
 
 def _local_dir(spark, path: str) -> str | None:
@@ -511,15 +509,16 @@ def _local_dir(spark, path: str) -> str | None:
 
 def _driver_dir(df: DataFrame, path: str, vec_col: str) -> str | None:
     """The local directory the driver writer may write ``df`` to at
-    ``path``, else None: every column type in :data:`_DRIVER_WRITE_TYPES`,
-    a numeric ``vec_col`` vector, and a ``path`` on the ``file`` Hadoop
+    ``path``, else None: every column type in
+    ``sources.tables.DRIVER_PARQUET_TYPES`` (or an array of one), a
+    numeric ``vec_col`` vector, and a ``path`` on the ``file`` Hadoop
     file system. Runs no job."""
     types = [f.dataType for f in df.schema.fields]
     vec_type = df.schema[vec_col].dataType if vec_col in df.columns else None
     if not (
         isinstance(vec_type, ArrayType)
         and isinstance(vec_type.elementType, _NUMERIC_TYPES)
-        and all(_driver_writable(t) for t in types)
+        and all(driver_parquet_type(t) for t in types)
     ):
         return None
     try:  # private JVM API: any failure takes Spark's writer
@@ -634,13 +633,16 @@ def _write_lists_driver(
     overwrite: bool = False,
 ) -> bool:
     """The driver path of :func:`append_to_ivf_index` and
-    :func:`write_ivf_index`: one ``toArrow()`` job, each row's list by
-    :func:`_assign_driver`, then one pyarrow file per list
-    (:func:`_write_list_files`; ``overwrite`` replaces ``path``).
+    :func:`write_ivf_index`: ``df`` collected by
+    :func:`~..sources.tables.collect_arrow` (pyarrow and no Spark job
+    when ``df`` is a bare local parquet scan, else one ``toArrow()``
+    job), each row's list by :func:`_assign_driver`, then one pyarrow
+    file per list (:func:`_write_list_files`; ``overwrite`` replaces
+    ``path``).
 
     Returns False, having written nothing, where Spark's writer must
-    answer: a column type outside :data:`_DRIVER_WRITE_TYPES` or a
-    non-numeric vector, a ``path`` whose Hadoop file system is not
+    answer: a column type outside ``sources.tables.DRIVER_PARQUET_TYPES``
+    or a non-numeric vector, a ``path`` whose Hadoop file system is not
     ``file``, a batch past the kNN driver-path bounds read for its k
     centroids, a null anywhere (a vector, an element, an id), a vector
     whose length is not D, a NaN distance, or no rows to overwrite
@@ -648,9 +650,10 @@ def _write_lists_driver(
     cents = np.asarray(centroids, dtype=np.float64)
     data = df.drop("centroid")  # partitionBy leaves it out of the files
     local = _driver_dir(data, path, vec_col)
-    if local is None or not _fits_driver(df, len(cents), cents.shape[1]):
+    plan = None if local is None else _fits_driver(data, len(cents), cents.shape[1])
+    if plan is None:
         return False
-    table = data.toArrow()
+    table = collect_arrow(data, plan)
     x = _driver_vectors(table, vec_col, cents.shape[1])
     if x is None or (overwrite and not len(x)):
         return False
@@ -683,9 +686,11 @@ def append_to_ivf_index(
     A batch within the kNN driver-path bounds (read for its k
     centroids), on a layout on the local file system, is appended in
     the driver (:func:`_write_lists_driver`), as FAISS's ``index.add``
-    runs in process: one ``toArrow()`` job, the assignment in numpy, one
-    pyarrow write per touched list. Spark's writer would add a rebalance
-    shuffle and a write job, and on the local file system Hadoop forks
+    runs in process: the batch collected (by pyarrow with no Spark job
+    when it is a bare local parquet scan, else by one ``toArrow()``
+    job), the assignment in numpy, one pyarrow write per touched list.
+    Spark's writer would add a rebalance shuffle and a write job, and
+    on the local file system Hadoop forks
     a ``chmod`` for every directory, data file and checksum file it
     makes when no native library is loaded. Every other batch goes
     through :func:`write_lists` (a shuffle of the batch buys one file

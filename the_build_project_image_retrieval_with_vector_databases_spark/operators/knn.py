@@ -14,8 +14,11 @@ Spark-first physical strategy:
   ``TakeOrderedAndProject``: per-partition top-k heaps, driver merge.
   Zero shuffle. This is exactly FAISS's flat-search heap merge,
   distributed. A driver-held query over a corpus within the driver-path
-  bounds is instead ranked in the driver after one ``toArrow()`` job,
-  with the same ``dist`` doubles and order (:func:`knn_single`).
+  bounds is instead collected and ranked in the driver, with the same
+  ``dist`` doubles and order (:func:`knn_single`); the collect is
+  :func:`~..sources.tables.collect_arrow`, which reads a bare local
+  parquet scan with pyarrow and runs no job, and is one ``toArrow()``
+  job otherwise.
 - **Query set** → ``crossJoin(broadcast(queries))`` (no shuffle of the
   corpus — the N×Q expansion streams through the scan stage) + per-query
   window rank. Spark ≥3.5 plans the rank filter as a two-phase
@@ -61,7 +64,7 @@ from pyspark.sql.types import (
 from .dedup import _pin
 
 from ..functions.vector import array_lit, cosine_sim, dot, l2_dist
-from ..sources.tables import local_frame
+from ..sources.tables import ScanPlan, collect_arrow, local_frame, scan_plan
 
 # The kernels' Arrow closures call this module's helpers. A Python
 # worker need not have the package on its path, so cloudpickle ships
@@ -95,37 +98,43 @@ def _sql_col(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def _isin(col: str, values) -> Column:
-    """``F.col(col).isin(values)`` for integer ``values``, built by one
-    ``F.expr`` with the values as SQL literals: ``isin`` makes a py4j
-    round trip per value. The analyzed ``In`` is the same."""
+def _isin(col: str, values) -> Column | str:
+    """The condition ``F.col(col).isin(values)`` for integer ``values``,
+    for ``DataFrame.filter``: a SQL string with the values as literals,
+    which ``filter`` parses in the JVM in one py4j call (``isin`` makes
+    a round trip per value, ``F.expr`` three). The analyzed ``In`` is
+    the same."""
     values = [int(v) for v in values]
     if not values:  # SQL has no empty IN list
         return F.col(col).isin(values)
-    return F.expr(f"{_sql_col(col)} IN ({', '.join(map(str, values))})")
+    return f"{_sql_col(col)} IN ({', '.join(map(str, values))})"
 
 
-def _not_equal(col: str, value) -> Column:
-    """``F.col(col) != F.lit(value)``, by one ``F.expr`` when ``value``
-    is an integer (the same analyzed ``NOT (col = value)``)."""
+def _not_equal(col: str, value) -> Column | str:
+    """The condition ``F.col(col) != F.lit(value)`` for
+    ``DataFrame.filter``: a SQL string when ``value`` is an integer
+    (parsed to the same analyzed ``NOT (col = value)`` in one py4j
+    call), else that Column."""
     if isinstance(value, (int, np.integer)) and not isinstance(value, bool):
-        return F.expr(f"{_sql_col(col)} != {int(value)}")
+        return f"{_sql_col(col)} != {int(value)}"
     return F.col(col) != F.lit(value)
 
 
 # Driver-path bounds for the Arrow/BLAS kernels (knn_join_arrow,
 # knn_join_arrow_ivf) and for knn_single, read there for one query. At or
-# below both, the kernel's projection is
-# collected with one toArrow() job, the kernel's own score generator runs
-# in the driver and the candidates are ranked there on the window's key;
-# otherwise the mapInPandas + rank-window plan runs unchanged. On a
+# below both, the kernel's projection is collected by
+# sources.tables.collect_arrow (no job when it is a bare local parquet
+# scan, such as the probed lists of an IVF layout, else one toArrow()
+# job), the kernel's own score generator runs in the driver and the
+# candidates are ranked there on the window's key; otherwise the
+# mapInPandas + rank-window plan runs unchanged. On a
 # few-MB corpus the distributed plan is all floor cost: each Python-worker
 # task spends ~230 ms of CPU in PySpark's per-task
 # importlib.invalidate_caches() (re-reading pyspark.zip) against 5-22 ms
 # of BLAS, and the rank window adds a shuffle job.
 #
 # ARROW_DRIVER_MAX_BYTES bounds what the driver collects: bytes of the
-# relation the kernel reads (_plan_size_bytes). ARROW_DRIVER_MAX_PAIRS
+# relation the kernel reads (sources.tables.scan_plan). ARROW_DRIVER_MAX_PAIRS
 # bounds the scoring work: rows estimated from those bytes × queries, the
 # entries of the distance matrix. The driver collects and runs the
 # kernel's elementwise passes on one Python thread, the distributed plan
@@ -141,56 +150,23 @@ def _not_equal(col: str, value) -> Column:
 ARROW_DRIVER_MAX_BYTES = 32 << 20
 ARROW_DRIVER_MAX_PAIRS = 8 << 20
 
-# variable-width types: a Project that computes one of these (rather than
-# passing a relation column through) can emit more bytes than it reads
-_WIDE_TYPES = ("array", "binary", "map", "string", "struct")
-
-
-def _plan_size_bytes(df: DataFrame) -> int | None:
-    """An estimate of the bytes ``df`` can hold that only over-counts;
-    None if there is none. Runs no job. ``df`` must be Projects and
-    Filters over one parquet scan or filled cache, and no Project may
-    compute a variable-width column. The estimate is then that
-    relation's whole size, read before any projection: the on-disk
-    bytes of every file of the scan (partition filters not applied), or
-    the measured bytes of the cache. The optimizer's figure for a
-    projection is not used: it scales by default type sizes, which count
-    an array column as 4 bytes whatever its length."""
-    node = df._jdf.queryExecution().optimizedPlan()
-    while node.nodeName() in ("Project", "Filter"):
-        if node.nodeName() == "Project":
-            exprs = node.projectList()
-            for i in range(exprs.size()):
-                e = exprs.apply(i)
-                if e.dataType().typeName() not in _WIDE_TYPES:
-                    continue
-                if e.getClass().getSimpleName() == "Alias":
-                    e = e.child()
-                if e.getClass().getSimpleName() != "AttributeReference":
-                    return None
-        node = node.children().apply(0)
-    if node.nodeName() == "InMemoryRelation":
-        # before the cache is filled its estimate is the cached plan's
-        if not node.cacheBuilder().isCachedColumnBuffersLoaded():
-            return None
-    elif node.nodeName() != "LogicalRelation":
-        return None
-    return int(node.stats().sizeInBytes())
-
-
-def _fits_driver(df: DataFrame, n_queries: int, dim: int) -> bool:
-    """Both driver-path bounds hold. A stored float vector takes at
+def _fits_driver(df: DataFrame, n_queries: int, dim: int) -> ScanPlan | None:
+    """``df``'s :func:`~..sources.tables.scan_plan` when both driver-path
+    bounds hold on its size, else None. A stored float vector takes at
     least 4 bytes a dimension, so size / (4·dim) over-counts the rows."""
     # private JVM API: any failure takes the distributed path
     try:
-        size = _plan_size_bytes(df)
+        plan = scan_plan(df)
     except Exception:
-        return False
-    return (
+        return None
+    size = plan.size
+    if (
         size is not None
         and size <= ARROW_DRIVER_MAX_BYTES
         and size // (4 * max(dim, 1)) * n_queries <= ARROW_DRIVER_MAX_PAIRS
-    )
+    ):
+        return plan
+    return None
 
 
 def _round6(d, spark):
@@ -460,9 +436,11 @@ def _one_blas_thread():
                 put(_blas_pin["saved"])
 
 
-def _driver_topk(frame, score, schema, k: int, id_col: str, asc: bool):
-    """The driver path of :func:`_arrow_topk`: one ``toArrow()`` job,
-    ``score`` over the collected table in record batches of
+def _driver_topk(frame, plan, score, schema, k: int, id_col: str, asc: bool):
+    """The driver path of :func:`_arrow_topk`: ``frame`` collected by
+    :func:`~..sources.tables.collect_arrow` (``plan`` is its
+    ``scan_plan``; no job for a bare local parquet scan, else one
+    ``toArrow()`` job), ``score`` over the table in record batches of
     ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows (as
     mapInPandas feeds it, so each step holds batch × Q distances) with
     OpenBLAS on one thread (:func:`_one_blas_thread`), as a
@@ -478,7 +456,7 @@ def _driver_topk(frame, score, schema, k: int, id_col: str, asc: bool):
         schema.fields + [StructField("rank", IntegerType(), False)]
     )
     step = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
-    table = frame.toArrow()
+    table = collect_arrow(frame, plan)
     batches = (
         b.to_pandas()
         for b in table.to_batches(max_chunksize=step if step > 0 else None)
@@ -509,8 +487,9 @@ def _arrow_topk(frame, score, schema, qm, k: int, id_col: str, asc: bool):
     (:func:`_driver_topk`); above them, or when no size estimate can be
     read, it is the lazy mapInPandas plan plus the rank window. Both
     return the same (query_id, id, rank)."""
-    if _fits_driver(frame, qm.shape[0], qm.shape[1]):
-        return _driver_topk(frame, score, schema, k, id_col, asc)
+    plan = _fits_driver(frame, qm.shape[0], qm.shape[1])
+    if plan is not None:
+        return _driver_topk(frame, plan, score, schema, k, id_col, asc)
     return _rank(frame.mapInPandas(score, schema), k, id_col, asc=asc, rounded=True)
 
 
@@ -569,10 +548,13 @@ def _hamming_topk(df, qids, qc, groups, k, id_col, code_cols, centroid_col):
     return _rank(frame.mapInPandas(score, schema), k, id_col, key="hamming")
 
 
-def _driver_single(frame, q, k: int, metric: str, vec_col: str, id_col: str):
-    """The driver path of :func:`knn_single`: one ``toArrow()`` job of
-    every column of ``frame``, the :func:`_left_fold` distances of the
-    (N, D) float64 matrix of its vectors to ``q``, and the expression
+def _driver_single(frame, plan, q, k: int, metric: str, vec_col: str, id_col: str):
+    """The driver path of :func:`knn_single`: every column of ``frame``
+    collected by :func:`~..sources.tables.collect_arrow` (``plan`` is
+    its ``scan_plan``; no job for a bare local parquet scan, such as
+    the probed lists of an IVF layout, else one ``toArrow()`` job), the
+    :func:`_left_fold` distances of the (N, D) float64 matrix of its
+    vectors to ``q``, and the expression
     path's order — ``dist`` (descending for cosine/dot), then ascending
     id — by one ``np.lexsort``. Returns the k rows plus ``dist`` as an
     Arrow ``LocalRelation``, or None where only the expression plan
@@ -585,7 +567,7 @@ def _driver_single(frame, q, k: int, metric: str, vec_col: str, id_col: str):
     schema = frame.schema
     if not isinstance(schema[id_col].dataType, IntegralType):
         return None
-    table = frame.toArrow()
+    table = collect_arrow(frame, plan)
     vecs = table.column(vec_col).combine_chunks()
     values, ids = vecs.flatten(), table.column(id_col)
     if vecs.null_count or values.null_count or ids.null_count:
@@ -624,12 +606,15 @@ def knn_single(
 
     Driver-held values within the driver-path bounds of
     :func:`knn_join_arrow` (read for one query) make the call EAGER:
-    :func:`_driver_single` collects the corpus with one ``toArrow()``
-    job and ranks it in the driver with the left fold, whose ``dist``
-    doubles and order are the expression plan's, bit for bit. Above the
-    bounds, or where the expression's answer has a null or NaN
-    ``dist``, the values become an :func:`array_lit` and the call plans
-    as a Column query does.
+    :func:`_driver_single` collects the corpus and ranks it in the
+    driver with the left fold, whose ``dist`` doubles and order are the
+    expression plan's, bit for bit. The collect runs no Spark job when
+    the corpus is a bare local parquet scan (a layout's probed lists
+    are: the probe is a partition filter), and one ``toArrow()`` job
+    otherwise, e.g. under ``exclude_id``, a filter on a data column.
+    Above the bounds, or where the expression's answer has a null or
+    NaN ``dist``, the values become an :func:`array_lit` and the call
+    plans as a Column query does.
     """
     fn, asc = _metric(metric)
     out = corpus
@@ -637,8 +622,9 @@ def knn_single(
         out = out.filter(_not_equal(id_col, exclude_id))
     if not isinstance(query_vec, Column):
         q = np.asarray(query_vec, dtype=np.float64)
-        if q.ndim == 1 and len(q) and _fits_driver(out, 1, len(q)):
-            top = _driver_single(out, q, k, metric, vec_col, id_col)
+        plan = _fits_driver(out, 1, len(q)) if q.ndim == 1 and len(q) else None
+        if plan is not None:
+            top = _driver_single(out, plan, q, k, metric, vec_col, id_col)
             if top is not None:
                 return top
         query_vec = array_lit(q.tolist())
@@ -713,7 +699,8 @@ def knn_join_arrow(
     holds, read with no job), with at most ``ARROW_DRIVER_MAX_BYTES`` in
     that whole relation, and its estimated rows × Q at most
     ``ARROW_DRIVER_MAX_PAIRS``. Then the call is EAGER: it collects the
-    ``(id_col, vec_col)`` projection with one ``toArrow()`` job, runs
+    ``(id_col, vec_col)`` projection (with pyarrow and no job when it is
+    a bare local parquet scan, else with one ``toArrow()`` job), runs
     the same ``score`` generator over it in record batches of
     ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows, ranks the
     candidates on the window's key and returns them as an Arrow
@@ -797,8 +784,9 @@ def knn_join_arrow_ivf(
 
     The driver path of :func:`knn_join_arrow` applies here too, with the
     same bounds read for the layout: the whole relation, so a pruned
-    probe is over-counted. Within them the call is eager — one
-    ``toArrow()`` job of the pruned lists, the same ``score`` in the
+    probe is over-counted. Within them the call is eager — the pruned
+    lists collected (on a local parquet layout by pyarrow, with no job,
+    as the probe is a partition filter), the same ``score`` in the
     driver, the rank in the driver, an Arrow ``LocalRelation`` back;
     otherwise the lazy mapInPandas + rank-window
     plan is unchanged."""

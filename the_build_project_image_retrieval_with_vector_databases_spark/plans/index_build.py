@@ -26,10 +26,11 @@ partition-prune, one parquet file per inverted list
 A small IVF build written to the local file system runs the steps after
 the sample in the driver instead, as the reference's
 ``faiss.IndexIVFFlat.train`` + ``add`` run in one process: one
-``toArrow()`` job collects the sampled, normalized rows and their
-quantized vectors, and numpy assigns the ids, trains, assigns the lists
-and hands them to the IVF driver writer. Both paths write the same
-layout, row for row and bit for bit.
+``toArrow()`` job (the sample's window is not a bare scan that
+``sources.tables.collect_arrow`` could read itself) collects the
+sampled, normalized rows and their quantized vectors, and numpy assigns
+the ids, trains, assigns the lists and hands them to the IVF driver
+writer. Both paths write the same layout, row for row and bit for bit.
 """
 
 from __future__ import annotations
@@ -42,7 +43,7 @@ from pyspark.sql.types import IntegralType, LongType, StructField, StructType
 from ..functions.vector import l2_normalize
 from ..operators import ann, knn
 from ..operators.sample import stratified_sample
-from ..sources.tables import local_frame
+from ..sources.tables import collect_arrow, local_frame
 
 
 def build_index(
@@ -90,6 +91,8 @@ def build_index(
     counts = (
         normalized.groupBy(strata_col).agg(F.count("*").alias("__n")).collect()
     )
+    if any(r[strata_col] is None for r in counts):
+        raise ValueError(f"build_index: stratum column {strata_col!r} holds a null")
     counts.sort(key=lambda r: r[strata_col])
     offsets, acc = [], 0
     for r in counts:
@@ -131,9 +134,10 @@ def _build_lists_driver(
     vec_col: str,
 ) -> bool:
     """The driver path of an IVF :func:`build_index`: one ``toArrow()``
-    job collects ``normalized`` (the sampled, normalized rows) with each
-    vector's ``ann.quantize_vec``, so the quantization stays the pinned
-    Spark expression. Then, in numpy:
+    job collects ``normalized`` (the sampled, normalized rows: a sample
+    window, never a bare scan that ``sources.tables.collect_arrow``
+    reads itself) with each vector's ``ann.quantize_vec``, so the
+    quantization stays the pinned Spark expression. Then, in numpy:
 
     - ``row_id`` is the rank in a ``lexsort`` on (stratum, id), which is
       the Spark path's per-stratum ``row_number`` plus its stratum offsets;
@@ -170,11 +174,11 @@ def _build_lists_driver(
         return False
     local = ann._driver_dir(normalized, path, vec_col)
     # dim 1 and no queries: only the byte bound is read before the collect
-    if local is None or not knn._fits_driver(df, 0, 1):
+    if local is None or knn._fits_driver(df, 0, 1) is None:
         return False
-    table = normalized.select(
-        "*", ann.quantize_vec(vec_col).alias("__qv")
-    ).toArrow()
+    table = collect_arrow(
+        normalized.select("*", ann.quantize_vec(vec_col).alias("__qv"))
+    )
     x = ann._driver_vectors(table, vec_col)
     if (
         x is None

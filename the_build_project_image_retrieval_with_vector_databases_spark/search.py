@@ -98,11 +98,15 @@ def search(
     corpus, or the layout for ``ivf``) is within the kNN driver-path
     bounds (``operators.knn.ARROW_DRIVER_MAX_BYTES`` and
     ``ARROW_DRIVER_MAX_PAIRS``, read for one query), the call is EAGER —
-    one ``toArrow()`` job reads the corpus (for ``ivf``, the probed
-    lists only), the driver ranks it with the expression's own left
-    fold, and the result is an Arrow ``LocalRelation`` whose
-    ``.collect()`` runs no further job. Rows and ``dist`` are the lazy
-    plan's, bit for bit; larger inputs return that plan unchanged.
+    the driver collects the corpus (for ``ivf``, the probed lists only),
+    ranks it with the expression's own left fold, and returns an Arrow
+    ``LocalRelation`` whose ``.collect()`` runs no further job. The
+    collect (``sources.tables.collect_arrow``) runs no Spark job when
+    the corpus is a bare local parquet scan, as a layout's probed lists
+    are (the probe is a partition filter): pyarrow reads the files. With
+    ``exclude_id``, a filter on a data column, it is one ``toArrow()``
+    job. Rows and ``dist`` are the lazy plan's, bit for bit; larger
+    inputs return that plan unchanged.
 
     ``metric`` ("l2" | "cosine" | "dot") applies to the ``flat`` tier;
     the quantized tiers are L2-metric structures (same constraint as
@@ -271,8 +275,10 @@ def search_batch(
     relation the kernel reads is at most
     ``operators.knn.ARROW_DRIVER_MAX_BYTES`` and its estimated rows × Q
     at most ``operators.knn.ARROW_DRIVER_MAX_PAIRS``, the call is EAGER
-    — one ``toArrow()`` job collects the kernel's input, the same BLAS
-    kernel scores it and ranks in the driver, and the result is an
+    — the driver collects the kernel's input (by pyarrow with no Spark
+    job when it is a bare local parquet scan, else by one ``toArrow()``
+    job), the same BLAS kernel scores it and ranks in the driver, and
+    the result is an
     Arrow ``LocalRelation`` whose ``.collect()`` runs no further job.
     Larger inputs return the lazy mapInPandas + rank-window plan,
     unchanged; both give the same (query_id, id, rank). Query ids must be unique (``ValueError``
