@@ -11,7 +11,6 @@ that pyarrow opened no file.
 
 from __future__ import annotations
 
-import contextlib
 import os
 import uuid
 
@@ -34,6 +33,7 @@ from the_build_project_image_retrieval_with_vector_databases_spark.sources.table
 )
 
 from .conftest import SF_SMOKE
+from .test_index_build import _session_conf
 
 
 @pytest.fixture(scope="module")
@@ -44,21 +44,6 @@ def layout(spark, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("collect_arrow") / "layout")
     ann.write_ivf_index(emb, path, cents)
     return path
-
-
-@contextlib.contextmanager
-def _session_conf(spark, confs: dict):
-    old = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def _collect(spark, monkeypatch, df):
